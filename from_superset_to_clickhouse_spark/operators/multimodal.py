@@ -1,9 +1,8 @@
 """Multimodal column plumbing: binary payloads + typed metadata.
 
 Treats image/audio/video as opaque ``binary`` columns with a metadata
-struct, processed by Arrow-batched ``mapInPandas``. The Spark-side shape
-(schema, partitioning, batch iteration, UDF signature) is real and
-tested. Decoding comes in two tiers:
+struct. The Spark-side shape (schema, partitioning, batch iteration,
+UDF signature) is real and tested. Decoding comes in two tiers:
 
 - IMAGE headers are decoded for REAL: ``decode_image_header`` parses
   PNG (IHDR, CRC-verified), JPEG (marker walk to SOF), and GIF (logical
@@ -45,10 +44,21 @@ tested. Decoding comes in two tiers:
   honestly out of scope — the decode errors say so explicitly and rows
   quarantine.
 
-At scale: binary payloads ride in Parquet binary columns;
-``mapInPandas`` streams Arrow batches so one task never materializes its
-whole partition; ``maxRecordsPerBatch`` bounds batch memory for large
-blobs.
+One Arrow seam: every operator that runs Python per row goes through
+``_map_rows`` — one ``mapInArrow`` whose first input column is the key
+(passed through unchanged) and whose per-row function returns the
+remaining output fields. The quarantine contract lives there too: an
+operator names the exception types that mark a payload undecodable —
+``ValueError`` for the decoders, ``(ValueError, IndexError)`` for the
+audio-sample decoders, plus ``TypeError`` in ``equalize_images`` and
+``adpcm_decode`` — and such a row comes back as the key plus NULLs,
+so one corrupt byte stream never kills the stage. The ``synthesize_*``
+fixture generators catch nothing: a fixture bug fails the job loudly.
+``adpcm_decode`` drops its quarantine rows.
+
+At scale: binary payloads ride in Parquet binary columns; ``mapInArrow``
+streams Arrow batches so one task never materializes its whole
+partition; ``maxRecordsPerBatch`` bounds batch memory for large blobs.
 """
 
 from __future__ import annotations
@@ -56,13 +66,14 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -84,6 +95,56 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("feature", T.ArrayType(T.FloatType()), False),
     ]
 )
+
+
+def _map_rows(
+    df: DataFrame,
+    fn: Callable[..., tuple],
+    schema: T.StructType,
+    catch: tuple[type[Exception], ...] = (),
+) -> DataFrame:
+    """The module's one Python seam: a single ``mapInArrow`` over ``df``.
+
+    The first column of ``df`` is the key; it passes through as
+    ``schema``'s first field (cast to that field's type). For every row, ``fn`` receives the
+    remaining column values as Python objects and returns the remaining
+    ``schema`` fields as a tuple. When ``fn`` raises one of ``catch``,
+    the row becomes a quarantine row: the key plus NULLs. Each output
+    column is built by ``pa.array`` with the field's Arrow type, so an
+    all-quarantined or empty batch needs no special case."""
+    types = [to_arrow_type(f.dataType) for f in schema.fields]
+    quarantine = (None,) * (len(types) - 1)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = []
+            for values in zip(*(c.to_pylist() for c in batch.columns[1:])):
+                try:
+                    rows.append(fn(*values))
+                except catch:
+                    rows.append(quarantine)
+            cols = zip(*rows) if rows else [()] * len(quarantine)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).cast(types[0])]
+                + [pa.array(c, type=t) for c, t in zip(cols, types[1:])],
+                names=schema.names,
+            )
+
+    return df.mapInArrow(run, schema)
+
+
+def _synthesize(
+    df: DataFrame, id_col: str, encode: Callable[[int], bytes]
+) -> DataFrame:
+    """Fixture generator seam → (media_id, payload) with
+    ``payload = encode(media_id)``. Nothing is caught: a fixture bug
+    fails the job instead of quarantining."""
+    key = F.col(id_col).cast("long")
+    return _map_rows(
+        df.select(key.alias("media_id"), key),
+        lambda i: (encode(i),),
+        IMAGE_SCHEMA,
+    )
 
 
 def synthesize_media(df: DataFrame, id_col: str, payload_from: str) -> DataFrame:
@@ -2243,76 +2304,38 @@ def image_pixel_stats(images: DataFrame) -> DataFrame:
     with no float-division ulp hazard; ``mean_px`` (= px_sum/n_px) is
     for human consumers."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, ws, hs, chs = [], [], [], []
-            ns, sums, means, mins, maxs, possums = [], [], [], [], [], []
-            for p in pdf["payload"]:
-                try:
-                    try:
-                        w, h, ch, px = decode_png_pixels(p)
-                        fmt = "png"
-                    except ValueError:
-                        try:
-                            w, h, ch, px = decode_gif_pixels(p)
-                            fmt = "gif"
-                        except ValueError:
-                            try:
-                                w, h, ch, px = decode_jpeg_pixels(p)
-                                fmt = "jpeg"
-                            except ValueError:
-                                try:
-                                    w, h, ch, px = decode_bmp_pixels(p)
-                                    fmt = "bmp"
-                                except ValueError:
-                                    w, h, ch, px = decode_qoi_pixels(p)
-                                    fmt = "qoi"
-                    a = np.frombuffer(px, dtype=np.uint8)
-                    s = int(a.sum(dtype=np.int64))
-                    fmts.append(fmt)
-                    ws.append(w)
-                    hs.append(h)
-                    chs.append(ch)
-                    ns.append(a.size)
-                    sums.append(s)
-                    means.append(s / a.size)
-                    mins.append(int(a.min()))
-                    maxs.append(int(a.max()))
-                    # position-weighted checksum Σ k·byte[k]: unlike the
-                    # multiset stats above it is ROW-ORDER sensitive, so
-                    # a mis-deinterlaced GIF or swapped-channel decode
-                    # mismatches even when sum/min/max agree.
-                    possums.append(
-                        int((a.astype(np.int64) * np.arange(a.size)).sum())
-                    )
-                except ValueError:
-                    fmts.append(None)
-                    ws.append(None)
-                    hs.append(None)
-                    chs.append(None)
-                    ns.append(None)
-                    sums.append(None)
-                    means.append(None)
-                    mins.append(None)
-                    maxs.append(None)
-                    possums.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "format": fmts,
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "channels": pd.array(chs, dtype="Int32"),
-                    "n_px": pd.array(ns, dtype="Int32"),
-                    "px_sum": pd.array(sums, dtype="Int64"),
-                    "mean_px": pd.array(means, dtype="float64"),
-                    "min_px": pd.array(mins, dtype="Int32"),
-                    "max_px": pd.array(maxs, dtype="Int32"),
-                    "pos_sum": pd.array(possums, dtype="Int64"),
-                }
-            )
+    def stats(p):
+        for fmt, decode in (
+            ("png", decode_png_pixels),
+            ("gif", decode_gif_pixels),
+            ("jpeg", decode_jpeg_pixels),
+            ("bmp", decode_bmp_pixels),
+            ("qoi", decode_qoi_pixels),
+        ):
+            try:
+                w, h, ch, px = decode(p)
+                break
+            except ValueError:
+                continue
+        else:
+            raise ValueError("no pixel decoder accepts the payload")
+        a = np.frombuffer(px, dtype=np.uint8)
+        s = int(a.sum(dtype=np.int64))
+        # position-weighted checksum Σ k·byte[k]: unlike the multiset
+        # stats it is ROW-ORDER sensitive, so a mis-deinterlaced GIF or
+        # swapped-channel decode mismatches even when sum/min/max agree.
+        pos_sum = int((a.astype(np.int64) * np.arange(a.size)).sum())
+        return (
+            fmt, w, h, ch, a.size, s, s / a.size,
+            int(a.min()), int(a.max()), pos_sum,
+        )
 
-    return images.mapInPandas(run, schema=PIXEL_STATS_SCHEMA)
+    return _map_rows(
+        images.select("media_id", "payload"),
+        stats,
+        PIXEL_STATS_SCHEMA,
+        catch=(ValueError,),
+    )
 
 
 # -- real audio container codec (WAV/RIFF, stdlib-only) ------------------
@@ -2747,6 +2770,15 @@ IMAGE_SCHEMA = T.StructType(
     ]
 )
 
+# Output of the decode → transform → re-encode operators: an
+# undecodable input comes back as a NULL payload (quarantine row).
+_RECODED_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("payload", T.BinaryType(), True),
+    ]
+)
+
 DIMS_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -2765,25 +2797,12 @@ def synthesize_images(
     (``id % max_w + 1`` × ``id % max_h + 1``) so an oracle can predict
     them arithmetically while the engine has to earn them by parsing
     actual container bytes. Encoding is Python (byte assembly), so it
-    runs in the same Arrow ``mapInPandas`` seam a real ingest decoder
+    runs in the same Arrow seam (``_map_rows``) a real ingest decoder
     uses."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        encoders = [encode_png, encode_jpeg, encode_gif]
-        for pdf in batches:
-            ids = pdf["media_id"]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": [
-                        encoders[i % 3](int(i % max_w + 1), int(i % max_h + 1))
-                        for i in ids
-                    ],
-                }
-            )
-
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    encoders = [encode_png, encode_jpeg, encode_gif]
+    return _synthesize(
+        df, id_col, lambda i: encoders[i % 3](i % max_w + 1, i % max_h + 1)
+    )
 
 
 def synthesize_pixel_images(
@@ -2800,26 +2819,16 @@ def synthesize_pixel_images(
     covers every sample exactly. The scanline FILTER rotates over all
     five PNG filter types by id%5 — invisible to any oracle, so the
     decoder must unfilter correctly for sums/mins/maxes to match."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            payloads = []
-            for i in ids:
-                i = int(i)
-                if even_dims:
-                    w, h = (i % 8 + 1) * 2, (i % 6 + 1) * 2
-                else:
-                    w, h = i % 16 + 1, i % 12 + 1
-                ft = i % 5
-                color = (
-                    (i % 251, i * 7 % 251, i * 13 % 251) if i % 2 == 0 else None
-                )
-                payloads.append(encode_png(w, h, color=color, filter_type=ft))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def encode(i):
+        if even_dims:
+            w, h = (i % 8 + 1) * 2, (i % 6 + 1) * 2
+        else:
+            w, h = i % 16 + 1, i % 12 + 1
+        color = (i % 251, i * 7 % 251, i * 13 % 251) if i % 2 == 0 else None
+        return encode_png(w, h, color=color, filter_type=i % 5)
 
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_gif_images(df: DataFrame, id_col: str) -> DataFrame:
@@ -2835,32 +2844,21 @@ def synthesize_gif_images(df: DataFrame, id_col: str) -> DataFrame:
     diagonal pattern forces genuine LZW dictionary use (multi-symbol
     matches), so a decoder that mishandles code growth or the KwKwK
     case produces wrong statistics rather than crashing."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 13 + 1, i % 9 + 1
-                pal = [
-                    (
-                        (i + 31 * c) % 251,
-                        (3 * i + 17 * c) % 251,
-                        (7 * i + 11 * c) % 251,
-                    )
-                    for c in range(4)
-                ]
-                idx = bytes(
-                    (x + y) % 4 for y in range(h) for x in range(w)
-                )
-                payloads.append(
-                    encode_gif_pixels(w, h, idx, pal, interlace=i % 2 == 1)
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def encode(i):
+        w, h = i % 13 + 1, i % 9 + 1
+        pal = [
+            (
+                (i + 31 * c) % 251,
+                (3 * i + 17 * c) % 251,
+                (7 * i + 11 * c) % 251,
+            )
+            for c in range(4)
+        ]
+        idx = bytes((x + y) % 4 for y in range(h) for x in range(w))
+        return encode_gif_pixels(w, h, idx, pal, interlace=i % 2 == 1)
 
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(df, id_col, encode)
 
 
 def synthesize_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
@@ -2873,22 +2871,31 @@ def synthesize_jpeg_images(df: DataFrame, id_col: str) -> DataFrame:
     zero AC energy, so the lossy format is exactly lossless on this
     content — the oracle can demand bit-exact statistics while the
     decoder still exercises the real Huffman/dequant/IDCT path."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 15 + 1, i % 11 + 1
-                v = ((i * 37) % 125) * 2
-                payloads.append(
-                    encode_jpeg_gray(w, h, bytes([v]) * (w * h))
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def encode(i):
+        w, h = i % 15 + 1, i % 11 + 1
+        v = ((i * 37) % 125) * 2
+        return encode_jpeg_gray(w, h, bytes([v]) * (w * h))
 
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(df, id_col, encode)
+
+
+def _encode_solid_ycbcr(i: int, encoder: Callable[..., bytes]) -> bytes:
+    """The planted solid-YCbCr JPEG contract of id ``i`` (see
+    ``synthesize_jpeg_color_images``), encoded by ``encoder``."""
+    w, h = i % 13 + 1, i % 9 + 1
+    y = ((i * 37) % 128) * 2
+    cb = 9 + 17 * ((i * 53) % 15)
+    cr = 9 + 17 * ((i * 29) % 15)
+    return encoder(
+        w,
+        h,
+        bytes([y]) * (w * h),
+        bytes([cb]) * (w * h),
+        bytes([cr]) * (w * h),
+        subsampling=("4:4:4", "4:2:0", "4:2:2", "4:4:0")[i % 4],
+        restart_interval=2 if i % 3 == 0 else 0,
+    )
 
 
 def synthesize_jpeg_color_images(df: DataFrame, id_col: str) -> DataFrame:
@@ -2907,32 +2914,9 @@ def synthesize_jpeg_color_images(df: DataFrame, id_col: str) -> DataFrame:
     bit-exact RGB statistics computed in closed form (the BT.601
     reconstruction arithmetic replayed in SQL; planted values verified
     >=0.002 away from any 0.5 rounding boundary)."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 13 + 1, i % 9 + 1
-                y = ((i * 37) % 128) * 2
-                cb = 9 + 17 * ((i * 53) % 15)
-                cr = 9 + 17 * ((i * 29) % 15)
-                payloads.append(
-                    encode_jpeg_ycbcr(
-                        w,
-                        h,
-                        bytes([y]) * (w * h),
-                        bytes([cb]) * (w * h),
-                        bytes([cr]) * (w * h),
-                        subsampling=("4:4:4", "4:2:0", "4:2:2", "4:4:0")[i % 4],
-                        restart_interval=2 if i % 3 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(
+        df, id_col, lambda i: _encode_solid_ycbcr(i, encode_jpeg_ycbcr)
+    )
 
 
 def synthesize_jpeg_progressive_images(df: DataFrame, id_col: str) -> DataFrame:
@@ -2948,32 +2932,9 @@ def synthesize_jpeg_progressive_images(df: DataFrame, id_col: str) -> DataFrame:
     contract -> the jpeg_color arithmetic oracle applies verbatim, and
     any progressive-path bug (EOBRUN bookkeeping, refinement bits,
     non-interleaved AC block order, table rebuild) hash-mismatches."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 13 + 1, i % 9 + 1
-                y = ((i * 37) % 128) * 2
-                cb = 9 + 17 * ((i * 53) % 15)
-                cr = 9 + 17 * ((i * 29) % 15)
-                payloads.append(
-                    encode_jpeg_progressive(
-                        w,
-                        h,
-                        bytes([y]) * (w * h),
-                        bytes([cb]) * (w * h),
-                        bytes([cr]) * (w * h),
-                        subsampling=("4:4:4", "4:2:0", "4:2:2", "4:4:0")[i % 4],
-                        restart_interval=2 if i % 3 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(
+        df, id_col, lambda i: _encode_solid_ycbcr(i, encode_jpeg_progressive)
+    )
 
 
 def image_dims(images: DataFrame) -> DataFrame:
@@ -2982,28 +2943,12 @@ def image_dims(images: DataFrame) -> DataFrame:
     format=NULL quarantine rows instead of failing the job — at 100 TB
     some fraction of a crawl is always corrupt, and one bad byte stream
     must not kill a 1000-executor stage."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, ws, hs = [], [], []
-            for p in pdf["payload"]:
-                try:
-                    fmt, w, h = decode_image_header(p)
-                except ValueError:
-                    fmt, w, h = None, None, None
-                fmts.append(fmt)
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "format": fmts,
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                }
-            )
-
-    return images.mapInPandas(run, schema=DIMS_SCHEMA)
+    return _map_rows(
+        images.select("media_id", "payload"),
+        decode_image_header,
+        DIMS_SCHEMA,
+        catch=(ValueError,),
+    )
 
 
 AUDIO_META_SCHEMA = T.StructType(
@@ -3024,26 +2969,15 @@ def synthesize_audio(df: DataFrame, id_col: str) -> DataFrame:
     to earn it by walking actual RIFF chunks. Contract: duration_ms =
     id % 1000 + 20, sample_rate = 8000 << (id % 2), channels =
     (id % 3) % 2 + 1."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": [
-                        encode_wav(
-                            duration_ms=int(i % 1000 + 20),
-                            sample_rate=8000 << (int(i) % 2),
-                            channels=(int(i) % 3) % 2 + 1,
-                        )
-                        for i in ids
-                    ],
-                }
-            )
-
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: encode_wav(
+            duration_ms=i % 1000 + 20,
+            sample_rate=8000 << (i % 2),
+            channels=(i % 3) % 2 + 1,
+        ),
+    )
 
 
 def audio_meta(audio: DataFrame) -> DataFrame:
@@ -3051,30 +2985,12 @@ def audio_meta(audio: DataFrame) -> DataFrame:
     (media_id, format, sample_rate, channels, duration_ms). Unparseable
     payloads become format=NULL quarantine rows, same contract as
     ``image_dims`` — corrupt bytes must never kill the stage."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, rates, chans, durs = [], [], [], []
-            for p in pdf["payload"]:
-                try:
-                    fmt, r, c, d = decode_wav_header(p)
-                except ValueError:
-                    fmt, r, c, d = None, None, None, None
-                fmts.append(fmt)
-                rates.append(r)
-                chans.append(c)
-                durs.append(d)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "format": fmts,
-                    "sample_rate": pd.array(rates, dtype="Int32"),
-                    "channels": pd.array(chans, dtype="Int32"),
-                    "duration_ms": pd.array(durs, dtype="Int32"),
-                }
-            )
-
-    return audio.mapInPandas(run, schema=AUDIO_META_SCHEMA)
+    return _map_rows(
+        audio.select("media_id", "payload"),
+        decode_wav_header,
+        AUDIO_META_SCHEMA,
+        catch=(ValueError,),
+    )
 
 
 # -- real audio SAMPLE decode (PCM int16, stdlib-only) -------------------
@@ -3148,6 +3064,14 @@ def encode_wav_pcm(
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
+def _square_wave(amp: int, half: int, reps: int) -> "np.ndarray":
+    """``reps`` repetitions of [+amp × half, −amp × half] as int16."""
+    block = np.concatenate(
+        [np.full(half, amp, "<i2"), np.full(half, -amp, "<i2")]
+    )
+    return np.tile(block, reps)
+
+
 def synthesize_tones(df: DataFrame, id_col: str) -> DataFrame:
     """Fixture generator: one REAL mono 16-bit PCM square wave per row,
     with a planted arithmetic contract so an oracle can predict the
@@ -3158,24 +3082,13 @@ def synthesize_tones(df: DataFrame, id_col: str) -> DataFrame:
     2PK exactly, peak = A, rms = A (every |sample| = A), mean = 0
     (balanced halves) and zero crossings = 2K − 1 (one per block
     boundary)."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            payloads = []
-            for i in ids:
-                i = int(i)
-                amp = (i % 5 + 1) * 1000
-                half = i % 4 + 1
-                reps = i % 50 + 10
-                block = np.concatenate(
-                    [np.full(half, amp, "<i2"), np.full(half, -amp, "<i2")]
-                )
-                payloads.append(encode_wav_pcm(np.tile(block, reps)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: encode_wav_pcm(
+            _square_wave((i % 5 + 1) * 1000, i % 4 + 1, i % 50 + 10)
+        ),
+    )
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
@@ -3190,6 +3103,24 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
+def _pcm_stats(frames: "np.ndarray") -> tuple:
+    """(n_frames, peak, rms, mean_sample, zero_crossings) of decoded
+    int16 frames; zero crossings count sign changes on channel 0."""
+    if frames.shape[0] == 0:
+        raise ValueError("zero-length data chunk")
+    s = frames.astype(np.float64)
+    ch0 = frames[:, 0].astype(np.int64)
+    return (
+        frames.shape[0],
+        int(np.abs(frames.astype(np.int64)).max()),
+        float(np.sqrt((s * s).mean())),
+        # + 0.0 normalizes a signed -0.0 to 0.0 so the value hash
+        # matches the oracle's literal 0.
+        float(s.mean()) + 0.0,
+        int((ch0[:-1] * ch0[1:] < 0).sum()),
+    )
+
+
 def audio_features(audio: DataFrame) -> DataFrame:
     """REAL signal statistics from decoded PCM samples — the audio
     analogue of ``image_pixel_stats``: n_frames, peak (max |s|), RMS,
@@ -3198,45 +3129,15 @@ def audio_features(audio: DataFrame) -> DataFrame:
     values, so any decode bug (endianness, channel interleave, data
     offset) shifts the statistics and hash-mismatches the oracle.
     Undecodable payloads quarantine as NULL-feature rows rather than
-    killing the stage. Arrow-batched ``mapInPandas``; at 100 TB the
+    killing the stage. Arrow-batched (``_map_rows``); at 100 TB the
     payload column streams batch-at-a-time and the output is a few
     scalars per row."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            nf, pk, rms, mean, zc = [], [], [], [], []
-            for p in pdf["payload"]:
-                try:
-                    _rate, _ch, frames = decode_wav_samples(p)
-                    if frames.shape[0] == 0:
-                        raise ValueError("zero-length data chunk")
-                    s = frames.astype(np.float64)
-                    ch0 = frames[:, 0].astype(np.int64)
-                    nf.append(frames.shape[0])
-                    pk.append(int(np.abs(frames.astype(np.int64)).max()))
-                    rms.append(float(np.sqrt((s * s).mean())))
-                    # + 0.0 normalizes a signed -0.0 to 0.0 so the
-                    # value hash matches the oracle's literal 0.
-                    mean.append(float(s.mean()) + 0.0)
-                    zc.append(int((ch0[:-1] * ch0[1:] < 0).sum()))
-                except (ValueError, IndexError):
-                    nf.append(None)
-                    pk.append(None)
-                    rms.append(None)
-                    mean.append(None)
-                    zc.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_frames": pd.array(nf, dtype="Int32"),
-                    "peak": pd.array(pk, dtype="Int32"),
-                    "rms": pd.array(rms, dtype="float64"),
-                    "mean_sample": pd.array(mean, dtype="float64"),
-                    "zero_crossings": pd.array(zc, dtype="Int32"),
-                }
-            )
-
-    return audio.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
+    return _map_rows(
+        audio.select("media_id", "payload"),
+        lambda p: _pcm_stats(decode_wav_samples(p)[2]),
+        AUDIO_FEATURES_SCHEMA,
+        catch=(ValueError, IndexError),
+    )
 
 
 AUDIO_SPECTRUM_SCHEMA = T.StructType(
@@ -3260,42 +3161,26 @@ def audio_spectrum(audio: DataFrame) -> DataFrame:
     the planted square-wave fixtures every one of these has a CLOSED
     FORM (fundamental at bin K with |X| = 2AK / sin(π/2P), energy
     2PK·A²), so the oracle proves the engine ran a real transform on
-    really-decoded samples. Arrow-batched ``mapInPandas``; an O(n log n)
+    really-decoded samples. Arrow-batched (``_map_rows``); an O(n log n)
     rfft per clip is the sanctioned per-item CPU boundary, same as
     image decode."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            nb, pb, pm, pw = [], [], [], []
-            for p in pdf["payload"]:
-                try:
-                    _rate, _ch, frames = decode_wav_samples(p)
-                    if frames.shape[0] == 0:
-                        raise ValueError("zero-length data chunk")
-                    ch0 = frames[:, 0].astype(np.float64)
-                    spec = np.abs(np.fft.rfft(ch0))
-                    k = 1 + int(np.argmax(spec[1:])) if len(spec) > 1 else 0
-                    nb.append(len(spec))
-                    pb.append(k)
-                    pm.append(round(float(spec[k]), 2))
-                    s64 = frames[:, 0].astype(np.int64)
-                    pw.append(int((s64 * s64).sum()))
-                except (ValueError, IndexError):
-                    nb.append(None)
-                    pb.append(None)
-                    pm.append(None)
-                    pw.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bins": pd.array(nb, dtype="Int32"),
-                    "peak_bin": pd.array(pb, dtype="Int32"),
-                    "peak_mag": pd.array(pm, dtype="float64"),
-                    "power": pd.array(pw, dtype="Int64"),
-                }
-            )
+    def spectrum(p):
+        _rate, _ch, frames = decode_wav_samples(p)
+        if frames.shape[0] == 0:
+            raise ValueError("zero-length data chunk")
+        ch0 = frames[:, 0].astype(np.float64)
+        spec = np.abs(np.fft.rfft(ch0))
+        k = 1 + int(np.argmax(spec[1:])) if len(spec) > 1 else 0
+        s64 = frames[:, 0].astype(np.int64)
+        return (len(spec), k, round(float(spec[k]), 2), int((s64 * s64).sum()))
 
-    return audio.mapInPandas(run, schema=AUDIO_SPECTRUM_SCHEMA)
+    return _map_rows(
+        audio.select("media_id", "payload"),
+        spectrum,
+        AUDIO_SPECTRUM_SCHEMA,
+        catch=(ValueError, IndexError),
+    )
 
 
 VIDEO_META_SCHEMA = T.StructType(
@@ -3318,27 +3203,16 @@ def synthesize_video(df: DataFrame, id_col: str) -> DataFrame:
     the engine has to recover them by walking actual boxes AND honoring
     the varying timescale (a decoder that assumes ms-units fails 2/3 of
     rows)."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": [
-                        encode_mp4(
-                            duration_ms=int(i % 9000 + 500),
-                            width=int(i % 320 + 16),
-                            height=int(i % 240 + 16),
-                            timescale=1000 * (int(i) % 3 + 1),
-                        )
-                        for i in ids
-                    ],
-                }
-            )
-
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: encode_mp4(
+            duration_ms=i % 9000 + 500,
+            width=i % 320 + 16,
+            height=i % 240 + 16,
+            timescale=1000 * (i % 3 + 1),
+        ),
+    )
 
 
 def video_meta(videos: DataFrame) -> DataFrame:
@@ -3347,30 +3221,12 @@ def video_meta(videos: DataFrame) -> DataFrame:
     payloads become format=NULL quarantine rows, same contract as
     ``image_dims``/``audio_meta`` — corrupt bytes never kill the
     stage."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, ws, hs, durs = [], [], [], []
-            for p in pdf["payload"]:
-                try:
-                    fmt, w, h, d = decode_mp4_header(p)
-                except ValueError:
-                    fmt, w, h, d = None, None, None, None
-                fmts.append(fmt)
-                ws.append(w)
-                hs.append(h)
-                durs.append(d)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "format": fmts,
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "duration_ms": pd.array(durs, dtype="Int32"),
-                }
-            )
-
-    return videos.mapInPandas(run, schema=VIDEO_META_SCHEMA)
+    return _map_rows(
+        videos.select("media_id", "payload"),
+        decode_mp4_header,
+        VIDEO_META_SCHEMA,
+        catch=(ValueError,),
+    )
 
 
 VIDEO_FRAMES_SCHEMA = T.StructType(
@@ -3395,36 +3251,23 @@ def video_frame_index(videos: DataFrame) -> DataFrame:
     seeks WITHOUT touching coded media data; payloads lacking sample
     tables (header-only streams) quarantine as NULL rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ns, sy, bt, mx, ld = [], [], [], [], []
-            for p in pdf["payload"]:
-                try:
-                    ts, samples = decode_mp4_samples(p)
-                    sizes = [s for _, _, s, _ in samples]
-                    ns.append(len(samples))
-                    sy.append(sum(1 for t in samples if t[3]))
-                    bt.append(int(sum(sizes)))
-                    mx.append(int(max(sizes)))
-                    ld.append(samples[-1][1] * 1000 // ts)
-                except ValueError:
-                    ns.append(None)
-                    sy.append(None)
-                    bt.append(None)
-                    mx.append(None)
-                    ld.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_samples": pd.array(ns, dtype="Int32"),
-                    "n_sync": pd.array(sy, dtype="Int32"),
-                    "bytes_total": pd.array(bt, dtype="Int64"),
-                    "max_size": pd.array(mx, dtype="Int32"),
-                    "last_dts_ms": pd.array(ld, dtype="Int64"),
-                }
-            )
+    def index(p):
+        ts, samples = decode_mp4_samples(p)
+        sizes = [s for _, _, s, _ in samples]
+        return (
+            len(samples),
+            sum(1 for t in samples if t[3]),
+            int(sum(sizes)),
+            int(max(sizes)),
+            samples[-1][1] * 1000 // ts,
+        )
 
-    return videos.mapInPandas(run, schema=VIDEO_FRAMES_SCHEMA)
+    return _map_rows(
+        videos.select("media_id", "payload"),
+        index,
+        VIDEO_FRAMES_SCHEMA,
+        catch=(ValueError,),
+    )
 
 
 def synthesize_mp4_tracks(df: DataFrame, id_col: str) -> DataFrame:
@@ -3434,35 +3277,24 @@ def synthesize_mp4_tracks(df: DataFrame, id_col: str) -> DataFrame:
     timescale 600, size_i = (13i + id) % 900 + 100 bytes, keyframe
     every id%5+2 samples (1-based starting at sample 1). Every scalar
     ``video_frame_index`` emits then has an arithmetic closed form."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = i % 30 + 5
-                delta = i % 3 + 1
-                payloads.append(
-                    encode_mp4_track(
-                        width=320,
-                        height=240,
-                        sample_deltas=[delta] * n,
-                        sample_sizes=[
-                            (13 * j + i) % 900 + 100 for j in range(n)
-                        ],
-                        sync_every=i % 5 + 2,
-                        media_timescale=600,
-                    )
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def encode(i):
+        n = i % 30 + 5
+        delta = i % 3 + 1
+        return encode_mp4_track(
+            width=320,
+            height=240,
+            sample_deltas=[delta] * n,
+            sample_sizes=[(13 * j + i) % 900 + 100 for j in range(n)],
+            sync_every=i % 5 + 2,
+            media_timescale=600,
+        )
 
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(df, id_col, encode)
 
 
 def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
-    """mapInPandas feature extraction over Arrow batches.
+    """Feature extraction over Arrow batches (``_map_rows``).
 
     The per-batch loop is the real shape of a media pipeline: decode each
     payload, emit fixed-width features. Python is unavoidable here
@@ -3476,30 +3308,20 @@ def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
     native codec is wired in.
     """
 
-    def feat(p, d=dim):
+    def features(kind, p):
         for real in (png_feature, gif_feature, jpeg_feature):
             try:
-                return real(p, d)
+                vec = real(p, dim)
+                break
             except ValueError:
                 continue
-        return decode_stub(p, "", d)
+        else:
+            vec = decode_stub(p, "", dim)
+        return (kind, len(p or b""), hashlib.sha256(p or b"").hexdigest(), vec)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": payloads.map(lambda p: len(p or b"")).astype("int32"),
-                    "content_hash": payloads.map(
-                        lambda p: hashlib.sha256(p or b"").hexdigest()
-                    ),
-                    "feature": payloads.map(feat),
-                }
-            )
-
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return _map_rows(
+        media.select("media_id", "kind", "payload"), features, FEATURE_SCHEMA
+    )
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -3534,22 +3356,11 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     cross into Arrow batches. Output keeps the media shape (payload +
     updated dims) so downstream feature extraction composes."""
     imgs = media.filter(F.col("kind") == "image")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "payload": pdf["payload"].map(
-                        lambda p: resize_stub(p, width, height)
-                    ),
-                    "meta_width": width,
-                    "meta_height": height,
-                }
-            )
-
-    return imgs.mapInPandas(run, schema=RESIZED_SCHEMA)
+    return _map_rows(
+        imgs.select("media_id", "kind", "payload"),
+        lambda kind, p: (kind, resize_stub(p, width, height), width, height),
+        RESIZED_SCHEMA,
+    )
 
 
 def sample_frame_times(media: DataFrame, every_ms: int = 5000) -> DataFrame:
@@ -3589,23 +3400,15 @@ def extract_frames(
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "frame_idx": pdf["frame_idx"],
-                    "ts_ms": pdf["ts_ms"],
-                    "feature": [
-                        decode_stub(
-                            (p or b"") + int(t).to_bytes(8, "big"), "video", dim
-                        )
-                        for p, t in zip(pdf["payload"], pdf["ts_ms"])
-                    ],
-                }
-            )
+    def feature(frame_idx, ts, p):
+        seek = (p or b"") + int(ts).to_bytes(8, "big")
+        return (frame_idx, ts, decode_stub(seek, "video", dim))
 
-    return rows.mapInPandas(run, schema=schema)
+    return _map_rows(
+        rows.select("media_id", "frame_idx", "ts_ms", "payload"),
+        feature,
+        schema,
+    )
 
 
 _PNG_COLOR_TYPE = {1: 0, 3: 2, 2: 4, 4: 6}  # channels -> color type
@@ -3675,25 +3478,11 @@ def downsample_images(media: DataFrame, factor: int) -> DataFrame:
     → (media_id, payload) with each payload a real downsampled PNG.
     Undecodable/misaligned payloads quarantine as NULL payloads (the
     per-row error never kills the stage)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for p in pdf["payload"]:
-                try:
-                    outs.append(downsample_png(p, factor))
-                except ValueError:
-                    outs.append(None)
-            yield pd.DataFrame({"media_id": pdf["media_id"], "payload": outs})
-
-    return media.mapInPandas(
-        run,
-        schema=T.StructType(
-            [
-                T.StructField("media_id", T.LongType(), False),
-                T.StructField("payload", T.BinaryType(), True),
-            ]
-        ),
+    return _map_rows(
+        media.select("media_id", "payload"),
+        lambda p: (downsample_png(p, factor),),
+        _RECODED_SCHEMA,
+        catch=(ValueError,),
     )
 
 
@@ -3846,67 +3635,28 @@ def synthesize_g711_tones(
     segment s = id%8, mantissa m = id%15+1 → mu amplitude
     A = 4·(((2m+33)·2^s) − 33); half-period P = id%4+1; reps
     K = id%50+10."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            payloads = []
-            for i in ids:
-                i = int(i)
-                s, m = i % 8, i % 15 + 1
-                if law == "mu":
-                    amp = 4 * (((2 * m + 33) << s) - 33)
-                else:
-                    amp = 8 * ((2 * m + 1) if s == 0 else ((2 * m + 33) << (s - 1)))
-                half = i % 4 + 1
-                reps = i % 50 + 10
-                block = np.concatenate(
-                    [np.full(half, amp, "<i2"), np.full(half, -amp, "<i2")]
-                )
-                payloads.append(encode_wav_g711(np.tile(block, reps), law=law))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def encode(i):
+        s, m = i % 8, i % 15 + 1
+        if law == "mu":
+            amp = 4 * (((2 * m + 33) << s) - 33)
+        else:
+            amp = 8 * ((2 * m + 1) if s == 0 else ((2 * m + 33) << (s - 1)))
+        wave = _square_wave(amp, i % 4 + 1, i % 50 + 10)
+        return encode_wav_g711(wave, law=law)
 
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(df, id_col, encode)
 
 
 def audio_features_g711(audio: DataFrame) -> DataFrame:
     """``audio_features`` over the any-format decoder (PCM + G.711):
     same statistics, same quarantine contract."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            nf, pk, rms, mean, zc = [], [], [], [], []
-            for p in pdf["payload"]:
-                try:
-                    _rate, _ch, frames = decode_wav_samples_any(p)
-                    if frames.shape[0] == 0:
-                        raise ValueError("zero-length data chunk")
-                    s = frames.astype(np.float64)
-                    ch0 = frames[:, 0].astype(np.int64)
-                    nf.append(frames.shape[0])
-                    pk.append(int(np.abs(frames.astype(np.int64)).max()))
-                    rms.append(float(np.sqrt((s * s).mean())))
-                    mean.append(float(s.mean()) + 0.0)
-                    zc.append(int((ch0[:-1] * ch0[1:] < 0).sum()))
-                except (ValueError, IndexError):
-                    nf.append(None)
-                    pk.append(None)
-                    rms.append(None)
-                    mean.append(None)
-                    zc.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_frames": pd.array(nf, dtype="Int32"),
-                    "peak": pd.array(pk, dtype="Int32"),
-                    "rms": pd.array(rms, dtype="float64"),
-                    "mean_sample": pd.array(mean, dtype="float64"),
-                    "zero_crossings": pd.array(zc, dtype="Int32"),
-                }
-            )
-
-    return audio.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
+    return _map_rows(
+        audio.select("media_id", "payload"),
+        lambda p: _pcm_stats(decode_wav_samples_any(p)[2]),
+        AUDIO_FEATURES_SCHEMA,
+        catch=(ValueError, IndexError),
+    )
 
 
 def encode_png_interlaced(
@@ -3967,27 +3717,15 @@ def synthesize_adam7_images(df: DataFrame, id_col: str) -> DataFrame:
     bug moves mass and breaks the position checksum), per-id filter
     type id%5 exercising every unfilter path against pass-local
     priors."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["media_id"]:
-                i = int(i)
-                w, h = i % 13 + 1, i % 9 + 1
-                px = bytes(
-                    (i + 5 * x + 7 * y) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                payloads.append(
-                    encode_png_interlaced(w, h, 1, px, filter_type=i % 5)
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
+    def encode(i):
+        w, h = i % 13 + 1, i % 9 + 1
+        px = bytes(
+            (i + 5 * x + 7 * y) % 256 for y in range(h) for x in range(w)
+        )
+        return encode_png_interlaced(w, h, 1, px, filter_type=i % 5)
 
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(df, id_col, encode)
 
 
 # -- EXIF / TIFF metadata (JPEG APP1), stdlib-only ------------------------
@@ -4158,70 +3896,36 @@ def synthesize_exif_images(df: DataFrame, id_col: str) -> DataFrame:
     id-arithmetic metadata — orientation id%8+1, make 'maker<id%7>',
     model 'cam<id%11>', timestamp derived from id, byte order II for
     even ids and MM for odd (both endiannesses exercised)."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["media_id"]:
-                i = int(i)
-                payloads.append(
-                    encode_jpeg_exif(
-                        width=i % 50 + 1,
-                        height=i % 30 + 1,
-                        orientation=i % 8 + 1,
-                        make=f"maker{i % 7}",
-                        model=f"cam{i % 11}",
-                        taken_at=(
-                            f"2024:01:{i % 28 + 1:02d} "
-                            f"{i % 24:02d}:{i % 60:02d}:00"
-                        ),
-                        byte_order="II" if i % 2 == 0 else "MM",
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: encode_jpeg_exif(
+            width=i % 50 + 1,
+            height=i % 30 + 1,
+            orientation=i % 8 + 1,
+            make=f"maker{i % 7}",
+            model=f"cam{i % 11}",
+            taken_at=(
+                f"2024:01:{i % 28 + 1:02d} "
+                f"{i % 24:02d}:{i % 60:02d}:00"
+            ),
+            byte_order="II" if i % 2 == 0 else "MM",
+        ),
+    )
 
 
 def exif_metadata(images: DataFrame) -> DataFrame:
     """EXIF extraction over payload rows → EXIF_SCHEMA; undecodable
     payloads quarantine as NULL-field rows. Arrow-batched
-    ``mapInPandas`` — metadata parse touches only the first KBs of
+    (``_map_rows``) — metadata parse touches only the first KBs of
     each payload, so at 100 TB the cost is bounded by row count, not
     media bytes."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            bos, oris, makes, models, times = [], [], [], [], []
-            for p in pdf["payload"]:
-                try:
-                    bo, o, mk, md, ts = decode_exif(p)
-                    bos.append(bo)
-                    oris.append(o)
-                    makes.append(mk)
-                    models.append(md)
-                    times.append(ts)
-                except ValueError:
-                    bos.append(None)
-                    oris.append(None)
-                    makes.append(None)
-                    models.append(None)
-                    times.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "byte_order": bos,
-                    "orientation": pd.array(oris, dtype="Int32"),
-                    "make": makes,
-                    "model": models,
-                    "taken_at": times,
-                }
-            )
-
-    return images.mapInPandas(run, schema=EXIF_SCHEMA)
+    return _map_rows(
+        images.select("media_id", "payload"),
+        decode_exif,
+        EXIF_SCHEMA,
+        catch=(ValueError,),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -4381,64 +4085,33 @@ def synthesize_webp_images(df: DataFrame, id_col: str) -> DataFrame:
     it), animation on ``id % 5 == 0`` VP8X files; VP8X files nest a
     decoy VP8 chunk with different dims so canvas precedence is
     exercised on every third row."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["media_id"]:
-                i = int(i)
-                v = ("vp8", "vp8l", "vp8x")[i % 3]
-                payloads.append(
-                    encode_webp(
-                        width=i % 300 + 1,
-                        height=i % 200 + 1,
-                        variant=v,
-                        alpha=(i % 2 == 0) and v != "vp8",
-                        anim=(i % 5 == 0) and v == "vp8x",
-                        inner_dims=(i % 14 + 1, i % 10 + 1),
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
+    def encode(i):
+        v = ("vp8", "vp8l", "vp8x")[i % 3]
+        return encode_webp(
+            width=i % 300 + 1,
+            height=i % 200 + 1,
+            variant=v,
+            alpha=(i % 2 == 0) and v != "vp8",
+            anim=(i % 5 == 0) and v == "vp8x",
+            inner_dims=(i % 14 + 1, i % 10 + 1),
+        )
 
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(df, id_col, encode)
 
 
 def webp_metadata(images: DataFrame) -> DataFrame:
     """WebP header extraction over payload rows → WEBP_SCHEMA;
     undecodable payloads quarantine as NULL-field rows. Arrow-batched
-    ``mapInPandas``, parse touches only leading bytes — at 100 TB the
+    (``_map_rows``), parse touches only leading bytes — at 100 TB the
     cost is bounded by row count, not media bytes, and the stage is
     embarrassingly parallel (no shuffle)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                "variant": [], "width": [], "height": [],
-                "has_alpha": [], "has_anim": [],
-            }
-            for p in pdf["payload"]:
-                try:
-                    v, w, h, a, an = decode_webp_header(p)
-                    row = (v, w, h, a, an)
-                except ValueError:
-                    row = (None, None, None, None, None)
-                for k, val in zip(cols, row):
-                    cols[k].append(val)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "variant": cols["variant"],
-                    "width": pd.array(cols["width"], dtype="Int32"),
-                    "height": pd.array(cols["height"], dtype="Int32"),
-                    "has_alpha": pd.array(cols["has_alpha"], dtype="Int32"),
-                    "has_anim": pd.array(cols["has_anim"], dtype="Int32"),
-                }
-            )
-
-    return images.mapInPandas(run, schema=WEBP_SCHEMA)
+    return _map_rows(
+        images.select("media_id", "payload"),
+        decode_webp_header,
+        WEBP_SCHEMA,
+        catch=(ValueError,),
+    )
 
 
 def synthesize_vad_clips(
@@ -4453,34 +4126,24 @@ def synthesize_vad_clips(
     burst/gap is a whole number of analysis windows, a window-energy
     VAD recovers the segmentation EXACTLY: n_voiced = G·B, n_segments
     = G, first voiced frame = Z·window."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
     w = int(window)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            payloads = []
-            for i in ids:
-                i = int(i)
-                amp = (i % 5 + 1) * 1000
-                burst_w = (i % 4 + 1) * 4
-                gap_w = (i % 3 + 1) * 2
-                bursts = i % 3 + 2
-                gap = np.zeros(gap_w * w, "<i2")
-                # alternate +A/-A per frame inside bursts so the clip
-                # is zero-mean (a DC-offset bug can't masquerade as
-                # silence energy)
-                b = np.full(burst_w * w, amp, "<i2")
-                b[1::2] = -amp
-                parts = [gap]
-                for _ in range(bursts):
-                    parts.extend([b, gap])
-                payloads.append(
-                    encode_wav_pcm(np.concatenate(parts))
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def encode(i):
+        amp = (i % 5 + 1) * 1000
+        burst_w = (i % 4 + 1) * 4
+        gap_w = (i % 3 + 1) * 2
+        bursts = i % 3 + 2
+        gap = np.zeros(gap_w * w, "<i2")
+        # alternate +A/-A per frame inside bursts so the clip is
+        # zero-mean (a DC-offset bug can't masquerade as silence energy)
+        b = np.full(burst_w * w, amp, "<i2")
+        b[1::2] = -amp
+        parts = [gap]
+        for _ in range(bursts):
+            parts.extend([b, gap])
+        return encode_wav_pcm(np.concatenate(parts))
 
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(df, id_col, encode)
 
 
 AUDIO_VAD_SCHEMA = T.StructType(
@@ -4508,59 +4171,36 @@ def audio_vad(
     first pass of any speech-data curation pipeline (strip silence,
     count utterances, measure speech density).
 
-    Arrow-batched ``mapInPandas`` like the rest of the codec tier: the
+    Arrow-batched (``_map_rows``) like the rest of the codec tier: the
     per-item DSP is the sanctioned Python boundary; output is a few
     scalars per clip. Undecodable payloads quarantine as NULL rows."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict = {k: [] for k in (
-                "nw", "nv", "ns", "first", "last", "ratio"
-            )}
-            for p in pdf["payload"]:
-                try:
-                    _rate, _ch, frames = decode_wav_samples(p)
-                    ch0 = frames[:, 0].astype(np.float64)
-                    n = (ch0.shape[0] // window) * window
-                    if n == 0:
-                        raise ValueError("shorter than one window")
-                    e = (ch0[:n].reshape(-1, window) ** 2).mean(axis=1)
-                    voiced = e > energy_threshold
-                    nv = int(voiced.sum())
-                    starts = int(
-                        (voiced[1:] & ~voiced[:-1]).sum()
-                    ) + int(voiced[0])
-                    idx = np.nonzero(voiced)[0]
-                    out["nw"].append(len(e))
-                    out["nv"].append(nv)
-                    out["ns"].append(starts)
-                    out["first"].append(
-                        int(idx[0]) * window if nv else None
-                    )
-                    out["last"].append(
-                        (int(idx[-1]) + 1) * window - 1 if nv else None
-                    )
-                    out["ratio"].append(round(nv / len(e), 6))
-                except (ValueError, IndexError):
-                    for k in out:
-                        out[k].append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_windows": pd.array(out["nw"], dtype="Int32"),
-                    "n_voiced": pd.array(out["nv"], dtype="Int32"),
-                    "n_segments": pd.array(out["ns"], dtype="Int32"),
-                    "first_voiced_frame": pd.array(
-                        out["first"], dtype="Int32"
-                    ),
-                    "last_voiced_frame": pd.array(
-                        out["last"], dtype="Int32"
-                    ),
-                    "voiced_ratio": pd.array(out["ratio"], dtype="float64"),
-                }
-            )
+    def vad(p):
+        _rate, _ch, frames = decode_wav_samples(p)
+        ch0 = frames[:, 0].astype(np.float64)
+        n = (ch0.shape[0] // window) * window
+        if n == 0:
+            raise ValueError("shorter than one window")
+        e = (ch0[:n].reshape(-1, window) ** 2).mean(axis=1)
+        voiced = e > energy_threshold
+        nv = int(voiced.sum())
+        starts = int((voiced[1:] & ~voiced[:-1]).sum()) + int(voiced[0])
+        idx = np.nonzero(voiced)[0]
+        return (
+            len(e),
+            nv,
+            starts,
+            int(idx[0]) * window if nv else None,
+            (int(idx[-1]) + 1) * window - 1 if nv else None,
+            round(nv / len(e), 6),
+        )
 
-    return audio.mapInPandas(run, schema=AUDIO_VAD_SCHEMA)
+    return _map_rows(
+        audio.select("media_id", "payload"),
+        vad,
+        AUDIO_VAD_SCHEMA,
+        catch=(ValueError, IndexError),
+    )
 
 
 def encode_png_palette(
@@ -4609,30 +4249,18 @@ def synthesize_palette_pngs(df: DataFrame, id_col: str) -> DataFrame:
     samples). The diagonal index pattern repeats, so the palette
     mapping — not just the inflate — is load-bearing for the
     position-weighted checksum."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h, n = i % 12 + 2, i % 8 + 2, i % 4 + 2
-                pal = bytes(
-                    v % 256
-                    for j in range(n)
-                    for v in (31 * i + 57 * j, 17 * i + 23 * j,
-                              7 * i + 11 * j)
-                )
-                idx = bytes(
-                    (x + y + i) % n for y in range(h) for x in range(w)
-                )
-                payloads.append(
-                    encode_png_palette(w, h, idx, pal, filter_type=i % 5)
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def encode(i):
+        w, h, n = i % 12 + 2, i % 8 + 2, i % 4 + 2
+        pal = bytes(
+            v % 256
+            for j in range(n)
+            for v in (31 * i + 57 * j, 17 * i + 23 * j, 7 * i + 11 * j)
+        )
+        idx = bytes((x + y + i) % n for y in range(h) for x in range(w))
+        return encode_png_palette(w, h, idx, pal, filter_type=i % 5)
 
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(df, id_col, encode)
 
 
 def equalize_png(payload: bytes) -> bytes:
@@ -4666,20 +4294,12 @@ def equalize_images(images: DataFrame) -> DataFrame:
     same (media_id, payload) contract as the synthesizers, so the
     result feeds straight into ``image_pixel_stats``. Undecodable
     payloads pass through as NULL payloads (downstream quarantines)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for p in pdf["payload"]:
-                try:
-                    outs.append(equalize_png(p))
-                except (ValueError, TypeError):
-                    outs.append(None)
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": outs}
-            )
-
-    return images.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _map_rows(
+        images.select("media_id", "payload"),
+        lambda p: (equalize_png(p),),
+        _RECODED_SCHEMA,
+        catch=(ValueError, TypeError),
+    )
 
 
 def synthesize_aligned_tones(
@@ -4691,25 +4311,14 @@ def synthesize_aligned_tones(
     block is constant, so a box decimator reproduces the wave exactly
     — n_frames = 2PK/factor, peak = rms = A, mean = 0, crossings =
     2K−1 at the decimated rate."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
     m = int(factor)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            payloads = []
-            for i in ids:
-                i = int(i)
-                amp = (i % 5 + 1) * 1000
-                half = m * (i % 3 + 1)
-                reps = i % 20 + 5
-                block = np.concatenate(
-                    [np.full(half, amp, "<i2"), np.full(half, -amp, "<i2")]
-                )
-                payloads.append(encode_wav_pcm(np.tile(block, reps)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: encode_wav_pcm(
+            _square_wave((i % 5 + 1) * 1000, m * (i % 3 + 1), i % 20 + 5)
+        ),
+    )
 
 
 def decimate_audio(audio: DataFrame, factor: int = 4) -> DataFrame:
@@ -4722,29 +4331,21 @@ def decimate_audio(audio: DataFrame, factor: int = 4) -> DataFrame:
     through as NULL."""
     m = int(factor)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for p in pdf["payload"]:
-                try:
-                    rate, _ch, frames = decode_wav_samples(p)
-                    ch0 = frames[:, 0].astype(np.float64)
-                    n = (ch0.shape[0] // m) * m
-                    if n == 0:
-                        raise ValueError("shorter than one block")
-                    dec = np.floor(
-                        ch0[:n].reshape(-1, m).mean(axis=1) + 0.5
-                    ).astype("<i2")
-                    outs.append(
-                        encode_wav_pcm(dec, sample_rate=max(1, rate // m))
-                    )
-                except (ValueError, IndexError):
-                    outs.append(None)
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": outs}
-            )
+    def decimate(p):
+        rate, _ch, frames = decode_wav_samples(p)
+        ch0 = frames[:, 0].astype(np.float64)
+        n = (ch0.shape[0] // m) * m
+        if n == 0:
+            raise ValueError("shorter than one block")
+        dec = np.floor(ch0[:n].reshape(-1, m).mean(axis=1) + 0.5).astype("<i2")
+        return (encode_wav_pcm(dec, sample_rate=max(1, rate // m)),)
 
-    return audio.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _map_rows(
+        audio.select("media_id", "payload"),
+        decimate,
+        _RECODED_SCHEMA,
+        catch=(ValueError, IndexError),
+    )
 
 
 def encode_bmp(
@@ -4825,27 +4426,20 @@ def synthesize_bmp_images(df: DataFrame, id_col: str) -> DataFrame:
     nonzero row padding). pos_sum is row-order AND channel-order
     sensitive, so a top-down/bottom-up or BGR/RGB mix-up
     hash-mismatches while px_sum still agrees."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 9 + 1, i % 7 + 1
-                px = bytearray()
-                for y in range(h):
-                    for x in range(w):
-                        px += bytes((
-                            (i + 3 * x + 5 * y) % 256,
-                            (i + 7 * x + y) % 256,
-                            (i + x + 11 * y) % 256,
-                        ))
-                payloads.append(encode_bmp(w, h, bytes(px)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def encode(i):
+        w, h = i % 9 + 1, i % 7 + 1
+        px = bytearray()
+        for y in range(h):
+            for x in range(w):
+                px += bytes((
+                    (i + 3 * x + 5 * y) % 256,
+                    (i + 7 * x + y) % 256,
+                    (i + x + 11 * y) % 256,
+                ))
+        return encode_bmp(w, h, bytes(px))
 
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(df, id_col, encode)
 
 
 # --------------------------------------------------------------------------
@@ -4980,28 +4574,21 @@ def synthesize_qoi_images(df: DataFrame, id_col: str) -> DataFrame:
     row flattened to its first pixel so RUN ops are exercised next to
     DIFF/LUMA/INDEX/RGB ones. pos_sum stays row- and channel-order
     sensitive."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 10 + 1, i % 6 + 1
-                px = bytearray()
-                for y in range(h):
-                    for x in range(w):
-                        xx = 0 if y % 3 == 2 else x
-                        px += bytes((
-                            (i + 2 * xx + 7 * y) % 256,
-                            (i + 5 * xx + 3 * y) % 256,
-                            (i + 9 * xx + y) % 256,
-                        ))
-                payloads.append(encode_qoi(w, h, bytes(px)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def encode(i):
+        w, h = i % 10 + 1, i % 6 + 1
+        px = bytearray()
+        for y in range(h):
+            for x in range(w):
+                xx = 0 if y % 3 == 2 else x
+                px += bytes((
+                    (i + 2 * xx + 7 * y) % 256,
+                    (i + 5 * xx + 3 * y) % 256,
+                    (i + 9 * xx + y) % 256,
+                ))
+        return encode_qoi(w, h, bytes(px))
 
-    return src.mapInPandas(run, schema=IMAGE_SCHEMA)
+    return _synthesize(df, id_col, encode)
 
 
 # ---------------------------------------------------------------------------
@@ -5162,7 +4749,7 @@ def synthesize_adpcm_streams(df: DataFrame, id_col: str) -> DataFrame:
     predictor 0 and step index id mod 20 — fully determined by the
     id, so a SQL twin can replay the 16 decoder steps exactly.
     → (media_id, payload, idx0)."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
+    key = F.col(id_col).cast("long")
     schema = T.StructType(
         [
             T.StructField("media_id", T.LongType()),
@@ -5171,25 +4758,14 @@ def synthesize_adpcm_streams(df: DataFrame, id_col: str) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["media_id"]
-            payloads, idxs = [], []
-            for i in ids:
-                i = int(i)
-                nibbles = [(7 * i + 3 * j) % 16 for j in range(16)]
-                payloads.append(
-                    bytes(
-                        nibbles[j] | (nibbles[j + 1] << 4)
-                        for j in range(0, 16, 2)
-                    )
-                )
-                idxs.append(i % 20)
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": payloads, "idx0": idxs}
-            )
+    def encode(i):
+        nibbles = [(7 * i + 3 * j) % 16 for j in range(16)]
+        payload = bytes(
+            nibbles[j] | (nibbles[j + 1] << 4) for j in range(0, 16, 2)
+        )
+        return (payload, i % 20)
 
-    return src.mapInPandas(run, schema=schema)
+    return _map_rows(df.select(key.alias("media_id"), key), encode, schema)
 
 
 def adpcm_decode(
@@ -5223,27 +4799,19 @@ def adpcm_decode(
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in schema.fields}
-            for mid, data, idx0 in zip(
-                pdf["media_id"], pdf["_data"], pdf["_idx0"]
-            ):
-                try:
-                    if idx0 is None or not (0 <= int(idx0) <= 88):
-                        raise ValueError("bad step index")
-                    s = ima_adpcm_decode_raw(bytes(data), 0, int(idx0))
-                except (ValueError, TypeError):
-                    continue
-                out["media_id"].append(int(mid))
-                out["n_samples"].append(len(s))
-                out["first_sample"].append(int(s[0]) if len(s) else 0)
-                out["last_sample"].append(int(s[-1]) if len(s) else 0)
-                out["sum_abs"].append(int(np.abs(s.astype(np.int64)).sum()))
-                out["samples"].append([int(x) for x in s])
-            # an all-quarantined batch would materialize float64 empty
-            # columns Arrow can't cast to list<int> — yield nothing
-            if out["media_id"]:
-                yield pd.DataFrame(out)
+    def decode(data, idx0):
+        if idx0 is None or not (0 <= int(idx0) <= 88):
+            raise ValueError("bad step index")
+        s = ima_adpcm_decode_raw(bytes(data), 0, int(idx0))
+        return (
+            len(s),
+            int(s[0]) if len(s) else 0,
+            int(s[-1]) if len(s) else 0,
+            int(np.abs(s.astype(np.int64)).sum()),
+            s.tolist(),
+        )
 
-    return src.mapInPandas(run, schema=schema)
+    # corrupt rows come back as quarantine rows (n_samples NULL); this
+    # operator's contract drops them instead of passing them on
+    decoded = _map_rows(src, decode, schema, catch=(ValueError, TypeError))
+    return decoded.filter(F.col("n_samples").isNotNull())

@@ -41,6 +41,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from from_superset_to_clickhouse_spark.fsio import Fs, join
 from from_superset_to_clickhouse_spark.functions.scalar import month_floor
@@ -1758,7 +1759,15 @@ class TableStore:
         would make the update non-deterministic); key and
         partition(-source) columns cannot be updated; dedup-keyed
         tables refuse MERGE (their append IS an upsert — use append +
-        latest_view/compact)."""
+        latest_view/compact).
+
+        Crash window: a merge that rewrites AND inserts commits in two
+        steps. On a partitioned table, inserts that fall into rewritten
+        partitions land atomically with the partition swap; the
+        remaining inserts land in a later append. A crash between the
+        two leaves the merge half-applied (updates and folded inserts,
+        none of the rest), and no staging marker records it, so
+        ``vacuum`` cannot detect it."""
         meta = self._meta(name)
         if meta.get("dedup_key"):
             raise ValueError(
@@ -1793,21 +1802,39 @@ class TableStore:
             )
         from pyspark.sql import Observation
 
+        # A localCheckpointed source has no size statistics, so the
+        # planner can never auto-broadcast it and both merge joins fall
+        # back to shuffling the TARGET side. The checkpoint job also
+        # measures the exact row count and string/binary bytes; with
+        # Catalyst's static width for the fixed-width columns that is
+        # the sizing rule the planner applies when stats exist. (The
+        # static width counts every string as 20 bytes, so a source of
+        # long texts would be broadcast at many times the threshold.)
+        var_cols = [
+            f.name
+            for f in source.schema.fields
+            if isinstance(f.dataType, (T.StringType, T.BinaryType))
+        ]
         src_obs = Observation()
         src = source.observe(
-            src_obs, F.count(F.lit(1)).alias("n")
+            src_obs,
+            F.count(F.lit(1)).alias("n"),
+            *[
+                F.sum(F.octet_length(F.col(c))).alias(f"b{i}")
+                for i, c in enumerate(var_cols)
+            ],
         ).localCheckpoint(eager=True)
-        n_src = int(src_obs.get["n"])
+        src_stats = src_obs.get
+        n_src = int(src_stats["n"])
+        var_bytes = {
+            c: int(src_stats[f"b{i}"] or 0) for i, c in enumerate(var_cols)
+        }
+        jschema = src._jdf.schema()
 
-        # r16 (guide §3.1): a localCheckpointed source has no size
-        # statistics, so the planner can never auto-broadcast it and
-        # both merge joins fall back to shuffling the TARGET side. We
-        # know the exact row count (it rode the checkpoint job above);
-        # with Catalyst's own static per-row width that is the same
-        # sizing rule the planner applies when stats exist — hint
-        # broadcast only when the estimate clears the session threshold,
-        # so an outsized upsert batch still shuffle-joins.
-        def _maybe_broadcast(d: DataFrame) -> DataFrame:
+        # Hint broadcast only when the estimate for the source columns
+        # ``cols`` that ``d`` carries clears the session threshold, so
+        # an outsized upsert batch still shuffle-joins.
+        def _maybe_broadcast(d: DataFrame, cols: list[str]) -> DataFrame:
             try:
                 thr = int(
                     str(
@@ -1820,11 +1847,16 @@ class TableStore:
                 thr = 10 * 1024 * 1024
             if thr <= 0:
                 return d
-            est = n_src * int(d._jdf.schema().defaultSize())
+            est = sum(
+                var_bytes[c]
+                if c in var_bytes
+                else n_src * int(jschema.apply(c).dataType().defaultSize())
+                for c in cols
+            )
             return F.broadcast(d) if est <= thr else d
 
         df = self.read(name)
-        src_keys = _maybe_broadcast(src.select(*on).distinct())
+        src_keys = _maybe_broadcast(src.select(*on).distinct(), on)
         data = join(self.path(name), "data")
 
         # r16 (guide §2.6): the duplicate-key gate, the not-matched
@@ -1921,7 +1953,8 @@ class TableStore:
                         *on,
                         F.lit(1).alias("_m"),
                         *[F.col(c).alias("_src_" + c) for c in update_cols],
-                    )
+                    ),
+                    on + update_cols,
                 )
                 joined = affected.join(upd_src, on, "left")
                 if delete_matched:

@@ -1070,6 +1070,53 @@ def test_merge_into_unpartitioned_and_insert_false(spark, tmp_path):
         store.merge_into("d", df([("a", 1)]), on=["id"])
 
 
+def test_merge_into_broadcast_hint_counts_real_string_bytes(
+    spark, tmp_path, monkeypatch
+):
+    """merge_into hints a broadcast of its statistics-less source only
+    when the estimate clears spark.sql.autoBroadcastJoinThreshold, and
+    the estimate counts the source's real string bytes. 40 rows of 4 KB
+    text (160 KB) stay shuffle-joined under a 64 KB threshold, although
+    Catalyst's static width (20 bytes per string) would put them at
+    ~1 KB; the key-only probe and a small source are still hinted."""
+    import from_superset_to_clickhouse_spark.tablestore as tablestore
+
+    hinted = []
+    real_broadcast = tablestore.F.broadcast
+
+    def spy(d):
+        hinted.append(tuple(d.columns))
+        return real_broadcast(d)
+
+    monkeypatch.setattr(tablestore.F, "broadcast", spy)
+    store = TableStore(spark, str(tmp_path))
+    store.create(
+        Schema(
+            "m",
+            (Field("k", "bigint", nullable=False), Field("body", "string")),
+        )
+    )
+    df = lambda rows: spark.createDataFrame(rows, "k bigint, body string")
+    store.append("m", df([(i, "x") for i in range(50)]))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(64 * 1024))
+    try:
+        res = store.merge_into("m", df([(i, "y" * 4096) for i in range(40)]), on=["k"])
+        assert res == {"updated": 40, "deleted": 0, "inserted": 0}
+        assert hinted == [("k",)]
+        hinted.clear()
+        # a dashboards-sized batch: 25 short rows, 5 of them new
+        res = store.merge_into("m", df([(i, "z") for i in range(30, 55)]), on=["k"])
+        assert res == {"updated": 20, "deleted": 0, "inserted": 5}
+        assert hinted == [("k",), ("k", "_m", "_src_body")]
+    finally:
+        spark.conf.set(key, old)
+    got = {r["k"]: r["body"] for r in store.read("m").collect()}
+    assert len(got) == 55
+    assert got[0] == "y" * 4096 and got[30] == "z" and got[54] == "z"
+
+
 def test_vacuum_reclaims_crashed_staging_only(spark, tmp_path):
     """vacuum() removes stranded staging/trash dirs from crashed
     mutations and touches nothing committed: data survives byte-equal,
