@@ -27,6 +27,29 @@ with a committer. Concurrency contract: SINGLE WRITER PER TABLE
 (mirrors the reference's ``max_active_runs=1``, ``v2/dag.py:59``);
 the ingest-sequence bump takes a best-effort lease so a misconfigured
 second writer fails fast instead of corrupting the sequence.
+
+Every rewrite (delete, update, merge, compact, optimize, z-order) builds
+only the frame to write and commits it through ``_commit``, one
+protocol for every layout. The unit of replacement is a partition
+directory under ``data/``; an unpartitioned table is one whole-table
+unit (``data/`` itself). The steps:
+
+1. stage: write the frame to ``data_staging_<ms>`` next to ``data/``;
+2. trash: move every replaced unit to ``_trash_<ms>`` (same relative
+   path), also outside ``data/``, so partition discovery never sees a
+   stray directory;
+3. swap: move every staged unit into its place under ``data/``;
+4. drop trash: delete the staging dir (the mark that the swap is
+   done), ``data/`` itself once a partitioned table's last partition
+   is gone, then the trash.
+
+Between steps 2 and 3 a replaced unit exists only in the trash. So
+``vacuum`` rolls back: while a commit's staging dir still exists, each
+unit in its trash (or in a ``data.old.*`` dir left by older versions)
+whose place under ``data/`` is empty is moved back before the
+leftovers are deleted. No committed row is lost; each unit reads as
+either its old or its new contents, and re-running the mutation
+completes it.
 """
 
 from __future__ import annotations
@@ -65,6 +88,13 @@ _DERIVED_PARTITIONS = {
     "dttm_day": lambda: F.to_date("dttm"),
     "ts_day": lambda: F.to_date("ts"),
 }
+
+
+def _file_dir() -> Column:
+    """``_dir``: the directory of the file a scanned row came from.
+    Select it straight over a scan (after any filter): a projection of
+    this nondeterministic expression blocks filter pushdown."""
+    return F.regexp_replace(F.input_file_name(), "/[^/]*$", "").alias("_dir")
 
 
 @dataclass
@@ -260,15 +290,21 @@ class TableStore:
         # inserted wins" ordering ReplacingMergeTree uses when no version
         # column is declared.
         df = df.withColumn(INGEST_SEQ_COL, F.lit(seq))
-        shard_by = meta.get("shard_by")
-        if shard_by:
-            df = df.repartition(F.col(shard_by))
+        return self._layout(df, meta), parts
+
+    def _layout(self, df: DataFrame, meta: dict) -> DataFrame:
+        """Write layout of every full-row write: hash-repartition by the
+        shard key (co-located joins downstream), else cluster by the
+        partition columns; then sort within files by the sort key."""
+        parts = meta["partition_by"]
+        if meta.get("shard_by"):
+            df = df.repartition(F.col(meta["shard_by"]))
         elif parts:
             df = self._cluster_for_write(df, parts)
         sort_by = meta.get("sort_by") or []
         if sort_by:
             df = df.sortWithinPartitions(*[F.col(c) for c in sort_by])
-        return df, parts
+        return df
 
     def _cluster_for_write(self, df: DataFrame, parts: list) -> DataFrame:
         """Cluster a batch by its partition columns before a partitionBy
@@ -552,13 +588,7 @@ class TableStore:
         meta = self._meta(name)
         zcol, part = self._zone_spec(meta)
         zm = meta.get("zone_maps")
-        if zcol != col or not zm:
-            return None
-        on_disk = {
-            urllib.parse.unquote(e.split("=", 1)[1])
-            for e in self.partitions(name)
-        }
-        if not on_disk <= set(zm.keys()):
+        if zcol != col or not zm or not self._covers(name, zm):
             return None
         klo, khi = self._zkey(lo), self._zkey(hi)
         return sorted(
@@ -567,6 +597,45 @@ class TableStore:
             if (khi is None or mn is None or mn <= khi)
             and (klo is None or mx is None or mx >= klo)
         )
+
+    def _covers(self, name: str, keys) -> bool:
+        """Every partition on disk has an entry in ``keys`` — the
+        coverage contract of all skip indexes: a partition written
+        before an index existed has no entry and must not be pruned,
+        so the prune methods return None (full scan) instead."""
+        on_disk = {
+            urllib.parse.unquote(e.split("=", 1)[1])
+            for e in self.partitions(name)
+        }
+        return on_disk <= set(keys)
+
+    def _bloom_keep(self, filters: dict, positions: Column) -> list[str]:
+        """Partition keys whose bitmap has every bit of ``positions``
+        set — the probe of the equality and n-gram blooms. The
+        positions come from the JVM hash on a 1-row relation, so probe
+        and build agree bit-for-bit."""
+        pos = self.spark.range(1).select(positions.alias("_p")).first()["_p"]
+        bitmaps = {key: bytes.fromhex(hx) for key, hx in filters.items()}
+        return sorted(
+            key
+            for key, buf in bitmaps.items()
+            if all((buf[p >> 3] >> (p & 7)) & 1 for p in pos)
+        )
+
+    @classmethod
+    def _part_in(cls, col: Column, keys) -> Column:
+        """NULL-total predicate "partition value is one of ``keys``",
+        keys being decoded directory-name values (``_zone_part_key``).
+        ``CAST(NULL AS STRING)`` is NULL and never matches an isin, so
+        the Hive NULL key gets an explicit isNull arm, and the isin is
+        coalesced to False so callers may negate the predicate. Over
+        partition columns only, Catalyst applies it as a partition
+        filter: pruned directories are never listed or opened."""
+        keys = list(keys)
+        return F.coalesce(
+            col.cast("string").isin([k for k in keys if k != cls._HIVE_NULL]),
+            F.lit(False),
+        ) | (col.isNull() if cls._HIVE_NULL in keys else F.lit(False))
 
     # -- bloom skip indexes (per-partition bloom filter — equality skipping) --
     #
@@ -701,27 +770,12 @@ class TableStore:
         if idx is None or needle is None or len(needle) < idx["n"]:
             return None
         filters = idx.get("filters") or {}
-        on_disk = {
-            urllib.parse.unquote(e.split("=", 1)[1])
-            for e in self.partitions(name)
-        }
-        if not on_disk <= set(filters.keys()):
+        if not self._covers(name, filters):
             return None
-        pos = (
-            self.spark.range(1)
-            .select(
-                self._ngram_positions(
-                    F.lit(needle), idx["n"], idx["bits"], idx["k"]
-                ).alias("_p")
-            )
-            .first()["_p"]
+        return self._bloom_keep(
+            filters,
+            self._ngram_positions(F.lit(needle), idx["n"], idx["bits"], idx["k"]),
         )
-        keep = []
-        for key, hx in filters.items():
-            buf = bytes.fromhex(hx)
-            if all((buf[p >> 3] >> (p & 7)) & 1 for p in pos):
-                keep.append(key)
-        return sorted(keep)
 
     def read_like(self, name: str, col: str, needle: str) -> DataFrame:
         """Substring read with n-gram-bloom data skipping: ``col LIKE
@@ -729,18 +783,18 @@ class TableStore:
         time, then the exact ``contains`` applies on survivors. Without
         an applicable index (or a needle shorter than n) this degrades
         to an ordinary filtered full scan."""
-        meta = self._meta(name)
-        parts = meta["partition_by"]
-        df = self.read(name)
         keep = self.ngram_prune_partitions(name, col, needle)
-        if keep is not None and parts:
-            pred = F.col(parts[0]).cast("string").isin(
-                [kk for kk in keep if kk != self._HIVE_NULL]
-            )
-            if self._HIVE_NULL in keep:
-                pred = pred | F.col(parts[0]).isNull()
-            df = df.filter(pred)
+        df = self._pruned(name, self.read(name), keep)
         return df.filter(F.col(col).contains(F.lit(needle)))
+
+    def _pruned(self, name: str, df: DataFrame, keep) -> DataFrame:
+        """``df`` restricted to the partitions a prune method kept
+        (skip indexes need a single partition column); ``None`` keeps
+        everything."""
+        if keep is None:
+            return df
+        part = F.col(self._meta(name)["partition_by"][0])
+        return df.filter(self._part_in(part, keep))
 
     # -- projections (pre-aggregated alternate representation) -----------
     #
@@ -875,27 +929,14 @@ class TableStore:
         if idx is None or value is None:
             return None
         filters = idx.get("filters") or {}
-        on_disk = {
-            urllib.parse.unquote(e.split("=", 1)[1])
-            for e in self.partitions(name)
-        }
-        if not on_disk <= set(filters.keys()):
+        if not self._covers(name, filters):
             return None
-        pos = (
-            self.spark.range(1)
-            .select(
-                self._bloom_positions(
-                    F.lit(value).cast(idx["dtype"]), idx["bits"], idx["k"]
-                ).alias("_p")
-            )
-            .first()["_p"]
+        return self._bloom_keep(
+            filters,
+            self._bloom_positions(
+                F.lit(value).cast(idx["dtype"]), idx["bits"], idx["k"]
+            ),
         )
-        keep = []
-        for key, hx in filters.items():
-            buf = bytes.fromhex(hx)
-            if all((buf[p >> 3] >> (p & 7)) & 1 for p in pos):
-                keep.append(key)
-        return sorted(keep)
 
     def read_eq(self, name: str, col: str, value) -> DataFrame:
         """Point read with bloom-index data skipping: ``col = value`` is
@@ -904,17 +945,8 @@ class TableStore:
         out are never listed or opened), then the exact predicate applies
         on the surviving partitions. Without an applicable index this
         degrades to an ordinary filtered read."""
-        meta = self._meta(name)
-        parts = meta["partition_by"]
-        df = self.read(name)
         keep = self.bloom_prune_partitions(name, col, value)
-        if keep is not None and parts:
-            pred = F.col(parts[0]).cast("string").isin(
-                [kk for kk in keep if kk != self._HIVE_NULL]
-            )
-            if self._HIVE_NULL in keep:
-                pred = pred | F.col(parts[0]).isNull()
-            df = df.filter(pred)
+        df = self._pruned(name, self.read(name), keep)
         return df.filter(F.col(col) == F.lit(value))
 
     def read_where(self, name: str, col: str, lo=None, hi=None) -> DataFrame:
@@ -926,19 +958,8 @@ class TableStore:
         surviving partitions. Without applicable maps this degrades to
         an ordinary filtered read (parquet row-group stats still skip
         within files, courtesy of the sorted layout)."""
-        meta = self._meta(name)
-        _, part = self._zone_spec(meta)
-        df = self.read(name)
         keep = self.zone_prune_partitions(name, col, lo, hi)
-        if keep is not None:
-            # NULL partitions need an explicit isNull arm: CAST(NULL AS
-            # STRING) is NULL and an isin against it never matches.
-            pred = F.col(part).cast("string").isin(
-                [k for k in keep if k != self._HIVE_NULL]
-            )
-            if self._HIVE_NULL in keep:
-                pred = pred | F.col(part).isNull()
-            df = df.filter(pred)
+        df = self._pruned(name, self.read(name), keep)
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo))
         if hi is not None:
@@ -969,18 +990,25 @@ class TableStore:
                 if p not in [f.name for f in fields]:
                     schema = schema.add(p, "date")
             return self.spark.createDataFrame([], schema)
-        meta = self._meta(name)
+        return self._scan(self._meta(name), data, [data])
+
+    def _scan(self, meta: dict, base: str, dirs: list[str]) -> DataFrame:
+        """Parquet scan of ``dirs`` (``base`` or partition dirs under
+        it) reconciled to the table schema — ``read`` and the mutations'
+        affected-partition reads share it, so a rewrite sees evolved
+        columns exactly as a read does."""
+        reader = self.spark.read.option("basePath", base)
         evolved = meta.get("evolved_defaults") or {}
         if not evolved:
-            return self.spark.read.parquet(data)
+            return reader.parquet(*dirs)
         # Schema evolution read: files written before add_column() lack
         # the evolved columns. mergeSchema unions all file footers (paid
         # only on evolved tables — it reads every footer, so plain
         # tables keep the cheap single-footer planning path) and the
         # declared DEFAULT backfills lazily, the ClickHouse
         # ALTER ADD COLUMN semantic: no data rewrite, old rows read as
-        # the default. compact()/optimize() materialize it physically.
-        df = self.spark.read.option("mergeSchema", "true").parquet(data)
+        # the default. compact() materializes it physically.
+        df = reader.option("mergeSchema", "true").parquet(*dirs)
         for cname, (dtype, default) in evolved.items():
             filler = F.lit(default).cast(dtype)
             if cname not in df.columns:
@@ -1126,40 +1154,26 @@ class TableStore:
         """
         meta = self._meta(name)
         parts = meta["partition_by"]
-        key = meta["dedup_key"]
+        data = join(self.path(name), "data")
+        if not self.fs.exists(data):
+            return
         if meta.get("sum_cols"):
             # SummingMergeTree fold: the merged state IS the sum, so
             # compaction materializes summing_view (per-partition fold,
             # full rewrite). Post-compact appends keep accumulating —
             # sums of sums are the same sums.
             latest = self.summing_view(name)
-        elif parts and key:
+        elif parts and meta["dedup_key"]:
             self._compact_partitionwise(name, meta)
             return
         else:
             latest = self.latest_view(name)
-        tmp = join(self.path(name), "data_compacting")
-        parts = meta["partition_by"]
         out = latest.withColumn(INGEST_SEQ_COL, F.lit(meta["ingest_seq"]))
-        sort_by = meta.get("sort_by") or []
-        shard_by = meta.get("shard_by")
-        if shard_by:
-            out = out.repartition(F.col(shard_by))
-        elif parts:
-            out = self._cluster_for_write(out, parts)  # guide §6
-        if sort_by:
-            out = out.sortWithinPartitions(*sort_by)
-        w = out.write.mode("overwrite")
-        if parts:
-            w = w.partitionBy(*parts)
-        w.parquet(tmp)
-        data = join(self.path(name), "data")
-        old = data + f".old.{int(time.time() * 1000)}"
-        if self.fs.exists(data):
-            self.fs.rename(data, old)
-        self.fs.rename(tmp, data)
-        if self.fs.exists(old):
-            self.fs.delete(old)
+        self._commit(
+            name,
+            self._layout(out, meta),
+            self._partition_rel_dirs(data, len(parts)),
+        )
 
     def optimize(
         self, name: str, target_bytes: int = 128 << 20
@@ -1168,8 +1182,8 @@ class TableStore:
         only — ``compact()`` owns dedup-merge semantics): every
         partition whose data directory holds more files than
         ceil(total_bytes / target_bytes) is rewritten to exactly that
-        many, rows preserved bit-for-bit, and swapped in with the same
-        two-phase commit appends use. Returns
+        many, rows preserved bit-for-bit, and swapped in through
+        ``_commit`` like every rewrite. Returns
         {partition_rel_dir: (files_before, files_after)} for rewritten
         partitions only — untouched partitions are never read.
 
@@ -1185,17 +1199,15 @@ class TableStore:
         the table's single-writer contract, like every maintenance op.
         """
         meta = self._meta(name)
-        parts = meta["partition_by"]
         data = join(self.path(name), "data")
         if not self.fs.exists(data):
             return {}
         sort_by = meta.get("sort_by") or []
         shard_by = meta.get("shard_by")
-        tmp = join(self.path(name), f"_optimizing_{int(time.time() * 1000)}")
+        staged: dict[str, DataFrame] = {}
         rewritten: dict[str, tuple[int, int]] = {}
-        rels = self._partition_rel_dirs(data, len(parts)) if parts else [""]
-        for rel in rels:
-            d = join(data, rel) if rel else data
+        for rel in self._partition_rel_dirs(data, len(meta["partition_by"])):
+            d = self._unit(data, rel)
             files = [
                 (n, s)
                 for n, s in self.fs.file_sizes(d)
@@ -1213,18 +1225,10 @@ class TableStore:
             )
             if sort_by:
                 df = df.sortWithinPartitions(*[F.col(c) for c in sort_by])
-            df.write.mode("overwrite").parquet(join(tmp, rel) if rel else tmp)
-            rewritten[rel or "."] = (len(files), want)
-        if rewritten:
-            if parts:
-                self._swap_in(name, tmp, ())
-            else:
-                old = data + f".old.{int(time.time() * 1000)}"
-                self.fs.rename(data, old)
-                self.fs.rename(tmp, data)
-                self.fs.delete(old)
-        if self.fs.exists(tmp):
-            self.fs.delete(tmp)
+            staged[rel] = df
+            rewritten[rel] = (len(files), want)
+        if staged:
+            self._commit(name, staged)
         return rewritten
 
     @staticmethod
@@ -1263,12 +1267,11 @@ class TableStore:
         would equalize skewed distributions but costs a global sort;
         linear scaling matches the zone-map semantics and is the
         standard first cut. The rewrite is ``repartitionByRange`` on
-        the z-value + sort within files, through the same two-phase
-        swap every maintenance op uses."""
+        the z-value + sort within files, swapped in through ``_commit``
+        like every rewrite."""
         if len(cols) != 2:
             raise ValueError("optimize_zorder takes exactly two columns")
         meta = self._meta(name)
-        parts = meta["partition_by"]
         data = join(self.path(name), "data")
         if not self.fs.exists(data):
             return
@@ -1295,33 +1298,24 @@ class TableStore:
             )
 
         zv = self._morton(scaled(cols[0], 0), scaled(cols[1], 1), nbits)
-        tmp = join(self.path(name), f"_zordering_{int(time.time() * 1000)}")
-        rels = self._partition_rel_dirs(data, len(parts)) if parts else [""]
-        for rel in rels:
-            d = join(data, rel) if rel else data
-            df = self.spark.read.parquet(d).withColumn("_zv", zv)
-            out = (
-                df.repartitionByRange(files, F.col("_zv"))
+        staged = {}
+        for rel in self._partition_rel_dirs(data, len(meta["partition_by"])):
+            df = self.spark.read.parquet(self._unit(data, rel))
+            staged[rel] = (
+                df.withColumn("_zv", zv)
+                .repartitionByRange(files, F.col("_zv"))
                 .sortWithinPartitions("_zv")
                 .drop("_zv")
             )
-            out.write.mode("overwrite").parquet(join(tmp, rel) if rel else tmp)
-        if parts:
-            self._swap_in(name, tmp, ())
-        else:
-            old = data + f".old.{int(time.time() * 1000)}"
-            self.fs.rename(data, old)
-            self.fs.rename(tmp, data)
-            self.fs.delete(old)
-        if self.fs.exists(tmp):
-            self.fs.delete(tmp)
+        self._commit(name, staged)
 
     def _partition_rel_dirs(self, base: str, depth: int) -> list[str]:
         """Relative partition directories exactly ``depth`` levels under
         ``base``, AS WRITTEN BY SPARK — including Hive escaping and
         ``__HIVE_DEFAULT_PARTITION__`` for NULLs. Reading the names back
         instead of reconstructing them from values (``str(v)``) is what
-        makes NULL/timestamp/boolean partition values safe."""
+        makes NULL/timestamp/boolean partition values safe. Depth 0 (an
+        unpartitioned table) yields the whole-table unit ``"."``."""
         out: list[str] = []
 
         def walk(d: str, rel: str, k: int) -> None:
@@ -1330,39 +1324,61 @@ class TableStore:
                 return
             for entry in self.fs.list_dirs(d):
                 if "=" in entry:
-                    walk(join(d, entry), join(rel, entry) if rel else entry, k - 1)
+                    walk(join(d, entry), posixpath.normpath(join(rel, entry)), k - 1)
 
-        walk(base, "", depth)
+        walk(base, ".", depth)
         return out
 
-    def _swap_in(self, name: str, tmp: str, remove_rel: tuple | list = ()) -> None:
-        """Two-phase commit of staged partition directories.
+    @staticmethod
+    def _unit(base: str, rel: str) -> str:
+        """Path of unit ``rel`` under ``base`` ("." is ``base`` itself)."""
+        return base if rel == "." else join(base, rel)
 
-        Phase 1 moves every outgoing dir into a trash dir OUTSIDE data/
-        (a crash mid-swap can lose staged partitions but never leaves a
-        stray ``*.old`` dir inside data/ that would break partition
-        discovery); phase 2 moves the staged dirs in; then trash and tmp
-        are dropped. ``remove_rel`` names affected dirs that must vanish
-        even when tmp holds no replacement (fully-deleted partitions)."""
-        data = join(self.path(name), "data")
-        depth = len(self._meta(name)["partition_by"])
-        rels = self._partition_rel_dirs(tmp, depth)
-        trash = join(self.path(name), f"_trash_{int(time.time() * 1000)}")
-        self.fs.mkdirs(trash)
-        outgoing = list(rels) + [r for r in remove_rel if r not in rels]
-        for rel in outgoing:
-            dst = join(data, rel)
-            if self.fs.exists(dst):
-                tdst = join(trash, rel)
-                self.fs.mkdirs(posixpath.dirname(tdst))
-                self.fs.rename(dst, tdst)
-        for rel in rels:
-            dst = join(data, rel)
-            self.fs.mkdirs(posixpath.dirname(dst))
-            self.fs.rename(join(tmp, rel), dst)
+    def _commit(self, name: str, staged, rels=()) -> None:
+        """The one commit of every rewrite: stage ``staged``, then swap
+        it in for the units in ``rels`` (steps 1-4 of the module
+        docstring). ``staged`` is a frame written under the table's
+        partition layout, a ``{rel: frame}`` map whose frames are each
+        written straight into their unit (layout rewrites that read one
+        partition dir at a time). Every staged unit replaces
+        its namesake under ``data/``; units in ``rels`` with no staged
+        successor vanish. Writes exactly what it is given — no
+        exchange, sort or job of its own.
+
+        A crash between trash and swap leaves replaced units only in
+        the trash, the only copy of their committed rows; ``vacuum``
+        moves them back rather than deleting them."""
+        root = self.path(name)
+        parts = self._meta(name)["partition_by"]
+        stamp = int(time.time() * 1000)
+        data = join(root, "data")
+        tmp = join(root, f"data_staging_{stamp}")
+        trash = join(root, f"_trash_{stamp}")
+        if isinstance(staged, dict):
+            for rel, frame in staged.items():
+                frame.write.mode("overwrite").parquet(self._unit(tmp, rel))
+        else:
+            staged.write.mode("overwrite").partitionBy(*parts).parquet(tmp)
+        new = (
+            self._partition_rel_dirs(tmp, len(parts))
+            if self.fs.exists(tmp)
+            else []
+        )
+        moves = [
+            (data, trash, r)
+            for r in sorted({*rels, *new})
+            if self.fs.exists(self._unit(data, r))
+        ] + [(tmp, data, r) for r in new]
+        for src, dst, r in moves:
+            if r != ".":  # a partition dir's parent may not exist yet
+                self.fs.mkdirs(posixpath.dirname(self._unit(dst, r)))
+            self.fs.rename(self._unit(src, r), self._unit(dst, r))
+        # Staging goes first: its absence tells vacuum the swap is done.
+        self.fs.delete(tmp)
+        gone = set(rels) - set(new)
+        if parts and gone and not any("=" in e for e in self.fs.listdir(data)):
+            self.fs.delete(data)
         self.fs.delete(trash)
-        if self.fs.exists(tmp):
-            self.fs.delete(tmp)
 
     def _compact_partitionwise(self, name: str, meta: dict) -> None:
         """Rewrite only the partitions that hold duplicate dedup keys.
@@ -1374,8 +1390,9 @@ class TableStore:
            staged to a temp dir (window over (partition, key) — same
            scope as a ClickHouse merge). The affected-partition filter is
            NULL-safe (``eqNullSafe``), so NULL-partition rows compact too.
-        3. Each staged partition directory (named by what Spark actually
-           wrote, not reconstructed from values) is swapped in two phases.
+        3. ``_commit`` swaps each staged partition directory (named by
+           what Spark actually wrote, not reconstructed from values) in
+           for its namesake.
         """
         parts = meta["partition_by"]
         key = meta["dedup_key"]
@@ -1408,18 +1425,7 @@ class TableStore:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        out = latest
-        sort_by = meta.get("sort_by") or []
-        shard_by = meta.get("shard_by")
-        if shard_by:
-            out = out.repartition(F.col(shard_by))
-        elif parts:
-            out = self._cluster_for_write(out, parts)  # guide §6
-        if sort_by:
-            out = out.sortWithinPartitions(*sort_by)
-        tmp = join(self.path(name), "data_compacting")
-        out.write.mode("overwrite").partitionBy(*parts).parquet(tmp)
-        self._swap_in(name, tmp)
+        self._commit(name, self._layout(latest, meta))
 
     # -- metadata (SURVEY §2.7 row 38) ---------------------------------------
 
@@ -1557,66 +1563,60 @@ class TableStore:
         (keep-predicate is ``NOT coalesce(cond, false)``). Returns the
         number of deleted rows.
 
-        On partitioned tables the delete is PARTITION-PRUNED: one
-        predicate-pushed scan both counts matches and collects the set of
-        affected partition directories (via ``input_file_name``, so Hive
-        escaping / NULL partitions need no reconstruction); only those
-        directories are re-read, rewritten without the matching rows, and
-        swapped — a 30-month retention delete on a month-partitioned
-        100 TB table touches only the expiring months. Unpartitioned
-        tables fall back to a full rewrite.
+        The delete is PARTITION-PRUNED: one predicate-pushed scan both
+        counts matches and collects the affected partition directories
+        (``_affected``); only those directories are re-read, rewritten
+        without the matching rows, and swapped — a 30-month retention
+        delete on a month-partitioned 100 TB table touches only the
+        expiring months. An unpartitioned table is one unit and is
+        rewritten whole. A partition left without rows vanishes (with
+        the last one ``data/`` goes, and ``read()`` serves the
+        empty-schema fallback); an unpartitioned table left without
+        rows keeps one schema-only file.
         """
-        data = join(self.path(name), "data")
-        if not self.fs.exists(data):
+        if not self.fs.exists(join(self.path(name), "data")):
             return 0
-        meta = self._meta(name)
-        parts = meta["partition_by"]
         df = self.read(name)
         cond = F.coalesce(condition, F.lit(False))
-        if not parts:
-            return self._delete_full_rewrite(name, df, cond)
-        n_del, rels, affected = self._hit_partitions(name, df, cond)
-        if n_del == 0:
-            return 0
-        self._mark_projections_stale(name)
-        kept = affected.filter(~cond)
-        tmp = join(self.path(name), "data_deleting")
-        kept.write.mode("overwrite").partitionBy(*parts).parquet(tmp)
-        self._swap_in(name, tmp, remove_rel=rels)
-        if not any("=" in e for e in self.fs.listdir(data)):
-            self.fs.delete(data)
+        n_del, rels, affected = self._affected(
+            name, df, df.filter(cond).select(_file_dir())
+        )
+        if n_del:
+            self._mark_projections_stale(name)
+            self._commit(name, affected.filter(~cond), rels)
         return n_del
 
-    def _hit_partitions(self, name: str, df: DataFrame, cond):
-        """(match count, affected partition rel-dirs, affected rows DF)
-        from ONE predicate-pushed scan — the shared pruning machinery of
-        the DELETE/UPDATE mutations. Affected directories come from
-        ``input_file_name``, so Hive escaping / NULL partitions need no
-        reconstruction."""
-        data = join(self.path(name), "data")
-        hit = (
-            df.filter(cond)
-            .select(
-                F.regexp_replace(F.input_file_name(), "/[^/]*$", "").alias("_dir")
-            )
-            .agg(F.count("*").alias("n"), F.collect_set("_dir").alias("dirs"))
-            .first()
-        )
+    def _affected(self, name: str, df: DataFrame, hits: DataFrame):
+        """(hit count, affected unit rel-dirs, affected rows DF) — the
+        shared probe of the DELETE/UPDATE/MERGE mutations. ``hits``
+        holds one ``_file_dir()`` row per target row the mutation
+        touches; ONE aggregate counts them and collects their
+        directories (``input_file_name``, so Hive escaping / NULL
+        partitions need no reconstruction). The affected rows are the
+        hit partitions re-read through ``_scan`` — the schema
+        reconciliation of ``read``, so evolved columns are present; an
+        unpartitioned table's single unit is ``df`` itself."""
+        hit = hits.agg(
+            F.count("*").alias("n"), F.collect_set("_dir").alias("dirs")
+        ).first()
         if hit["n"] == 0:
             return 0, [], None
         # Relativize the scanned file URIs against the data dir. Works
         # for any scheme: both sides are reduced to their URI path part
         # (a scheme-less local root is absolutized first).
+        data = join(self.path(name), "data")
         data_base = data if "://" in data else os.path.abspath(data)
         base_path = urllib.parse.urlparse(data_base).path or data_base
         rels = sorted(
-            posixpath.relpath(urllib.parse.unquote(urllib.parse.urlparse(u).path), base_path)
+            posixpath.relpath(
+                urllib.parse.unquote(urllib.parse.urlparse(u).path), base_path
+            )
             for u in hit["dirs"]
         )
-        affected = self.spark.read.option("basePath", data_base).parquet(
-            *[join(data_base, r) for r in rels]
-        )
-        return hit["n"], rels, affected
+        if rels == ["."]:
+            return hit["n"], rels, df
+        dirs = [join(data_base, r) for r in rels]
+        return hit["n"], rels, self._scan(self._meta(name), data_base, dirs)
 
     def update_where(
         self, name: str, condition, assignments: dict[str, Column]
@@ -1637,11 +1637,9 @@ class TableStore:
         (replace mode) — an update can push values outside the recorded
         zone/bloom coverage, where merely widening would turn pruning
         into wrong answers; projections go stale."""
-        data = join(self.path(name), "data")
-        if not self.fs.exists(data):
+        if not self.fs.exists(join(self.path(name), "data")):
             return 0
-        meta = self._meta(name)
-        parts = meta["partition_by"]
+        parts = self._meta(name)["partition_by"]
         df = self.read(name)
         cond = F.coalesce(condition, F.lit(False))
         frozen = set(parts)
@@ -1656,77 +1654,51 @@ class TableStore:
                 )
             if col not in df.columns:
                 raise ValueError(f"no column {col} in table {name}")
-
-        def apply(d: DataFrame) -> DataFrame:
-            return d.select(
-                *[
-                    F.when(cond, assignments[c]).otherwise(F.col(c)).alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in d.columns
-                ]
-            )
-
-        if not parts:
-            n_upd = df.filter(cond).count()
-            if n_upd == 0:
-                return 0
-            self._mark_projections_stale(name)
-            tmp = join(self.path(name), "data_updating")
-            apply(df).write.mode("overwrite").parquet(tmp)
-            old = data + f".old.{int(time.time() * 1000)}"
-            self.fs.rename(data, old)
-            self.fs.rename(tmp, data)
-            self.fs.delete(old)
-            return n_upd
-        n_upd, rels, affected = self._hit_partitions(name, df, cond)
+        n_upd, rels, affected = self._affected(
+            name, df, df.filter(cond).select(_file_dir())
+        )
         if n_upd == 0:
             return 0
         self._mark_projections_stale(name)
-        updated = apply(affected)
-        tmp = join(self.path(name), "data_updating")
-        updated.write.mode("overwrite").partitionBy(*parts).parquet(tmp)
-        self._swap_in(name, tmp, remove_rel=rels)
-        self._recompute_indexes_for_rels(name, parts, rels)
+        updated = affected.select(
+            *[
+                F.when(cond, assignments[c]).otherwise(F.col(c)).alias(c)
+                if c in assignments
+                else F.col(c)
+                for c in affected.columns
+            ]
+        )
+        self._commit(name, updated, rels)
+        self._recompute_indexes(name, rels)
         return n_upd
 
     @classmethod
-    def _rel_filter(
-        cls, parts: list, rels: list, part_col: "Column | None" = None
-    ) -> Column:
+    def _rel_filter(cls, parts: list, rels: list) -> Column:
         """NULL-total predicate "row belongs to one of these partition
-        rel-dirs". The rel-dir values are Hive-ESCAPED ('a:b' →
-        'a%3Ab'); CAST(col AS STRING) yields the unescaped value, so
-        the isin list must unquote or the filter matches nothing — the
-        same reconstruction trap _zone_part_key documents. The isin is
-        coalesced to False so a NULL partition value evaluates False
-        (not NULL) unless the NULL partition itself is listed — callers
-        negate this predicate. ``part_col`` supplies the partition
-        expression when the frame doesn't carry the column yet (derived
-        partitions)."""
-        pc = F.col(parts[0]) if part_col is None else part_col
-        return F.coalesce(
-            pc.cast("string").isin(
-                [
-                    urllib.parse.unquote(r.split("=", 1)[1])
-                    for r in rels
-                    if "=" in r and not r.endswith(cls._HIVE_NULL)
-                ]
-            ),
-            F.lit(False),
-        ) | (
-            pc.isNull()
-            if any(cls._HIVE_NULL in r for r in rels)
-            else F.lit(False)
+        rel-dirs" (single-column layouts). The rel-dir values are
+        Hive-ESCAPED ('a:b' → 'a%3Ab'); CAST(col AS STRING) yields the
+        unescaped value, so the keys are unquoted — the same
+        reconstruction trap _zone_part_key documents."""
+        return cls._part_in(
+            F.col(parts[0]),
+            [urllib.parse.unquote(r.split("=", 1)[1]) for r in rels],
         )
 
-    def _recompute_indexes_for_rels(
-        self, name: str, parts: list, rels: list
-    ) -> None:
+    def _recompute_indexes(self, name: str, rels: list) -> None:
         """Recompute (not widen) skip-index metadata for rewritten
-        partition directories from their full post-mutation contents —
-        shared by UPDATE and MERGE, one fused scan (_update_indexes)."""
-        rewritten = self.read(name).filter(self._rel_filter(parts, rels))
+        units from their full post-mutation contents — shared by UPDATE
+        and MERGE, one fused scan (_update_indexes). A table without
+        skip indexes (every unpartitioned one) skips the read."""
+        meta = self._meta(name)
+        if (
+            self._zone_spec(meta)[0] is None
+            and not meta.get("bloom_indexes")
+            and not meta.get("ngram_bloom_indexes")
+        ):
+            return
+        rewritten = self.read(name).filter(
+            self._rel_filter(meta["partition_by"], rels)
+        )
         self._update_indexes(name, rewritten, mode="replace")
 
     def merge_into(
@@ -1747,10 +1719,10 @@ class TableStore:
         Scale shape: ONE key-join scan finds the affected partition
         directories (``input_file_name``, same machinery as
         DELETE/UPDATE); only those partitions rewrite — untouched
-        directories are never read again, never written. Inserts ride
-        the normal append path (incremental zone/bloom maintenance);
-        the rewritten partitions' skip indexes are RECOMPUTED (replace
-        mode). The not-matched rows are materialized BEFORE the swap —
+        directories are never read again, never written. Inserts into
+        rewritten partitions ride the rewrite; the rest take the normal
+        append path (incremental zone/bloom maintenance). The rewritten
+        partitions' skip indexes are RECOMPUTED (replace mode). The not-matched rows are materialized BEFORE the swap —
         a lazy anti-join evaluated after the rewrite would re-read
         post-merge state (and resurrect rows a delete_matched just
         removed).
@@ -1764,10 +1736,11 @@ class TableStore:
         Crash window: a merge that rewrites AND inserts commits in two
         steps. On a partitioned table, inserts that fall into rewritten
         partitions land atomically with the partition swap; the
-        remaining inserts land in a later append. A crash between the
-        two leaves the merge half-applied (updates and folded inserts,
-        none of the rest), and no staging marker records it, so
-        ``vacuum`` cannot detect it."""
+        remaining inserts (all of them on an unpartitioned table) land
+        in a later append. A crash between the two leaves the merge
+        half-applied (updates and folded inserts, none of the rest),
+        and no staging marker records it, so ``vacuum`` cannot detect
+        it."""
         meta = self._meta(name)
         if meta.get("dedup_key"):
             raise ValueError(
@@ -1891,21 +1864,9 @@ class TableStore:
 
         def _hit_probe():
             if not self.fs.exists(data):
-                return None
-            tagged = df.select(
-                *on,
-                F.regexp_replace(
-                    F.input_file_name(), "/[^/]*$", ""
-                ).alias("_dir"),
-            )
-            return (
-                tagged.join(src_keys, on)
-                .agg(
-                    F.count("*").alias("n"),
-                    F.collect_set("_dir").alias("dirs"),
-                )
-                .first()
-            )
+                return 0, [], None
+            hits = df.select(*on, _file_dir()).join(src_keys, on)
+            return self._affected(name, df, hits)
 
         from concurrent.futures import ThreadPoolExecutor
 
@@ -1915,7 +1876,7 @@ class TableStore:
             f_hit = pool.submit(_hit_probe)
             dup = f_dup.result()
             new_rows, new_obs = f_new.result()
-            hit = f_hit.result()
+            n_hit, rels, affected = f_hit.result()
         if dup:
             raise ValueError("source has duplicate merge keys")
         n_ins = 0
@@ -1929,191 +1890,124 @@ class TableStore:
                 # frame makes the recount cheap.
                 n_ins = new_rows.count()
 
-        n_upd = n_del = 0
-        if hit is not None:
-            if hit["n"]:
-                data_base = data if "://" in data else os.path.abspath(data)
-                base_path = urllib.parse.urlparse(data_base).path or data_base
-                rels = sorted(
-                    posixpath.relpath(
-                        urllib.parse.unquote(urllib.parse.urlparse(u).path),
-                        base_path,
-                    )
-                    for u in hit["dirs"]
+        n_upd = n_del = n_folded = 0
+        ins = new_rows.select(*target_cols) if n_ins else None
+        if n_hit:
+            upd_src = _maybe_broadcast(
+                src.select(
+                    *on,
+                    F.lit(1).alias("_m"),
+                    *[F.col(c).alias("_src_" + c) for c in update_cols],
+                ),
+                on + update_cols,
+            )
+            joined = affected.join(upd_src, on, "left")
+            if delete_matched:
+                merged = joined.filter(F.col("_m").isNull()).select(
+                    *affected.columns
                 )
-                affected = (
-                    self.spark.read.option("basePath", data_base).parquet(
-                        *[join(data_base, r) for r in rels]
-                    )
-                    if parts
-                    else df
+                n_del = n_hit
+            else:
+                merged = joined.select(
+                    *[
+                        F.when(F.col("_m").isNotNull(), F.col("_src_" + c))
+                        .otherwise(F.col(c))
+                        .alias(c)
+                        if c in update_cols
+                        else F.col(c)
+                        for c in affected.columns
+                    ]
                 )
-                upd_src = _maybe_broadcast(
-                    src.select(
-                        *on,
-                        F.lit(1).alias("_m"),
-                        *[F.col(c).alias("_src_" + c) for c in update_cols],
-                    ),
-                    on + update_cols,
-                )
-                joined = affected.join(upd_src, on, "left")
-                if delete_matched:
-                    merged = joined.filter(F.col("_m").isNull()).select(
-                        *affected.columns
+                n_upd = n_hit
+            self._mark_projections_stale(name)
+            if ins is not None and parts:
+                # r16: inserts whose partitions are being rewritten
+                # ANYWAY ride the rewrite write instead of a second
+                # append pass — one write, one commit, one index
+                # recompute (the post-swap recompute reads them).
+                # Inserts landing in untouched partitions, and every
+                # insert into an unpartitioned table (whose append lays
+                # them out by shard and sort key), still go through the
+                # normal append below. The split count is a cheap
+                # aggregate on the CHECKPOINTED frame — an Observation
+                # inside the write would never fire when the fold
+                # branch is empty (zero tasks).
+                self._validate_checks(name, ins)
+                seq = self._next_ingest_seq(name)
+                for p in parts:
+                    if p not in ins.columns:
+                        ins = ins.withColumn(p, _DERIVED_PARTITIONS[p]())
+                ins = ins.withColumn(INGEST_SEQ_COL, F.lit(seq))
+                in_rewrite = self._rel_filter(parts, rels)
+                n_folded = ins.filter(in_rewrite).count()
+                if n_folded:
+                    merged = merged.unionByName(
+                        ins.filter(in_rewrite).select(*merged.columns)
                     )
-                    n_del = hit["n"]
-                else:
-                    merged = joined.select(
-                        *[
-                            F.when(
-                                F.col("_m").isNotNull(), F.col("_src_" + c)
-                            )
-                            .otherwise(F.col(c))
-                            .alias(c)
-                            if c in update_cols
-                            else F.col(c)
-                            for c in affected.columns
-                        ]
-                    )
-                    n_upd = hit["n"]
-                self._mark_projections_stale(name)
-                tmp = join(self.path(name), "data_merging")
-                if parts:
-                    # r16: inserts whose partitions are being rewritten
-                    # ANYWAY ride the rewrite write instead of a second
-                    # append pass — one write, one commit, one index
-                    # recompute (the post-swap recompute reads them).
-                    # Inserts landing in untouched partitions still go
-                    # through the normal append below. The split count
-                    # is a cheap aggregate on the CHECKPOINTED frame —
-                    # an Observation inside the write would never fire
-                    # when the fold branch is empty (zero tasks).
-                    ins_folded = 0
-                    if insert and n_ins:
-                        ins = new_rows.select(*target_cols)
-                        self._validate_checks(name, ins)
-                        seq = self._next_ingest_seq(name)
-                        for p in parts:
-                            if p not in ins.columns:
-                                ins = ins.withColumn(
-                                    p, _DERIVED_PARTITIONS[p]()
-                                )
-                        ins = ins.withColumn(INGEST_SEQ_COL, F.lit(seq))
-                        in_rewrite = self._rel_filter(parts, rels)
-                        ins_folded = ins.filter(in_rewrite).count()
-                        if ins_folded:
-                            merged = merged.unionByName(
-                                ins.filter(in_rewrite).select(
-                                    *merged.columns
-                                )
-                            )
-                    # Cluster the rewrite by partition column (guide §6):
-                    # when the update join shuffles `affected` by the
-                    # merge key, every reduce task otherwise fans out
-                    # into every rewritten partition directory —
-                    # (tasks × partitions) files per merge, growing with
-                    # core count. Sized from the affected dirs' REAL
-                    # on-disk bytes (the join's plan-time estimate is a
-                    # useless row-product): under one advisory partition
-                    # the rewrite is a single write task either way.
-                    on_disk = sum(
-                        sz
-                        for r in rels
-                        for _f, sz in self.fs.file_sizes(join(data, r))
-                    )
-                    if on_disk > _ADVISORY_PARTITION_BYTES:
-                        merged = merged.hint("rebalance", *parts)
-                    merged.write.mode("overwrite").partitionBy(
-                        *parts
-                    ).parquet(tmp)
-                    self._swap_in(name, tmp, remove_rel=rels)
-                    self._recompute_indexes_for_rels(name, parts, rels)
-                else:
-                    merged.write.mode("overwrite").parquet(tmp)
-                    old = data + f".old.{int(time.time() * 1000)}"
-                    self.fs.rename(data, old)
-                    self.fs.rename(tmp, data)
-                    self.fs.delete(old)
-                    full = self.read(name)
-                    self._update_indexes(name, full, mode="reset")
-
-        if insert and n_ins:
-            rest = new_rows.select(*target_cols)
-            n_rest = n_ins
-            if (n_upd or n_del) and parts:
-                n_rest = n_ins - ins_folded
-                pc = (
-                    F.col(parts[0])
-                    if parts[0] in rest.columns
-                    else _DERIVED_PARTITIONS[parts[0]]()
-                )
-                rest = rest.filter(
-                    ~self._rel_filter(parts, rels, part_col=pc)
-                )
-            if n_rest:
-                self.append(name, rest)
+                ins = ins.filter(~in_rewrite)
+            # Cluster the rewrite by partition column (guide §6): when
+            # the update join shuffles `affected` by the merge key,
+            # every reduce task otherwise fans out into every rewritten
+            # partition directory — (tasks × partitions) files per
+            # merge, growing with core count. Sized from the affected
+            # dirs' REAL on-disk bytes (the join's plan-time estimate is
+            # a useless row-product): under one advisory partition the
+            # rewrite is a single write task either way.
+            if parts and sum(
+                sz for r in rels for _f, sz in self.fs.file_sizes(join(data, r))
+            ) > _ADVISORY_PARTITION_BYTES:
+                merged = merged.hint("rebalance", *parts)
+            self._commit(name, merged, rels)
+            self._recompute_indexes(name, rels)
+        if n_ins > n_folded:
+            self.append(name, ins)
         return {"updated": n_upd, "deleted": n_del, "inserted": n_ins}
 
-    # Staging/trash directory name patterns every mutation uses; a crash
-    # mid-mutation can strand any of them NEXT TO data/ (never inside it
-    # — partition discovery stays clean), and vacuum() reclaims them.
+    # Name prefixes of the staging/trash dirs ``_commit`` leaves NEXT TO
+    # data/ (never inside it — partition discovery stays clean) when a
+    # crash interrupts it, plus the names older versions used.
     _VACUUM_PREFIXES = (
-        "data_updating",
-        "data_deleting",
-        "data_merging",
-        "data_compacting",
-        "_zordering_",
-        "data.old.",
-        "_trash_",
+        "data_", "data.old.", "_trash_", "_zordering_", "_optimizing_"
     )
 
     def vacuum(self, name: str) -> list[str]:
-        """Garbage-collect leftover staging/trash directories from
-        crashed mutations (VACUUM analog). Every mutation here is
-        two-phase — write to a staging dir, then atomically swap — so a
-        crash strands only STAGING state; committed data under ``data/``
-        and the skip-index metadata are never touched. Returns the
-        removed entry names. Safe to run any time under the same
-        single-writer-per-table contract every mutation already assumes
-        (a vacuum concurrent with a live mutation could reap its
-        in-flight staging dir)."""
+        """Recover from crashed mutations (VACUUM analog); returns the
+        names of the leftover entries it cleared.
+
+        Roll-back first: a commit whose staging dir is still present
+        may have stopped between moving a unit to its trash and moving
+        the successor in, so each unit in that trash (and in a
+        ``data.old.*`` dir older versions left) whose place under
+        ``data/`` is empty holds the only copy of committed rows and is
+        moved back. Then every staging/trash leftover is deleted. A
+        commit that finished its swap dropped its staging dir first, so
+        its trash is garbage. Committed units under ``data/`` are never
+        deleted or overwritten, and index metadata is not touched.
+
+        Safe to run any time under the same single-writer-per-table
+        contract every mutation already assumes (a vacuum concurrent
+        with a live mutation could reap its in-flight staging dir)."""
         root = self.path(name)
+        data = join(root, "data")
+        depth = len(self._meta(name)["partition_by"])
+        entries = self.fs.listdir(root)
         removed = []
-        for entry in self.fs.listdir(root):
-            if entry.startswith(self._VACUUM_PREFIXES) or (
+        for entry in entries:
+            src = join(root, entry)
+            legacy = entry.startswith("data.old.")
+            if legacy or (
+                entry.startswith("_trash_")
+                and "data_staging_" + entry[len("_trash_"):] in entries
+            ):
+                for rel in self._partition_rel_dirs(src, 0 if legacy else depth):
+                    dst = self._unit(data, rel)
+                    if not self.fs.exists(dst):
+                        self.fs.mkdirs(posixpath.dirname(dst))
+                        self.fs.rename(self._unit(src, rel), dst)
+            elif not entry.startswith(self._VACUUM_PREFIXES) and not (
                 entry.startswith("proj_") and entry.endswith(".rebuilding")
             ):
-                self.fs.delete(join(root, entry))
-                removed.append(entry)
+                continue
+            self.fs.delete(src)
+            removed.append(entry)
         return removed
-
-    def _delete_full_rewrite(self, name: str, df: DataFrame, cond) -> int:
-        """Unpartitioned fallback: anti-filter + full rewrite. A delete
-        matching every row removes the data directory entirely (``read()``
-        then serves the empty-schema fallback) instead of writing an empty
-        Parquet dir that would break schema inference.
-
-        Both counts come from ONE column-pruned aggregate scan (reads
-        only the predicate's columns), so a no-op delete costs one cheap
-        scan and no rewrite; a real delete costs that scan plus the
-        rewrite — down from the previous two separate full counts."""
-        data = join(self.path(name), "data")
-        row = df.agg(
-            F.count(F.lit(1)).alias("before"),
-            F.count(F.when(~cond, F.lit(1))).alias("after"),
-        ).first()
-        before, after = row["before"], row["after"]
-        if after == before:
-            return 0
-        self._mark_projections_stale(name)
-        kept = df.filter(~cond)
-        if after == 0:
-            self.fs.delete(data)
-            return before
-        tmp = join(self.path(name), "data_deleting")
-        kept.write.mode("overwrite").parquet(tmp)
-        old = data + f".old.{int(time.time() * 1000)}"
-        self.fs.rename(data, old)
-        self.fs.rename(tmp, data)
-        self.fs.delete(old)
-        return before - after
