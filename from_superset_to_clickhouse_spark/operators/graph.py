@@ -1,34 +1,186 @@
-"""Distributed connected components — the clustering step of a dedup
-pipeline.
+"""Graph operators over Spark edge lists: connected components and the
+dedup clustering around them, centrality (pagerank, hits, closeness,
+betweenness), cores and trusses, strongly connected components,
+triangles, link prediction and community scores.
 
 Near-dup operators (``minhash_candidates``, ``simhash_pairs``,
 ``embedding_dedup_pairs``) emit PAIRS; turning pairs into "keep one doc
-per duplicate cluster" requires the transitive closure: A~B and B~C put
-all three in one cluster even though (A, C) was never a candidate pair.
-That closure is connected components over the pair graph.
+per duplicate cluster" requires the transitive closure — connected
+components over the pair graph — which is why this module exists.
 
-Implementation: iterative min-label propagation. Every node starts
-labeled with itself; each round every node takes the min of its own and
-its neighbors' labels; fixpoint = components labeled by their minimum
-member. Each round is one join + one partial-aggregated groupBy (both
-shuffle on the node key) plus a pointer-jumping hop (labels only ever
-decrease, so following label(label(n)) compresses paths), and the label
-frontier is ``localCheckpoint``ed so lineage doesn't grow with
-iterations. With the jump, rounds needed = O(log diameter) — duplicate
-clusters are shallow anyway (stars/short chains), so real corpora
-converge in a handful of rounds; the large-star/small-star variant
-(Kiveris et al., "Connected Components in MapReduce and Beyond") is the
-same loop shape if even that is too many.
+Edge preparation is shared: ``_canonical`` (undirected, a < b, no
+self-loops), ``_symmetric`` (both directions), ``_degree`` and
+``_triangles`` (the a<b<c node-iterator listing).
+
+Fixpoint contract. Every convergent loop runs through ``_fixpoint``:
+each round's state is ``localCheckpoint``ed so lineage stays flat, and
+the count of its still-pending rows (changed labels, weak nodes or
+edges, newly reached nodes, unsettled nodes) rides that checkpoint job
+as an Observation — one job per round, no separate probe job. A cap
+(``max_iter``/``max_prop``/``max_rounds``/``max_hops``) that runs out
+with rows still pending raises ``ValueError``: a partial fixpoint is a
+wrong answer. The one exception is the BFS pair ``shortest_hops`` /
+``closeness_from_pivots``, whose documented contract is truncation at
+``max_hops``. Fixed-iteration loops (``pagerank``, ``label_propagation``,
+``hits``) probe nothing and keep plain ``for`` loops.
 
 The reference has no graph surface (it is an Airflow ELT pipeline —
-``v2/dag.py:156-169``); this is LLM-data-pipeline extension surface, and
-the oracle twin is a recursive CTE computing min reachable label.
+``v2/dag.py:156-169``); this is LLM-data-pipeline extension surface,
+and the oracle twins are recursive or unrolled CTEs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def _fixpoint(
+    state: DataFrame, step, pending: Column, max_iter: int, fail=None
+) -> "tuple[DataFrame, int]":
+    """Iterate ``state = step(state)`` until no row of the new state is
+    ``pending`` → (state, rounds).
+
+    The count of pending rows is measured on the round's
+    ``localCheckpoint(eager=True)`` job, so the driver reads one scalar
+    per round and launches no probe job. If ``max_iter`` rounds leave
+    rows pending, ``fail`` is raised as a ``ValueError``; with no
+    ``fail`` the last state is returned (truncation)."""
+    n = 0
+    for rounds in range(1, max_iter + 1):
+        obs = Observation()
+        state = (
+            step(state)
+            .observe(obs, F.count(F.when(pending, 1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        n = obs.get["n"]
+        if n == 0:
+            return state, rounds
+    if fail:
+        raise ValueError(f"{fail}; {n} rows still pending")
+    return state, max_iter
+
+
+def _canonical(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Undirected edge list → distinct (a, b) with a < b: direction
+    collapsed, self-loops and NULL endpoints dropped."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .filter(F.col("a") < F.col("b"))
+        .distinct()
+    )
+
+
+def _symmetric(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Edge list → distinct arcs (a, b) in both directions, NULL
+    endpoints dropped (self-loops kept)."""
+    return (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+        .distinct()
+    )
+
+
+def _degree(e: DataFrame, node: str = "n", deg: str = "d") -> DataFrame:
+    """Degree of every endpoint of the edge list (a, b) → (node, deg)."""
+    return (
+        e.select(F.col("a").alias(node))
+        .unionAll(e.select(F.col("b").alias(node)))
+        .groupBy(node)
+        .agg(F.count(F.lit(1)).alias(deg))
+    )
+
+
+def _triangles(e: DataFrame) -> DataFrame:
+    """Triangles of the oriented edge list (a, b) → (x, y, z) for arcs
+    x→y, y→z and x→z: two hash self-joins. On canonical edges (a < b)
+    each triangle is listed once, and a node's work is bounded by its
+    forward degree (node-iterator++ ordering)."""
+    return (
+        e.toDF("x", "y")
+        .join(e.toDF("y", "z"), "y")
+        .join(e.toDF("x", "z"), ["x", "z"])
+    )
+
+
+def _spread(adj: DataFrame, lab: DataFrame, agg) -> DataFrame:
+    """One label-propagation step over the arcs (a → b) of ``adj``:
+    every node of ``lab`` (node, label) takes ``agg`` over its own label
+    and its in-neighbours' labels → (node, label, _old), where ``_old``
+    carries the previous label for the changed-rows probe."""
+    via = adj.join(lab, adj["a"] == lab["node"]).select(
+        adj["b"].alias("node"), "label", F.lit(None).alias("_old")
+    )
+    return (
+        lab.select("node", "label", F.col("label").alias("_old"))
+        .unionByName(via)
+        .groupBy("node")
+        .agg(agg("label").alias("label"), F.max("_old").alias("_old"))
+    )
+
+
+def _two_hops(e: DataFrame) -> DataFrame:
+    """Arcs (a, b) → e ∪ e∘e when that composition is sparse, else e.
+    Propagating over e ∪ e∘e halves a reach loop's round count (reach
+    grows 2 hops per step) at the cost of one composition join up front.
+    Only worth it — and only SAFE at scale — on sparse graphs: |e∘e| with
+    multiplicity is EXACTLY Σ_v indeg(v)·outdeg(v), which one degree
+    aggregate bounds BEFORE anything is composed, so a dense graph never
+    materializes its square."""
+    io = (
+        e.select("a", F.lit(0), F.lit(1))
+        .toDF("v", "i", "o")
+        .unionAll(e.select("b", F.lit(1), F.lit(0)))
+        .groupBy("v")
+        .agg(F.sum("i").alias("i"), F.sum("o").alias("o"))
+    )
+    bound, n_e = io.agg(F.sum(F.col("i") * F.col("o")), F.sum("i")).first()
+    if (bound or 0) > 4 * (n_e or 0):
+        return e
+    e2 = e.alias("l").join(e.alias("r"), F.col("l.b") == F.col("r.a")).select(
+        F.col("l.a").alias("a"), F.col("r.b").alias("b")
+    )
+    return e.union(e2).distinct().localCheckpoint(eager=True)
+
+
+def _bfs(
+    adj: DataFrame, seeds: DataFrame, keys: list, max_hops: int, fail=None
+) -> DataFrame:
+    """Multi-source BFS over the arcs (a → b) of ``adj`` from ``seeds``
+    (*keys, node) → (*keys, node, hops, _new): every (keys, node) pair
+    reached within ``max_hops``, at its minimum hop count. Each round
+    expands only the previous round's new rows (``_new``), so per-round
+    work is |frontier ⋈ edges|; one partial-aggregated groupBy over
+    visited ∪ reached both dedups and marks which rows are new. The
+    visited set is re-materialized every round (r15: a lazy union of
+    per-hop frames measured SLOWER — the growing union's partition count
+    inflates every later dedup)."""
+    k = [*keys, "node"]
+
+    def step(vis: DataFrame) -> DataFrame:
+        front = vis.filter("_new")
+        reached = front.join(adj, front["node"] == adj["a"]).select(
+            *keys,
+            adj["b"].alias("node"),
+            (F.col("hops") + 1).alias("hops"),
+            F.lit(True).alias("_new"),
+        )
+        return (
+            vis.withColumn("_new", F.lit(False))
+            .unionByName(reached)
+            .groupBy(*k)
+            .agg(F.min("hops").alias("hops"), F.min("_new").alias("_new"))
+        )
+
+    seeds = seeds.select(*k, F.lit(0).alias("hops"), F.lit(True).alias("_new"))
+    return _fixpoint(seeds, step, F.col("_new"), max_hops, fail)[0]
 
 
 def connected_components(
@@ -46,56 +198,43 @@ def connected_components(
     back as their own singleton component); defaults to nodes appearing
     in ``edges``. Node ids must be non-null and orderable.
 
-    Driver-side loop with a cheap convergence probe per round (EXISTS-
-    style ``limit(1).count()`` on changed labels) — the data itself
-    never reaches the driver.
+    Iterative min-label propagation: every node starts labeled with
+    itself; each round every node takes the min of its own and its
+    neighbors' labels (one join + one partial-aggregated groupBy, both
+    shuffling on the node key) plus a pointer-jumping hop — labels only
+    ever decrease, so following label(label(n)) compresses paths and
+    rounds needed = O(log diameter). Duplicate clusters are shallow
+    (stars/short chains), so real corpora converge in a handful of
+    rounds; the large-star/small-star variant (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond") is the same loop
+    shape if even that is too many. The probe counts labels that changed
+    this round on the round's checkpoint job; raises ``ValueError`` if
+    labels still change after ``max_iter`` rounds.
     """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)  # reused every round: scan, don't recompute
-    )
-    universe = sym.select(F.col("a").alias(node_col))
+    sym = _symmetric(edges, src, dst).localCheckpoint(eager=True)
+    universe = sym.select(F.col("a").alias("node"))
     if nodes is not None:
-        universe = universe.union(nodes.select(F.col(node_col)))
-    labels = universe.distinct().select(
-        node_col, F.col(node_col).alias("component")
+        universe = universe.union(nodes.select(F.col(node_col).alias("node")))
+    labels = universe.distinct().select("node", F.col("node").alias("label"))
+
+    def step(lab: DataFrame) -> DataFrame:
+        nxt = _spread(sym, lab, F.min)
+        hop = nxt.select("node", "label").toDF("label", "_p")
+        return nxt.join(hop, "label").select(
+            "node", F.col("_p").alias("label"), "_old"
+        )
+
+    labels, _ = _fixpoint(
+        labels,
+        step,
+        F.col("label") != F.col("_old"),
+        max_iter,
+        f"connected_components: labels did not converge in {max_iter} "
+        "rounds — raise max_iter",
     )
-    for _ in range(max_iter):
-        neighbor_labels = sym.join(
-            labels, sym["b"] == labels[node_col]
-        ).select(sym["a"].alias(node_col), "component")
-        new_labels = (
-            labels.union(neighbor_labels)
-            .groupBy(node_col)
-            .agg(F.min("component").alias("component"))
-        )
-        # Pointer jumping: labels only ever decrease, so label(label(n))
-        # ≤ label(n) — following one extra hop each round compresses
-        # paths and turns chain convergence from O(diameter) rounds into
-        # O(log diameter).
-        hop = new_labels.select(
-            F.col(node_col).alias("component"),
-            F.col("component").alias("_parent"),
-        )
-        new_labels = (
-            new_labels.join(hop, "component")
-            .select(node_col, F.col("_parent").alias("component"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), node_col)
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+    return labels.select(
+        F.col("node").alias(node_col), F.col("label").alias("component")
+    )
 
 
 def connected_components_incremental(
@@ -242,7 +381,7 @@ def pagerank(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    n = nodes.count()
+    n = max(nodes.count(), 1)  # no nodes → empty ranks, not 1/0
     ranks = nodes.select("node", (F.lit(1.0) / n).alias("pr"))
     for i in range(iters):
         contrib = (
@@ -297,15 +436,7 @@ def label_propagation(
     keep-current fallback each round, so skipping the per-round
     checkpoint doubles the plan per iteration — it stays eager.
     """
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-    )
-    sym = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _symmetric(edges, src, dst).localCheckpoint(eager=True)
     nodes = sym.select(F.col("a").alias("node")).distinct()
     sd = seeds.select(
         F.col(node_col).alias("node"), F.col(label_col).alias("_seed")
@@ -369,27 +500,11 @@ def triangle_count(
 
     SQL-expressible (two self-joins + count), so fully oracle-checked.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
+    e = _canonical(edges, src, dst)
     if orient == "degree":
-        deg = (
-            e.select(F.col("a").alias("n"))
-            .unionAll(e.select(F.col("b").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("_d"))
-        )
-        da = deg.select(
-            F.col("n").alias("a"), F.struct("_d", F.col("n")).alias("_ka")
-        )
-        db = deg.select(
-            F.col("n").alias("b"), F.struct("_d", F.col("n")).alias("_kb")
-        )
+        deg = _degree(e)
+        da = deg.select(F.col("n").alias("a"), F.struct("d", "n").alias("_ka"))
+        db = deg.select(F.col("n").alias("b"), F.struct("d", "n").alias("_kb"))
         e = (
             e.join(da, "a")
             .join(db, "b")
@@ -404,15 +519,7 @@ def triangle_count(
         )
     elif orient != "id":
         raise ValueError("orient must be 'id' or 'degree'")
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.b") == F.col("e2.a"))
-        .join(
-            e3,
-            (F.col("e1.a") == F.col("e3.a")) & (F.col("e2.b") == F.col("e3.b")),
-        )
-    )
-    return tri.agg(F.count(F.lit(1)).alias("n_triangles"))
+    return _triangles(e).agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
 def kcore(
@@ -429,14 +536,14 @@ def kcore(
     WITHIN the k-core.
 
     Distributed shape: each round is one degree aggregation (map-side
-    combined) + one semi-join of edges against surviving nodes — no
-    windows, no driver data. The edge set only shrinks, and each
-    round's result is localCheckpoint-ed so lineage stays flat (same
-    discipline as connected_components). Convergence probe is a
-    ``limit(1).count()`` on sub-k nodes, not a full count. Peel depth
-    is bounded by the graph's degeneracy ordering — typically a few
-    rounds; ``max_iter`` guards pathological chains (a path graph
-    peels O(n/2) rounds at k=2, raise max_iter for those).
+    combined) over the surviving edges, joined back onto both endpoints
+    to flag the edges whose endpoints both keep degree ≥ k — no windows,
+    no driver data. The edge set only shrinks. The count of flagged-weak
+    edges (nonzero iff some node is below k) rides the round's
+    checkpoint job. Peel depth is bounded by the graph's degeneracy
+    ordering — typically a few rounds; a path graph peels O(n/2) rounds
+    at k=2, and a peel that has not converged after ``max_iter`` rounds
+    raises ``ValueError`` (the remaining edges would not be a k-core).
 
     SQL-expressible by unrolling the peel rounds as CTEs (the oracle
     does exactly that), so fully oracle-checked; callers should assert
@@ -444,56 +551,26 @@ def kcore(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    from pyspark.sql import Observation
+    e = _canonical(edges, src, dst).localCheckpoint(eager=True)
 
-    for _ in range(max_iter):
-        # r15 optimization round (guide §2.4): the degree table feeds
-        # BOTH the convergence probe and the survivor semi-join; without
-        # the checkpoint the full degree aggregation ran twice per round
-        # (once under the probe, once under the rebuild). r16: the
-        # weak-node probe rides the checkpoint job as an Observation —
-        # one scheduler round-trip per peel round instead of two. The
-        # per-round checkpoint blocks (ADVICE r15) are reclaimed
-        # asynchronously: each round drops the only reference to the
-        # previous round's frames, so the ContextCleaner unpersists
-        # them; transient storage is bounded by GC latency, not
-        # max_iter.
-        obs = Observation()
-        deg = (
-            e.select(F.col("a").alias("n"))
-            .unionAll(e.select(F.col("b").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .observe(
-                obs,
-                F.count(F.when(F.col("d") < k, F.lit(1))).alias("weak"),
-            )
-            .localCheckpoint(eager=True)
+    def peel(s: DataFrame) -> DataFrame:
+        live = s.filter("_keep").select("a", "b")
+        ok = _degree(live).select("n", (F.col("d") >= k).alias("ok"))
+        return (
+            live.join(ok.toDF("a", "_oa"), "a")
+            .join(ok.toDF("b", "_ob"), "b")
+            .select("a", "b", (F.col("_oa") & F.col("_ob")).alias("_keep"))
         )
-        if int(obs.get["weak"]) == 0:
-            break
-        keep = deg.filter(F.col("d") >= k).select("n")
-        e = (
-            e.join(keep.withColumnRenamed("n", "a"), "a")
-            .join(keep.withColumnRenamed("n", "b"), "b")
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
-    return (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
+
+    e, _ = _fixpoint(
+        e.withColumn("_keep", F.lit(True)),
+        peel,
+        ~F.col("_keep"),
+        max_iter,
+        f"kcore: peeling did not converge in {max_iter} rounds — "
+        "raise max_iter",
     )
+    return _degree(e, "node", "core_degree")
 
 
 def clustering_coefficient(
@@ -514,32 +591,11 @@ def clustering_coefficient(
     degree exactly as in ``triangle_count``; nothing is quadratic in
     the corpus. Fully SQL-expressible → oracle-checked.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
+    e = _canonical(edges, src, dst)
+    deg = _degree(e, "node", "degree")
     tri = (
-        e1.join(e2, F.col("e1.b") == F.col("e2.a"))
-        .join(
-            e3,
-            (F.col("e1.a") == F.col("e3.a")) & (F.col("e2.b") == F.col("e3.b")),
-        )
-        .select(
-            F.explode(
-                F.array(F.col("e1.a"), F.col("e1.b"), F.col("e2.b"))
-            ).alias("node")
-        )
+        _triangles(e)
+        .select(F.explode(F.array("x", "y", "z")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_tri"))
     )
@@ -621,48 +677,22 @@ def shortest_hops(
     (unreached nodes are absent). ClickHouse has no graph traversal;
     the oracle twin is a recursive CTE with UNION-dedup state.
 
-    Frontier algorithm: per round, the frontier joins the symmetrized
-    edge list, an ANTI join against the visited set keeps only
-    first-time nodes (which by BFS order carry their MINIMUM hop
-    count), and both sets localCheckpoint so round N+1 scans
-    materialized results instead of growing one giant lineage. At
+    Frontier algorithm (``_bfs``): per round, the frontier joins the
+    symmetrized edge list, one groupBy over visited ∪ reached keeps each
+    node once at its MINIMUM hop count (first reach, by BFS order) and
+    flags the first-time nodes as the next frontier, and the visited set
+    is localCheckpointed so round N+1 scans materialized results instead
+    of growing one giant lineage. At
     100 TB: per-round work is |frontier ⋈ edges| — the visited set
-    never re-joins edges, and the driver sees only an empty-frontier
-    probe (limit(1).count()), never data."""
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    from pyspark.sql import Observation
-
-    frontier = spark.createDataFrame(
-        [(v,) for v in source_ids], f"{node_col} long"
+    never re-joins edges, and the driver sees only the new-node count
+    of each round's checkpoint job, never data."""
+    sym = _symmetric(edges, src, dst).localCheckpoint(eager=True)
+    seeds = edges.sparkSession.createDataFrame(
+        [(v,) for v in source_ids], "node long"
     ).distinct()
-    visited = frontier.select(node_col, F.lit(0).alias("hops"))
-    visited = visited.localCheckpoint(eager=True)
-    for hop in range(1, max_hops + 1):
-        # r16 optimization round (guide §5): the empty-frontier probe
-        # rides the checkpoint job as an Observation — one scheduler
-        # round-trip per hop instead of two.
-        obs = Observation()
-        nxt = (
-            frontier.join(sym, frontier[node_col] == sym["a"])
-            .select(sym["b"].alias(node_col))
-            .distinct()
-            .join(visited.select(node_col), node_col, "left_anti")
-            .select(node_col, F.lit(hop).alias("hops"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        if int(obs.get["n"]) == 0:
-            break
-        visited = visited.union(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select(node_col)
-    return visited
+    return _bfs(sym, seeds, [], max_hops).select(
+        F.col("node").alias(node_col), "hops"
+    )
 
 
 def adamic_adar(
@@ -730,49 +760,13 @@ def closeness_from_pivots(
 
     One frontier loop keyed on (pivot, node) — all pivots advance in
     the same ≤ max_hops rounds, per-round work is |frontier ⋈ edges|
-    with an anti-join dedup, same checkpointed-invariant shape as
-    :func:`shortest_hops`."""
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    from pyspark.sql import Observation
-
-    frontier = spark.createDataFrame(
+    with a groupBy dedup, the same ``_bfs`` as
+    :func:`shortest_hops` (truncated at ``max_hops``)."""
+    sym = _symmetric(edges, src, dst).localCheckpoint(eager=True)
+    seeds = edges.sparkSession.createDataFrame(
         [(int(p), int(p)) for p in pivot_ids], "pivot long, node long"
     ).distinct()
-    visited = frontier.select("pivot", "node", F.lit(0).alias("hops"))
-    visited = visited.localCheckpoint(eager=True)
-    for hop in range(1, max_hops + 1):
-        # r16 optimization round (guide §5): the empty-frontier probe
-        # rides the checkpoint job as an Observation — one scheduler
-        # round-trip per hop instead of two.
-        obs = Observation()
-        nxt = (
-            frontier.join(sym, frontier["node"] == sym["a"])
-            .select("pivot", sym["b"].alias("node"))
-            .distinct()
-            .join(
-                visited.select("pivot", "node"),
-                ["pivot", "node"],
-                "left_anti",
-            )
-            .select("pivot", "node", F.lit(hop).alias("hops"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        if int(obs.get["n"]) == 0:
-            break
-        # (r15 optimization round: a lazy union of the checkpointed
-        # per-hop frames was tried here and measured SLOWER — the
-        # growing union's partition count inflates every later
-        # anti-join; the eager re-materialization stays.)
-        visited = visited.union(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("pivot", "node")
+    visited = _bfs(sym, seeds, ["pivot"], max_hops)
     agg = visited.groupBy("node").agg(
         F.count("*").alias("n_reached"),
         F.sum("hops").alias("sum_hops"),
@@ -819,250 +813,88 @@ def strongly_connected_components(
     rounds ≈ longest chain of SCCs hanging off shared colors, not the
     SCC count.
 
-    Both inner loops are the same shuffle shape as
-    :func:`connected_components` (join labels to edges, groupBy max /
-    any), with ``localCheckpoint`` per step and EXISTS-style
-    convergence probes — nothing but probe scalars reaches the driver.
+    Forward coloring is :func:`connected_components`' propagation step
+    (directed, max instead of min, no pointer jump); backward
+    containment is a BFS keyed on (color, node) over the reversed
+    same-color edges, the :func:`shortest_hops` frontier loop. Both run
+    over ``e ∪ e∘e`` when that composition is sparse (``_two_hops``),
+    with ``localCheckpoint`` per step. Every convergence probe counts
+    rows — changed colors, newly reached members, unsettled nodes — so
+    one type-agnostic probe serves integer and string ids, and nothing
+    but probe scalars reaches the driver. A cap that runs out raises
+    ``ValueError``: partially propagated colors would split real SCCs
+    into singletons, and unsettled nodes would come back as WRONG
+    singletons. Propagation depth is bounded by the graph's longest
+    simple path (raise ``max_prop`` past the diameter), rounds by the
+    depth of the SCC condensation (raise ``max_rounds``).
     The web-graph operator: dedup link farms, collapse redirect
     cycles, find mutually-citing clusters."""
-    from pyspark.sql import Observation
-
     e0 = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .filter(F.col("s").isNotNull() & F.col("d").isNotNull())
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .distinct()
         .localCheckpoint(eager=True)
     )
-    universe = e0.select(F.col("s").alias(node_col)).union(
-        e0.select(F.col("d").alias(node_col))
+    universe = e0.select(F.col("a").alias("node")).union(
+        e0.select(F.col("b").alias("node"))
     )
     if nodes is not None:
-        universe = universe.union(nodes.select(F.col(node_col)))
-    # r16 optimization round (guide §2.4/§5): every scalar the driver
-    # needs this round — emptiness probes, edge counts, the monotone
-    # color-sum convergence probe — rides the materializing checkpoint
-    # job as an Observation instead of being a separate aggregate job;
-    # each one removed is a full scheduler round-trip per round/step.
-    node_dtype = dict(universe.dtypes)[node_col]
-    sum_probe = node_dtype in (
-        "tinyint", "smallint", "int", "bigint"
-    ) or node_dtype.startswith("decimal")
+        universe = universe.union(nodes.select(F.col(node_col).alias("node")))
+    done = []
 
-    def _ckpt_nodes(df_nodes, col):
-        """Checkpoint a node frame; its row count (and, for numeric
-        ids, the decimal sum of ``col``) rides the checkpoint job."""
-        obs = Observation()
-        metrics = [F.count(F.lit(1)).alias("n")]
-        if sum_probe:
-            metrics.append(
-                F.sum(F.col(col).cast("decimal(38,0)")).alias("s")
-            )
-        got = df_nodes.observe(obs, *metrics).localCheckpoint(eager=True)
-        m = obs.get
-        return got, m["n"], (m["s"] if sum_probe else None)
-
-    active, n_active, active_sum = _ckpt_nodes(
-        universe.distinct(), node_col
-    )
-    done = None
-    for _ in range(max_rounds):
-        if n_active == 0:
-            break
-        # live edge set: both endpoints still unsettled (the edge count
-        # for the density bound rides the checkpoint job)
-        e_obs = Observation()
+    def settle(active: DataFrame) -> DataFrame:
+        # live edge set: both endpoints still unsettled
         e = (
-            e0.join(active.select(F.col(node_col).alias("s")), "s")
-            .join(active.select(F.col(node_col).alias("d")), "d")
-            .select("s", "d")
-            .observe(e_obs, F.count(F.lit(1)).alias("n"))
+            e0.join(active.select(F.col("node").alias("a")), "a")
+            .join(active.select(F.col("node").alias("b")), "b")
+            .select("a", "b")
             .localCheckpoint(eager=True)
         )
-        # hop doubling: propagating over e ∪ e∘e halves both inner
-        # loops' round counts (reach grows 2 hops per step) at the
-        # cost of one composition join up front. Only worth it — and
-        # only SAFE at scale — on sparse graphs: |e∘e| with
-        # multiplicity is EXACTLY Σ_v indeg(v)·outdeg(v), which two
-        # degree aggregates bound BEFORE anything is composed, so a
-        # dense graph never materializes its square.
-        eprop = e
-        n_e = int(e_obs.get["n"])
-        comp_bound = (
-            e.groupBy(F.col("d").alias("_v"))
-            .agg(F.count(F.lit(1)).alias("_in"))
-            .join(
-                e.groupBy(F.col("s").alias("_v")).agg(
-                    F.count(F.lit(1)).alias("_out")
-                ),
-                "_v",
-            )
-            .agg(F.sum(F.col("_in").cast("long") * F.col("_out")))
-            .collect()[0][0]
-            or 0
-        )
-        if comp_bound <= 4 * n_e:
-            e2 = (
-                e.alias("l")
-                .join(e.alias("r"), F.col("l.d") == F.col("r.s"))
-                .select(
-                    F.col("l.s").alias("s"), F.col("r.d").alias("d")
-                )
-            )
-            eprop = e.union(e2).distinct().localCheckpoint(eager=True)
         # (1) forward MAX-color propagation: color(v) = max id reaching v.
-        # Convergence probe: colors only ever INCREASE under max-
-        # propagation, so for INTEGRAL node ids the exact decimal sum of
-        # colors is strictly monotone until fixpoint — a scalar that now
-        # rides each step's checkpoint job as an Observation (the
-        # initial sum rode `active`'s checkpoint). That sum is only
-        # well-defined for numeric ids: string/other ids would ANSI-throw
-        # (or NULL-out, falsely converging) under the decimal cast, so
-        # non-numeric ids keep the type-agnostic changed-rows EXISTS
-        # probe (one equi-join on the two checkpointed frames per step).
-        color = active.select(node_col, F.col(node_col).alias("color"))
-        prev_sum = active_sum
-        converged = False
-        for _ in range(max_prop):
-            via = (
-                eprop.join(color, eprop["s"] == color[node_col])
-                .select(eprop["d"].alias(node_col), "color")
-            )
-            step = (
-                color.union(via)
-                .groupBy(node_col)
-                .agg(F.max("color").alias("color"))
-            )
-            if sum_probe:
-                c_obs = Observation()
-                new = step.observe(
-                    c_obs,
-                    F.sum(F.col("color").cast("decimal(38,0)")).alias("s"),
-                ).localCheckpoint(eager=True)
-                cur_sum = c_obs.get["s"]
-                stable = cur_sum == prev_sum
-                prev_sum = cur_sum
-            else:
-                new = step.localCheckpoint(eager=True)
-                stable = (
-                    new.alias("n")
-                    .join(color.alias("o"), node_col)
-                    .filter(F.col("n.color") != F.col("o.color"))
-                    .limit(1)
-                    .count()
-                    == 0
-                )
-            color = new
-            if stable:
-                converged = True
-                break
-        if not converged:
-            # Exhausting the cap without convergence would settle WRONG
-            # components (partially-propagated colors split real SCCs
-            # into singletons) — fail loudly instead: propagation depth
-            # is bounded by the graph's longest simple path, so callers
-            # raise max_prop past their graph's diameter.
-            raise ValueError(
-                f"scc: forward coloring did not converge in {max_prop} "
-                "rounds — raise max_prop above the graph diameter"
-            )
-        # (2) backward reach from each color root WITHIN its color class:
-        # member(v) iff v's color is c and v reaches c via same-color path
-        member = color.filter(F.col(node_col) == F.col("color")).select(
-            node_col, "color"
+        eprop = _two_hops(e)
+        color, _ = _fixpoint(
+            active.select("node", F.col("node").alias("label")),
+            lambda lab: _spread(eprop, lab, F.max),
+            F.col("label") != F.col("_old"),
+            max_prop,
+            f"scc: forward coloring did not converge in {max_prop} "
+            "rounds — raise max_prop above the graph diameter",
         )
-        ec_obs = Observation()
+        # (2) backward reach from each color root WITHIN its color class:
+        # member(v) iff v's color is c and v reaches c via a same-color
+        # path. Compositions of same-color edges stay within the class.
         ec = (
-            e.join(color.select(F.col(node_col).alias("s"),
-                                F.col("color").alias("_cs")), "s")
-            .join(color.select(F.col(node_col).alias("d"),
-                               F.col("color").alias("_cd")), "d")
-            .filter(F.col("_cs") == F.col("_cd"))
-            .select("s", "d")
-            .observe(ec_obs, F.count(F.lit(1)).alias("n"))
+            e.join(color.select("node", "label").toDF("a", "_ca"), "a")
+            .join(color.select("node", "label").toDF("b", "_cb"), "b")
+            .filter(F.col("_ca") == F.col("_cb"))
+            .select(F.col("b").alias("a"), F.col("a").alias("b"))
             .localCheckpoint(eager=True)
         )
-        # same hop doubling as the forward loop (same pre-composition
-        # density bound); compositions of same-color edges stay within
-        # the color class, so the 2-hop union is still same-color
-        ecprop = ec
-        n_ec = int(ec_obs.get["n"])
-        ec_bound = (
-            ec.groupBy(F.col("d").alias("_v"))
-            .agg(F.count(F.lit(1)).alias("_in"))
-            .join(
-                ec.groupBy(F.col("s").alias("_v")).agg(
-                    F.count(F.lit(1)).alias("_out")
-                ),
-                "_v",
-            )
-            .agg(F.sum(F.col("_in").cast("long") * F.col("_out")))
-            .collect()[0][0]
-            or 0
+        roots = color.filter(F.col("node") == F.col("label")).select(
+            F.col("label").alias("color"), "node"
         )
-        if ec_bound <= 4 * n_ec:
-            ec2 = (
-                ec.alias("l")
-                .join(ec.alias("r"), F.col("l.d") == F.col("r.s"))
-                .select(
-                    F.col("l.s").alias("s"), F.col("r.d").alias("d")
-                )
-            )
-            ecprop = (
-                ec.union(ec2).distinct().localCheckpoint(eager=True)
-            )
-        # membership only ever GROWS, so the previous step's count
-        # (carried in a local) is the convergence probe; each step's
-        # count rides its checkpoint job as an Observation
-        converged = False
-        prev_cnt = member.count()
-        for _ in range(max_prop):
-            via = (
-                ecprop.join(member, ecprop["d"] == member[node_col])
-                .select(ecprop["s"].alias(node_col), "color")
-            )
-            m_obs = Observation()
-            new = (
-                member.union(via)
-                .distinct()
-                .observe(m_obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
-            )
-            cur_cnt = int(m_obs.get["n"])
-            member = new
-            if cur_cnt == prev_cnt:
-                converged = True
-                break
-            prev_cnt = cur_cnt
-        if not converged:
-            raise ValueError(
-                f"scc: backward containment did not converge in "
-                f"{max_prop} rounds — raise max_prop above the graph "
-                "diameter"
-            )
-        settled = member.select(node_col, F.col("color").alias("scc"))
-        # r15 optimization round: `done` is a union of already-
-        # checkpointed member frames and is only consumed once at the
-        # end — the old per-round eager checkpoint re-wrote every
-        # settled row each round.
-        done = settled if done is None else done.union(settled)
-        active, n_active, active_sum = _ckpt_nodes(
-            active.join(settled.select(node_col), node_col, "left_anti"),
-            node_col,
+        member = _bfs(
+            _two_hops(ec),
+            roots,
+            ["color"],
+            max_prop,
+            f"scc: backward containment did not converge in {max_prop} "
+            "rounds — raise max_prop above the graph diameter",
         )
-    if done is None:
-        return universe.distinct().select(
-            node_col, F.col(node_col).alias("scc")
-        )
-    if n_active > 0:
-        # Unsettled nodes after max_rounds would come back as WRONG
-        # singletons — fail loudly; rounds are bounded by the depth of
-        # the SCC condensation, so callers raise max_rounds for deep
-        # DAG chains.
-        raise ValueError(
-            f"scc: {n_active} nodes unsettled after {max_rounds} "
-            "rounds — raise max_rounds (condensation depth exceeded)"
-        )
-    return done
+        # `done` stays a lazy union of checkpointed member frames: it is
+        # read once at the end, so no round re-writes settled rows.
+        done.append(member.select("node", "color").toDF(node_col, "scc"))
+        return active.join(member.select("node"), "node", "left_anti")
+
+    _fixpoint(
+        universe.distinct().localCheckpoint(eager=True),
+        settle,
+        F.lit(True),
+        max_rounds,
+        f"scc: nodes unsettled after {max_rounds} rounds — raise "
+        "max_rounds (condensation depth exceeded)",
+    )
+    return reduce(DataFrame.union, done)
 
 
 def hits(
@@ -1215,19 +1047,9 @@ def degree_assortativity(
     integer aggregates (no grid needed), so r is an exact expression
     of integers — engine-identical. Two keyed joins + one aggregate;
     no window, no iteration."""
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-    )
+    e = _canonical(edges, src, dst)
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    deg = und.groupBy("a").agg(F.count("*").alias("d")).select(
-        F.col("a").alias("node"), F.col("d")
-    )
+    deg = _degree(e, "node")
     pairs = (
         und.join(deg.withColumnRenamed("node", "a"), "a")
         .withColumnRenamed("d", "dx")
@@ -1278,17 +1100,9 @@ def edge_jaccard(
     endpoint) — candidates are Σ deg², never all pairs, and only
     edges with ≥ ``min_common`` shared neighbors surface. All counts
     exact integers; jaccard is an exact ratio."""
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-    )
+    e = _canonical(edges, src, dst)
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    deg = und.groupBy("a").agg(F.count("*").alias("d"))
+    deg = _degree(e, "a")
     adj_u = und.select(F.col("a").alias("u"), F.col("b").alias("w"))
     adj_v = und.select(F.col("a").alias("v2"), F.col("b").alias("w2"))
     common = (
@@ -1426,33 +1240,23 @@ def k_truss(
     survives the bridge edges k-core keeps.
 
     Distributed shape per round: the a<b<c node-iterator triangle
-    listing (two self-joins on canonical edges — the same program as
-    ``triangle_count``), a 3-way explode crediting each triangle's
-    three edges, one count per edge, one semi-join filter. The edge
-    set only shrinks; each round localCheckpoints so lineage stays
-    flat. Convergence probes with limit(1).count(). SQL-expressible
-    by unrolling rounds as CTEs — the oracle does exactly that;
-    fixture graphs must converge within the unroll depth."""
+    listing (``_triangles``, the same program as ``triangle_count``), a
+    3-way explode crediting each triangle's three edges, one count per
+    edge, one left join flagging the edges below k−2. The edge set only
+    shrinks; each round localCheckpoints so lineage stays flat, and the
+    count of flagged edges rides that checkpoint job. A peel that has
+    not converged after ``max_iter`` rounds raises ``ValueError`` (the
+    last round's edges would include sub-threshold edges with stale
+    supports — a non-truss). SQL-expressible by unrolling rounds as
+    CTEs — the oracle does exactly that; fixture graphs must converge
+    within the unroll depth."""
     if k < 3:
         raise ValueError("k must be >= 3 (k-2 triangle support)")
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    thresh = k - 2
-    sup = None
-    converged = False
-    for _ in range(max_iter):
-        e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
-        e3 = e.select(F.col("a").alias("x"), F.col("b").alias("z"))
-        tri = e1.join(e2, "y").join(e3, ["x", "z"])
-        sides = tri.select(
+    e = _canonical(edges, src, dst).localCheckpoint(eager=True)
+
+    def peel(s: DataFrame) -> DataFrame:
+        live = s.filter("_keep").select("a", "b")
+        sides = _triangles(live).select(
             F.explode(
                 F.array(
                     F.struct(F.col("x").alias("a"), F.col("y").alias("b")),
@@ -1461,34 +1265,26 @@ def k_truss(
                 )
             ).alias("_e")
         ).select("_e.a", "_e.b")
-        sup = (
-            e.join(
-                sides.groupBy("a", "b").agg(
-                    F.count(F.lit(1)).alias("support")
-                ),
-                ["a", "b"],
-                "left",
-            )
-            .withColumn("support", F.coalesce("support", F.lit(0)))
-            .localCheckpoint(eager=True)
+        support = F.coalesce("support", F.lit(0))
+        return live.join(
+            sides.groupBy("a", "b").agg(F.count(F.lit(1)).alias("support")),
+            ["a", "b"],
+            "left",
+        ).select(
+            "a",
+            "b",
+            support.alias("support"),
+            (support >= k - 2).alias("_keep"),
         )
-        weak = sup.filter(F.col("support") < thresh)
-        if weak.limit(1).count() == 0:
-            converged = True
-            break
-        e = sup.filter(F.col("support") >= thresh).select(
-            "a", "b"
-        ).localCheckpoint(eager=True)
-    if not converged:
-        # Exhausting the cap mid-peel would return a NON-truss: the last
-        # computed sup still carries edges below threshold (with supports
-        # relative to a stale edge set). Fail loudly, matching scc's
-        # contract — peel depth is bounded by the edge count, so callers
-        # raise max_iter for deep peel chains.
-        raise ValueError(
-            f"k_truss: peeling did not converge in {max_iter} rounds — "
-            "raise max_iter"
-        )
+
+    sup, _ = _fixpoint(
+        e.withColumn("_keep", F.lit(True)),
+        peel,
+        ~F.col("_keep"),
+        max_iter,
+        f"k_truss: peeling did not converge in {max_iter} rounds — "
+        "raise max_iter",
+    )
     return sup.select("a", "b", F.col("support").cast("long").alias("support"))
 
 
@@ -1504,21 +1300,8 @@ def rich_club(
     (φ → 0)? The topology question ``degree_assortativity`` answers
     only on average. One degree aggregate + one double semi-join of
     the canonical edge list against the club; exact integers."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionAll(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    club = deg.filter(F.col("d") > k).select("n")
+    e = _canonical(edges, src, dst)
+    club = _degree(e).filter(F.col("d") > k).select("n")
     ec = (
         e.join(club.withColumnRenamed("n", "a"), "a")
         .join(club.withColumnRenamed("n", "b"), "b")
@@ -1561,21 +1344,8 @@ def louvain_move(
     aggregate + one join + one groupBy, no floats until nothing is
     left to compare. Compose with :func:`modularity` to score the
     resulting partition."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionAll(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
+    e = _canonical(edges, src, dst).localCheckpoint(eager=True)
+    deg = _degree(e)
     m2 = e.count() * 2  # 2m, exact
     # directed neighbor pairs (i, j) with both degrees
     nbr = e.select(
@@ -1625,25 +1395,12 @@ def modularity(
     q_term = e_in/m − (d_tot/2m)²; Q = Σ q_term. Exact integer
     e_in/d_tot/m from two joins + aggregates; q_term is one IEEE
     expression of exact integers (engine-identical)."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _canonical(edges, src, dst).localCheckpoint(eager=True)
     m = e.count()
     asg = assignment.select(
         F.col(node_col).alias("_n"), F.col(comm_col).alias("_c")
     )
-    deg = (
-        e.select(F.col("a").alias("_n"))
-        .unionAll(e.select(F.col("b").alias("_n")))
-        .groupBy("_n")
-        .agg(F.count(F.lit(1)).cast("long").alias("_d"))
-    )
+    deg = _degree(e, "_n", "_d")
     dsum = (
         deg.join(asg, "_n")
         .groupBy("_c")
@@ -1701,63 +1458,53 @@ def betweenness_from_pivots(
     All pivots advance SIMULTANEOUSLY in one (pivot, node)-keyed
     frame: each forward hop is one join + one partial-aggregated
     groupBy; the backward sweep processes one depth layer per round
-    (depth is a driver int from the forward probes). Every dependency
+    (depth is the forward loop's round count). Every dependency
     term lands on the 2^-20 grid BEFORE its sum, so the accumulated
     δ's — and the final per-node sum of grid multiples — are exact
-    and engine-order-free. Raises if BFS hasn't exhausted every
-    reachable node within ``max_hops`` (silent truncation would
-    drop dependencies — the ``scc`` convention)."""
+    and engine-order-free. The forward BFS runs one round past
+    ``max_hops`` and raises if that round still reached a node
+    (silent truncation would drop dependencies — the ``scc``
+    convention); an eccentricity of exactly ``max_hops`` passes."""
     if not pivots:
         raise ValueError("betweenness_from_pivots needs >= 1 pivot")
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("w"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("w")))
-        .filter(F.col("u").isNotNull() & F.col("w").isNotNull())
-        .filter(F.col("u") != F.col("w"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    pv = spark.createDataFrame(
+    e = _symmetric(edges, src, dst).localCheckpoint(eager=True)
+    pv = edges.sparkSession.createDataFrame(
         [(p,) for p in pivots], [src]
     ).select(F.col(src).alias("p"))
-    layers = pv.select(
-        "p",
-        F.col("p").alias("v"),
-        F.lit(0).alias("d"),
-        F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint(eager=True)
-    frontier = layers
-    maxd = 0
-    for h in range(1, max_hops + 1):
+
+    def hop(s: DataFrame) -> DataFrame:
+        front = s.filter("_new")
         nxt = (
-            frontier.join(e, frontier["v"] == e["u"])
-            .select("p", F.col("w").alias("v"), "sigma")
-            .join(layers.select("p", "v"), ["p", "v"], "left_anti")
-            .groupBy("p", "v")
-            .agg(F.sum("sigma").alias("sigma"))
-            .select("p", "v", F.lit(h).alias("d"), "sigma")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        layers = layers.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-        maxd = h
-    else:
-        if frontier.limit(1).count() > 0:
-            check = (
-                frontier.join(e, frontier["v"] == e["u"])
-                .select("p", F.col("w").alias("v"))
-                .join(layers.select("p", "v"), ["p", "v"], "left_anti")
-                .limit(1)
-                .count()
+            front.join(e, front["v"] == e["a"])
+            .select(
+                "p",
+                F.col("b").alias("v"),
+                (F.col("d") + 1).alias("d"),
+                "sigma",
             )
-            if check > 0:
-                raise ValueError(
-                    f"betweenness_from_pivots: BFS not exhausted in "
-                    f"{max_hops} hops — raise max_hops past the diameter"
-                )
+            .join(s.select("p", "v"), ["p", "v"], "left_anti")
+            .groupBy("p", "v", "d")
+            .agg(F.sum("sigma").alias("sigma"))
+        )
+        return s.withColumn("_new", F.lit(False)).unionByName(
+            nxt.withColumn("_new", F.lit(True))
+        )
+
+    layers, rounds = _fixpoint(
+        pv.select(
+            "p",
+            F.col("p").alias("v"),
+            F.lit(0).alias("d"),
+            F.lit(1).cast("long").alias("sigma"),
+            F.lit(True).alias("_new"),
+        ),
+        hop,
+        F.col("_new"),
+        max_hops + 1,
+        f"betweenness_from_pivots: BFS not exhausted in {max_hops} hops "
+        "— raise max_hops past the diameter",
+    )
+    maxd = rounds - 1  # the last round reached no node
     q = float(1 << 20)
     # r15 optimization round (guide §2.4/§5): per-layer delta frames
     # instead of one growing eagerly-rematerialized union. Each layer's
@@ -1781,8 +1528,8 @@ def betweenness_from_pivots(
             F.col("delta").alias("dw"),
         )
         contrib = (
-            cur.join(e, cur["v"] == e["u"])
-            .select("p", "v", "sigma", F.col("w"))
+            cur.join(e, cur["v"] == e["a"])
+            .select("p", "v", "sigma", F.col("b").alias("w"))
             .join(succ, ["p", "w"])
             .select(
                 "p",

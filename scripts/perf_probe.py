@@ -12,6 +12,7 @@ Usage:
     python scripts/perf_probe.py pq_topk
     python scripts/perf_probe.py pagerank_nations --runs 2
     python scripts/perf_probe.py scc --explain   # also dump formatted plan
+    python scripts/perf_probe.py kcore,scc --runs 1   # jobs per name too
 """
 
 from __future__ import annotations
@@ -101,6 +102,7 @@ def main() -> int:
         logs += [os.path.join(root, f) for f in files if "appstatus" not in f]
     stages = []  # (wall_ms, stage_id, ntasks, sh_read, sh_write, name, desc)
     jobs = 0
+    jobs_by_name = {}
     subs = {}
 
     def _accum(si, *needles) -> int:
@@ -128,6 +130,8 @@ def main() -> int:
                     if not desc.startswith("probe:"):
                         continue
                     jobs += 1
+                    name = desc.split(":")[1]
+                    jobs_by_name[name] = jobs_by_name.get(name, 0) + 1
                     for sid in ev.get("Stage IDs", []):
                         subs[sid] = desc
                 elif et == "SparkListenerStageCompleted":
@@ -159,6 +163,8 @@ def main() -> int:
           f"stage wall sum: {sum(s[0] for s in stages) / 1000:.2f}s, "
           f"shuffle read {sum(s[3] for s in stages) / 1e6:.1f} MB, "
           f"write {sum(s[4] for s in stages) / 1e6:.1f} MB")
+    for name in args.names.split(","):
+        print(f"probe jobs [{name}]: {jobs_by_name.get(name, 0)}")
     print(f"{'wall_ms':>8} {'stg':>5} {'tasks':>5} {'shR_MB':>7} "
           f"{'shW_MB':>7}  name / job description")
     for wall, sid, ntask, shr, shw, sname, desc in stages[: args.top]:

@@ -676,11 +676,11 @@ def test_rich_club_elite_core(spark):
 
 
 def test_scc_string_node_ids(spark):
-    """String node ids must work: the forward-coloring convergence probe
-    may only use the decimal-sum fast path for numeric ids (a string id
-    would ANSI-throw on the cast, or NULL-out and falsely converge after
-    one round with ANSI off). Two 2-cycles bridged by a one-way edge plus
-    a singleton — labels are lexicographic maxima per component."""
+    """String node ids must work: every convergence probe counts rows
+    and never sums or casts ids (a string id would ANSI-throw on a
+    numeric cast, or NULL-out and falsely converge with ANSI off). Two
+    2-cycles bridged by a one-way edge plus a singleton — labels are
+    lexicographic maxima per component."""
     from from_superset_to_clickhouse_spark.operators.graph import (
         strongly_connected_components,
     )
@@ -718,3 +718,137 @@ def test_k_truss_raises_on_exhausted_peel_instead_of_non_truss(spark):
         k_truss(df, k=4, max_iter=1).collect()
     ok = {(r["a"], r["b"]) for r in k_truss(df, k=4, max_iter=10).collect()}
     assert ok == {(a, b) for a in range(4) for b in range(4) if a < b}
+
+
+_DEGENERATE = {
+    "connected_components": (
+        lambda gr, e, f: gr.connected_components(e),
+        {"empty": [], "loop": [(1, 1)], "edge": [(1, 1), (2, 1)]},
+    ),
+    "pagerank": (
+        lambda gr, e, f: gr.pagerank(e),
+        {"empty": [], "loop": [(1, 1.0)],
+         "edge": [(1, 0.075), (2, 0.13875)]},
+    ),
+    "label_propagation": (
+        lambda gr, e, f: gr.label_propagation(e, f["seeds"]),
+        {"empty": [], "loop": [(1, "x")], "edge": [(1, "x"), (2, "x")]},
+    ),
+    "kcore": (
+        lambda gr, e, f: gr.kcore(e, k=1),
+        {"empty": [], "loop": [], "edge": [(1, 1), (2, 1)]},
+    ),
+    "shortest_hops": (
+        lambda gr, e, f: gr.shortest_hops(e, f["sources"]),
+        {"empty": [(1, 0)], "loop": [(1, 0)], "edge": [(1, 0), (2, 1)],
+         "no_sources": []},
+    ),
+    "closeness_from_pivots": (
+        lambda gr, e, f: gr.closeness_from_pivots(e, f["sources"]),
+        {"empty": [(1, 1, 0, None, 0.0)], "loop": [(1, 1, 0, None, 0.0)],
+         "edge": [(1, 1, 0, None, 0.0), (2, 1, 1, 1.0, 1.0)],
+         "no_sources": []},
+    ),
+    "strongly_connected_components": (
+        lambda gr, e, f: gr.strongly_connected_components(e),
+        {"empty": [], "loop": [(1, 1)], "edge": [(1, 1), (2, 2)]},
+    ),
+    "hits": (
+        lambda gr, e, f: gr.hits(e),
+        {"empty": [], "loop": [(1, 1.0, 1.0)],
+         "edge": [(1, 1.0, 0.0), (2, 0.0, 1.0)]},
+    ),
+    "k_truss": (
+        lambda gr, e, f: gr.k_truss(e, k=3),
+        {"empty": [], "loop": [], "edge": []},
+    ),
+    "betweenness_from_pivots": (
+        lambda gr, e, f: gr.betweenness_from_pivots(e, [1]),
+        {"empty": [], "loop": [], "edge": [(2, 0.0)]},
+    ),
+}
+_NODES_ONLY = {
+    "connected_components": lambda gr, e, n: gr.connected_components(
+        e, nodes=n
+    ),
+    "strongly_connected_components": (
+        lambda gr, e, n: gr.strongly_connected_components(e, nodes=n)
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def degenerate_frames(spark):
+    schema = "src long, dst long"
+    return {
+        "empty": spark.createDataFrame([], schema),
+        "loop": spark.createDataFrame([(1, 1)], schema),
+        "edge": spark.createDataFrame([(1, 2)], schema),
+        "seeds": spark.createDataFrame([(1, "x")], "node long, label string"),
+        "nodes": spark.createDataFrame([(3,), (4,)], "node long"),
+    }
+
+
+@pytest.mark.parametrize(
+    "op,case",
+    [(op, case) for op, (_, cases) in _DEGENERATE.items() for case in cases]
+    + [(op, "nodes_only") for op in _NODES_ONLY],
+)
+def test_iterative_graph_operators_on_degenerate_inputs(
+    degenerate_frames, op, case
+):
+    """Every iterative graph operator terminates with the exact answer
+    on an empty edge list, one self-loop and one edge; cc and scc also
+    on a nodes-only universe, the BFS pair also with no sources."""
+    from from_superset_to_clickhouse_spark.operators import graph as gr
+
+    f = degenerate_frames
+    if case == "nodes_only":
+        got = _NODES_ONLY[op](gr, f["empty"], f["nodes"])
+        assert sorted(map(tuple, got.collect())) == [(3, 3), (4, 4)]
+        return
+    run, cases = _DEGENERATE[op]
+    edges = f["edge" if case == "no_sources" else case]
+    f = dict(f, sources=[] if case == "no_sources" else [1])
+    out = run(gr, edges, f)
+    assert sorted(map(tuple, out.collect())) == cases[case]
+    if op == "pagerank" and case == "empty":
+        assert out.schema == run(gr, f["edge"], f).schema
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda gr, e: gr.kcore(e, k=2, max_iter=2),
+        lambda gr, e: gr.connected_components(e, max_iter=1),
+    ],
+    ids=["kcore", "connected_components"],
+)
+def test_exhausted_cap_raises_instead_of_wrong_answer(spark, op):
+    """kcore and connected_components used to return a partial fixpoint
+    (8 rows instead of the empty 2-core; 10 components instead of 1)
+    when the path 1-2-…-12 outlasted max_iter."""
+    from from_superset_to_clickhouse_spark.operators import graph as gr
+
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 12)], "src long, dst long"
+    )
+    with pytest.raises(ValueError, match="did not converge"):
+        op(gr, path).collect()
+
+
+def test_betweenness_eccentricity_equal_to_max_hops_passes(spark):
+    """The BFS cap raises only when a node lies BEYOND max_hops: the
+    chain 0→…→6 from pivot 0 has eccentricity 6 = max_hops."""
+    from from_superset_to_clickhouse_spark.operators.graph import (
+        betweenness_from_pivots,
+    )
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], "src int, dst int"
+    )
+    got = {
+        r["node"]: r["betweenness"]
+        for r in betweenness_from_pivots(chain, [0], max_hops=6).collect()
+    }
+    assert got == {v: (6 - v) / 2 for v in range(1, 7)}
