@@ -279,19 +279,14 @@ def minhash_band_rows(
     document at any corpus scale.
 
     ``hash_family``: "arrow" (production default — vectorized universal
-    hashing, one broadcast-multiply + min per doc; falls back to
-    xxhash64 without numpy), "xxhash64" (pure-Catalyst expression
-    family), or "md5" (ANSI-replicable hex-string family so an external
-    SQL oracle can recompute the identical signatures and buckets).
+    hashing, one broadcast-multiply + min per doc), "xxhash64"
+    (pure-Catalyst expression family), or "md5" (ANSI-replicable
+    hex-string family so an external SQL oracle can recompute the
+    identical signatures and buckets).
     """
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     r = num_hashes // bands
-    if hash_family == "arrow":
-        try:
-            import numpy  # noqa: F401
-        except ImportError:
-            hash_family = "xxhash64"
     if hash_family == "arrow":
         return _minhash_banded_vectorized(
             df, text_col, id_col, num_hashes, bands, shingle_k
@@ -613,16 +608,10 @@ def simhash_pairs(
     materialized signatures — no n² stage anywhere.
 
     ``hash_family``: "arrow" (production default — vectorized votes +
-    packed-long signatures, Hamming via JVM ``bit_count``; falls back to
-    xxhash64 without numpy), "xxhash64" (pure-Catalyst expression
-    family), or "md5" (ANSI-replicable — an external SQL oracle can
-    recompute the identical bits and buckets).
+    packed-long signatures, Hamming via JVM ``bit_count``), "xxhash64"
+    (pure-Catalyst expression family), or "md5" (ANSI-replicable — an
+    external SQL oracle can recompute the identical bits and buckets).
     """
-    if hash_family == "arrow":
-        try:
-            import numpy  # noqa: F401
-        except ImportError:
-            hash_family = "xxhash64"
     if hash_family == "arrow":
         banded = _persisted(
             _simhash_banded_vectorized(df, text_col, id_col, bits, band_bits)

@@ -1,33 +1,49 @@
 """Similarity search over embedding columns (array<float>).
 
-Two tiers (north-star extension surface, BASELINE.json):
+Search tiers (north-star extension surface, BASELINE.json):
 
-- brute-force cosine top-k: the correctness baseline. The query set is
-  broadcast (it's small by construction); the corpus side streams — so
-  the "cross join" is really a broadcast nested loop whose cost is
-  |corpus| × |queries|, embarrassingly parallel, no shuffle of the
-  corpus. All arithmetic is double-precision Catalyst higher-order
-  functions.
+- Exact: ``brute_force_topk`` scores every (corpus, query) pair against
+  a broadcast query set — |corpus| × |queries| work, embarrassingly
+  parallel, no shuffle of the corpus. Two plans: blocked BLAS over
+  Arrow batches (default) and the pure Catalyst expression twin.
+- LSH: signed-random-projection band buckets block a join
+  (``lsh_index`` persists them, ``lsh_topk_indexed`` queries them) and
+  the surviving candidates are re-ranked exactly.
+  ``embedding_dedup_pairs`` reuses the same banding as a self-join
+  blocker + exact cosine verify.
+- IVF: coarse centroids (``train_centroids``); each corpus vector is
+  assigned to its nearest cell once (``ivf_index``), queries probe
+  their ``nprobe`` nearest cells, and only those cells are scored
+  exactly, one cogrouped matmul per cell. The cell id doubles as a
+  physical partitioning key for pruned reads.
+- PQ / IVF-PQ: product-quantization codes scored by Asymmetric
+  Distance Computation lookup tables, per query (ordered LIMIT) or per
+  batch (broadcast LUT join + window), with ``exact_rerank`` as the
+  refine stage.
 
-- LSH-bucketed (random hyperplane / signed random projection): the scale
-  path. Signatures are sign-bit band buckets; candidates come from a
-  bucket join, then exact cosine re-ranks. At 100 TB the bucket join
-  replaces the |corpus|×|queries| loop with per-bucket work.
+Kernel seam: the operators are thin plans over one layer of private
+helpers.
 
-- IVF (inverted-file) partitioned search: Lloyd-trained coarse
-  centroids; the corpus is assigned to its nearest cell once, queries
-  probe their ``nprobe`` nearest cells, and only those cells' vectors
-  are scored exactly. The standard billion-scale ANN layout: candidate
-  work is the nprobe/ncells fraction of the corpus, and the cell
-  assignment doubles as a physical partitioning key for co-located
-  reads.
-
-Embedding-cosine near-duplicate detection (``embedding_dedup_pairs``)
-reuses the SRP banding as a self-join blocker + exact cosine verify.
+- ``_split_valid`` splits every Arrow batch into its valid vectors
+  (non-NULL, expected length) and the rest; every Python kernel runs on
+  the valid rows only. NULL in → NULL or no row out: a per-row kernel
+  (``_vector_udf``: cell, probe list, PQ codes, residual) returns NULL
+  for an invalid vector, and a top-k kernel never uses it as a
+  neighbor or a query. No invalid vector fails a task.
+- ``_unit`` normalises rows (zero rows stay zero); ``_topk_pairs`` is
+  the tie-safe per-block cut and ``_rank_cut`` the final per-query
+  window (ties to ascending ``n_id``), so the blocked plans are exact.
+- ``_lut``, ``_probe_order`` and ``_adc_sum`` are the ADC table, probe
+  order and score expression; ``_sq_l2`` is the squared-L2 fold. Their
+  arithmetic order is fixed because the oracle replays it bit for bit.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -58,6 +74,153 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+# -- vector kernel ---------------------------------------------------------
+
+
+def _split_valid(v, dim=None):
+    """Split a batch of vectors into (vals, good, mat): ``mat`` is the
+    float64 matrix of the rows whose vector is non-NULL and exactly
+    ``dim`` long, ``good`` their positions (``None`` when every row is
+    valid — the overwhelmingly common case, zero extra copies).
+    ``dim=None`` takes the batch's most common length, for kernels
+    with no declared dimension (SRP banding, the query side). Kernels
+    compute on ``mat`` only, so an invalid vector degrades to NULL or
+    no row instead of failing the whole batch with a ``np.asarray``
+    shape error: with ``arrow=None`` auto-switching on k×dim, a corpus
+    that is fine under the expression path must not start failing
+    merely because the centroid count crossed
+    ``_ARROW_ASSIGN_MIN_OPS``."""
+    vals = list(v)
+    if dim is None:
+        lens = Counter(len(x) for x in vals if x is not None)
+        dim = lens.most_common(1)[0][0] if lens else 0
+    good = [
+        i for i, x in enumerate(vals) if x is not None and len(x) == dim
+    ]
+    if len(good) == len(vals):
+        return vals, None, np.asarray(vals, dtype=np.float64).reshape(
+            len(vals), dim
+        )
+    mat = np.asarray([vals[i] for i in good], dtype=np.float64).reshape(
+        len(good), dim
+    )
+    return vals, good, mat
+
+
+def _valid_frame(pdf, vec_col: str, dim=None):
+    """(rows of ``pdf`` with a valid ``vec_col`` vector, their matrix)."""
+    _, good, mat = _split_valid(pdf[vec_col], dim)
+    return (pdf if good is None else pdf.iloc[good]), mat
+
+
+def _unit(m):
+    """Rows scaled to unit L2 norm; all-zero rows stay zero."""
+    n = np.linalg.norm(m, axis=1)
+    n[n == 0.0] = 1.0
+    return m / n[:, None]
+
+
+def _vector_udf(ret: str, dim: int, fn, ragged=None):
+    """The one scalar Arrow kernel behind every per-vector operator
+    (cell assignment, probe lists, PQ codes, residuals): split each
+    batch with ``_split_valid``, call ``fn`` once on the valid-row
+    matrix, scatter its rows back with NULL for NULL or wrong-length
+    vectors. ``fn`` returns one array (a row per matrix row) or, for a
+    struct ``ret``, a dict of such arrays by field name. ``ragged(x)``,
+    when given, computes the value of a non-NULL wrong-length vector
+    instead of NULL (``pq_encode``'s per-subspace rule). A scalar
+    Arrow UDF keeps the plan an ``ArrowEvalPython`` projection."""
+
+    def scatter(col, vals, good):
+        if good is None:
+            return col if col.ndim == 1 else list(col)
+        out = [None] * len(vals)
+        for j, i in enumerate(good):
+            out[i] = col[j]
+        if ragged is not None:
+            for i, x in enumerate(vals):
+                if x is not None and len(x) != dim:
+                    out[i] = ragged(np.asarray(x, dtype=np.float64))
+        return pd.array(out, dtype="Int32") if col.ndim == 1 else out
+
+    @F.pandas_udf(ret)
+    def udf(v):
+        vals, good, mat = _split_valid(v, dim)
+        out = fn(mat)
+        if isinstance(out, dict):
+            return pd.DataFrame(
+                {f: scatter(c, vals, good) for f, c in out.items()}
+            )
+        return pd.Series(scatter(out, vals, good))
+
+    return udf
+
+
+def _topk_pairs(s, n_ids, q_ids, k: int):
+    """Tie-safe per-block top-k cut of an (n × nq) cosine matrix →
+    (q_id, n_id, sim) rows. Self-pairs (equal ids) never match. A row
+    is dropped only when ≥ k rows of the block beat it STRICTLY, so
+    every row that could reach the global top-k under (sim desc, n_id
+    asc) survives — exact ties with the k-th best included — and the
+    final ``_rank_cut`` window is exact. ~k rows per query leave each
+    block instead of n."""
+    s[n_ids[:, None] == q_ids[None, :]] = -np.inf
+    t = min(k, s.shape[0])
+    part = np.argpartition(-s, t - 1, axis=0)[:t]
+    thresh = np.take_along_axis(s, part, 0).min(axis=0)
+    rows, cols = np.nonzero((s >= thresh[None, :]) & np.isfinite(s))
+    return pd.DataFrame(
+        {"q_id": q_ids[cols], "n_id": n_ids[rows], "sim": s[rows, cols]}
+    )
+
+
+def _query_side(queries: DataFrame, id_col: str, vec_col: str):
+    """Collect the query set (the small side, same contract as a
+    broadcast join), keep its valid vectors, normalise and broadcast
+    them → (broadcast of (ids, unit matrix), dim), or ``None`` when no
+    query vector is valid."""
+    rows = queries.select(id_col, vec_col).collect()
+    _, good, qm = _split_valid([r[1] for r in rows], None)
+    if good is not None:
+        rows = [rows[i] for i in good]
+    if not rows:
+        return None
+    ids = np.array([r[0] for r in rows])
+    sc = queries.sparkSession.sparkContext
+    return sc.broadcast((ids, _unit(qm))), qm.shape[1]
+
+
+def _rank_cut(scored: DataFrame, k: int, score: str, desc: bool = False):
+    """Per-query top-k of (q_id, n_id, score) rows → (q_id, n_id,
+    score, rank): one row_number window over q_id ordered by ``score``,
+    ties to ascending ``n_id``. Cosine ``sim`` (``desc``) ranks at full
+    precision and is rounded to 6 decimals on output; ADC / L2
+    distances rank ascending and arrive already rounded."""
+    order = F.col(score).desc() if desc else F.col(score)
+    w = Window.partitionBy("q_id").orderBy(order, F.col("n_id"))
+    out = F.round(score, 6).alias(score) if desc else F.col(score)
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "n_id", out, "rank")
+    )
+
+
+def _sq_l2(a: Column, b: Column) -> Column:
+    """Σ (a_i − b_i)² in DOUBLE, one ``(x − y) * (x − y)`` term per
+    coordinate, folded left to right."""
+    return F.aggregate(
+        F.zip_with(
+            a,
+            b,
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
 def quantize_embeddings(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -76,8 +239,6 @@ def quantize_embeddings(
     transform is Catalyst array expressions — no Python, no shuffle.
     Zero vectors quantize to all-zero codes with scale 0.
     """
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
     v = F.col(vec_col)
     scale = F.array_max(F.transform(v, lambda x: F.abs(x)))
     return df.select(
@@ -119,15 +280,16 @@ def brute_force_topk(
 
     Two physically different, semantically identical plans:
 
-    - ``vectorized=True`` (default, needs numpy): blocked matrix multiply
-      via Arrow ``mapInPandas``. Queries (the small side, same contract as
-      the broadcast below) are L2-normalized into one numpy matrix and
+    - ``vectorized=True`` (default): blocked matrix multiply via Arrow
+      ``mapInPandas``. Queries (the small side, same contract as the
+      broadcast below) are L2-normalized into one numpy matrix and
       broadcast; each corpus Arrow batch computes a (batch × nq) cosine
-      matrix with one BLAS call and emits only per-batch candidates that
-      can still reach the global top-k (every row with sim ≥ the batch's
-      k-th best per query — tie-safe, so the final window re-rank is
-      EXACT). ~30× the throughput of the per-pair expression path: the
-      hot loop is C, not a per-element codegen lambda.
+      matrix with one BLAS call and emits only the ``_topk_pairs``
+      candidates that can still reach the global top-k, so the final
+      window re-rank is EXACT. ~30× the throughput of the per-pair
+      expression path: the hot loop is C, not a per-element codegen
+      lambda. A NULL or wrong-length vector (length ≠ the queries'
+      common length) is never a neighbor and never a query.
     - ``vectorized=False``: pure Catalyst higher-order-function pipeline
       (zip_with/aggregate cosine against a broadcast queries side). No
       Python workers; the fully-SQL-expressible twin of the oracle.
@@ -136,12 +298,7 @@ def brute_force_topk(
     ``n_id``.
     """
     if vectorized:
-        try:
-            import numpy  # noqa: F401
-
-            return _brute_force_topk_vectorized(corpus, queries, k, id_col, vec_col)
-        except ImportError:
-            pass
+        return _brute_force_topk_vectorized(corpus, queries, k, id_col, vec_col)
     q = queries.select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
     )
@@ -153,112 +310,41 @@ def brute_force_topk(
         c.join(F.broadcast(q), F.col("n_id") != F.col("q_id"))
         .withColumn("sim", sim)
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", F.round("sim", 6).alias("sim"), "rank")
-    )
+    return _rank_cut(scored, k, "sim", desc=True)
 
 
 def _brute_force_topk_vectorized(
     corpus: DataFrame, queries: DataFrame, k: int, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Blocked exact kNN: per-Arrow-batch BLAS scoring + candidate cut.
-
-    A corpus row is dropped by a batch only when ≥ k rows in that batch
-    beat it STRICTLY (sim > its sim), so no row that could appear in the
-    global top-k under the (sim desc, n_id asc) order is ever lost —
-    exact-ties with the k-th best are all kept and resolved by the final
-    window. Shuffled volume is ~k rows per (query, batch), not |corpus|.
-    """
-    import numpy as np
-
+    """Blocked exact kNN: per-Arrow-batch BLAS scoring + the
+    ``_topk_pairs`` cut. Shuffled volume is ~k rows per (query, batch),
+    not |corpus|."""
     id_type = dict(corpus.dtypes)[id_col]
-    q_rows = queries.select(id_col, vec_col).collect()
-    spark = corpus.sparkSession
-    if not q_rows:
-        return spark.createDataFrame(
+    qs = _query_side(queries, id_col, vec_col)
+    if qs is None:
+        return corpus.sparkSession.createDataFrame(
             [], f"q_id {id_type}, n_id {id_type}, sim double, rank int"
         )
-    q_ids = np.array([r[0] for r in q_rows])
-    qm = np.array([r[1] for r in q_rows], dtype=np.float64)
-    qn = np.linalg.norm(qm, axis=1)
-    qn[qn == 0.0] = 1.0
-    bq = spark.sparkContext.broadcast((q_ids, qm / qn[:, None]))
+    bq, dim = qs
     kk = int(k)
 
     def score(batches):
-        import pandas as pd
-
-        qid, qnorm = bq.value
+        qid, qu = bq.value
         for pdf in batches:
             for lo in range(0, len(pdf), 2048):
-                chunk = pdf.iloc[lo : lo + 2048]
-                ids = chunk["n_id"].to_numpy()
-                m = np.asarray(list(chunk["vec"]), dtype=np.float64)
-                mn = np.linalg.norm(m, axis=1)
-                mn[mn == 0.0] = 1.0
-                s = (m / mn[:, None]) @ qnorm.T  # B × nq
-                s[ids[:, None] == qid[None, :]] = -np.inf
-                t = min(kk, s.shape[0])
-                part = np.argpartition(-s, t - 1, axis=0)[:t]
-                thresh = np.take_along_axis(s, part, 0).min(axis=0)
-                mask = (s >= thresh[None, :]) & np.isfinite(s)
-                rows, cols = np.nonzero(mask)
-                yield pd.DataFrame(
-                    {"q_id": qid[cols], "n_id": ids[rows], "sim": s[rows, cols]}
-                )
+                chunk, m = _valid_frame(pdf.iloc[lo : lo + 2048], "vec", dim)
+                if len(chunk):
+                    yield _topk_pairs(
+                        _unit(m) @ qu.T, chunk["n_id"].to_numpy(), qid, kk
+                    )
 
     cand = corpus.select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("vec")
     ).mapInPandas(score, schema=f"q_id {id_type}, n_id {id_type}, sim double")
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", F.round("sim", 6).alias("sim"), "rank")
-    )
+    return _rank_cut(cand, k, "sim", desc=True)
 
 
-def _rp_bits(vec: Column, planes: int, seed: int = 7) -> Column:
-    """Signed-random-projection signature: ``planes`` sign bits as array<int>.
-
-    Hyperplane weights are deterministic pseudo-random ±1 derived from
-    xxhash64(seed, plane, coordinate) parity — no RNG state, identical on
-    every executor, no data shuffled to build them. The vector is
-    let-bound so it (and its coordinate sequence) is evaluated once per
-    row for ALL planes — round 1 re-evaluated the full O(planes × dim)
-    projection once per band (VERDICT.md r1 item 5). Dimensionality is
-    derived from the vector itself (``F.size``), so a wrong caller-passed
-    dim can no longer silently zero the signatures (ADVICE.md r1 low).
-    """
-    return let_bind(
-        vec,
-        lambda v: F.transform(
-            F.sequence(F.lit(0), F.lit(planes - 1)),
-            lambda p: F.when(
-                F.aggregate(
-                    F.zip_with(
-                        v,
-                        F.sequence(F.lit(0), F.size(v) - 1),
-                        lambda x, i: x.cast("double")
-                        * F.when(
-                            F.pmod(F.xxhash64(F.lit(seed), p, i), 2) == 0,
-                            F.lit(1.0),
-                        ).otherwise(F.lit(-1.0)),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, val: acc + val,
-                )
-                >= 0,
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        ),
-    )
-
-
-def _srp_buckets_vectorized(
+def _srp_banded(
     df: DataFrame,
     id_col: str,
     vec_col: str,
@@ -267,38 +353,37 @@ def _srp_buckets_vectorized(
     band_bits: int,
     seed: int = 7,
 ) -> DataFrame:
-    """(id, band, bucket) rows via one BLAS projection per Arrow batch.
+    """(id, band, bucket) signed-random-projection band rows, one BLAS
+    projection per Arrow batch.
 
-    The expression twin (``_rp_bits`` + banding) evaluates O(planes ×
-    dim) hash+multiply lambdas per row inside codegen — measured as the
-    dominant cost of ``lsh_topk`` (the join itself is cheap). Here the
-    hyperplanes are a deterministic Gaussian matrix (fixed seed → same
-    planes on every executor and every call, no RNG state shipped), the
-    sign bits are one ``m @ P >= 0`` per batch, and band buckets are a
-    base-2 dot product — the Arrow path, ~an order of magnitude faster.
-    Sign convention matches ``_rp_bits`` (>= 0 → 1)."""
-    import numpy as np
+    The hyperplanes are a deterministic Gaussian matrix (fixed seed →
+    the same planes on every executor and every call, no RNG state
+    shipped), the sign bits are one ``m @ P >= 0`` per batch, and a
+    band's bucket is its bits read as a base-2 int. Only the first
+    n_bands × band_bits bits feed buckets when ``planes`` does not
+    divide evenly into bands. A Catalyst form (per-row hash-derived ±1
+    planes) evaluated O(planes × dim) lambdas per row and was measured
+    the dominant cost of ``lsh_topk``, ~an order of magnitude slower.
 
+    SRP has no declared dimension: each batch bands the vectors of its
+    most common length (``_split_valid`` with ``dim=None``), so a NULL
+    or odd-length vector gets no band rows and is never a candidate."""
     id_type = dict(df.dtypes)[id_col]
     n_bands = planes // band_bits
 
     def gen(batches):
-        import pandas as pd
-
-        P = None
+        planes_by_dim = {}
         pow2 = (1 << np.arange(band_bits)).astype(np.int64)
         for pdf in batches:
+            pdf, m = _valid_frame(pdf, "vec")
             if len(pdf) == 0:
                 continue
-            m = np.asarray(list(pdf["vec"]), dtype=np.float64)
-            if P is None:
-                P = np.random.RandomState(seed).standard_normal(
-                    (m.shape[1], planes)
-                )
-            bits = (m @ P) >= 0.0  # n × planes
-            # planes need not divide evenly into bands: only the first
-            # n_bands × band_bits sign bits feed buckets (the Catalyst
-            # fallback slices the same prefix — behavior must match).
+            dim = m.shape[1]
+            if dim not in planes_by_dim:
+                planes_by_dim[dim] = np.random.RandomState(
+                    seed
+                ).standard_normal((dim, planes))
+            bits = (m @ planes_by_dim[dim]) >= 0.0  # n × planes
             buckets = (
                 bits[:, : n_bands * band_bits].reshape(
                     len(pdf), n_bands, band_bits
@@ -323,42 +408,6 @@ def _srp_buckets_vectorized(
     return src.mapInPandas(
         gen, schema=f"{out_id} {id_type}, band int, bucket bigint"
     )
-
-
-def _srp_banded(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    out_id: str,
-    planes: int,
-    band_bits: int,
-    seed: int = 7,
-) -> DataFrame:
-    """(id, band, bucket) SRP band rows — Arrow BLAS path when numpy is
-    available (one matrix multiply per batch), pure-Catalyst
-    ``_rp_bits`` fallback otherwise. The two paths produce different
-    bucket VALUES (base-2 band int vs hash of the bit slice), each
-    internally consistent: an index must be queried by the same path
-    that built it."""
-    try:
-        import numpy  # noqa: F401
-
-        return _srp_buckets_vectorized(
-            df, id_col, vec_col, out_id, planes, band_bits, seed
-        )
-    except ImportError:
-        n_bands = planes // band_bits
-        buckets = let_bind(
-            _rp_bits(F.col(vec_col), planes, seed),
-            lambda s: F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                lambda i: F.hash(F.slice(s, i * band_bits + 1, band_bits)),
-            ),
-        )
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.posexplode(buckets).alias("band", "bucket"),
-        )
 
 
 def lsh_index(
@@ -416,28 +465,11 @@ def lsh_topk_indexed(
         .distinct()
     )
     nv = corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"))
-    try:
-        import numpy  # noqa: F401
-
-        # Distinct BEFORE attaching vectors: the id-only pair set is the
-        # cheap thing to shuffle; deduping after the vector join would
-        # move |pairs| × dim floats instead (measured 2-4× slower).
-        return _rerank_candidates_vectorized(
-            cand.join(nv, "n_id"), queries, k, id_col, vec_col
-        )
-    except ImportError:
-        pass
-    qv = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    scored = (
-        cand.join(nv, "n_id")
-        .join(F.broadcast(qv), "q_id")
-        .withColumn("sim", cosine(F.col("q_vec"), F.col("n_vec")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", F.round("sim", 6).alias("sim"), "rank")
+    # Distinct BEFORE attaching vectors: the id-only pair set is the
+    # cheap thing to shuffle; deduping after the vector join would move
+    # |pairs| × dim floats instead (measured 2-4× slower).
+    return _rerank_candidates_vectorized(
+        cand.join(nv, "n_id"), queries, k, id_col, vec_col
     )
 
 
@@ -483,67 +515,49 @@ def _rerank_candidates_vectorized(
     """Exact top-k over a candidate set: flat Arrow ``mapInPandas``
     scoring + Catalyst window cut.
 
-    Query vectors (the broadcastable side, same contract as the
-    expression path's ``F.broadcast``) ride along as a driver broadcast
-    (id→row map + one normalized matrix); each Arrow batch computes all
-    its pair similarities with ONE einsum — no per-group Python call, no
-    per-pair codegen lambda. (A groupBy(q_id).applyInPandas variant was
-    measured 6× slower at sf0.1: per-group overhead × |queries| beats
-    the arithmetic.) The (sim desc, n_id asc) top-k cut happens in the
-    window, so ties round-trip exactly like the expression path.
+    Query vectors (the broadcastable side) ride along as
+    ``_query_side``'s driver broadcast; each Arrow batch computes all
+    its pair similarities with ONE einsum — no per-group Python call,
+    no per-pair codegen lambda. (A groupBy(q_id).applyInPandas variant
+    was measured 6× slower at sf0.1: per-group overhead × |queries|
+    beats the arithmetic.) The (sim desc, n_id asc) top-k cut happens
+    in the window. Pairs with an invalid corpus or query vector are
+    dropped.
 
     ``cand_v`` must have columns (q_id, n_id, n_vec) with (q_id, n_id)
     already distinct — callers dedup the id-only pair set before
     attaching vectors.
     """
-    import numpy as np
-
     id_type = dict(cand_v.dtypes)["q_id"]
-    spark = cand_v.sparkSession
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        return spark.createDataFrame(
+    qs = _query_side(queries, id_col, vec_col)
+    if qs is None:
+        return cand_v.sparkSession.createDataFrame(
             [], f"q_id {id_type}, n_id {id_type}, sim double, rank int"
         )
-    qm = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    qn = np.linalg.norm(qm, axis=1)
-    qn[qn == 0.0] = 1.0
-    pos = {r[0]: i for i, r in enumerate(q_rows)}
-    bq = spark.sparkContext.broadcast((pos, qm / qn[:, None]))
+    bq, dim = qs
 
     def score(batches):
-        import pandas as pd
-
-        qpos, qnorm = bq.value
+        qid, qu = bq.value
+        qpos = {q: i for i, q in enumerate(qid.tolist())}
         for pdf in batches:
+            pdf, m = _valid_frame(
+                pdf[pdf["q_id"].map(qpos).notna()], "n_vec", dim
+            )
             if len(pdf) == 0:
                 continue
-            qi = pdf["q_id"].map(qpos)
-            keep = qi.notna().to_numpy()
-            if not keep.all():
-                pdf = pdf[keep]
-                qi = qi[keep]
-                if len(pdf) == 0:
-                    continue
-            m = np.asarray(list(pdf["n_vec"]), dtype=np.float64)
-            mn = np.linalg.norm(m, axis=1)
-            mn[mn == 0.0] = 1.0
-            sims = np.einsum(
-                "ij,ij->i", m / mn[:, None], qnorm[qi.to_numpy(dtype=np.int64)]
-            )
+            qi = pdf["q_id"].map(qpos).to_numpy(dtype=np.int64)
             yield pd.DataFrame(
-                {"q_id": pdf["q_id"], "n_id": pdf["n_id"], "sim": sims}
+                {
+                    "q_id": pdf["q_id"],
+                    "n_id": pdf["n_id"],
+                    "sim": np.einsum("ij,ij->i", _unit(m), qu[qi]),
+                }
             )
 
     scored = cand_v.select("q_id", "n_id", "n_vec").mapInPandas(
         score, schema=f"q_id {id_type}, n_id {id_type}, sim double"
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", F.round("sim", 6).alias("sim"), "rank")
-    )
+    return _rank_cut(scored, k, "sim", desc=True)
 
 
 def embedding_dedup_pairs(
@@ -563,31 +577,14 @@ def embedding_dedup_pairs(
     cosine 0.95 disagrees on a plane with p≈0.10, P(≥1 clean 4-bit band
     of 16) ≈ 1-(1-0.9^4)^16 ≈ 0.999.
     """
-    n_bands = planes // band_bits
-    try:
-        import numpy  # noqa: F401
-
-        unbanded = _srp_buckets_vectorized(
-            df, id_col, vec_col, "vid", planes, band_bits
-        )
-    except ImportError:
-        buckets = let_bind(
-            _rp_bits(F.col(vec_col), planes),
-            lambda s: F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                lambda i: F.hash(F.slice(s, i * band_bits + 1, band_bits)),
-            ),
-        )
-        unbanded = df.select(
-            F.col(id_col).alias("vid"),
-            F.posexplode(buckets).alias("band", "bucket"),
-        )
     # Persisted: consumed by both sides of the self-join; payload is
     # (id, band, bucket) only. Released via _finalize below — persist
     # registers in the session CacheManager, which the ContextCleaner
     # does NOT reclaim, so the eager-materialize/unpersist pair is what
     # keeps repeated calls from accumulating storage blocks.
-    banded = unbanded.persist()
+    banded = _srp_banded(
+        df, id_col, vec_col, "vid", planes, band_bits
+    ).persist()
     l, r = banded.alias("l"), banded.alias("r")
     cand = (
         l.join(
@@ -639,84 +636,40 @@ def train_centroids(
 ) -> list[list[float]]:
     """Lloyd-style coarse centroids for IVF.
 
-    Fast path (numpy): train on a deterministic ``sample_rows``-vector
-    sample — rows taken in xxhash64(id) order, which Spark executes as
-    per-partition top-N + merge (TakeOrdered), NOT a global sort — then
-    run Lloyd iterations on the driver in numpy. Sampling is the
-    standard billion-scale IVF pattern (coarse quantizers are trained on
-    a bounded sample regardless of corpus size), so driver memory is
-    O(sample × dim) at any corpus scale.
+    Trains on a deterministic ``sample_rows``-vector sample — rows taken
+    in xxhash64(id) order, which Spark executes as per-partition top-N +
+    merge (TakeOrdered), NOT a global sort — then runs Lloyd iterations
+    on the driver in numpy. Sampling is the standard billion-scale IVF
+    pattern (coarse quantizers are trained on a bounded sample
+    regardless of corpus size), so driver memory is O(sample × dim) at
+    any corpus scale. NULL and odd-length vectors are left out of the
+    sample's matrix.
 
-    Fallback (no numpy): same algorithm distributed — assign every
-    vector to its max-cosine centroid via broadcast-literal expressions,
-    per-(cell, coordinate) mean via posexplode+groupBy; only ncells×dim
-    rows reach the driver per iteration.
-
-    Both paths: init = first ``ncells`` vectors in hash order; empty
-    cells keep their previous centroid; centroids returned L2-normalized
-    so assignment reduces to a dot product.
+    Init = first ``ncells`` vectors in hash order; empty cells keep
+    their previous centroid; centroids returned L2-normalized so
+    assignment reduces to a dot product. Raises ``ValueError`` when the
+    corpus has no valid vector.
     """
-    try:
-        import numpy as np
-    except ImportError:
-        np = None
-    if np is not None:
-        rows = (
-            corpus.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
-            .orderBy(F.xxhash64(F.col("i")))
-            .limit(int(sample_rows))
-            .collect()
-        )
-        v = np.asarray([r["v"] for r in rows], dtype=np.float64)
-
-        def norm_rows(m):
-            n = np.linalg.norm(m, axis=1)
-            n[n == 0.0] = 1.0
-            return m / n[:, None]
-
-        cents_m = norm_rows(v[:ncells].copy())
-        for _ in range(iters):
-            cell = np.argmax(v @ cents_m.T, axis=1)
-            for c in range(len(cents_m)):
-                members = v[cell == c]
-                if len(members):
-                    cents_m[c] = members.mean(axis=0)
-            cents_m = norm_rows(cents_m)
-        return [[float(x) for x in c] for c in cents_m]
-
-    init = (
+    rows = (
         corpus.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
-        .withColumn("h", F.xxhash64(F.col("i")))
-        .orderBy("h")
-        .limit(ncells)
+        .orderBy(F.xxhash64(F.col("i")))
+        .limit(int(sample_rows))
         .collect()
     )
-
-    def normalize(vec):
-        n = sum(x * x for x in vec) ** 0.5 or 1.0
-        return [float(x) / n for x in vec]
-
-    cents = [normalize(r["v"]) for r in init]
+    _, _, v = _split_valid([r["v"] for r in rows])
+    if not len(v):
+        raise ValueError(
+            "train_centroids needs at least one vector; corpus has 0 valid"
+        )
+    cents_m = _unit(v[:ncells])
     for _ in range(iters):
-        assigned = corpus.select(
-            F.col(vec_col).alias("v"),
-            _assign_cell(F.col(vec_col), cents).alias("cell"),
-        )
-        means = (
-            assigned.select("cell", F.posexplode(F.col("v")).alias("idx", "x"))
-            .groupBy("cell", "idx")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        by_cell: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cell.setdefault(r["cell"], {})[r["idx"]] = r["m"]
-        dim = len(cents[0])
-        cents = [
-            normalize([by_cell.get(c, {}).get(i, cents[c][i]) for i in range(dim)])
-            for c in range(len(cents))
-        ]
-    return cents
+        cell = np.argmax(v @ cents_m.T, axis=1)
+        for c in range(len(cents_m)):
+            members = v[cell == c]
+            if len(members):
+                cents_m[c] = members.mean(axis=0)
+        cents_m = _unit(cents_m)
+    return [[float(x) for x in c] for c in cents_m]
 
 
 def _dist2(vec: Column, cent: list[float]) -> Column:
@@ -767,8 +720,6 @@ def _grid_argmin_codes(mat, books):
     (``floor(d2 * 1e6 + 0.5)`` ≡ ``F.round(d2, 6)`` for d2 ≥ 0 — order
     AND tie structure match, so ``np.argmin``'s first-minimal pick is
     ``array_position``'s lowest-index tie-break)."""
-    import numpy as np
-
     out = np.empty((mat.shape[0], len(books)), dtype=np.int32)
     for s, b in enumerate(books):
         bk = np.asarray(b, dtype=np.float64)
@@ -780,57 +731,6 @@ def _grid_argmin_codes(mat, books):
         d2 += np.einsum("ij,ij->i", bk, bk)[None, :]
         out[:, s] = np.argmin(np.floor(d2 * 1e6 + 0.5), axis=1)
     return out
-
-
-def _split_valid(v, dim):
-    """Split an Arrow batch into (vals, good, mat): the positions whose
-    vector is non-NULL and exactly ``dim`` long, densified to float64.
-    ``good is None`` means every row is valid (the overwhelmingly
-    common case — zero extra copies). The Arrow twins must DEGRADE the
-    same rows the expression path degrades (NULL cell/codes) instead
-    of raising ``np.asarray`` shape errors for the whole batch: with
-    ``arrow=None`` auto-switching on k×dim, a corpus that is fine
-    under the expression path must not start failing merely because
-    the centroid count crossed ``_ARROW_ASSIGN_MIN_OPS``."""
-    import numpy as np
-
-    vals = list(v)
-    good = [
-        i for i, x in enumerate(vals) if x is not None and len(x) == dim
-    ]
-    if len(good) == len(vals):
-        return vals, None, np.asarray(vals, dtype=np.float64).reshape(
-            len(vals), dim
-        )
-    mat = np.asarray([vals[i] for i in good], dtype=np.float64).reshape(
-        len(good), dim
-    )
-    return vals, good, mat
-
-
-def _assign_l2_udf(cents: list[list[float]]):
-    """Arrow-batched rounded-argmin cell assignment — same contract as
-    the ``kmeans_assign`` expression path, one matmul per batch."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    books = [cents]
-    dim = len(cents[0])
-
-    @pandas_udf("int")
-    def assign(v):
-        import pandas as pd
-
-        vals, good, mat = _split_valid(v, dim)
-        cells = _grid_argmin_codes(mat, books)[:, 0]
-        if good is None:
-            return pd.Series(cells)
-        out = [None] * len(vals)
-        for j, i in enumerate(good):
-            out[i] = int(cells[j])
-        return pd.Series(pd.array(out, dtype="Int32"))
-
-    return assign
 
 
 def kmeans_assign(
@@ -849,22 +749,17 @@ def kmeans_assign(
     rounded-argmin as one BLAS matmul per Arrow batch — per-element
     expression lambdas are interpreted and dominate IVF-PQ training
     otherwise."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
     if arrow is None:
         arrow = len(cents) * len(cents[0]) >= _ARROW_ASSIGN_MIN_OPS
     if arrow:
-        try:
-            cell = _assign_l2_udf(cents)(F.col(vec_col))
-            return corpus.select(
-                F.col(id_col), F.col(vec_col), cell.alias("cell")
-            )
-        except ImportError:
-            pass
-    dists = F.array(*[_dist2(F.col(vec_col), c) for c in cents])
-    cell = let_bind(
-        dists, lambda d: F.array_position(d, F.array_min(d)) - 1
-    ).cast("int")
+        cell = _vector_udf(
+            "int", len(cents[0]), lambda m: _grid_argmin_codes(m, [cents])[:, 0]
+        )(F.col(vec_col))
+    else:
+        dists = F.array(*[_dist2(F.col(vec_col), c) for c in cents])
+        cell = let_bind(
+            dists, lambda d: F.array_position(d, F.array_min(d)) - 1
+        ).cast("int")
     return corpus.select(F.col(id_col), F.col(vec_col), cell.alias("cell"))
 
 
@@ -923,102 +818,19 @@ def kmeans(
     )
 
 
-def _assign_udf(cents: list[list[float]]):
-    """Vectorized cell assignment: argmax dot against the (tiny) centroid
-    matrix, one BLAS matmul per Arrow batch. The matrix rides in the UDF
-    closure (ncells×dim floats — broadcast-sized by construction).
-    First-max tie-break matches ``_assign_cell``'s ``array_position``."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    c = np.asarray(cents, dtype=np.float64)
-
-    @pandas_udf("int")
-    def assign(v):
-        import pandas as pd
-
-        vals, good, m = _split_valid(v, c.shape[1])
-        cells = np.argmax(m @ c.T, axis=1).astype(np.int32)
-        if good is None:
-            return pd.Series(cells)
-        out = [None] * len(vals)
-        for j, i in enumerate(good):
-            out[i] = int(cells[j])
-        return pd.Series(pd.array(out, dtype="Int32"))
-
-    return assign
-
-
-def _probe_udf(cents: list[list[float]], nprobe: int):
-    """Vectorized multi-cell probe: the ``nprobe`` highest-dot cells per
-    query, one matmul + argsort per Arrow batch. Tie order among
-    equal-similarity cells differs from the expression path (ascending
-    vs descending cell id) — irrelevant to results since every probed
-    cell's candidates are exactly re-ranked."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
+def _probe(vec: Column, cents: list[list[float]], nprobe: int) -> Column:
+    """The ``nprobe`` highest-dot cells per vector (array<int>, NULL for
+    an invalid vector), one matmul + stable argsort per Arrow batch.
+    Tie order among equal-similarity cells is irrelevant to results:
+    every probed cell's candidates are exactly re-ranked."""
     c = np.asarray(cents, dtype=np.float64)
     npb = int(nprobe)
-
-    @pandas_udf("array<int>")
-    def probe(v):
-        import pandas as pd
-
-        vals, good, m = _split_valid(v, c.shape[1])
-        idx = np.argsort(-(m @ c.T), axis=1, kind="stable")[:, :npb]
-        idx = idx.astype(np.int32)
-        if good is None:
-            return pd.Series(list(idx))
-        out = [None] * len(vals)
-        for j, i in enumerate(good):
-            out[i] = idx[j]
-        return pd.Series(out)
-
-    return probe
-
-
-def _cent_lit(cents: list[list[float]]) -> Column:
-    return F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in cents])
-
-
-def _assign_cell(vec: Column, cents: list[list[float]]) -> Column:
-    """Index (0-based int) of the max-dot-product centroid."""
-    sims = let_bind(
-        vec,
-        lambda v: F.transform(_cent_lit(cents), lambda c: dot(c, v)),
-    )
-    return let_bind(
-        sims, lambda s: (F.array_position(s, F.array_max(s)) - 1).cast("int")
-    )
-
-
-def _probe_cells(vec: Column, cents: list[list[float]], nprobe: int) -> Column:
-    """The ``nprobe`` nearest cell indices for a query vector."""
-    sims = let_bind(
-        vec, lambda v: F.transform(_cent_lit(cents), lambda c: dot(c, v))
-    )
-    return let_bind(
-        sims,
-        lambda s: F.slice(
-            F.reverse(
-                F.transform(
-                    F.array_sort(
-                        F.zip_with(
-                            s,
-                            F.sequence(F.lit(0), F.lit(len(cents) - 1)),
-                            lambda sim, i: F.struct(
-                                sim.alias("sim"), i.alias("cell")
-                            ),
-                        )
-                    ),
-                    lambda p: p["cell"],
-                )
-            ),
-            1,
-            nprobe,
-        ),
-    )
+    return _vector_udf(
+        "array<int>",
+        c.shape[1],
+        lambda m: np.argsort(-(m @ c.T), axis=1, kind="stable")[:, :npb]
+        .astype(np.int32),
+    )(vec)
 
 
 def ivf_topk(
@@ -1050,8 +862,7 @@ def ivf_topk(
     Scoring is a cogrouped-by-cell Arrow ``applyInPandas`` (one BLAS
     matmul per cell between the cell's corpus block and the queries
     probing it — per-cell work, C hot loop, shuffled output is only the
-    per-(query, cell) top-k). Falls back to the per-pair Catalyst
-    expression join when numpy is unavailable.
+    per-(query, cell) top-k).
     """
     cents = centroids if centroids is not None else train_centroids(
         corpus, ncells, id_col=id_col, vec_col=vec_col
@@ -1087,19 +898,19 @@ def ivf_index(
     skips the index re-read — measured faster on local disk; the index
     wins when the corpus doesn't fit hot or reads are pruned.
 
-    Arrow-batched pandas-UDF assignment when numpy is available; the
-    expression twin inlines ncells×dim literals into per-element
-    aggregate lambdas — measured ~10× slower from codegen bloat alone."""
-    try:
-        import numpy  # noqa: F401
-
-        assign = _assign_udf(centroids)(F.col(vec_col))
-    except ImportError:
-        assign = _assign_cell(F.col(vec_col), centroids)
+    Assignment is one argmax-dot matmul per Arrow batch, first max on
+    ties, NULL cell for an invalid vector (the centroid matrix rides in
+    the UDF closure — ncells×dim floats). An expression form inlining
+    ncells×dim literals into per-element aggregate lambdas was measured
+    ~10× slower from codegen bloat alone."""
+    c = np.asarray(centroids, dtype=np.float64)
+    assign = _vector_udf(
+        "int", c.shape[1], lambda m: np.argmax(m @ c.T, axis=1).astype(np.int32)
+    )
     return corpus.select(
         F.col(id_col).alias("n_id"),
         F.col(vec_col).alias("n_vec"),
-        assign.alias("cell"),
+        assign(F.col(vec_col)).alias("cell"),
     )
 
 
@@ -1148,12 +959,7 @@ def ivf_topk_pruned(
     FROM STORAGE, not just in compute. Results are identical to the
     fused/indexed forms — each query only ever joins its own probed
     cells, all of which are in the union read here."""
-    try:
-        import numpy  # noqa: F401
-
-        probe = _probe_udf(centroids, nprobe)(F.col(vec_col))
-    except ImportError:
-        probe = _probe_cells(F.col(vec_col), centroids, nprobe)
+    probe = _probe(F.col(vec_col), centroids, nprobe)
     cells = [
         r["cell"]
         for r in queries.select(F.explode(probe).alias("cell"))
@@ -1184,82 +990,39 @@ def ivf_topk_indexed(
 
     Scoring is a cogrouped-by-cell Arrow ``applyInPandas`` (one BLAS
     matmul per cell between the cell's corpus block and the queries
-    probing it; shuffled output is only the per-(query, cell) top-k) —
-    per-pair Catalyst expression join as the no-numpy fallback."""
-    try:
-        import numpy  # noqa: F401
-
-        have_np = True
-    except ImportError:
-        have_np = False
-    if have_np:
-        qb = queries.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.explode(_probe_udf(centroids, nprobe)(F.col(vec_col))).alias(
-                "cell"
-            ),
-        )
-        scored = _score_cells_cogrouped(
-            index, qb, k, dict(index.dtypes)["n_id"]
-        )
-    else:
-        qb = queries.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.explode(
-                _probe_cells(F.col(vec_col), centroids, nprobe)
-            ).alias("cell"),
-        )
-        scored = (
-            index.join(qb, "cell")
-            .filter(F.col("n_id") != F.col("q_id"))
-            .select(
-                "q_id", "n_id", cosine(F.col("q_vec"), F.col("n_vec")).alias("sim")
-            )
-        )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", F.round("sim", 6).alias("sim"), "rank")
+    probing it; shuffled output is only the per-(query, cell) top-k).
+    An invalid query vector probes no cell; an invalid corpus vector is
+    never scored."""
+    qb = queries.select(
+        F.col(id_col).alias("q_id"),
+        F.col(vec_col).alias("q_vec"),
+        F.explode(_probe(F.col(vec_col), centroids, nprobe)).alias("cell"),
     )
+    scored = _score_cells_cogrouped(
+        index, qb, k, dict(index.dtypes)["n_id"], len(centroids[0])
+    )
+    return _rank_cut(scored, k, "sim", desc=True)
 
 
 def _score_cells_cogrouped(
-    cb: DataFrame, qb: DataFrame, k: int, id_type: str
+    cb: DataFrame, qb: DataFrame, k: int, id_type: str, dim: int
 ) -> DataFrame:
     """Per-cell exact scoring: cogroup (corpus cell block, probing
-    queries) → one normalized matmul → tie-safe per-query top-k cut
-    (same cut as ``_brute_force_topk_vectorized``: only rows strictly
-    beaten by ≥ k cell-mates are dropped, so the global re-rank is exact
-    over the probed candidate set)."""
-    import numpy as np
-
+    queries) → one normalized matmul over the valid vectors →
+    ``_topk_pairs`` cut, so the global re-rank is exact over the probed
+    candidate set."""
     kk = int(k)
 
     def score(left, right):
-        import pandas as pd
-
+        left, m = _valid_frame(left, "n_vec", dim)
+        right, q = _valid_frame(right, "q_vec", dim)
         if len(left) == 0 or len(right) == 0:
             return pd.DataFrame({"q_id": [], "n_id": [], "sim": []})
-        n_ids = left["n_id"].to_numpy()
-        m = np.asarray(list(left["n_vec"]), dtype=np.float64)
-        mn = np.linalg.norm(m, axis=1)
-        mn[mn == 0.0] = 1.0
-        q_ids = right["q_id"].to_numpy()
-        q = np.asarray(list(right["q_vec"]), dtype=np.float64)
-        qn = np.linalg.norm(q, axis=1)
-        qn[qn == 0.0] = 1.0
-        s = (m / mn[:, None]) @ (q / qn[:, None]).T  # |cell| × nq
-        s[n_ids[:, None] == q_ids[None, :]] = -np.inf
-        t = min(kk, s.shape[0])
-        part = np.argpartition(-s, t - 1, axis=0)[:t]
-        thresh = np.take_along_axis(s, part, 0).min(axis=0)
-        mask = (s >= thresh[None, :]) & np.isfinite(s)
-        rows, cols = np.nonzero(mask)
-        return pd.DataFrame(
-            {"q_id": q_ids[cols], "n_id": n_ids[rows], "sim": s[rows, cols]}
+        return _topk_pairs(
+            _unit(m) @ _unit(q).T,
+            left["n_id"].to_numpy(),
+            right["q_id"].to_numpy(),
+            kk,
         )
 
     return (
@@ -1301,7 +1064,9 @@ def semantic_dedup(
     engine agrees on ties at the boundary.
     """
     if seeds is None:
-        seeds = df.filter(F.col(id_col) < n_seeds)
+        # orderBy+limit, not filter(id < n_seeds): ids may be 1-based or
+        # sparse, and "lowest ids" must mean rank order, not value range.
+        seeds = df.orderBy(id_col).limit(n_seeds)
     # Norms are materialized ONCE per vector/seed: the pairwise stages
     # below would otherwise re-fold the 2 norm aggregates inside every
     # pair's cosine (CSE does not reach into HOF lambdas) — measured 2×
@@ -1509,51 +1274,52 @@ def pq_train(
     return books
 
 
-def _pq_codes_udf(books: "list[list[list[float]]]"):
-    """Arrow-batched PQ encoder: all m subspace codes per row from one
-    blocked matmul pass — same grid/tie contract as the expression
-    path (see ``_grid_argmin_codes``)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
+def _round_d2(x, y) -> float:
+    """round(Σ (float(a) − float(b))², 6) over zip(x, y), summed left to
+    right — the driver-side twin of ``_dist2``'s grid."""
+    return round(sum((float(a) - float(b)) ** 2 for a, b in zip(x, y)), 6)
 
+
+def _lut(q, books, cent=None):
+    """ADC lookup table [sub][code] = round(‖q_sub − books[sub][code]‖²,
+    6), built driver-side. With ``cent`` the table is for the
+    cell-relative residual q − cent (IVF-PQ)."""
+    if cent is not None:
+        q = [float(a) - float(b) for a, b in zip(q, cent)]
     d = len(books[0][0])
-    dim = len(books) * d
+    return [
+        [_round_d2(q[s * d : (s + 1) * d], c) for c in book]
+        for s, book in enumerate(books)
+    ]
 
-    @pandas_udf("array<int>")
-    def codes(v):
-        import pandas as pd
 
-        vals, good, mat = _split_valid(v, dim)
-        gc = _grid_argmin_codes(mat, books)
-        if good is None:
-            return pd.Series(list(gc))
-        out = [None] * len(vals)
-        for j, i in enumerate(good):
-            out[i] = gc[j]
-        # ragged-but-non-NULL rows keep the expression path's
-        # per-subspace rule: code_s is real iff the vector covers
-        # subspace s completely, NULL past its end (rare rows, 1-row
-        # matmuls)
-        for i, x in enumerate(vals):
-            if x is None or len(x) == dim:
-                continue
-            xs = np.asarray(x, dtype=np.float64)
-            row = []
-            for s, b in enumerate(books):
-                if len(xs) >= (s + 1) * d:
-                    row.append(
-                        int(
-                            _grid_argmin_codes(
-                                xs[s * d:(s + 1) * d][None, :], [b]
-                            )[0, 0]
-                        )
-                    )
-                else:
-                    row.append(None)
-            out[i] = row
-        return pd.Series(out)
+def _probe_order(q, cents, nprobe: int) -> list[int]:
+    """The ``nprobe`` cells nearest ``q`` by rounded squared L2, ties to
+    the lowest cell."""
+    dists = sorted((_round_d2(q, c), cell) for cell, c in enumerate(cents))
+    return [cell for _, cell in dists[:nprobe]]
 
-    return codes
+
+def _adc_sum(m: int, lut_row) -> Column:
+    """ADC score column ``adc``: ``lut_row(s)`` is subspace s's table
+    (array<double>) for the row; the m ``element_at`` lookups by
+    code_s are added left to right and rounded to 4 decimals — a fixed
+    order, so the oracle replays it bit for bit."""
+    adc = F.element_at(lut_row(0), F.col("code_0") + 1)
+    for s in range(1, m):
+        adc = adc + F.element_at(lut_row(s), F.col(f"code_{s}") + 1)
+    return F.round(adc, 4).alias("adc")
+
+
+def _adc_batch_topk(j: DataFrame, m: int, topk: int, id_col: str):
+    """Batch ADC scoring of code rows joined to their query's ``lut``
+    column → per-query top-k window."""
+    scored = j.select(
+        "q_id",
+        F.col(id_col).alias("n_id"),
+        _adc_sum(m, lambda s: F.element_at(F.col("lut"), s + 1)),
+    )
+    return _rank_cut(scored, topk, "adc")
 
 
 def pq_encode(
@@ -1571,8 +1337,6 @@ def pq_encode(
     ops ≥ ``_ARROW_ASSIGN_MIN_OPS``): the same argmin per subspace as
     one Arrow-batched matmul pass — identical grid/tie contract. The m
     int codes ARE the compressed vector."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
     m = len(books)
     k = len(books[0])
     d = len(books[0][0])
@@ -1581,18 +1345,29 @@ def pq_encode(
     if arrow is None:
         arrow = m * k * d >= _ARROW_ASSIGN_MIN_OPS
     if arrow:
-        try:
-            codes = _pq_codes_udf(books)(F.col(vec_col))
-            tmp = corpus.select(*cols, codes.alias("_pq_codes"))
-            return tmp.select(
-                *[F.col(c) for c in tmp.columns[:-1]],
-                *[
-                    F.element_at(F.col("_pq_codes"), s + 1).alias(f"code_{s}")
-                    for s in range(m)
-                ],
-            )
-        except ImportError:
-            pass
+
+        def ragged(x):
+            # a non-NULL vector of the wrong length keeps the expression
+            # path's per-subspace rule: code_s is real iff the vector
+            # covers subspace s completely, NULL past its end
+            return [
+                int(_grid_argmin_codes(x[s * d : (s + 1) * d][None, :], [b])[0, 0])
+                if len(x) >= (s + 1) * d
+                else None
+                for s, b in enumerate(books)
+            ]
+
+        codes = _vector_udf(
+            "array<int>", m * d, lambda mat: _grid_argmin_codes(mat, books), ragged
+        )(F.col(vec_col))
+        tmp = corpus.select(*cols, codes.alias("_pq_codes"))
+        return tmp.select(
+            *[F.col(c) for c in tmp.columns[:-1]],
+            *[
+                F.element_at(F.col("_pq_codes"), s + 1).alias(f"code_{s}")
+                for s in range(m)
+            ],
+        )
     for s in range(m):
         sl = F.slice(F.col(vec_col), s * d + 1, d)
         dists = F.array(*[_dist2(sl, c) for c in books[s]])
@@ -1620,16 +1395,7 @@ def pq_adc_topk(
     result is an ordered LIMIT, never a global sort. At 100 TB the scan
     reads ONLY the m byte-ish code columns (column pruning drops the
     raw vectors), which is the entire point of PQ."""
-    m = len(books)
-    lut = []
-    for s in range(m):
-        q_s = query[s * len(books[0][0]) : (s + 1) * len(books[0][0])]
-        lut.append(
-            [
-                round(sum((float(a) - float(b)) ** 2 for a, b in zip(q_s, c)), 6)
-                for c in books[s]
-            ]
-        )
+    lut = _lut(query, books)
     # ``encoded=True``: corpus already carries code_0..code_{m-1} (the
     # persisted-index production shape — encode once, ADC-scan codes per
     # query batch); otherwise encode inline for the one-shot path.
@@ -1638,17 +1404,10 @@ def pq_adc_topk(
         if encoded
         else pq_encode(corpus, books, id_col=id_col, vec_col=vec_col)
     )
-    adc = F.element_at(
-        F.array(*[F.lit(v) for v in lut[0]]), F.col("code_0") + 1
-    )
-    for s in range(1, m):
-        adc = adc + F.element_at(
-            F.array(*[F.lit(v) for v in lut[s]]), F.col(f"code_{s}") + 1
-        )
     scored = enc.select(
         F.col(id_col),
-        *[F.col(f"code_{s}") for s in range(m)],
-        F.round(adc, 4).alias("adc"),
+        *[F.col(f"code_{s}") for s in range(len(books))],
+        _adc_sum(len(books), lambda s: F.array(*[F.lit(v) for v in lut[s]])),
     )
     return scored.orderBy("adc", id_col).limit(topk)
 
@@ -1671,16 +1430,7 @@ def exact_rerank(
     side broadcasts (R rows), so the join never shuffles the corpus;
     at 100 TB the raw-vector lookup is the only full-width read and
     it touches R rows."""
-    qlit = F.array(*[F.lit(float(x)) for x in query])
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col(vec_col),
-            qlit,
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = _sq_l2(F.col(vec_col), F.array(*[F.lit(float(x)) for x in query]))
     # distinct() the candidate ids: duplicate candidate rows (e.g. a
     # probe union that emits an id twice) would otherwise duplicate
     # (id, dist) rows and burn topk slots.
@@ -1694,6 +1444,24 @@ def exact_rerank(
     )
 
 
+def _cell_residual(cents: "list[list[float]]", books=None):
+    """Per-matrix function for ``_vector_udf``: coarse cell (grid
+    argmin), residual v − centroid[cell] (IEEE float64 subtract —
+    bit-identical to the expression path's per-element DOUBLE minus)
+    and, with ``books``, the m residual codes instead of the residual.
+    Same determinism contract throughout (``_grid_argmin_codes``)."""
+    c = np.asarray(cents, dtype=np.float64)
+
+    def fn(mat):
+        cell = _grid_argmin_codes(mat, [cents])[:, 0]
+        res = mat - c[cell]
+        if books is None:
+            return {"cell": cell, "residual": res}
+        return {"cell": cell, "codes": _grid_argmin_codes(res, books)}
+
+    return fn
+
+
 def _residuals(
     corpus: DataFrame,
     cents: "list[list[float]]",
@@ -1702,49 +1470,22 @@ def _residuals(
 ) -> DataFrame:
     """(id, cell, residual): per-vector coarse assignment (rounded
     argmin, lowest-cell ties — the shared determinism contract) and the
-    DOUBLE residual v − centroid[cell], all in codegen: the centroid
-    table rides as a nested array literal indexed by the assigned
-    cell."""
+    DOUBLE residual v − centroid[cell]. Small ncells × dim stays in
+    codegen (the centroid table rides as a nested array literal indexed
+    by the assigned cell); at ≥ ``_ARROW_ASSIGN_MIN_OPS`` both come from
+    one Arrow pass (``_cell_residual``), bit-identical."""
     if len(cents) * len(cents[0]) >= _ARROW_ASSIGN_MIN_OPS:
-        try:
-            import numpy as np
-            from pyspark.sql.functions import pandas_udf
-
-            c = np.asarray(cents, dtype=np.float64)
-
-            @pandas_udf("struct<cell:int, residual:array<double>>")
-            def cell_res(v):
-                import pandas as pd
-
-                vals, good, mat = _split_valid(v, c.shape[1])
-                cell = _grid_argmin_codes(mat, [cents])[:, 0]
-                res = mat - c[cell]
-                if good is None:
-                    return pd.DataFrame(
-                        {"cell": cell, "residual": list(res)}
-                    )
-                cells = [None] * len(vals)
-                resid = [None] * len(vals)
-                for j, i in enumerate(good):
-                    cells[i] = int(cell[j])
-                    resid[i] = res[j]
-                return pd.DataFrame(
-                    {
-                        "cell": pd.array(cells, dtype="Int32"),
-                        "residual": resid,
-                    }
-                )
-
-            tmp = corpus.select(
-                F.col(id_col), cell_res(F.col(vec_col)).alias("_cr")
-            )
-            return tmp.select(
-                F.col(id_col),
-                F.col("_cr.cell").alias("cell"),
-                F.col("_cr.residual").alias("residual"),
-            )
-        except ImportError:
-            pass
+        cell_res = _vector_udf(
+            "struct<cell:int, residual:array<double>>",
+            len(cents[0]),
+            _cell_residual(cents),
+        )
+        tmp = corpus.select(F.col(id_col), cell_res(F.col(vec_col)).alias("_cr"))
+        return tmp.select(
+            F.col(id_col),
+            F.col("_cr.cell").alias("cell"),
+            F.col("_cr.residual").alias("residual"),
+        )
     assigned = kmeans_assign(corpus, cents, id_col, vec_col)
     cent_lit = F.array(
         *[F.array(*[F.lit(float(x)) for x in c]) for c in cents]
@@ -1779,15 +1520,15 @@ def ivfpq_train(
     rounded-argmin/first-k-init contract, which is what keeps the whole
     two-level pipeline SQL-replayable.
 
-    Cost audit (round 12): the stage is dominated by the ncells×dim
-    rounded-argmin that produces residuals (zip_with/aggregate lambdas
-    are interpreted per element). Two cheaper forms were evaluated and
-    rejected: unrolling the distance into element_at arithmetic keeps
-    bit-identity but the 256×64-term expression tree OOMs the JVM; an
-    Arrow-batched matmul (``_assign_udf``) is fast but changes the
-    tie-break/rounding contract the ivf/ivfpq oracle twins replay. The
-    shipped fix is the residual persist below (one pass instead of
-    pq_train's two) plus the bounded-sample training contract."""
+    Cost: the stage is dominated by the ncells×dim rounded-argmin that
+    produces residuals. Unrolling the distance into element_at
+    arithmetic keeps bit-identity but the 256×64-term expression tree
+    OOMs the JVM. Above ``_ARROW_ASSIGN_MIN_OPS`` ``_residuals`` runs
+    the argmin as one matmul per Arrow batch on the same 1e-6 grid as
+    the expression path, so cells and residuals are bit-exact
+    (``test_residuals_fused_arrow_matches_expression``). The residual
+    persist below makes it one pass instead of pq_train's two, and
+    training runs on a bounded sample."""
     if centroids is None:
         _, cents = kmeans(
             corpus, k=ncells, iters=coarse_iters, id_col=id_col,
@@ -1818,44 +1559,6 @@ def ivfpq_train(
     return cents, books
 
 
-def _ivfpq_codes_udf(
-    cents: "list[list[float]]", books: "list[list[list[float]]]"
-):
-    """Fused Arrow encoder for the whole IVF-PQ index row: coarse cell
-    (grid argmin), residual v − centroid[cell] (IEEE float64 subtract —
-    bit-identical to the expression path's per-element DOUBLE minus),
-    and the m residual codes (grid argmin per subspace), in ONE Python
-    round-trip per batch instead of assign-UDF → interpreted zip_with →
-    encode-UDF (measured 18.1 s → ~4 s for the 400k×64/256-cell bench
-    encode). Same determinism contract throughout
-    (``_grid_argmin_codes``)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    c = np.asarray(cents, dtype=np.float64)
-
-    @pandas_udf("struct<cell:int, codes:array<int>>")
-    def enc(v):
-        import pandas as pd
-
-        vals, good, mat = _split_valid(v, c.shape[1])
-        cell = _grid_argmin_codes(mat, [cents])[:, 0]
-        res = mat - c[cell]
-        codes = _grid_argmin_codes(res, books)
-        if good is None:
-            return pd.DataFrame({"cell": cell, "codes": list(codes)})
-        cells = [None] * len(vals)
-        cds = [None] * len(vals)
-        for j, i in enumerate(good):
-            cells[i] = int(cell[j])
-            cds[i] = codes[j]
-        return pd.DataFrame(
-            {"cell": pd.array(cells, dtype="Int32"), "codes": cds}
-        )
-
-    return enc
-
-
 def ivfpq_index(
     corpus: DataFrame,
     cents: "list[list[float]]",
@@ -1874,20 +1577,23 @@ def ivfpq_index(
     if arrow is None:
         arrow = len(cents) * len(cents[0]) >= _ARROW_ASSIGN_MIN_OPS
     if arrow:
-        try:
-            m = len(books)
-            enc = _ivfpq_codes_udf(cents, books)(F.col(vec_col))
-            tmp = corpus.select(F.col(id_col), enc.alias("_e"))
-            return tmp.select(
-                F.col(id_col),
-                F.col("_e.cell").alias("cell"),
-                *[
-                    F.element_at(F.col("_e.codes"), s + 1).alias(f"code_{s}")
-                    for s in range(m)
-                ],
-            )
-        except ImportError:
-            pass
+        # one Python round-trip per batch for cell, residual and codes
+        # instead of assign-UDF → interpreted zip_with → encode-UDF
+        # (measured 18.1 s → ~4 s for the 400k×64/256-cell bench encode)
+        enc = _vector_udf(
+            "struct<cell:int, codes:array<int>>",
+            len(cents[0]),
+            _cell_residual(cents, books),
+        )
+        tmp = corpus.select(F.col(id_col), enc(F.col(vec_col)).alias("_e"))
+        return tmp.select(
+            F.col(id_col),
+            F.col("_e.cell").alias("cell"),
+            *[
+                F.element_at(F.col("_e.codes"), s + 1).alias(f"code_{s}")
+                for s in range(len(books))
+            ],
+        )
     res = _residuals(corpus, cents, id_col, vec_col)
     enc = pq_encode(
         res, books, id_col=id_col, vec_col="residual", keep_cols=("cell",)
@@ -1915,32 +1621,7 @@ def ivfpq_topk(
     filter is the partition-pruning path when the index is persisted
     partitionBy(cell) — unprobed shards are never read."""
     m = len(books)
-    d = len(books[0][0])
-    dists = [
-        (
-            round(
-                sum((float(a) - float(b)) ** 2 for a, b in zip(query, c)), 6
-            ),
-            cell,
-        )
-        for cell, c in enumerate(cents)
-    ]
-    probes = [cell for _, cell in sorted(dists)[:nprobe]]
-    luts = {}
-    for cell in probes:
-        qr = [float(a) - float(b) for a, b in zip(query, cents[cell])]
-        luts[cell] = [
-            [
-                round(
-                    sum(
-                        (qr[s * d + i] - float(c[i])) ** 2 for i in range(d)
-                    ),
-                    6,
-                )
-                for c in books[s]
-            ]
-            for s in range(m)
-        ]
+    probes = _probe_order(query, cents, nprobe)
     # ``index``: a pre-built ivfpq_index DataFrame (or its persisted
     # parquet re-read) — encode once, probe many; when persisted
     # partitionBy(cell) the isin filter below is the partition-pruning
@@ -1955,28 +1636,18 @@ def ivfpq_topk(
     pos = F.lit(None).cast("int")
     for i, cell in enumerate(probes):
         pos = F.when(F.col("cell") == cell, F.lit(i)).otherwise(pos)
+    luts = [_lut(query, books, cents[cell]) for cell in probes]
     lut_lit = [
-        F.array(*[
-            F.array(*[F.lit(luts[cell][s][c]) for c in range(len(books[s]))])
-            for cell in probes
-        ])
+        F.array(*[F.array(*[F.lit(v) for v in lut[s]]) for lut in luts])
         for s in range(m)
     ]
     probed = probed.withColumn("_pos", pos)
-    adc = F.element_at(
-        F.element_at(lut_lit[0], F.col("_pos") + 1), F.col("code_0") + 1
-    )
-    for s in range(1, m):
-        adc = adc + F.element_at(
-            F.element_at(lut_lit[s], F.col("_pos") + 1),
-            F.col(f"code_{s}") + 1,
-        )
     return (
         probed.select(
             F.col(id_col),
             F.col("cell"),
             *[F.col(f"code_{s}") for s in range(m)],
-            F.round(adc, 4).alias("adc"),
+            _adc_sum(m, lambda s: F.element_at(lut_lit[s], F.col("_pos") + 1)),
         )
         .orderBy("adc", id_col)
         .limit(topk)
@@ -2303,19 +1974,7 @@ def mmd_rbf(
     two_s2 = 2.0 * float(sigma2)
 
     def _k(x, y):
-        d2 = F.round(
-            F.aggregate(
-                F.zip_with(
-                    x, y,
-                    lambda p, q: (p.cast("double") - q.cast("double"))
-                    * (p.cast("double") - q.cast("double")),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            6,
-        )
-        return F.exp(-d2 / F.lit(two_s2))
+        return F.exp(-F.round(_sq_l2(x, y), 6) / F.lit(two_s2))
 
     # NULL embeddings are dropped up front so n_a/n_b describe exactly
     # the population the kernel means average over (a null vector would
@@ -2375,44 +2034,12 @@ def pq_adc_topk_batch(
     Measured on the bench's 400k corpus: 16 queries in ~1 scan instead
     of 16. At 100 TB the scan cost is paid once per BATCH, not per
     query."""
-    m = len(books)
-    d = len(books[0][0])
-    spark = codes.sparkSession
-    rows = []
-    for qid, q in queries.items():
-        lut = [
-            [
-                round(
-                    sum(
-                        (float(q[s * d + i]) - float(c[i])) ** 2
-                        for i in range(d)
-                    ),
-                    6,
-                )
-                for c in books[s]
-            ]
-            for s in range(m)
-        ]
-        rows.append((int(qid), lut))
-    luts = spark.createDataFrame(
-        rows, "q_id long, lut array<array<double>>"
+    luts = codes.sparkSession.createDataFrame(
+        [(int(qid), _lut(q, books)) for qid, q in queries.items()],
+        "q_id long, lut array<array<double>>",
     )
-    j = codes.crossJoin(F.broadcast(luts))
-    adc = F.element_at(
-        F.element_at(F.col("lut"), 1), F.col("code_0") + 1
-    )
-    for s in range(1, m):
-        adc = adc + F.element_at(
-            F.element_at(F.col("lut"), s + 1), F.col(f"code_{s}") + 1
-        )
-    scored = j.select(
-        "q_id", F.col(id_col).alias("n_id"), F.round(adc, 4).alias("adc")
-    )
-    w = Window.partitionBy("q_id").orderBy("adc", "n_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("q_id", "n_id", "adc", F.col("rank").cast("int"))
+    return _adc_batch_topk(
+        codes.crossJoin(F.broadcast(luts)), len(books), topk, id_col
     )
 
 
@@ -2432,38 +2059,12 @@ def ivfpq_topk_batch(
     APPLIES the probe filter and delivers the right LUT — unprobed
     cells never join, exactly the partition-pruning semantics of the
     per-query form, without |Q| separate scans."""
-    m = len(books)
-    d = len(books[0][0])
-    spark = index.sparkSession
-    rows = []
-    for qid, q in queries.items():
-        dists = sorted(
-            (
-                round(
-                    sum((float(a) - float(b)) ** 2 for a, b in zip(q, c)),
-                    6,
-                ),
-                cell,
-            )
-            for cell, c in enumerate(cents)
-        )
-        for _, cell in dists[:nprobe]:
-            qr = [float(a) - float(b) for a, b in zip(q, cents[cell])]
-            lut = [
-                [
-                    round(
-                        sum(
-                            (qr[s * d + i] - float(c[i])) ** 2
-                            for i in range(d)
-                        ),
-                        6,
-                    )
-                    for c in books[s]
-                ]
-                for s in range(m)
-            ]
-            rows.append((int(qid), int(cell), lut))
-    luts = spark.createDataFrame(
+    rows = [
+        (int(qid), int(cell), _lut(q, books, cents[cell]))
+        for qid, q in queries.items()
+        for cell in _probe_order(q, cents, nprobe)
+    ]
+    luts = index.sparkSession.createDataFrame(
         rows, "q_id long, cell int, lut array<array<double>>"
     )
     # Static probe-union filter BEFORE the join: on a persisted
@@ -2475,22 +2076,7 @@ def ivfpq_topk_batch(
     j = index.filter(F.col("cell").isin(probe_union)).join(
         F.broadcast(luts), "cell"
     )
-    adc = F.element_at(
-        F.element_at(F.col("lut"), 1), F.col("code_0") + 1
-    )
-    for s in range(1, m):
-        adc = adc + F.element_at(
-            F.element_at(F.col("lut"), s + 1), F.col(f"code_{s}") + 1
-        )
-    scored = j.select(
-        "q_id", F.col(id_col).alias("n_id"), F.round(adc, 4).alias("adc")
-    )
-    w = Window.partitionBy("q_id").orderBy("adc", "n_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("q_id", "n_id", "adc", F.col("rank").cast("int"))
-    )
+    return _adc_batch_topk(j, len(books), topk, id_col)
 
 
 def exact_rerank_batch(
@@ -2518,22 +2104,9 @@ def exact_rerank_batch(
         .join(corpus.select(F.col(id_col).alias("n_id"), vec_col), "n_id")
         .join(F.broadcast(qdf), "q_id")
     )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col(vec_col),
-            F.col("qvec"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = _sq_l2(F.col(vec_col), F.col("qvec"))
     scored = j.select("q_id", "n_id", F.round(d2, 6).alias("dist"))
-    w = Window.partitionBy("q_id").orderBy("dist", "n_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("q_id", "n_id", "dist", F.col("rank").cast("int"))
-    )
+    return _rank_cut(scored, topk, "dist")
 
 
 def semdedup_cells(

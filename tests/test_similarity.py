@@ -222,11 +222,12 @@ def test_ivf_pruned_reads_only_probed_cells_and_matches(spark, tmp_path):
 
 
 def test_semantic_dedup_planted_clusters(spark):
-    # Two orthogonal prototypes (ids 0, 1 = the seeds). 10/11 are
-    # near-dups of prototype 0's direction; 20 matches prototype 1;
+    # Two orthogonal prototypes (the two lowest ids = the seeds). 10/11
+    # are near-dups of prototype 0's direction; 20 matches prototype 1;
     # 30 is a near-dup of 10 but would only be caught if it lands in
     # the same cluster (it does). 40 is close to NOTHING above the
-    # threshold.
+    # threshold. The same rows with every id shifted by 1000 must give
+    # the same answer: seeds are the lowest ids, not ids < n_seeds.
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
         (1, [0.0, 1.0, 0.0, 0.0]),
@@ -235,19 +236,23 @@ def test_semantic_dedup_planted_clusters(spark):
         (20, [0.05, 0.98, 0.0, 0.0]),
         (40, [0.5, 0.5, 0.7, 0.0]),      # same cluster, below threshold
     ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {
-        r["vec_id"]: (r["cluster"], r["keep"])
-        for r in simi.semantic_dedup(df, threshold=0.95, n_seeds=2).collect()
-    }
-    assert got[0] == (0, 1)
-    assert got[1] == (1, 1)
-    assert got[10][0] == 0 and got[10][1] == 0  # dup of seed 0 (cos>0.95)
-    assert got[11] == (0, 0)                    # dup of 0/10, higher id
-    assert got[20][0] == 1                      # clustered to seed 1
-    assert got[40][1] == 1                      # nothing within threshold
-    # exactly one survivor per near-identical group, lowest id wins
-    assert got[0][1] == 1 and got[10][1] == 0 and got[11][1] == 0
+    for o in (0, 1000):
+        df = spark.createDataFrame(
+            [(i + o, v) for i, v in rows], "vec_id long, embedding array<float>"
+        )
+        got = {
+            r["vec_id"] - o: (r["cluster"] - o, r["keep"])
+            for r in simi.semantic_dedup(df, threshold=0.95, n_seeds=2).collect()
+        }
+        assert len(got) == len(rows), o
+        assert got[0] == (0, 1)
+        assert got[1] == (1, 1)
+        assert got[10][0] == 0 and got[10][1] == 0  # dup of seed 0 (cos>0.95)
+        assert got[11] == (0, 0)                    # dup of 0/10, higher id
+        assert got[20][0] == 1                      # clustered to seed 1
+        assert got[40][1] == 1                      # nothing within threshold
+        # exactly one survivor per near-identical group, lowest id wins
+        assert got[0][1] == 1 and got[10][1] == 0 and got[11][1] == 0
 
 
 def test_kmeans_planted_clusters_and_empty_cell(spark):
@@ -981,3 +986,78 @@ def test_arrow_paths_null_and_ragged_vectors_match_expression(spark):
            for r in simi.ivfpq_index(df, cents, books, arrow=True).collect()}
     assert idx[2] == (None, None, None) and idx[5] == (None, None, None)
     assert idx[1][0] is not None and idx[4][0] is not None
+
+
+def test_invalid_vectors_are_never_neighbors_and_never_fail(spark):
+    """A NULL or wrong-length vector is dropped by every vectorized
+    kernel instead of failing the Python worker: never a neighbor, never
+    a query, never part of a dedup pair. Below the valid-neighbor count
+    the vectorized brute force equals the expression twin, and IVF
+    probing every cell equals the exact answer. ``train_centroids``
+    skips invalid vectors and raises ValueError (not numpy's AxisError)
+    when no valid vector is left, empty corpus included."""
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [0.99, 0.1, 0.0]),
+        (2, [0.0, 1.0, 0.0]),
+        (3, [0.0, 0.2, 1.0]),
+        (4, None),
+        (5, [1.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    bad = {4, 5}
+    q = df.filter(F.col("vec_id").isin(0, 2))
+
+    def pairs(frame, a="q_id", b="n_id"):
+        return sorted((r[a], r[b], r[2], *r[3:]) for r in frame.collect())
+
+    exact = pairs(simi.brute_force_topk(df, q, k=2))
+    assert exact == pairs(simi.brute_force_topk(df, q, k=2, vectorized=False))
+    assert [(r[0], r[1]) for r in exact] == [(0, 1), (0, 2), (2, 1), (2, 3)]
+    for got in (
+        pairs(simi.brute_force_topk(df, df, k=3)),
+        pairs(simi.lsh_topk(df, df, k=2)),
+    ):
+        assert got and not {x for r in got for x in r[:2]} & bad
+    dup = pairs(simi.embedding_dedup_pairs(df, threshold=0.9), "id_a", "id_b")
+    assert [(r[0], r[1]) for r in dup] == [(0, 1)]
+
+    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
+    ivf = simi.ivf_topk(df, q, k=2, nprobe=2, centroids=cents)
+    assert pairs(ivf) == exact
+    assert len(simi.train_centroids(df, ncells=2)[0]) == 3
+    for empty in (df.limit(0), df.filter(F.col("vec_id") == 4)):
+        with pytest.raises(ValueError, match="corpus has 0"):
+            simi.train_centroids(empty)
+
+
+def test_topk_cut_keeps_exact_ties_across_batches_and_cells(spark):
+    """Four corpus vectors have bit-identical cosine to the query, and
+    the k-th best falls inside that tie. They sit in several Arrow
+    batches (one partition each), three of them in one batch beside a
+    better row, and in four distinct IVF cells. The blocked cut must
+    keep every tied row so the window resolves the tie by ascending
+    n_id, exactly like the expression path."""
+    tie = [[0.5, 0.5, 0.0], [0.5, -0.5, 0.0], [0.5, 0.0, 0.5], [0.5, 0.0, -0.5]]
+    rows = [
+        (9, [0.9, 0.1, 0.0]), (8, tie[0]), (2, tie[1]), (5, tie[2]),
+        (6, tie[3]), (0, [0.0, 1.0, 0.0]), (4, [0.0, 0.0, 1.0]),
+        (7, [-1.0, 0.0, 0.0]),
+        (1, [0.0, -1.0, 0.0]), (3, [0.0, 0.0, -1.0]), (10, [0.0, 1.0, 1.0]),
+        (11, [-1.0, 1.0, 0.0]),
+    ]
+    schema = "vec_id long, embedding array<float>"
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    assert df.rdd.getNumPartitions() == 3
+    q = spark.createDataFrame([(100, [1.0, 0.0, 0.0])], schema)
+    want = [
+        (100, 9, round(0.9 / math.sqrt(0.82), 6), 1),
+        (100, 2, round(0.5 / math.sqrt(0.5), 6), 2),
+        (100, 5, round(0.5 / math.sqrt(0.5), 6), 3),
+    ]
+    for got in (
+        simi.brute_force_topk(df, q, k=3),
+        simi.brute_force_topk(df, q, k=3, vectorized=False),
+        simi.ivf_topk(df, q, k=3, nprobe=4, centroids=tie),
+    ):
+        assert sorted(map(tuple, got.collect()), key=lambda r: r[3]) == want
