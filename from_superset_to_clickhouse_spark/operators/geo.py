@@ -26,6 +26,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._exact import GRID
+
 EARTH_RADIUS_KM = 6371.0088
 KM_PER_LAT_DEG = 111.045  # mean meridian degree
 
@@ -307,7 +309,7 @@ def morans_i_grid(
     table, never a theta join. Deviations sit on the exact 2^-20
     grid (grid-floored mean); both quadratic sums accumulate
     grid-floored in decimal, order-free exact."""
-    q = float(1 << 20)
+    q = GRID
     src = df.select(
         F.col(i_col).cast("long").alias("_i"),
         F.col(j_col).cast("long").alias("_j"),
@@ -336,7 +338,7 @@ def morans_i_grid(
         (F.col("_ri") == F.col("_i")) & (F.col("_rj") == F.col("_j") + 1),
     )
     dec = "decimal(38,0)"
-    q2 = float(1 << 40)
+    q2 = GRID * GRID
     adj = east.unionByName(south).agg(
         F.count("*").alias("_np"),
         (
@@ -381,7 +383,7 @@ def geary_c_grid(
     small-neighborhood breaks (C < 1 clustered, 1 random, > 1
     dispersed). Same equi-joined adjacency and exact decimal sums as
     ``morans_i_grid``."""
-    q = float(1 << 20)
+    q = GRID
     src = df.select(
         F.col(i_col).cast("long").alias("_i"),
         F.col(j_col).cast("long").alias("_j"),
@@ -408,7 +410,7 @@ def geary_c_grid(
         (F.col("_ri") == F.col("_i")) & (F.col("_rj") == F.col("_j") + 1),
     )
     dec = "decimal(38,0)"
-    q2 = float(1 << 40)
+    q2 = GRID * GRID
     dd = (F.col("_v") - F.col("_rv")) * (F.col("_v") - F.col("_rv"))
     adj = east.unionByName(south).agg(
         F.count("*").alias("_np"),
@@ -455,7 +457,7 @@ def getis_ord_g(
     sit next to each other (G > E[G] = W/(n(n−1))). The denominator
     is exact from totals ((Σx)² − Σx²); the numerator is the same
     adjacency join, decimal-exact."""
-    q = float(1 << 20)
+    q = GRID
     src = df.select(
         F.col(i_col).cast("long").alias("_i"),
         F.col(j_col).cast("long").alias("_j"),
@@ -475,7 +477,7 @@ def getis_ord_g(
         (F.col("_ri") == F.col("_i")) & (F.col("_rj") == F.col("_j") + 1),
     )
     dec = "decimal(38,0)"
-    q2 = float(1 << 40)
+    q2 = GRID * GRID
     adj = east.unionByName(south).agg(
         F.count("*").alias("_np"),
         (

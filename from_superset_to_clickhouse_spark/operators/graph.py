@@ -36,6 +36,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ._exact import GRID
+
 
 def _fixpoint(
     state: DataFrame, step, pending: Column, max_iter: int, fail=None
@@ -1505,7 +1507,7 @@ def betweenness_from_pivots(
         "— raise max_hops past the diameter",
     )
     maxd = rounds - 1  # the last round reached no node
-    q = float(1 << 20)
+    q = GRID
     # r15 optimization round (guide §2.4/§5): per-layer delta frames
     # instead of one growing eagerly-rematerialized union. Each layer's
     # deltas carry sigma along, so the backward round reads its

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_Q = float(1 << 20)
+from ._exact import GRID as _Q
 
 
 def roc_auc(

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._exact import GRID
+
 
 def limit_by(
     df: DataFrame,
@@ -290,7 +292,7 @@ def rfm_segments(
     one row per customer) aggregate — the corpus is scanned once.
     Monetary sums quantize to the 2^-20 grid (exact integers) so the
     ntile ORDER is engine-stable even between near-equal spenders."""
-    fxp = float(1 << 20)
+    fxp = GRID
     src = df.select(
         F.col(customer_col).alias("customer"),
         F.col(ts_col).alias("_ts"),
@@ -343,7 +345,7 @@ def abc_analysis(
     The window runs over the per-item AGGREGATE (catalog-sized, not
     corpus-sized); at 100 TB the single-partition rank over ~10⁶
     items is trivially bounded."""
-    fxp = float(1 << 20)
+    fxp = GRID
     per_i = (
         df.select(
             F.col(item_col).alias("item"),

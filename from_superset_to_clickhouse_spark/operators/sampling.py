@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._exact import GRID, GRID as _QN
+
 _M = 1_000_003      # prime modulus
 _A = 514_229        # multiplier (fib prime; coprime with _M)
 _B = 285_311        # offset
@@ -575,9 +577,6 @@ def dsir_resample(
     ).select("rank", "doc_id", "n_feats", "log_w", "score")
 
 
-_QN = float(1 << 20)
-
-
 def neyman_allocation(
     df: DataFrame,
     stratum_col: str,
@@ -648,7 +647,7 @@ def horvitz_thompson(
     WITH its inclusion probabilities (the sampler's contract); terms
     are IEEE ratios of grid values, accumulated grid-floored in
     decimal — order-free exact."""
-    q = float(1 << 20)
+    q = GRID
     v = F.floor(F.col(value_col).cast("double") * q) / q
     src = sample.select(
         v.alias("_y"), F.col(prob_col).cast("double").alias("_p")

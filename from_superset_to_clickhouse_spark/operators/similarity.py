@@ -50,6 +50,8 @@ from pyspark.sql import functions as F
 from from_superset_to_clickhouse_spark.functions.scalar import let_bind
 from from_superset_to_clickhouse_spark.operators.dedup import _finalize
 
+from ._exact import GRID
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ a_i·b_i in double precision (sequential fold, JVM-side)."""
@@ -1897,7 +1899,7 @@ def pca_top_component(
     twin replays the identical matvec → normalize → grid walk)."""
     import math
 
-    q = float(1 << 20)
+    q = GRID
     d = emb.select(
         F.col(id_col).alias("_id"),
         F.posexplode(F.col(vec_col)).alias("j", "x"),

@@ -8,6 +8,11 @@ scalar arithmetic. The normal CDF uses the Abramowitz–Stegun 7.1.26
 erf polynomial (|error| < 1.5e-7) written out as explicit Catalyst
 expressions — deterministic and replayable verbatim in any SQL engine,
 unlike a native ``erf`` whose libm implementation varies.
+
+Every statistic keeps the exact-arithmetic contract of
+:mod:`._exact` — the 2^-20 grid, exact sums, 0.5-grid midranks and
+NULL for an undefined statistic — through its helpers, so DuckDB
+replays each result bit for bit.
 """
 
 from __future__ import annotations
@@ -16,6 +21,19 @@ import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ._exact import (
+    GRID,
+    LOG_GRID,
+    before,
+    grid,
+    grid_sum,
+    grid_sum128,
+    log_grid,
+    pmf_two_sided,
+    row_ranks,
+    value_ranks,
+)
 
 # Abramowitz & Stegun 7.1.26 coefficients.
 _AS_P = 0.3275911
@@ -707,38 +725,29 @@ def mann_whitney_u(
     the robust alternative when Welch's t assumptions (normalish
     tails) fail, which heavy-tailed latency/length metrics do.
 
-    Midranks come from ONE keyed window pass over the pooled sample
-    (average rank per tied value = avg of row_numbers, computed as a
-    per-distinct-value aggregate — no dense sort ambiguity), U =
+    NULL values are not ranked. Midranks come from the per-distinct-
+    value rank table (:func:`._exact.value_ranks`), U =
     R_a − n_a(n_a+1)/2, z uses the normal approximation with the
     standard tie correction Σ(t³−t) and ±0.5 continuity correction.
     p-values replay in SQL because the normal CDF is this module's
     A&S erf polynomial on both sides."""
     gcols = list(group_cols or [])
+    side = F.col("_side")
     tagged = df.select(
         *gcols,
         F.col(value_col).cast("double").alias("_v"),
         side_col.alias("_side"),
+    ).filter(F.col("_v").isNotNull())
+    t = value_ranks(
+        tagged, "_v", gcols,
+        t=F.count(F.when(side.isin("a", "b"), 1)),
+        _ca=F.count(F.when(side == "a", 1)),
+        _cb=F.count(F.when(side == "b", 1)),
     )
-    per_val = tagged.groupBy(*gcols, "_v").agg(
-        F.count(F.when(F.col("_side") == "a", 1)).alias("_ca"),
-        F.count(F.when(F.col("_side") == "b", 1)).alias("_cb"),
-    )
-    w = (
-        Window.partitionBy(*gcols)
-        if gcols
-        else Window.partitionBy()
-    )
-    wv = w.orderBy("_v").rowsBetween(Window.unboundedPreceding, -1)
-    t = per_val.withColumn("_t", F.col("_ca") + F.col("_cb")).withColumn(
-        "_before", F.coalesce(F.sum(F.col("_t")).over(wv), F.lit(0))
-    )
-    # midrank of every copy of value v = before + (t+1)/2
-    midrank = F.col("_before") + (F.col("_t") + 1.0) / 2.0
     agg = t.groupBy(*gcols).agg(
         F.sum("_ca").alias("n_a"),
         F.sum("_cb").alias("n_b"),
-        F.sum(midrank * F.col("_ca")).alias("_ra"),
+        F.sum(F.col("_mr") * F.col("_ca")).alias("_ra"),
         F.sum(
             F.col("_t").cast("double") * F.col("_t") * F.col("_t")
             - F.col("_t")
@@ -750,12 +759,12 @@ def mann_whitney_u(
     mu = n_a * n_b / 2.0
     sigma = F.sqrt(
         (n_a * n_b / 12.0)
-        * ((n + 1.0) - F.col("_ties") / (n * (n - 1.0)))
+        * ((n + 1.0) - F.when(n > 1, F.col("_ties") / (n * (n - 1.0))))
     )
     zraw = u - mu
     # continuity correction toward the mean; sigma = 0 (every value
-    # tied across both arms) has no sampling distribution -> NULL z/p
-    # instead of an ANSI divide-by-zero
+    # tied across both arms) or n < 2 has no sampling distribution ->
+    # NULL z/p instead of an ANSI divide-by-zero
     z = F.when(sigma > 0, (zraw - F.signum(zraw) * 0.5) / sigma)
     return agg.select(
         *gcols,
@@ -1386,32 +1395,6 @@ def platt_scale(
 
 # -- rank correlation & categorical association ---------------------------
 
-_Q = float(1 << 20)  # power-of-two grid: x*_Q is an EXACT double multiply
-
-
-def _midrank(
-    df: DataFrame, value_col: str, gcols: "list[str]", out: str
-) -> DataFrame:
-    """Average (mid)ranks of ``value_col`` per group, computed as a
-    per-distinct-value aggregate + one prefix window: midrank of every
-    copy of v = (#strictly smaller) + (t+1)/2 where t is v's tie count.
-    Midranks live on the 0.5 grid, so every downstream product and sum
-    is exact in IEEE doubles — bit-identical on any engine (same trick
-    as :func:`mann_whitney_u`). Returns the input rows + ``out``."""
-    pv = df.groupBy(*gcols, value_col).agg(F.count("*").alias("_t"))
-    w = (
-        Window.partitionBy(*gcols) if gcols else Window.partitionBy()
-    ).orderBy(value_col).rowsBetween(Window.unboundedPreceding, -1)
-    pv = pv.withColumn(
-        "_bef", F.coalesce(F.sum("_t").over(w), F.lit(0))
-    ).select(
-        *gcols,
-        value_col,
-        (F.col("_bef") + (F.col("_t") + F.lit(1.0)) / 2.0).alias(out),
-    )
-    return df.join(pv, [*gcols, value_col])
-
-
 def spearman_corr(
     df: DataFrame,
     x_col: str,
@@ -1426,16 +1409,20 @@ def spearman_corr(
     deviation is a multiple of 0.5; products are multiples of 0.25 and
     the three sums (Σdx·dy, Σdx², Σdy²) are exact integers scaled by
     4 — order-independent, no float drift between engines. Two keyed
-    window passes (one per axis) + one aggregate; series length per
-    group is whatever the caller bucketed to, nothing global."""
+    row-rank windows (one per axis) + one aggregate; series length per
+    group is whatever the caller bucketed to, nothing global. Rows
+    with a NULL x, y or group key are dropped."""
     gcols = list(group_cols or [])
+    keep = F.col("_x").isNotNull() & F.col("_y").isNotNull()
+    for g in gcols:
+        keep = keep & F.col(g).isNotNull()
     src = df.select(
         *gcols,
         F.col(x_col).cast("double").alias("_x"),
         F.col(y_col).cast("double").alias("_y"),
-    ).filter(F.col("_x").isNotNull() & F.col("_y").isNotNull())
-    r = _midrank(src, "_x", gcols, "_rx")
-    r = _midrank(r, "_y", gcols, "_ry")
+    ).filter(keep)
+    r = row_ranks(src, "_x", gcols, "_rx")
+    r = row_ranks(r, "_y", gcols, "_ry")
     agg = r.groupBy(*gcols).agg(
         F.count("*").alias("n"),
         F.sum(F.col("_rx") * F.col("_ry")).alias("_sxy"),
@@ -1470,7 +1457,7 @@ def kendall_tau_b(
     ·sign(dy) over ordered pairs i<j, with the standard tie-adjusted
     denominator √((n0−n1)(n0−n2))."""
     gcols = list(group_cols or [])
-    q = lambda c: F.floor(F.col(c).cast("double") * _Q) / _Q  # noqa: E731
+    q = lambda c: grid(F.col(c).cast("double"))  # noqa: E731
     src = df.select(
         *gcols,
         F.col(order_col).alias("_o"),
@@ -1587,30 +1574,24 @@ def anova_oneway(
     ).filter(F.col("_v").isNotNull())
     gm = src.groupBy("_g").agg(
         F.count("*").alias("_ng"),
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_mg"),
+        grid(F.avg("_v")).alias("_mg"),
     )
     tot = src.agg(
-        F.count("*").alias("_n"), (F.floor(F.avg("_v") * _Q) / _Q).alias("_mu")
+        F.count("*").alias("_n"), grid(F.avg("_v")).alias("_mu")
     )
     dev = src.join(gm, "_g").crossJoin(tot)
     d_w = F.col("_v") - F.col("_mg")
     agg = dev.groupBy("_n", "_mu").agg(
         F.countDistinct("_g").alias("k"),
-        (F.sum(F.floor(d_w * d_w * _Q)) / _Q).alias("_ssw"),
+        grid_sum(d_w * d_w).alias("_ssw"),
     )
     ssb = (
         gm.crossJoin(tot)
         .select(
-            (
-                F.sum(
-                    F.floor(
-                        F.col("_ng")
-                        * (F.col("_mg") - F.col("_mu"))
-                        * (F.col("_mg") - F.col("_mu"))
-                        * _Q
-                    )
-                )
-                / _Q
+            grid_sum(
+                F.col("_ng")
+                * (F.col("_mg") - F.col("_mu"))
+                * (F.col("_mg") - F.col("_mu"))
             ).alias("_ssb")
         )
     )
@@ -1755,13 +1736,13 @@ def gumbel_fit(
     ).agg(F.max(F.col(value_col).cast("double")).alias("_m"))
     gm = b.groupBy("key").agg(
         F.count("*").alias("n"),
-        (F.floor(F.avg("_m") * (1 << 20)) / (1 << 20)).alias("_mu"),
+        grid(F.avg("_m")).alias("_mu"),
         F.max("_m").alias("_seen"),
     )
     dev = b.join(gm, "key")
     d = F.col("_m") - F.col("_mu")
     agg = dev.groupBy("key", "n", "_mu", "_seen").agg(
-        (F.sum(F.floor(d * d * (1 << 20))) / (1 << 20)).alias("_ss")
+        grid_sum(d * d).alias("_ss")
     )
     s = F.sqrt(F.col("_ss") / (F.col("n").cast("double") - 1.0))
     beta = s * math.sqrt(6.0) / math.pi
@@ -1854,7 +1835,6 @@ def cuped_adjust(
     quantized onto the 2^-20 grid after grid-floored centering, so θ
     and every variance are drift-free across engines; the input is one
     row per unit (the caller aggregates the raw log first)."""
-    q = float(1 << 20)
     src = df.select(
         F.col(unit_col).alias("_u"),
         F.col(arm_col).alias("arm"),
@@ -1862,23 +1842,23 @@ def cuped_adjust(
         F.col(post_col).cast("double").alias("_y"),
     )
     g = src.agg(
-        (F.floor(F.avg("_x") * q) / q).alias("_mx"),
-        (F.floor(F.avg("_y") * q) / q).alias("_my"),
+        grid(F.avg("_x")).alias("_mx"),
+        grid(F.avg("_y")).alias("_my"),
     )
     c = src.crossJoin(F.broadcast(g))
     dx = F.col("_x") - F.col("_mx")
     dy = F.col("_y") - F.col("_my")
     th = c.agg(
-        (F.sum(F.floor(dx * dy * q)) / q).alias("_sxy"),
-        (F.sum(F.floor(dx * dx * q)) / q).alias("_sxx"),
+        grid_sum(dx * dy).alias("_sxy"),
+        grid_sum(dx * dx).alias("_sxx"),
     ).select((F.col("_sxy") / F.col("_sxx")).alias("_theta"))
     adj = c.crossJoin(F.broadcast(th)).withColumn(
         "_yadj", F.col("_y") - F.col("_theta") * dx
     )
     gm = adj.groupBy("arm").agg(
         F.count("*").alias("n"),
-        (F.floor(F.avg("_y") * q) / q).alias("_amy"),
-        (F.floor(F.avg("_yadj") * q) / q).alias("_amya"),
+        grid(F.avg("_y")).alias("_amy"),
+        grid(F.avg("_yadj")).alias("_amya"),
     )
     fin = adj.join(gm, "arm")
     vy = F.col("_y") - F.col("_amy")
@@ -1886,8 +1866,8 @@ def cuped_adjust(
     out = fin.groupBy(
         "arm", "n", "_amy", "_amya"
     ).agg(
-        (F.sum(F.floor(vy * vy * q)) / q).alias("_vy"),
-        (F.sum(F.floor(va * va * q)) / q).alias("_va"),
+        grid_sum(vy * vy).alias("_vy"),
+        grid_sum(va * va).alias("_va"),
     )
     nn = F.col("n").cast("double") - 1.0
     return out.select(
@@ -1918,7 +1898,6 @@ def eb_shrink_rates(
     One pass for per-key counts (the caller usually did it), one tiny
     moment aggregate, one broadcast join back. Rates are exact
     rationals of integers, so every engine sees identical inputs."""
-    q = float(1 << 20)
     src = df.select(
         F.col(key_col).alias("key"),
         F.col(n_col).cast("long").alias("n_obs"),
@@ -1928,13 +1907,13 @@ def eb_shrink_rates(
     src = src.withColumn("_r", r)
     mu_t = src.agg(
         F.count("*").alias("_k"),
-        (F.floor(F.avg("_r") * q) / q).alias("_mu"),
+        grid(F.avg("_r")).alias("_mu"),
     )
     c = src.crossJoin(F.broadcast(mu_t))
     d = F.col("_r") - F.col("_mu")
     var_t = c.groupBy("_k", "_mu").agg(
         (
-            F.sum(F.floor(d * d * q)) / q / (F.col("_k") - F.lit(1.0))
+            grid_sum(d * d) / (F.col("_k") - F.lit(1.0))
         ).alias("_v")
     )
     common = F.when(
@@ -1976,7 +1955,6 @@ def diff_in_diff(
     group's (which absorbs the common time trend). One conditional-
     aggregate pass; cell means on the 2^-20 grid so the four-way
     difference is engine-exact."""
-    q = float(1 << 20)
     src = df.select(
         F.col(treat_col).cast("int").alias("_t"),
         F.col(post_col).cast("int").alias("_p"),
@@ -1987,10 +1965,10 @@ def diff_in_diff(
         cond = (F.col("_t") == t) & (F.col("_p") == p)
         return (
             F.floor(
-                F.sum(F.when(cond, F.floor(F.col("_v") * q))) /
+                F.sum(F.when(cond, F.floor(F.col("_v") * GRID))) /
                 F.sum(F.when(cond, F.lit(1)))
             )
-            / q
+            / GRID
         )
 
     agg = src.agg(
@@ -2024,21 +2002,19 @@ def dispersion_fit(
     (v − μ)/μ² (0 when the counts are under- or equi-dispersed) —
     the first question about any arrival process. Counts are exact
     integers; moments on the 2^-20 grid."""
-    q = float(1 << 20)
     b = df.groupBy(
         F.col(key_col).alias("key"),
         F.window(F.col(ts_col), bucket).alias("_w"),
     ).agg(F.count("*").cast("double").alias("_c"))
     gm = b.groupBy("key").agg(
         F.count("*").alias("n_buckets"),
-        (F.floor(F.avg("_c") * q) / q).alias("_mu"),
+        grid(F.avg("_c")).alias("_mu"),
     )
     d = b.join(gm, "key")
     dev = F.col("_c") - F.col("_mu")
     agg = d.groupBy("key", "n_buckets", "_mu").agg(
         (
-            F.sum(F.floor(dev * dev * q))
-            / q
+            grid_sum(dev * dev)
             / (F.col("n_buckets") - F.lit(1.0))
         ).alias("_v")
     )
@@ -2596,9 +2572,12 @@ def friedman_test(
         .withColumn("_bk", F.size(F.collect_set("_t").over(wb)))
         .filter((F.col("_bn") == k_count) & (F.col("_bk") == k_count))
     )
-    ranked = _midrank(
+    # a NULL score ranks first within its block, shifting the ranks
+    # after it, and is then dropped with any NULL-block row: the row
+    # set and ranks the oracle replays
+    ranked = row_ranks(
         complete.select("_b", "_t", "_v"), "_v", ["_b"], "_r"
-    )
+    ).filter(F.col("_b").isNotNull() & F.col("_v").isNotNull())
     rsum = ranked.groupBy("_t").agg(
         F.sum("_r").alias("_rj"), F.countDistinct("_b").alias("_nb")
     )
@@ -2627,7 +2606,6 @@ def permutation_test_hash(
     arm_col: str,
     value_col: str,
     n_perm: int = 200,
-    fxp: int = 1 << 20,
 ) -> DataFrame:
     """Permutation test for a difference in means → single row
     (n_units, n_perm, diff_obs, n_extreme, p_value): the observed
@@ -2644,7 +2622,7 @@ def permutation_test_hash(
     fan-out into ONE map-side-combinable groupBy(k, arm): the shuffle
     carries ≤ 2·n_perm·partitions partial rows, not the exploded data;
     at 100 TB you bound n_perm, never the corpus."""
-    qv = F.floor(F.col(value_col).cast("double") * F.lit(float(fxp)))
+    qv = F.floor(F.col(value_col).cast("double") * GRID)
     base = df.select(
         F.col(unit_col).cast("string").alias("_u"),
         F.col(arm_col).cast("int").alias("_arm"),
@@ -2706,7 +2684,7 @@ def permutation_test_hash(
     return agg.select(
         F.col("_nn").cast("long").alias("n_units"),
         F.col("_np").cast("long").alias("n_perm"),
-        F.round(F.col("_do") / F.lit(float(fxp)), 6).alias("diff_obs"),
+        F.round(F.col("_do") / GRID, 6).alias("diff_obs"),
         F.col("_ext").cast("long").alias("n_extreme"),
         F.round(
             (F.col("_ext") + 1.0) / (F.col("_np") + 1.0), 6
@@ -2736,27 +2714,21 @@ def wilcoxon_signed_rank(
         df.filter(
             F.col(before_col).isNotNull() & F.col(after_col).isNotNull()
         )
-        .select(d.alias("_d"))
+        .select(d.alias("_d"), F.abs(d).alias("_ad"))
     )
     # ONE corpus pass: the |d| frequency table carries the zero-diff
     # count too (it ranks nothing but contributes to n_pairs), so no
-    # separate count job.
-    per_val = src.groupBy(F.abs(F.col("_d")).alias("_ad")).agg(
-        F.count(F.when(F.col("_d") > 0, 1)).alias("_cp"),
-        F.count(F.when(F.col("_d") < 0, 1)).alias("_cn"),
-        F.count(F.when(F.col("_d") == 0, 1)).alias("_cz"),
+    # separate count job. Only nonzero rows are ranked: the zero row
+    # has _t = 0 and never shifts ranks.
+    dd = F.col("_d")
+    t = value_ranks(
+        src, "_ad",
+        t=F.count(F.when((dd > 0) | (dd < 0), 1)),
+        _cp=F.count(F.when(dd > 0, 1)),
+        _cn=F.count(F.when(dd < 0, 1)),
+        _cz=F.count(F.when(dd == 0, 1)),
     )
-    # rank only the nonzero rows: the window walks |d| ascending over
-    # rows with _t > 0 (the zero row has _t = 0 and never shifts ranks)
-    wv = (
-        Window.partitionBy()
-        .orderBy("_ad")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    t = per_val.withColumn("_t", F.col("_cp") + F.col("_cn")).withColumn(
-        "_before", F.coalesce(F.sum("_t").over(wv), F.lit(0))
-    )
-    midrank = F.col("_before") + (F.col("_t") + 1.0) / 2.0
+    midrank = F.col("_mr")
     agg = t.agg(
         F.sum(F.col("_cp") + F.col("_cn") + F.col("_cz")).alias("_np"),
         F.sum(F.col("_cp") + F.col("_cn")).alias("_n"),
@@ -2852,7 +2824,6 @@ def bootstrap_ci_hash(
     unit_col: str,
     value_col: str,
     n_boot: int = 200,
-    fxp: int = 1 << 20,
 ) -> DataFrame:
     """Percentile bootstrap CI for the mean → single row (n, n_boot,
     mean_obs, lo95, hi95) via the POISSON bootstrap (Chamandy et al.
@@ -2870,7 +2841,7 @@ def bootstrap_ci_hash(
     map-side-combinable groupBy(k); the shuffle carries ≤
     n_boot·partitions partial rows. At 100 TB you bound n_boot, never
     the corpus."""
-    qv = F.floor(F.col(value_col).cast("double") * F.lit(float(fxp)))
+    qv = F.floor(F.col(value_col).cast("double") * GRID)
     base = df.select(
         F.col(unit_col).cast("string").alias("_u"), qv.alias("_qv")
     ).filter(F.col("_qv").isNotNull())
@@ -2917,7 +2888,7 @@ def bootstrap_ci_hash(
         F.min(F.when(F.col("_r") == hi_pos, F.col("_mean_k"))).alias("_hi"),
     )
     j = ci.crossJoin(F.broadcast(obs))
-    g = F.lit(float(fxp))
+    g = F.lit(GRID)
     return j.select(
         F.col("_n").cast("long").alias("n"),
         F.col("_b").cast("long").alias("n_boot"),
@@ -3053,12 +3024,12 @@ def cohens_d(
     )
     gm = src.groupBy("_g").agg(
         F.count("*").alias("_ng"),
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_mg"),
+        grid(F.avg("_v")).alias("_mg"),
     )
     dev = src.join(F.broadcast(gm), "_g")
     d_w = F.col("_v") - F.col("_mg")
     ssw = dev.agg(
-        (F.sum(F.floor(d_w * d_w * _Q)) / _Q).alias("_ssw")
+        grid_sum(d_w * d_w).alias("_ssw")
     )
     wide = gm.agg(
         F.sum(F.when(F.col("_g") == "a", F.col("_ng"))).alias("_na"),
@@ -3098,27 +3069,24 @@ def cliffs_delta(
         F.col(value_col).cast("double").alias("_v"),
         side_col.alias("_side"),
     ).filter(F.col("_v").isNotNull() & F.col("_side").isNotNull())
-    per_val = tagged.groupBy("_v").agg(
-        F.count(F.when(F.col("_side") == "a", 1)).alias("_ca"),
-        F.count(F.when(F.col("_side") == "b", 1)).alias("_cb"),
+    side = F.col("_side")
+    t = value_ranks(
+        tagged, "_v",
+        t=F.count(F.when(side.isin("a", "b"), 1)),
+        _ca=F.count(F.when(side == "a", 1)),
+        _cb=F.count(F.when(side == "b", 1)),
     )
-    w = (
-        Window.partitionBy()
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    t = per_val.withColumn("_t", F.col("_ca") + F.col("_cb")).withColumn(
-        "_bef", F.coalesce(F.sum("_t").over(w), F.lit(0))
-    )
-    midrank = F.col("_bef") + (F.col("_t") + 1.0) / 2.0
     agg = t.agg(
         F.sum("_ca").alias("n_a"),
         F.sum("_cb").alias("n_b"),
-        F.sum(midrank * F.col("_ca")).alias("_ra"),
+        F.sum(F.col("_mr") * F.col("_ca")).alias("_ra"),
     )
     na, nb = F.col("n_a"), F.col("n_b")
     u = F.col("_ra") - na * (na + 1.0) / 2.0
-    delta = 2.0 * u / (na.cast("double") * nb) - 1.0
+    # one arm absent: no cross-arm pair, no delta
+    delta = F.when(
+        na * nb > 0, 2.0 * u / (na.cast("double") * nb) - 1.0
+    )
     mag = (
         F.when(F.abs(delta) < 0.147, "negligible")
         .when(F.abs(delta) < 0.33, "small")
@@ -3225,13 +3193,13 @@ def bartlett_var(
     ).filter(F.col("_v").isNotNull() & F.col("_g").isNotNull())
     gm = src.groupBy("_g").agg(
         F.count("*").alias("_ng"),
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_mg"),
+        grid(F.avg("_v")).alias("_mg"),
     )
     dev = src.join(F.broadcast(gm), "_g")
     d_w = F.col("_v") - F.col("_mg")
     ss = (
         dev.groupBy("_g", "_ng")
-        .agg((F.sum(F.floor(d_w * d_w * _Q)) / _Q).alias("_ss"))
+        .agg(grid_sum(d_w * d_w).alias("_ss"))
         .filter((F.col("_ng") >= 2) & (F.col("_ss") > 0))
     )
     ag = ss.agg(
@@ -3316,27 +3284,22 @@ def jarque_bera(df: DataFrame, value_col: str) -> DataFrame:
     ).filter(F.col("_v").isNotNull())
     m1 = src.agg(
         F.count("*").alias("_n"),
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_m"),
+        grid(F.avg("_v")).alias("_m"),
     )
     d = src.crossJoin(F.broadcast(m1))
     dev = F.col("_v") - F.col("_m")
     m2 = d.groupBy("_n", "_m").agg(
-        (F.sum(F.floor(dev * dev * _Q)) / _Q).alias("_ss")
+        grid_sum(dev * dev).alias("_ss")
     )
-    sd = (
-        F.floor(
-            F.sqrt(F.col("_ss") / F.col("_n").cast("double")) * _Q
-        )
-        / _Q
-    )
+    sd = grid(F.sqrt(F.col("_ss") / F.col("_n").cast("double")))
     m2 = m2.withColumn("_sd", sd)
     z = (F.col("_v") - F.col("_m")) / F.col("_sd")
     mom = (
         src.crossJoin(F.broadcast(m2))
         .groupBy("_n", "_sd")
         .agg(
-            (F.sum(F.floor(z * z * z * _Q)) / _Q).alias("_s3"),
-            (F.sum(F.floor(z * z * z * z * _Q)) / _Q).alias("_s4"),
+            grid_sum(z * z * z).alias("_s3"),
+            grid_sum(z * z * z * z).alias("_s4"),
         )
     )
     nn = F.col("_n").cast("double")
@@ -3368,12 +3331,12 @@ def grubbs_test(df: DataFrame, value_col: str) -> DataFrame:
     ).filter(F.col("_v").isNotNull())
     m1 = src.agg(
         F.count("*").alias("_n"),
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_m"),
+        grid(F.avg("_v")).alias("_m"),
     )
     d = src.crossJoin(F.broadcast(m1))
     dev = F.col("_v") - F.col("_m")
     m2 = d.groupBy("_n", "_m").agg(
-        (F.sum(F.floor(dev * dev * _Q)) / _Q).alias("_ss")
+        grid_sum(dev * dev).alias("_ss")
     )
     sd = F.sqrt(F.col("_ss") / F.col("_n").cast("double"))
     worst = (
@@ -3449,16 +3412,8 @@ def trimmed_stats(
     src = df.select(
         F.col(value_col).cast("double").alias("_v")
     ).filter(F.col("_v").isNotNull())
-    pv = src.groupBy("_v").agg(F.count("*").alias("_t"))
-    w = (
-        Window.partitionBy()
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = pv.withColumn(
-        "_bef", F.coalesce(F.sum("_t").over(w), F.lit(0))
-    )
-    tot = pv.agg(F.sum("_t").alias("_n"))
+    cum = value_ranks(src, "_v")
+    tot = cum.agg(F.sum("_t").alias("_n"))
     j = cum.crossJoin(F.broadcast(tot))
     g = F.floor(F.col("_n") * F.lit(g_frac))
     lo_rank = g + 1
@@ -3469,7 +3424,7 @@ def trimmed_stats(
         - F.greatest(F.col("_bef") + 1, lo_rank)
         + 1,
     )
-    qv = F.floor(F.col("_v") * _Q).cast("long")
+    qv = F.floor(F.col("_v") * GRID).cast("long")
     # winsorized: every value clamps to the boundary order statistics
     lo_hit = (F.col("_bef") < lo_rank) & (
         F.col("_bef") + F.col("_t") >= lo_rank
@@ -3489,19 +3444,19 @@ def trimmed_stats(
         F.sum(kept * qv).alias("_ts"),
         F.sum(kept).alias("_tn"),
         F.sum(
-            F.col("_t") * F.floor(clamped * _Q).cast("long")
+            F.col("_t") * F.floor(clamped * GRID).cast("long")
         ).alias("_ws"),
     )
     return agg.select(
         F.col("_n").cast("long").alias("n"),
         F.col("_tn").cast("long").alias("n_trimmed"),
         F.round(
-            F.col("_ts").cast("double") / F.col("_tn") / _Q, 6
+            F.col("_ts").cast("double") / F.col("_tn") / GRID, 6
         ).alias("trimmed_mean"),
         F.round("_vlo", 6).alias("winsor_lo"),
         F.round("_vhi", 6).alias("winsor_hi"),
         F.round(
-            F.col("_ws").cast("double") / F.col("_n") / _Q, 6
+            F.col("_ws").cast("double") / F.col("_n") / GRID, 6
         ).alias("winsor_mean"),
     )
 
@@ -3525,7 +3480,7 @@ def durbin_watson(
         F.col(value_col).cast("double").alias("_v"),
     ).filter(F.col("_v").isNotNull())
     gm = src.groupBy("grp").agg(
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_mg")
+        grid(F.avg("_v")).alias("_mg")
     )
     e = src.join(F.broadcast(gm), "grp").select(
         "grp", "_o", (F.col("_v") - F.col("_mg")).alias("_e")
@@ -3535,18 +3490,8 @@ def durbin_watson(
     diff = F.col("_e") - F.col("_el")
     agg = lagged.groupBy("grp").agg(
         F.count("*").alias("n"),
-        (
-            F.sum(
-                F.when(
-                    F.col("_el").isNotNull(),
-                    F.floor(diff * diff * _Q),
-                )
-            )
-            / _Q
-        ).alias("_num"),
-        (F.sum(F.floor(F.col("_e") * F.col("_e") * _Q)) / _Q).alias(
-            "_den"
-        ),
+        grid_sum(F.when(F.col("_el").isNotNull(), diff * diff)).alias("_num"),
+        grid_sum(F.col("_e") * F.col("_e")).alias("_den"),
     )
     dw = F.when(F.col("_den") > 0, F.col("_num") / F.col("_den"))
     return agg.select(
@@ -3582,7 +3527,7 @@ def ljung_box(
         F.col(value_col).cast("double").alias("_v"),
     ).filter(F.col("_v").isNotNull())
     gm = src.groupBy("grp").agg(
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_mg")
+        grid(F.avg("_v")).alias("_mg")
     )
     z = src.join(F.broadcast(gm), "grp").select(
         "grp", "_o", (F.col("_v") - F.col("_mg")).alias("_z")
@@ -3592,20 +3537,15 @@ def ljung_box(
         z = z.withColumn(f"_z{k}", F.lag("_z", k).over(w))
     aggs = [
         F.count("*").alias("_n"),
-        (F.sum(F.floor(F.col("_z") * F.col("_z") * _Q)) / _Q).alias(
-            "_den"
-        ),
+        grid_sum(F.col("_z") * F.col("_z")).alias("_den"),
     ]
     for k in range(1, h + 1):
         aggs.append(
-            (
-                F.sum(
-                    F.when(
-                        F.col(f"_z{k}").isNotNull(),
-                        F.floor(F.col("_z") * F.col(f"_z{k}") * _Q),
-                    )
+            grid_sum(
+                F.when(
+                    F.col(f"_z{k}").isNotNull(),
+                    F.col("_z") * F.col(f"_z{k}"),
                 )
-                / _Q
             ).alias(f"_num{k}")
         )
     agg = z.groupBy("grp").agg(*aggs)
@@ -3657,7 +3597,7 @@ def cronbach_alpha(
     m1 = src.agg(
         F.count("*").alias("_n"),
         *[
-            (F.floor(F.avg(c) * _Q) / _Q).alias(f"_m{c}")
+            grid(F.avg(c)).alias(f"_m{c}")
             for c in cols
         ],
     )
@@ -3666,7 +3606,7 @@ def cronbach_alpha(
     for c in cols:
         dev = F.col(c) - F.col(f"_m{c}")
         ss_aggs.append(
-            (F.sum(F.floor(dev * dev * _Q)) / _Q).alias(f"_ss{c}")
+            grid_sum(dev * dev).alias(f"_ss{c}")
         )
     m2 = d.groupBy("_n").agg(*ss_aggs)
     nn = F.col("_n").cast("double")
@@ -3752,20 +3692,11 @@ def kruskal_wallis(
         F.col(value_col).cast("double").alias("_v"),
     ).filter(F.col("_v").isNotNull() & F.col("_g").isNotNull())
     pv = src.groupBy("_v", "_g").agg(F.count("*").alias("_c"))
-    per_val = pv.groupBy("_v").agg(F.sum("_c").alias("_t"))
-    w = (
-        Window.partitionBy()
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    per_val = per_val.withColumn(
-        "_bef", F.coalesce(F.sum("_t").over(w), F.lit(0))
-    )
+    per_val = value_ranks(pv, "_v", t=F.sum("_c"))
     ranked = pv.join(per_val, "_v")
-    midrank = F.col("_bef") + (F.col("_t") + 1.0) / 2.0
     grp = ranked.groupBy("_g").agg(
         F.sum("_c").alias("_ng"),
-        F.sum(midrank * F.col("_c")).alias("_rg"),
+        F.sum(F.col("_mr") * F.col("_c")).alias("_rg"),
     )
     ties = per_val.agg(
         F.sum("_t").alias("_n"),
@@ -3776,7 +3707,7 @@ def kruskal_wallis(
     )
     j = grp.crossJoin(F.broadcast(ties))
     nn = F.col("_n").cast("double")
-    rbar = F.floor(F.col("_rg") / F.col("_ng") * _Q) / _Q
+    rbar = grid(F.col("_rg") / F.col("_ng"))
     dev = rbar - (nn + 1.0) / 2.0
     agg = j.agg(
         F.count("*").alias("_k"),
@@ -3786,14 +3717,15 @@ def kruskal_wallis(
     )
     n2 = F.col("_nn").cast("double")
     h = 12.0 / (n2 * (n2 + 1.0)) * F.col("_sb")
-    c = 1.0 - F.col("_tt") / (n2 * n2 * n2 - n2)
+    # n < 2 has no tie correction (0/0) and no sampling distribution
+    c = 1.0 - F.when(n2 > 1.0, F.col("_tt") / (n2 * n2 * n2 - n2))
     hc = F.when(c > 0, h / c)
     return agg.select(
         F.col("_k").cast("long").alias("k"),
         F.col("_nn").cast("long").alias("n"),
         F.round(hc, 6).alias("h_stat"),
         F.round(
-            chi2_p_value(hc, F.col("_k") - 1), 6
+            F.when(F.col("_k") > 1, chi2_p_value(hc, F.col("_k") - 1)), 6
         ).alias("p_value"),
     )
 
@@ -3825,15 +3757,14 @@ def hhi_concentration(
             )
             .filter(F.col("_k").isNotNull() & F.col("_w").isNotNull())
             .groupBy("_k")
-            .agg(F.sum(F.floor(F.col("_w") * _Q)).alias("_c"))
+            .agg(F.sum(F.floor(F.col("_w") * GRID)).alias("_c"))
         )
     tot = g.agg(F.sum("_c").alias("_tot"))
     j = g.crossJoin(F.broadcast(tot))
     share = F.col("_c").cast("double") / F.col("_tot")
-    q2 = _Q * _Q
     agg = j.groupBy("_tot").agg(
         F.count("*").alias("_kk"),
-        (F.sum(F.floor(share * share * q2)) / q2).alias("_hhi"),
+        grid_sum(share * share, GRID * GRID).alias("_hhi"),
     )
     kk = F.col("_kk").cast("double")
     hhi = F.col("_hhi")
@@ -3900,9 +3831,8 @@ def fleiss_kappa(
     share = F.col("_cj").cast("double") / (
         F.col("_ns").cast("double") * F.lit(kk)
     )
-    q2 = _Q * _Q
     pe = cat_tot.agg(
-        (F.sum(F.floor(share * share * q2)) / q2).alias("_pe"),
+        grid_sum(share * share, GRID * GRID).alias("_pe"),
         F.min("_ns").alias("_ns"),
         F.min("_ssq").alias("_ssq"),
     )
@@ -3945,13 +3875,13 @@ def welch_anova(
     ).filter(F.col("_v").isNotNull() & F.col("_g").isNotNull())
     gm = src.groupBy("_g").agg(
         F.count("*").alias("_ng"),
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_mg"),
+        grid(F.avg("_v")).alias("_mg"),
     )
     dev = src.join(F.broadcast(gm), "_g")
     d_w = F.col("_v") - F.col("_mg")
     ss = (
         dev.groupBy("_g", "_ng", "_mg")
-        .agg((F.sum(F.floor(d_w * d_w * _Q)) / _Q).alias("_ss"))
+        .agg(grid_sum(d_w * d_w).alias("_ss"))
         .filter((F.col("_ng") >= 2) & (F.col("_ss") > 0))
     )
     w = F.col("_ng").cast("double") / (
@@ -4094,18 +4024,9 @@ def kendall_w(
     per_subj = src.groupBy("_s").agg(F.count("*").alias("_nr"))
     complete = per_subj.filter(F.col("_nr") == m).select("_s")
     src = src.join(F.broadcast(complete), "_s")
-    pv = src.groupBy("_r", "_v").agg(F.count("*").alias("_t"))
-    w = (
-        Window.partitionBy("_r")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    pv = pv.withColumn(
-        "_bef", F.coalesce(F.sum("_t").over(w), F.lit(0))
-    )
-    midrank = F.col("_bef") + (F.col("_t") + 1.0) / 2.0
+    pv = value_ranks(src, "_v", ["_r"])
     ranked = src.join(pv, ["_r", "_v"]).select(
-        "_s", midrank.alias("_rk")
+        "_s", F.col("_mr").alias("_rk")
     )
     rsum = ranked.groupBy("_s").agg(F.sum("_rk").alias("_ri"))
     ties = pv.agg(
@@ -4229,34 +4150,17 @@ def energy_distance(
     O(distinct values), engine-identical."""
     src = df.select(
         side_col.alias("_g"),
-        F.floor(
-            F.col(value_col).cast("double") * F.lit(_Q)
-        ).cast("long").alias("_qv"),
+        F.floor(F.col(value_col).cast("double") * GRID).alias("_qv"),
     ).filter(F.col("_g").isNotNull() & F.col("_qv").isNotNull())
     pv = src.groupBy("_qv").agg(
         F.count(F.when(F.col("_g") == "a", 1)).alias("_ca"),
         F.count(F.when(F.col("_g") == "b", 1)).alias("_cb"),
     )
-    w = (
-        Window.partitionBy()
-        .orderBy("_qv")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     pv = (
-        pv.withColumn(
-            "_ca_lt", F.coalesce(F.sum("_ca").over(w), F.lit(0))
-        )
-        .withColumn(
-            "_cb_lt", F.coalesce(F.sum("_cb").over(w), F.lit(0))
-        )
-        .withColumn(
-            "_sa_lt",
-            F.coalesce(F.sum(F.col("_ca") * F.col("_qv")).over(w), F.lit(0)),
-        )
-        .withColumn(
-            "_sb_lt",
-            F.coalesce(F.sum(F.col("_cb") * F.col("_qv")).over(w), F.lit(0)),
-        )
+        pv.withColumn("_ca_lt", before("_ca", "_qv"))
+        .withColumn("_cb_lt", before("_cb", "_qv"))
+        .withColumn("_sa_lt", before(F.col("_ca") * F.col("_qv"), "_qv"))
+        .withColumn("_sb_lt", before(F.col("_cb") * F.col("_qv"), "_qv"))
     )
     tot = pv.agg(
         F.sum("_ca").alias("_na"),
@@ -4296,9 +4200,9 @@ def energy_distance(
     nb = F.col("_nb").cast("double")
     # an empty arm has no pairwise expectations: NULL, not a 0/0
     ok = (na > 0) & (nb > 0)
-    exy = F.when(ok, F.col("_dxy").cast("double") / (na * nb) / _Q)
-    exx = F.when(ok, F.col("_dxx").cast("double") / (na * na) / _Q)
-    eyy = F.when(ok, F.col("_dyy").cast("double") / (nb * nb) / _Q)
+    exy = F.when(ok, F.col("_dxy").cast("double") / (na * nb) / GRID)
+    exx = F.when(ok, F.col("_dxx").cast("double") / (na * na) / GRID)
+    eyy = F.when(ok, F.col("_dyy").cast("double") / (nb * nb) / GRID)
     return agg.select(
         F.col("_na").cast("long").alias("n_a"),
         F.col("_nb").cast("long").alias("n_b"),
@@ -4329,12 +4233,12 @@ def tukey_hsd(
     ).filter(F.col("_v").isNotNull() & F.col("_g").isNotNull())
     gm = src.groupBy("_g").agg(
         F.count("*").alias("_ng"),
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_mg"),
+        grid(F.avg("_v")).alias("_mg"),
     )
     dev = src.join(F.broadcast(gm), "_g")
     d_w = F.col("_v") - F.col("_mg")
     ssw = dev.agg(
-        (F.sum(F.floor(d_w * d_w * _Q)) / _Q).alias("_ssw"),
+        grid_sum(d_w * d_w).alias("_ssw"),
         F.sum(F.lit(1)).alias("_n"),
         F.count_distinct("_g").alias("_k"),
     )
@@ -4525,7 +4429,7 @@ def corr_matrix(
     m1 = src.agg(
         F.count("*").alias("_n"),
         *[
-            (F.floor(F.avg(f"_x{j}") * _Q) / _Q).alias(f"_m{j}")
+            grid(F.avg(f"_x{j}")).alias(f"_m{j}")
             for j in range(k)
         ],
     )
@@ -4536,7 +4440,7 @@ def corr_matrix(
             di = F.col(f"_x{i}") - F.col(f"_m{i}")
             dj = F.col(f"_x{j}") - F.col(f"_m{j}")
             aggs.append(
-                (F.sum(F.floor(di * dj * _Q)) / _Q).alias(f"_s{i}_{j}")
+                grid_sum(di * dj).alias(f"_s{i}_{j}")
             )
     mom = d.groupBy("_n").agg(*aggs)
     rows = []
@@ -4581,19 +4485,19 @@ def anova_effect_sizes(
     ).filter(F.col("_v").isNotNull() & F.col("_g").isNotNull())
     gm = src.groupBy("_g").agg(
         F.count("*").alias("_ng"),
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_mg"),
+        grid(F.avg("_v")).alias("_mg"),
     )
     tot = src.agg(
         F.count("*").alias("_n"),
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_m"),
+        grid(F.avg("_v")).alias("_m"),
     )
     dev = src.join(F.broadcast(gm), "_g").crossJoin(F.broadcast(tot))
     d_w = F.col("_v") - F.col("_mg")
     d_t = F.col("_v") - F.col("_m")
     agg = dev.groupBy("_n").agg(
         F.count_distinct("_g").alias("_k"),
-        (F.sum(F.floor(d_w * d_w * _Q)) / _Q).alias("_ssw"),
-        (F.sum(F.floor(d_t * d_t * _Q)) / _Q).alias("_sst"),
+        grid_sum(d_w * d_w).alias("_ssw"),
+        grid_sum(d_t * d_t).alias("_sst"),
     )
     kk = F.col("_k").cast("double")
     nn = F.col("_n").cast("double")
@@ -4898,7 +4802,7 @@ def ordinal_assoc(
     raw order-key comparison silently dropped them (ADVICE r12). The
     tiebreak is deterministic: rows identical in all three columns
     compare identically whichever gets the smaller index."""
-    q = lambda c: F.floor(F.col(c).cast("double") * _Q) / _Q  # noqa: E731
+    q = lambda c: grid(F.col(c).cast("double"))  # noqa: E731
     src = df.select(
         F.col(order_col).alias("_o"), q(x_col).alias("_x"), q(y_col).alias("_y")
     )
@@ -4975,15 +4879,14 @@ def mantel_haenszel(
     r2 = (F.col("_c") + F.col("_d")).cast("double")  # arm b total
     c1 = (F.col("_a") + F.col("_c")).cast("double")  # successes
     c2 = (F.col("_b") + F.col("_d")).cast("double")  # failures
-    fx = lambda col: F.sum(F.floor(col * _Q)).cast("double") / _Q  # noqa: E731
     agg = cells.agg(
         F.count("*").cast("int").alias("k"),
         F.sum(ni.cast("long")).alias("_n"),
-        fx(F.col("_a").cast("double") * F.col("_d") / ni).alias("_sad"),
-        fx(F.col("_b").cast("double") * F.col("_c") / ni).alias("_sbc"),
+        grid_sum(F.col("_a").cast("double") * F.col("_d") / ni).alias("_sad"),
+        grid_sum(F.col("_b").cast("double") * F.col("_c") / ni).alias("_sbc"),
         F.sum(F.col("_a")).cast("double").alias("_sa"),
-        fx(r1 * c1 / ni).alias("_se"),
-        fx(
+        grid_sum(r1 * c1 / ni).alias("_se"),
+        grid_sum(
             F.when(
                 ni > 1.0,
                 r1 * r2 * c1 * c2 / (ni * ni * (ni - F.lit(1.0))),
@@ -5015,7 +4918,7 @@ def cochran_armitage(
     normal p. One groupBy(dose) pass; every sum is over the BOUNDED
     dose-group table and the (r_i, n_i, s_i) cells are exact
     integers/grid values."""
-    s = F.floor(F.col(dose_col).cast("double") * _Q) / _Q
+    s = grid(F.col(dose_col).cast("double"))
     y = F.col(flag_col).cast("int")
     g = (
         df.select(s.alias("_s"), y.alias("_y"))
@@ -5023,14 +4926,13 @@ def cochran_armitage(
         .groupBy("_s")
         .agg(F.count("*").alias("_ni"), F.sum("_y").alias("_ri"))
     )
-    fx = lambda col: F.sum(F.floor(col * _Q)).cast("double") / _Q  # noqa: E731
     agg = g.agg(
         F.count("*").cast("int").alias("k"),
         F.sum("_ni").alias("_n"),
         F.sum("_ri").alias("_r"),
-        fx(F.col("_s") * F.col("_ri")).alias("_sr"),
-        fx(F.col("_s") * F.col("_ni")).alias("_sn"),
-        fx(F.col("_s") * F.col("_s") * F.col("_ni")).alias("_ssn"),
+        grid_sum(F.col("_s") * F.col("_ri")).alias("_sr"),
+        grid_sum(F.col("_s") * F.col("_ni")).alias("_sn"),
+        grid_sum(F.col("_s") * F.col("_s") * F.col("_ni")).alias("_ssn"),
     )
     nn = F.col("_n").cast("double")
     rr = F.col("_r").cast("double")
@@ -5074,7 +4976,7 @@ def partial_corr(
         src = src.filter(F.col(f"_x{j}").isNotNull())
     m1 = src.agg(
         F.count("*").alias("_n"),
-        *[(F.floor(F.avg(f"_x{j}") * _Q) / _Q).alias(f"_m{j}") for j in range(3)],
+        *[grid(F.avg(f"_x{j}")).alias(f"_m{j}") for j in range(3)],
     )
     d = src.crossJoin(F.broadcast(m1))
     aggs = []
@@ -5082,7 +4984,7 @@ def partial_corr(
         for j in range(i, 3):
             di = F.col(f"_x{i}") - F.col(f"_m{i}")
             dj = F.col(f"_x{j}") - F.col(f"_m{j}")
-            aggs.append((F.sum(F.floor(di * dj * _Q)) / _Q).alias(f"_s{i}_{j}"))
+            aggs.append(grid_sum(di * dj).alias(f"_s{i}_{j}"))
     mom = d.groupBy("_n").agg(*aggs)
 
     def _r(i, j):
@@ -5124,21 +5026,13 @@ def anderson_darling(df: DataFrame, value_col: str) -> DataFrame:
     )
     mom = src.agg(
         F.count("*").alias("_n"),
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_m"),
+        grid(F.avg("_v")).alias("_m"),
     )
     withm = src.crossJoin(F.broadcast(mom))
     ss = withm.groupBy("_n", "_m").agg(
-        (
-            F.sum(F.floor((F.col("_v") - F.col("_m")) ** 2 * _Q)) / _Q
-        ).alias("_ss")
+        grid_sum((F.col("_v") - F.col("_m")) ** 2).alias("_ss")
     )
-    pv = src.groupBy("_v").agg(F.count("*").alias("_t"))
-    w = (
-        Window.partitionBy()
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    pv = pv.withColumn("_bef", F.coalesce(F.sum("_t").over(w), F.lit(0)))
+    pv = value_ranks(src, "_v")
     j = pv.crossJoin(F.broadcast(ss))
     nn = F.col("_n").cast("double")
     sd = F.when(nn > 1.0, F.sqrt(F.col("_ss") / (nn - 1.0)))
@@ -5163,7 +5057,7 @@ def anderson_darling(df: DataFrame, value_col: str) -> DataFrame:
         2.0 * (nn - b) - t
     ) * F.log(F.lit(1.0) - phi)
     agg = j.groupBy("_n").agg(
-        (F.sum(F.floor(term * _Q)) / _Q).alias("_s")
+        grid_sum(term).alias("_s")
     )
     n2 = F.col("_n").cast("double")
     a2 = -n2 - F.col("_s") / n2
@@ -5216,7 +5110,7 @@ def fligner_killeen(
     grid-floored and every sum floor-quantized; X² ~ χ²(k−1)."""
     src = df.select(
         F.col(group_col).alias("_g"),
-        (F.floor(F.col(value_col).cast("double") * _Q) / _Q).alias("_v"),
+        grid(F.col(value_col).cast("double")).alias("_v"),
     ).filter(F.col("_v").isNotNull() & F.col("_g").isNotNull())
     gv = src.groupBy("_g", "_v").agg(F.count("*").alias("_c"))
     wg = (
@@ -5238,75 +5132,54 @@ def fligner_killeen(
         gv.join(med, "_g")
         .select(
             "_g",
-            (
-                F.floor(F.abs(F.col("_v") - F.col("_med")) * _Q) / _Q
-            ).alias("_d"),
+            grid(F.abs(F.col("_v") - F.col("_med"))).alias("_d"),
             "_c",
         )
         .groupBy("_g", "_d")
         .agg(F.sum("_c").alias("_c"))
     )
-    per_d = dev.groupBy("_d").agg(F.sum("_c").alias("_t"))
-    w = (
-        Window.partitionBy()
-        .orderBy("_d")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    per_d = per_d.withColumn(
-        "_bef", F.coalesce(F.sum("_t").over(w), F.lit(0))
-    )
+    per_d = value_ranks(dev, "_d", t=F.sum("_c"))
     tot = per_d.agg(F.sum("_t").alias("_nn"))
     per_d = per_d.crossJoin(F.broadcast(tot))
     nn = F.col("_nn").cast("double")
-    r = F.col("_bef") + (F.col("_t") + 1.0) / 2.0
-    a = probit_approx(F.lit(0.5) + r / (2.0 * (nn + 1.0)))
+    a = probit_approx(F.lit(0.5) + F.col("_mr") / (2.0 * (nn + 1.0)))
     per_d = per_d.select("_d", "_nn", a.alias("_a"))
     scored = dev.join(per_d, "_d")
     overall = scored.agg(
-        (F.sum(F.floor(F.col("_c") * F.col("_a") * _Q)) / _Q).alias("_sa"),
+        grid_sum(F.col("_c") * F.col("_a")).alias("_sa"),
         F.sum("_c").alias("_n2"),
         F.min("_nn").alias("_nn"),
     )
     abar_all = overall.select(
-        (F.floor(F.col("_sa") / F.col("_n2") * _Q) / _Q).alias("_abar"),
+        grid(F.col("_sa") / F.col("_n2")).alias("_abar"),
         F.col("_nn"),
     )
     scored2 = scored.crossJoin(F.broadcast(abar_all))
     v2 = scored2.agg(
-        (
-            F.sum(
-                F.floor(
-                    F.col("_c")
-                    * (F.col("_a") - F.col("_abar"))
-                    * (F.col("_a") - F.col("_abar"))
-                    * _Q
-                )
-            )
-            / _Q
+        grid_sum(
+            F.col("_c")
+            * (F.col("_a") - F.col("_abar"))
+            * (F.col("_a") - F.col("_abar"))
         ).alias("_sv"),
         F.sum("_c").alias("_n3"),
     )
     per_g = scored2.groupBy("_g").agg(
         F.sum("_c").alias("_ng"),
-        (F.sum(F.floor(F.col("_c") * F.col("_a") * _Q)) / _Q).alias("_sag"),
+        grid_sum(F.col("_c") * F.col("_a")).alias("_sag"),
         F.min("_abar").alias("_abar"),
     )
     between = per_g.select(
         "_g",
         "_ng",
-        (
-            (F.floor(F.col("_sag") / F.col("_ng") * _Q) / _Q - F.col("_abar"))
-        ).alias("_dg"),
+        (grid(F.col("_sag") / F.col("_ng")) - F.col("_abar")).alias("_dg"),
     ).agg(
         F.count("*").alias("_k"),
         F.sum(F.col("_ng")).alias("_n4"),
-        (
-            F.sum(F.floor(F.col("_ng") * F.col("_dg") * F.col("_dg") * _Q))
-            / _Q
-        ).alias("_sb"),
+        grid_sum(F.col("_ng") * F.col("_dg") * F.col("_dg")).alias("_sb"),
     )
     fin = between.crossJoin(v2)
-    vv = F.col("_sv") / (F.col("_n3").cast("double") - 1.0)
+    n3 = F.col("_n3").cast("double")
+    vv = F.when(n3 > 1.0, F.col("_sv") / (n3 - 1.0))
     chi2 = F.when(vv > 0, F.col("_sb") / vv)
     return fin.select(
         F.col("_k").cast("int").alias("k"),
@@ -5343,27 +5216,18 @@ def brunner_munzel(
     side = side_col if isinstance(side_col, Column) else F.col(side_col)
     src = df.select(
         side.alias("_g"),
-        (F.floor(F.col(value_col).cast("double") * _Q) / _Q).alias("_v"),
+        grid(F.col(value_col).cast("double")).alias("_v"),
     ).filter(F.col("_v").isNotNull() & F.col("_g").isin("a", "b"))
-    pv = src.groupBy("_v").agg(
-        F.count(F.when(F.col("_g") == "a", 1)).alias("_ca"),
-        F.count(F.when(F.col("_g") == "b", 1)).alias("_cb"),
-    )
-    w = (
-        Window.partitionBy()
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     pv = (
-        pv.withColumn(
-            "_bef",
-            F.coalesce(F.sum(F.col("_ca") + F.col("_cb")).over(w), F.lit(0)),
+        value_ranks(
+            src, "_v",
+            _ca=F.count(F.when(F.col("_g") == "a", 1)),
+            _cb=F.count(F.when(F.col("_g") == "b", 1)),
         )
-        .withColumn("_befa", F.coalesce(F.sum("_ca").over(w), F.lit(0)))
-        .withColumn("_befb", F.coalesce(F.sum("_cb").over(w), F.lit(0)))
+        .withColumn("_befa", before("_ca", "_v"))
+        .withColumn("_befb", before("_cb", "_v"))
     )
-    t = (F.col("_ca") + F.col("_cb")).cast("double")
-    rp = F.col("_bef") + (t + 1.0) / 2.0
+    rp = F.col("_mr")
     ra = F.col("_befa") + (F.col("_ca") + 1.0) / 2.0
     rb = F.col("_befb") + (F.col("_cb") + 1.0) / 2.0
     tot = pv.agg(
@@ -5377,8 +5241,8 @@ def brunner_munzel(
     means = tot.select(
         "_na",
         "_nb",
-        (F.floor(F.col("_sra") / na * _Q) / _Q).alias("_rba"),
-        (F.floor(F.col("_srb") / nb * _Q) / _Q).alias("_rbb"),
+        F.when(na > 0, grid(F.col("_sra") / na)).alias("_rba"),
+        F.when(nb > 0, grid(F.col("_srb") / nb)).alias("_rbb"),
     )
     j = pv.crossJoin(F.broadcast(means))
     da = rp - ra - F.col("_rba") + (na + 1.0) / 2.0
@@ -5388,21 +5252,21 @@ def brunner_munzel(
         F.min("_nb").alias("_nb"),
         F.min("_rba").alias("_rba"),
         F.min("_rbb").alias("_rbb"),
-        (F.sum(F.floor(F.col("_ca") * da * da * _Q)) / _Q).alias("_ssa"),
-        (F.sum(F.floor(F.col("_cb") * db * db * _Q)) / _Q).alias("_ssb"),
+        grid_sum(F.col("_ca") * da * da).alias("_ssa"),
+        grid_sum(F.col("_cb") * db * db).alias("_ssb"),
     )
     na2 = F.col("_na").cast("double")
     nb2 = F.col("_nb").cast("double")
     nn = na2 + nb2
     s2a = F.when(na2 > 1.0, F.col("_ssa") / (na2 - 1.0))
     s2b = F.when(nb2 > 1.0, F.col("_ssb") / (nb2 - 1.0))
-    st_a = s2a / (nb2 * nb2)
-    st_b = s2b / (na2 * na2)
+    st_a = F.when(nb2 > 0, s2a / (nb2 * nb2))
+    st_b = F.when(na2 > 0, s2b / (na2 * na2))
     se2 = st_a / na2 + st_b / nb2
     wstat = F.when(
         se2 > 0, (F.col("_rbb") - F.col("_rba")) / (nn * F.sqrt(se2))
     )
-    p_hat = (F.col("_rbb") - (nb2 + 1.0) / 2.0) / na2
+    p_hat = F.when(na2 > 0, (F.col("_rbb") - (nb2 + 1.0) / 2.0) / na2)
     dfw = F.when(
         (st_a > 0) | (st_b > 0),
         (st_a / na2 + st_b / nb2) * (st_a / na2 + st_b / nb2)
@@ -5439,13 +5303,13 @@ def newey_west_se(
     series, autocovariance cross-products floor-quantized onto the
     2^-20 grid before their exact sums; γ_l uses the standard 1/n
     normalization (all lags share it)."""
-    v = F.floor(F.col(value_col).cast("double") * _Q) / _Q
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(F.col(order_col).alias("_o"), v.alias("_v")).filter(
         F.col("_v").isNotNull()
     )
     m = src.agg(
         F.count("*").alias("_n"),
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_m"),
+        grid(F.avg("_v")).alias("_m"),
     )
     w = Window.orderBy("_o")
     lagged = src.crossJoin(F.broadcast(m)).select(
@@ -5458,18 +5322,13 @@ def newey_west_se(
         ],
     )
     agg = lagged.groupBy("_n", "_m").agg(
-        (F.sum(F.floor(F.col("_d0") * F.col("_d0") * _Q)) / _Q).alias(
-            "_g0"
-        ),
+        grid_sum(F.col("_d0") * F.col("_d0")).alias("_g0"),
         *[
-            (
-                F.sum(
-                    F.when(
-                        F.col(f"_d{l}").isNotNull(),
-                        F.floor(F.col("_d0") * F.col(f"_d{l}") * _Q),
-                    )
+            grid_sum(
+                F.when(
+                    F.col(f"_d{l}").isNotNull(),
+                    F.col("_d0") * F.col(f"_d{l}"),
                 )
-                / _Q
             ).alias(f"_g{l}")
             for l in range(1, lags + 1)
         ],
@@ -5504,23 +5363,17 @@ def lorenz_curve(
     the hosmer_lemeshow discipline — no row sort, no tie
     ambiguity); value mass via fxp sums, cumulative shares by one
     prefix window over the ≤``buckets`` rows."""
-    v = F.floor(F.col(value_col).cast("double") * _Q) / _Q
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(v.alias("_v")).filter(F.col("_v").isNotNull())
-    pv = src.groupBy("_v").agg(F.count("*").alias("_c"))
-    w = (
-        Window.partitionBy()
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    pv = pv.withColumn("_bef", F.coalesce(F.sum("_c").over(w), F.lit(0)))
+    pv = value_ranks(src, "_v")
     tot = src.agg(F.count("*").alias("_n"))
     binned = pv.crossJoin(F.broadcast(tot)).withColumn(
         "_d",
         F.floor(F.lit(buckets) * F.col("_bef") / F.col("_n")).cast("int"),
     )
     cells = binned.groupBy("_d").agg(
-        F.sum("_c").alias("_nc"),
-        (F.sum(F.floor(F.col("_v") * F.col("_c") * _Q)) / _Q).alias("_sv"),
+        F.sum("_t").alias("_nc"),
+        grid_sum(F.col("_v") * F.col("_t")).alias("_sv"),
     )
     wc = (
         Window.partitionBy()
@@ -5557,19 +5410,6 @@ def lorenz_curve(
 # the kendall bounded-series contract.
 
 
-def _fx128(e) -> "Column":
-    """Exact fixed-point sum for price-scale magnitudes: floor onto
-    the 2^-20 grid, accumulate in decimal(38,0) — 128-bit exact, the
-    HUGEINT a DuckDB twin's BIGINT sum widens to — then ONE cast to
-    double. A plain long sum overflows at ~2^63/Q on squared
-    price-scale deviations (ANSI aborts the job); a double sum is
-    partition-order-dependent. Decimal keeps the sum exact and the
-    final rounding single and deterministic."""
-    return (
-        F.sum(F.floor(e * _Q).cast("decimal(38,0)")).cast("double") / _Q
-    )
-
-
 def hodges_lehmann(df: DataFrame, value_col: str) -> DataFrame:
     """One-sample Hodges–Lehmann estimator → single row (n, n_pairs,
     hl): the median of the n(n+1)/2 Walsh averages (x_i + x_j)/2 over
@@ -5585,7 +5425,7 @@ def hodges_lehmann(df: DataFrame, value_col: str) -> DataFrame:
     the value order — ties get arbitrary indices, which is harmless
     because equal values produce identical averages."""
     src = df.select(
-        (F.floor(F.col(value_col).cast("double") * _Q) / _Q).alias("_v")
+        grid(F.col(value_col).cast("double")).alias("_v")
     ).filter(F.col("_v").isNotNull())
     src = src.withColumn("_i", F.row_number().over(Window.orderBy("_v")))
     a = src.select(F.col("_i").alias("_ia"), F.col("_v").alias("_va"))
@@ -5629,17 +5469,17 @@ def bland_altman(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
     and the variance sum is floor-quantized per row (two passes, same
     shape as ``cuped_adjust``) so bias/sd are engine-identical."""
     d = (
-        F.floor(F.col(a_col).cast("double") * _Q) / _Q
-        - F.floor(F.col(b_col).cast("double") * _Q) / _Q
+        grid(F.col(a_col).cast("double"))
+        - grid(F.col(b_col).cast("double"))
     )
     src = df.select(d.alias("_d")).filter(F.col("_d").isNotNull())
     m = src.agg(
         F.count("*").alias("_n"),
-        (F.floor(F.avg("_d") * _Q) / _Q).alias("_m"),
+        grid(F.avg("_d")).alias("_m"),
     )
     c = src.crossJoin(F.broadcast(m))
     dd = F.col("_d") - F.col("_m")
-    agg = c.groupBy("_n", "_m").agg(_fx128(dd * dd).alias("_ss"))
+    agg = c.groupBy("_n", "_m").agg(grid_sum128(dd * dd).alias("_ss"))
     nn = F.col("_n").cast("double")
     sd = F.when(nn > 1.0, F.sqrt(F.col("_ss") / (nn - 1.0)))
     lo = F.col("_m") - F.lit(1.96) * sd
@@ -5743,7 +5583,7 @@ def c_index(
     first). Scores and durations quantize to the 2^-20 grid so the
     comparable/concordant/tied sets are engine-identical; every count
     is an exact integer."""
-    q = lambda c: F.floor(F.col(c).cast("double") * _Q) / _Q  # noqa: E731
+    q = lambda c: grid(F.col(c).cast("double"))  # noqa: E731
     src = df.select(
         q(score_col).alias("_s"),
         q(duration_col).alias("_t"),
@@ -5789,17 +5629,16 @@ def _ols_sums(src: DataFrame, by: "list[str]") -> DataFrame:
     shared closed-form base for the r13 regression diagnostics."""
     m = src.groupBy(*by).agg(
         F.count("*").alias("_n"),
-        (F.floor(F.avg("_x") * _Q) / _Q).alias("_mx"),
-        (F.floor(F.avg("_y") * _Q) / _Q).alias("_my"),
+        grid(F.avg("_x")).alias("_mx"),
+        grid(F.avg("_y")).alias("_my"),
     )
     c = src.join(F.broadcast(m), by) if by else src.crossJoin(F.broadcast(m))
     dx = F.col("_x") - F.col("_mx")
     dy = F.col("_y") - F.col("_my")
-    fx = _fx128
     return c.groupBy(*by, "_n", "_mx", "_my").agg(
-        fx(dx * dx).alias("_sxx"),
-        fx(dy * dy).alias("_syy"),
-        fx(dx * dy).alias("_sxy"),
+        grid_sum128(dx * dx).alias("_sxx"),
+        grid_sum128(dy * dy).alias("_syy"),
+        grid_sum128(dx * dy).alias("_sxy"),
     )
 
 
@@ -5822,7 +5661,7 @@ def breusch_pagan(df: DataFrame, y_col: str, x_col: str) -> DataFrame:
     inputs first; the quantized e² degenerates to 0 below it and
     overflows the long floor above). p-value exact for 1 dof:
     2·Φ̄(√LM) via the shared A&S polynomial."""
-    q = lambda c: F.floor(F.col(c).cast("double") * _Q) / _Q  # noqa: E731
+    q = lambda c: grid(F.col(c).cast("double"))  # noqa: E731
     src = df.select(q(x_col).alias("_x"), q(y_col).alias("_y")).filter(
         F.col("_x").isNotNull() & F.col("_y").isNotNull()
     )
@@ -5846,8 +5685,8 @@ def breusch_pagan(df: DataFrame, y_col: str, x_col: str) -> DataFrame:
     # (n·Sxu − Sx·Su)² / ((n·Sxx − Sx²)(n·Suu − Su²)) converts each
     # exact integer difference to double once.
     dec = "decimal(38,0)"
-    X = F.floor(F.col("_x") * _Q).cast(dec)
-    U = F.floor(e * e / 4096.0 * _Q).cast(dec)
+    X = F.floor(F.col("_x") * GRID).cast(dec)
+    U = F.floor(e * e / 4096.0 * GRID).cast(dec)
     mom = c.select(X.alias("_X"), U.alias("_U"))
     s2 = mom.agg(
         F.count("*").cast(dec).alias("_n2"),
@@ -5893,7 +5732,7 @@ def chow_test(
     Each RSS is the closed form Syy − Sxy²/Sxx over the shared
     grid-exact sum machinery — three decomposable aggregate passes,
     no residual materialization."""
-    q = lambda c: F.floor(F.col(c).cast("double") * _Q) / _Q  # noqa: E731
+    q = lambda c: grid(F.col(c).cast("double"))  # noqa: E731
     src = df.select(
         q(x_col).alias("_x"),
         q(y_col).alias("_y"),
@@ -5960,7 +5799,7 @@ def granger_lag1(
     normal equations over centered grid-exact sums (the 2-regressor
     solve is Cramer's rule on the 2×2 system), so every scalar is
     engine-identical before the 6dp round."""
-    q = lambda c: F.floor(F.col(c).cast("double") * _Q) / _Q  # noqa: E731
+    q = lambda c: grid(F.col(c).cast("double"))  # noqa: E731
     w = Window.orderBy(ts_col)
     src = (
         df.select(
@@ -5977,22 +5816,21 @@ def granger_lag1(
     )
     m = src.agg(
         F.count("*").alias("_n"),
-        (F.floor(F.avg("_y") * _Q) / _Q).alias("_my"),
-        (F.floor(F.avg("_y1") * _Q) / _Q).alias("_m1"),
-        (F.floor(F.avg("_x1") * _Q) / _Q).alias("_m2"),
+        grid(F.avg("_y")).alias("_my"),
+        grid(F.avg("_y1")).alias("_m1"),
+        grid(F.avg("_x1")).alias("_m2"),
     )
     c = src.crossJoin(F.broadcast(m))
     dy = F.col("_y") - F.col("_my")
     d1 = F.col("_y1") - F.col("_m1")
     d2 = F.col("_x1") - F.col("_m2")
-    fx = _fx128
     s = c.groupBy("_n").agg(
-        fx(dy * dy).alias("_syy"),
-        fx(d1 * d1).alias("_s11"),
-        fx(d2 * d2).alias("_s22"),
-        fx(d1 * d2).alias("_s12"),
-        fx(d1 * dy).alias("_s1y"),
-        fx(d2 * dy).alias("_s2y"),
+        grid_sum128(dy * dy).alias("_syy"),
+        grid_sum128(d1 * d1).alias("_s11"),
+        grid_sum128(d2 * d2).alias("_s22"),
+        grid_sum128(d1 * d2).alias("_s12"),
+        grid_sum128(d1 * dy).alias("_s1y"),
+        grid_sum128(d2 * dy).alias("_s2y"),
     )
     det = F.col("_s11") * F.col("_s22") - F.col("_s12") * F.col("_s12")
     b1 = (
@@ -6037,16 +5875,16 @@ def process_capability(
     Two grid-exact passes (mean, then floor-quantized squared
     deviations), one conditional count — all decomposable."""
     src = df.select(
-        (F.floor(F.col(value_col).cast("double") * _Q) / _Q).alias("_v")
+        grid(F.col(value_col).cast("double")).alias("_v")
     ).filter(F.col("_v").isNotNull())
     m = src.agg(
         F.count("*").alias("_n"),
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_m"),
+        grid(F.avg("_v")).alias("_m"),
     )
     c = src.crossJoin(F.broadcast(m))
     dv = F.col("_v") - F.col("_m")
     agg = c.groupBy("_n", "_m").agg(
-        _fx128(dv * dv).alias("_ss"),
+        grid_sum128(dv * dv).alias("_ss"),
         F.count(
             F.when((F.col("_v") < lsl) | (F.col("_v") > usl), 1)
         ).alias("_out"),
@@ -6084,21 +5922,20 @@ def icc_oneway(
     floor-quantized per term, so MSB/MSW are engine-identical."""
     src = df.select(
         F.col(group_col).alias("_g"),
-        (F.floor(F.col(value_col).cast("double") * _Q) / _Q).alias("_v"),
+        grid(F.col(value_col).cast("double")).alias("_v"),
     ).filter(F.col("_v").isNotNull() & F.col("_g").isNotNull())
     per = src.groupBy("_g").agg(
         F.count("*").alias("_ni"),
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_mi"),
+        grid(F.avg("_v")).alias("_mi"),
     )
     tot = src.agg(
         F.count("*").alias("_n"),
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_m"),
+        grid(F.avg("_v")).alias("_m"),
     )
-    fx = _fx128
     between = per.crossJoin(F.broadcast(tot)).agg(
         F.max("_n").alias("_n"),
         F.count("*").alias("_gk"),
-        fx(
+        grid_sum128(
             F.col("_ni").cast("double")
             * (F.col("_mi") - F.col("_m"))
             * (F.col("_mi") - F.col("_m"))
@@ -6106,7 +5943,7 @@ def icc_oneway(
         F.sum(F.col("_ni") * F.col("_ni")).alias("_sn2"),
     )
     within = src.join(F.broadcast(per), "_g").agg(
-        fx(
+        grid_sum128(
             (F.col("_v") - F.col("_mi")) * (F.col("_v") - F.col("_mi"))
         ).alias("_ssw")
     )
@@ -6150,22 +5987,19 @@ def pot_gpd(
     arithmetic of exact sums."""
     u = float(threshold)
     src = df.select(
-        (
-            F.floor((F.col(value_col).cast("double") - F.lit(u)) * _Q)
-            / _Q
-        ).alias("_e")
+        grid(F.col(value_col).cast("double") - F.lit(u)).alias("_e")
     )
     tot = src.agg(F.count(F.when(F.col("_e").isNotNull(), 1)).alias("n"))
     exc = src.filter(F.col("_e") > 0)
     m = exc.agg(
         F.count("*").alias("_k"),
-        (F.floor(F.avg("_e") * _Q) / _Q).alias("_m"),
+        grid(F.avg("_e")).alias("_m"),
         F.max("_e").alias("_seen"),
     )
     c = exc.crossJoin(F.broadcast(m))
     d = F.col("_e") - F.col("_m")
     agg = c.groupBy("_k", "_m", "_seen").agg(
-        _fx128(d * d).alias("_ss")
+        grid_sum128(d * d).alias("_ss")
     )
     kk = F.col("_k").cast("double")
     s2 = F.when(kk > 1.0, F.col("_ss") / (kk - 1.0))
@@ -6212,12 +6046,12 @@ def atkinson_index(df: DataFrame, value_col: str) -> DataFrame:
     discipline), so both means are engine-identical before the 6dp
     round."""
     src = df.select(
-        (F.floor(F.col(value_col).cast("double") * _Q) / _Q).alias("_v")
+        grid(F.col(value_col).cast("double")).alias("_v")
     ).filter(F.col("_v") > 0)
     agg = src.agg(
         F.count("*").alias("_n"),
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_m"),
-        (F.sum(F.floor(F.log("_v") * _Q)) / _Q).alias("_sl"),
+        grid(F.avg("_v")).alias("_m"),
+        grid_sum(F.log("_v")).alias("_sl"),
     )
     nn = F.col("_n").cast("double")
     gm = F.exp(F.col("_sl") / nn)
@@ -6256,7 +6090,7 @@ def yuen_t(
     side = group_col if isinstance(group_col, Column) else F.col(group_col)
     src = df.select(
         side.alias("_g"),
-        (F.floor(F.col(value_col).cast("double") * _Q) / _Q).alias("_v"),
+        grid(F.col(value_col).cast("double")).alias("_v"),
     ).filter(F.col("_v").isNotNull() & F.col("_g").isin("a", "b"))
     w = Window.partitionBy("_g").orderBy("_v")
     cnt = Window.partitionBy("_g")
@@ -6283,17 +6117,17 @@ def yuen_t(
         F.max("_gtrim").alias("_gt"),
         (
             F.floor(
-                F.sum(F.when(kept, F.col("_v") * _Q)) / (
+                F.sum(F.when(kept, F.col("_v") * GRID)) / (
                     F.max("_n") - 2 * F.max("_gtrim")
                 ).cast("double")
             )
-            / _Q
+            / GRID
         ).alias("_tm"),
-        (F.floor(F.avg(wins * _Q)) / _Q).alias("_wm"),
+        (F.floor(F.avg(wins * GRID)) / GRID).alias("_wm"),
     )
     j2 = j.join(F.broadcast(sums.select("_g", "_wm")), "_g")
     dv = wins - F.col("_wm")
-    ss = j2.groupBy("_g").agg(_fx128(dv * dv).alias("_ssw"))
+    ss = j2.groupBy("_g").agg(grid_sum128(dv * dv).alias("_ssw"))
     arm = sums.join(ss, "_g")
     h = (F.col("_na") - 2 * F.col("_gt")).cast("double")
     nn = F.col("_na").cast("double")
@@ -6404,7 +6238,7 @@ def dixon_q(
 
     Values grid-floor to 2^-20 so the two gaps and the range are exact
     differences; Q is one IEEE divide of exact inputs."""
-    v = F.floor(F.col(value_col).cast("double") * _Q) / _Q
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(F.col(group_col).alias("grp"), v.alias("_v")).filter(
         F.col("_v").isNotNull()
     )
@@ -6483,9 +6317,6 @@ def g_test(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
 # partition-order-dependent). 2^40 · ln(n) stays < 2^63 for any
 # realistic margin, and the ≤2^-40 per-term floor loss is ~1e-8 in the
 # final log — invisible under the 1e-6 output rounding.
-_LQ = float(1 << 40)
-
-
 def fisher_exact(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
     """Fisher's exact test for a 2×2 table of two boolean columns →
     one row (n, n_a, n_b, n_both, odds_ratio, p_two_sided): the
@@ -6517,7 +6348,6 @@ def fisher_exact(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
         "_n", "_r1", "_c1", "_aobs",
         F.explode(F.sequence(lo, hi)).alias("_a"),
     )
-    gl = lambda x: F.floor(F.log(x.cast("double")) * _LQ)  # noqa: E731
     aa = F.col("_a").cast("double")
     step = F.when(
         F.col("_a") == F.greatest(
@@ -6525,28 +6355,15 @@ def fisher_exact(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
         ),
         F.lit(0),
     ).otherwise(
-        gl(F.col("_r1") - F.col("_a") + 1)
-        + gl(F.col("_c1") - F.col("_a") + 1)
-        - gl(aa)
-        - gl(F.col("_n") - F.col("_r1") - F.col("_c1") + F.col("_a"))
+        log_grid(F.col("_r1") - F.col("_a") + 1)
+        + log_grid(F.col("_c1") - F.col("_a") + 1)
+        - log_grid(aa)
+        - log_grid(F.col("_n") - F.col("_r1") - F.col("_c1") + F.col("_a"))
     )
-    w = Window.orderBy("_a").rowsBetween(Window.unboundedPreceding, 0)
-    t = sup.withColumn("_lnw", F.sum(step).over(w))
-    t = t.withColumn("_m", F.max("_lnw").over(Window.partitionBy()))
-    obs = t.filter(F.col("_a") == F.col("_aobs")).select(
-        F.col("_lnw").alias("_lnobs")
-    )
-    t = t.crossJoin(F.broadcast(obs))
-    # relative slack 1e-7 in log space = ~110k grid cells
-    tol = int(1e-7 * _LQ)
-    pm = F.floor(
-        F.exp((F.col("_lnw") - F.col("_m")).cast("double") / _LQ) * _LQ
-    ).cast("decimal(38,0)")
+    t, tot, inc = pmf_two_sided(sup, step, "_a", F.col("_aobs"))
     sums = t.agg(
-        F.sum(pm).alias("_tot"),
-        F.sum(
-            F.when(F.col("_lnw") <= F.col("_lnobs") + tol, pm)
-        ).alias("_inc"),
+        tot,
+        inc,
         F.max("_n").alias("n"),
         F.max("_r1").alias("n_a"),
         F.max("_c1").alias("n_b"),
@@ -6588,7 +6405,7 @@ def white_test(df: DataFrame, y_col: str, x_col: str) -> DataFrame:
     difference cast to double, and the 2-regressor explained sum of
     squares is the closed-form normal-equation quadratic of those
     doubles."""
-    q = lambda c: F.floor(F.col(c).cast("double") * _Q) / _Q  # noqa: E731
+    q = lambda c: grid(F.col(c).cast("double"))  # noqa: E731
     src = df.select(q(x_col).alias("_x"), q(y_col).alias("_y")).filter(
         F.col("_x").isNotNull() & F.col("_y").isNotNull()
     )
@@ -6600,9 +6417,9 @@ def white_test(df: DataFrame, y_col: str, x_col: str) -> DataFrame:
         F.col("_x") - F.col("_mx")
     )
     dec = "decimal(38,0)"
-    X = F.floor(F.col("_x") * _Q).cast(dec)
-    Z = F.floor(F.col("_x") * F.col("_x") * _Q).cast(dec)
-    U = F.floor(e * e / 4096.0 * _Q).cast(dec)
+    X = F.floor(F.col("_x") * GRID).cast(dec)
+    Z = F.floor(F.col("_x") * F.col("_x") * GRID).cast(dec)
+    U = F.floor(e * e / 4096.0 * GRID).cast(dec)
     mom = c.select(X.alias("_X"), Z.alias("_Z"), U.alias("_U"))
     s2 = mom.agg(
         F.count("*").cast(dec).alias("_n2"),
@@ -6651,7 +6468,7 @@ def cooks_distance(df: DataFrame, y_col: str, x_col: str) -> DataFrame:
     the shared grid-exact sums; every D_i is IEEE arithmetic of those
     exact inputs, identical per row on any engine, so max() and the
     threshold count replay exactly."""
-    q = lambda c: F.floor(F.col(c).cast("double") * _Q) / _Q  # noqa: E731
+    q = lambda c: grid(F.col(c).cast("double"))  # noqa: E731
     src = df.select(q(x_col).alias("_x"), q(y_col).alias("_y")).filter(
         F.col("_x").isNotNull() & F.col("_y").isNotNull()
     )
@@ -6699,7 +6516,7 @@ def deming_regression(
     the method-comparison standard where plain OLS slope is biased
     toward zero by x-noise. Closed form over the shared grid-exact
     sums: b = (Syy − δSxx + √((Syy − δSxx)² + 4δ·Sxy²)) / (2·Sxy)."""
-    q = lambda c: F.floor(F.col(c).cast("double") * _Q) / _Q  # noqa: E731
+    q = lambda c: grid(F.col(c).cast("double"))  # noqa: E731
     src = df.select(q(x_col).alias("_x"), q(y_col).alias("_y")).filter(
         F.col("_x").isNotNull() & F.col("_y").isNotNull()
     )
@@ -6726,7 +6543,7 @@ def lin_ccc(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     factor). The method-agreement summary dual to ``bland_altman``'s
     limits. ccc = 2·Sxy / (Sxx + Syy + n·(x̄−ȳ)²), all from one
     grid-exact sum pass."""
-    q = lambda c: F.floor(F.col(c).cast("double") * _Q) / _Q  # noqa: E731
+    q = lambda c: grid(F.col(c).cast("double"))  # noqa: E731
     src = df.select(q(x_col).alias("_x"), q(y_col).alias("_y")).filter(
         F.col("_x").isNotNull() & F.col("_y").isNotNull()
     )
@@ -6812,20 +6629,23 @@ def ansari_bradley(
     contract, same family as ``ordinal_assoc``'s tie handling).
     Midranks land on the 0.5 grid so every score and sum is exact."""
     g = F.col(group_col)
-    v = F.floor(F.col(value_col).cast("double") * _Q) / _Q
+    v = grid(F.col(value_col).cast("double"))
     src = df.filter(g.isin([a, b]) & F.col(value_col).isNotNull()).select(
         g.alias("_g"), v.alias("_v")
     )
-    r = _midrank(src, "_v", [], "_r")
-    w_all = Window.partitionBy()
-    t = r.withColumn("_n", F.count("*").over(w_all))
+    r = value_ranks(
+        src, "_v",
+        _ca=F.count(F.when(F.col("_g") == a, 1)),
+        _cb=F.count(F.when(F.col("_g") == b, 1)),
+    )
+    t = r.withColumn("_n", F.sum("_t").over(Window.partitionBy()))
     score = F.least(
-        F.col("_r"), F.col("_n").cast("double") + 1.0 - F.col("_r")
+        F.col("_mr"), F.col("_n").cast("double") + 1.0 - F.col("_mr")
     )
     agg = t.groupBy("_n").agg(
-        F.count(F.when(F.col("_g") == a, 1)).alias("_n1"),
-        F.count(F.when(F.col("_g") == b, 1)).alias("_n2"),
-        F.sum(F.when(F.col("_g") == a, score)).alias("_ab"),
+        F.sum("_ca").alias("_n1"),
+        F.sum("_cb").alias("_n2"),
+        F.sum(F.when(F.col("_ca") > 0, F.col("_ca") * score)).alias("_ab"),
     )
     n = F.col("_n").cast("double")
     n1 = F.col("_n1").cast("double")
@@ -6912,15 +6732,19 @@ def vargha_delaney_a(
     (n₁+1)/2)/n₂ — midranks are 0.5-grid exact, so A is one IEEE
     expression of exact sums."""
     g = F.col(group_col)
-    v = F.floor(F.col(value_col).cast("double") * _Q) / _Q
+    v = grid(F.col(value_col).cast("double"))
     src = df.filter(g.isin([a, b]) & F.col(value_col).isNotNull()).select(
         g.alias("_g"), v.alias("_v")
     )
-    r = _midrank(src, "_v", [], "_r")
+    r = value_ranks(
+        src, "_v",
+        _ca=F.count(F.when(F.col("_g") == a, 1)),
+        _cb=F.count(F.when(F.col("_g") == b, 1)),
+    )
     agg = r.agg(
-        F.count(F.when(F.col("_g") == a, 1)).alias("_n1"),
-        F.count(F.when(F.col("_g") == b, 1)).alias("_n2"),
-        F.sum(F.when(F.col("_g") == a, F.col("_r"))).alias("_r1"),
+        F.coalesce(F.sum("_ca"), F.lit(0)).alias("_n1"),
+        F.coalesce(F.sum("_cb"), F.lit(0)).alias("_n2"),
+        F.sum(F.col("_ca") * F.col("_mr")).alias("_r1"),
     )
     n1 = F.col("_n1").cast("double")
     n2 = F.col("_n2").cast("double")
@@ -6954,11 +6778,11 @@ def cvm_two_sample(
     critical value 0.461. Midranks/positions are 0.5-grid exact, the
     quadratic sums exact multiples of 0.25."""
     g = F.col(group_col)
-    v = F.floor(F.col(value_col).cast("double") * _Q) / _Q
+    v = grid(F.col(value_col).cast("double"))
     src = df.filter(g.isin([a, b]) & F.col(value_col).isNotNull()).select(
         g.alias("_g"), v.alias("_v")
     )
-    r = _midrank(src, "_v", [], "_r")
+    r = row_ranks(src, "_v")
     w = Window.partitionBy("_g").orderBy("_v")
     r = r.withColumn("_i", F.row_number().over(w).cast("double"))
     d2 = (F.col("_r") - F.col("_i")) * (F.col("_r") - F.col("_i"))
@@ -7006,10 +6830,10 @@ def dagostino_k2(df: DataFrame, value_col: str) -> DataFrame:
     aggregate is localCheckpointed so the z-transform tree compiles
     against plain column refs (the inlined decimal-sum subtrees blew
     janino's 64 KB method limit and forced interpreted fallback)."""
-    v = F.floor(F.col(value_col).cast("double") * _Q) / _Q
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(v.alias("_v")).filter(F.col("_v").isNotNull())
     m = src.agg(
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_m"),
+        grid(F.avg("_v")).alias("_m"),
         F.count("*").alias("_n"),
     )
     c = src.crossJoin(F.broadcast(m))
@@ -7017,9 +6841,7 @@ def dagostino_k2(df: DataFrame, value_col: str) -> DataFrame:
     dec = "decimal(38,0)"
     q10 = float(1 << 10)
     agg = c.groupBy("_n").agg(
-        (F.sum(F.floor(d * d * _Q).cast(dec)).cast("double") / _Q).alias(
-            "_s2"
-        ),
+        grid_sum128(d * d).alias("_s2"),
         (
             F.sum(F.floor(d * d * d * q10).cast(dec)).cast("double")
             / q10
@@ -7207,19 +7029,15 @@ def palma_ratio(df: DataFrame, value_col: str) -> DataFrame:
     contributes v·clamp(k − cum_before, 0, count) (tie groups split
     exactly, no row sampling); value mass accumulates as
     floor(v·2^20)·count in decimal(38,0) — order-free integer-exact."""
-    v = F.floor(F.col(value_col).cast("double") * _Q) / _Q
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(v.alias("_v")).filter(F.col("_v").isNotNull())
     pv = src.groupBy("_v").agg(F.count("*").alias("_c"))
-    wa = Window.orderBy("_v").rowsBetween(Window.unboundedPreceding, -1)
-    wd = Window.orderBy(F.col("_v").desc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
     w_all = Window.partitionBy()
     t = pv.select(
         "_v",
         "_c",
-        F.coalesce(F.sum("_c").over(wa), F.lit(0)).alias("_ca"),
-        F.coalesce(F.sum("_c").over(wd), F.lit(0)).alias("_cd"),
+        before("_c", "_v").alias("_ca"),
+        before("_c", F.col("_v").desc()).alias("_cd"),
         F.sum("_c").over(w_all).alias("_n"),
     )
     k40 = F.floor(F.col("_n") * 4 / 10)
@@ -7231,11 +7049,11 @@ def palma_ratio(df: DataFrame, value_col: str) -> DataFrame:
         F.least(k10 - F.col("_cd"), F.col("_c")), F.lit(0)
     )
     dec = "decimal(38,0)"
-    iv = F.floor(F.col("_v") * _Q).cast(dec)
+    iv = F.floor(F.col("_v") * GRID).cast(dec)
     agg = t.groupBy("_n").agg(
-        (F.sum(iv * take_b.cast(dec)).cast("double") / _Q).alias("_b"),
-        (F.sum(iv * take_t.cast(dec)).cast("double") / _Q).alias("_t"),
-        (F.sum(iv * F.col("_c").cast(dec)).cast("double") / _Q).alias(
+        (F.sum(iv * take_b.cast(dec)).cast("double") / GRID).alias("_b"),
+        (F.sum(iv * take_t.cast(dec)).cast("double") / GRID).alias("_t"),
+        (F.sum(iv * F.col("_c").cast(dec)).cast("double") / GRID).alias(
             "_tot"
         ),
     )
@@ -7256,25 +7074,17 @@ def hoover_index(df: DataFrame, value_col: str) -> DataFrame:
     everyone'. The most interpretable inequality number next to
     ``gini_coefficient``/``atkinson_index``. Grid values, grid-floored
     mean, decimal-exact |deviation| and total sums."""
-    v = F.floor(F.col(value_col).cast("double") * _Q) / _Q
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(v.alias("_v")).filter(F.col("_v").isNotNull())
     m = src.agg(
-        (F.floor(F.avg("_v") * _Q) / _Q).alias("_m"),
+        grid(F.avg("_v")).alias("_m"),
         F.count("*").alias("_n"),
     )
     c = src.crossJoin(F.broadcast(m))
     dec = "decimal(38,0)"
     agg = c.groupBy("_n").agg(
-        (
-            F.sum(
-                F.floor(F.abs(F.col("_v") - F.col("_m")) * _Q).cast(dec)
-            ).cast("double")
-            / _Q
-        ).alias("_dev"),
-        (
-            F.sum(F.floor(F.col("_v") * _Q).cast(dec)).cast("double")
-            / _Q
-        ).alias("_tot"),
+        grid_sum128(F.abs(F.col("_v") - F.col("_m"))).alias("_dev"),
+        grid_sum128(F.col("_v")).alias("_tot"),
     )
     return agg.select(
         F.col("_n").cast("long").alias("n"),
@@ -7392,20 +7202,17 @@ def quantile_treatment_effect(
     distinct-value cumulative counts — no per-group sort, ties
     resolve exactly."""
     g = F.col(group_col)
-    v = F.floor(F.col(value_col).cast("double") * _Q) / _Q
+    v = grid(F.col(value_col).cast("double"))
     src = df.filter(g.isin([a, b]) & F.col(value_col).isNotNull()).select(
         g.alias("_g"), v.alias("_v")
     )
     pv = src.groupBy("_g", "_v").agg(F.count("*").alias("_c"))
-    w = Window.partitionBy("_g").orderBy("_v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
     wg = Window.partitionBy("_g")
     t = pv.select(
         "_g",
         "_v",
         "_c",
-        F.coalesce(F.sum("_c").over(w), F.lit(0)).alias("_ca"),
+        before("_c", "_v", ["_g"]).alias("_ca"),
         F.sum("_c").over(wg).alias("_n"),
     )
     qs = F.explode(
@@ -7455,8 +7262,8 @@ def stouffer_z(df: DataFrame, z_col: str, w_col: str) -> DataFrame:
     ).filter(F.col("_z").isNotNull() & F.col("_w").isNotNull())
     agg = src.agg(
         F.count("*").alias("_k"),
-        (F.sum(F.floor(F.col("_w") * F.col("_z") * _Q)) / _Q).alias("_wz"),
-        (F.sum(F.floor(F.col("_w") * F.col("_w") * _Q)) / _Q).alias("_w2"),
+        grid_sum(F.col("_w") * F.col("_z")).alias("_wz"),
+        grid_sum(F.col("_w") * F.col("_w")).alias("_w2"),
     )
     z = F.col("_wz") / F.sqrt(F.col("_w2"))
     return agg.select(
@@ -7496,8 +7303,8 @@ def cvm_uniform(
     n = F.col("_n").cast("double")
     term = (2.0 * F.col("_i") - 1.0) / (2.0 * n) - F.col("_u")
     agg = cnt.groupBy("_n").agg(
-        (F.sum(F.floor(term * term * _Q)) / _Q).alias("_s"),
-        (F.sum(F.floor(F.col("_u") * _Q)) / _Q).alias("_su"),
+        grid_sum(term * term).alias("_s"),
+        grid_sum(F.col("_u")).alias("_su"),
     )
     w2 = 1.0 / (12.0 * n) + F.col("_s")
     ubar = F.col("_su") / n
@@ -7524,12 +7331,12 @@ def lilliefors(df: DataFrame, value_col: str) -> DataFrame:
 
     Moments are grid-exact sums (2^-20); the per-point Φ runs through
     the shared erf polynomial; D is a single max aggregate."""
-    v = F.floor(F.col(value_col).cast("double") * _Q) / _Q
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(v.alias("_v")).filter(F.col("_v").isNotNull())
     m = src.agg(
         F.count("*").alias("_n"),
-        (F.sum(F.floor(F.col("_v") * _Q)) / _Q).alias("_s1"),
-        (F.sum(F.floor(F.col("_v") * F.col("_v") * _Q)) / _Q).alias("_s2"),
+        grid_sum(F.col("_v")).alias("_s1"),
+        grid_sum(F.col("_v") * F.col("_v")).alias("_s2"),
     )
     t = src.crossJoin(F.broadcast(m))
     n = F.col("_n").cast("double")
@@ -7577,7 +7384,7 @@ def turning_point_test(
     touching a tie are excluded (counted in neither direction) and n
     is the full series length, documented bias under heavy ties. One
     keyed window pass (lag + lead), exact integer counts."""
-    v = F.floor(F.col(value_col).cast("double") * _Q) / _Q
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(
         F.col(group_col).alias("_g"),
         F.col(order_col).alias("_o"),
@@ -7623,28 +7430,14 @@ def bartels_rank_test(
     Midranks make tied values exact half-integers: both quadratic
     forms are sums of ×4-integer grid terms — order-free exact —
     and the ratio is one IEEE divide of exact sums."""
-    v = F.floor(F.col(value_col).cast("double") * _Q) / _Q
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(
         F.col(group_col).alias("_g"),
         F.col(order_col).alias("_o"),
         v.alias("_v"),
     ).filter(F.col("_v").isNotNull())
-    wv = Window.partitionBy("_g").orderBy("_v")
-    # midrank = avg rank of the tie block = (first-1 + count+... ) —
-    # rank() gives the block start; count over the value partition
-    # gives the block size; midrank = start + (size-1)/2
-    t = src.select(
-        "_g",
-        "_o",
-        F.rank().over(wv).cast("double").alias("_rs"),
-        F.count("*")
-        .over(Window.partitionBy("_g", "_v"))
-        .cast("double")
-        .alias("_tc"),
-    )
-    r = F.col("_rs") + (F.col("_tc") - 1.0) / 2.0
     wo = Window.partitionBy("_g").orderBy("_o")
-    t = t.select("_g", "_o", r.alias("_r"))
+    t = row_ranks(src, "_v", ["_g"]).select("_g", "_o", "_r")
     t = t.withColumn("_rn", F.lead("_r").over(wo))
     num = (F.col("_r") - F.col("_rn")) * (F.col("_r") - F.col("_rn"))
     agg = t.groupBy("_g").agg(
@@ -7693,7 +7486,7 @@ def quade_test(
     src = df.select(
         F.col(block_col).alias("_b"),
         F.col(treat_col).alias("_t"),
-        F.floor(F.col(value_col).cast("double") * _Q).alias("_vq"),
+        F.floor(F.col(value_col).cast("double") * GRID).alias("_vq"),
     ).filter(F.col("_vq").isNotNull())
     k_df = src.agg(F.countDistinct("_t").alias("_k"))
     # complete blocks only
@@ -7701,23 +7494,11 @@ def quade_test(
     src = src.crossJoin(F.broadcast(k_df)).join(cnt, "_b").filter(
         F.col("_bk") == F.col("_k")
     )
-    wb = Window.partitionBy("_b").orderBy("_vq")
-    tie = Window.partitionBy("_b", "_vq")
-    r = (
-        F.rank().over(wb).cast("double")
-        + (F.count("*").over(tie).cast("double") - 1.0) / 2.0
-    )
-    t = src.select("_b", "_t", "_k", "_vq", r.alias("_r"))
+    t = row_ranks(src, "_vq", ["_b"]).select("_b", "_t", "_k", "_vq", "_r")
     rng = src.groupBy("_b", "_k").agg(
         (F.max("_vq") - F.min("_vq")).alias("_rng")
     )
-    wr = Window.orderBy("_rng")
-    tier = Window.partitionBy("_rng")
-    q = (
-        F.rank().over(wr).cast("double")
-        + (F.count("*").over(tier).cast("double") - 1.0) / 2.0
-    )
-    rng = rng.select("_b", "_k", q.alias("_q"))
+    rng = row_ranks(rng, "_rng", out="_q").select("_b", "_k", "_q")
     j = t.join(rng.select("_b", "_q"), "_b")
     kk = F.col("_k").cast("double")
     s = F.col("_q") * (F.col("_r") - (kk + 1.0) / 2.0)
@@ -7758,11 +7539,12 @@ def jonckheere_terpstra(
     (untied-variance convention, documented under midrank ties).
 
     Shape: each row joins to the ≤ k−1 group pairs it belongs to (a
-    bounded broadcast fan-out, never a row×row product), one midrank
-    window per pair partition, exact ×2-integer rank sums."""
+    bounded broadcast fan-out, never a row×row product), one rank
+    table per pair over its distinct values, exact ×2-integer rank
+    sums."""
     src = df.select(
         F.col(group_col).alias("_g"),
-        (F.floor(F.col(value_col).cast("double") * _Q) / _Q).alias("_v"),
+        grid(F.col(value_col).cast("double")).alias("_v"),
     ).filter(F.col("_v").isNotNull() & F.col("_g").isNotNull())
     groups = src.select("_g").distinct()
     pairs = (
@@ -7774,19 +7556,18 @@ def jonckheere_terpstra(
         F.broadcast(pairs),
         (F.col("_g") == F.col("_a")) | (F.col("_g") == F.col("_b")),
     )
-    wp = Window.partitionBy("_a", "_b").orderBy("_v")
-    tie = Window.partitionBy("_a", "_b", "_v")
-    r = (
-        F.rank().over(wp).cast("double")
-        + (F.count("*").over(tie).cast("double") - 1.0) / 2.0
+    t = value_ranks(
+        fan, "_v", ["_a", "_b"],
+        _cb=F.count(F.when(F.col("_g") == F.col("_b"), 1)),
     )
-    t = fan.select("_a", "_b", "_g", r.alias("_r"))
     per = t.groupBy("_a", "_b").agg(
         (
-            F.sum(F.when(F.col("_g") == F.col("_b"), F.col("_r") * 2.0))
+            F.sum(
+                F.when(F.col("_cb") > 0, F.col("_cb") * F.col("_mr") * 2.0)
+            )
             / 2.0
         ).alias("_rb"),
-        F.count(F.when(F.col("_g") == F.col("_b"), 1)).alias("_nb"),
+        F.sum("_cb").alias("_nb"),
     )
     u = F.col("_rb") - F.col("_nb").cast("double") * (
         F.col("_nb").cast("double") + 1.0
@@ -7866,20 +7647,20 @@ def suits_index(
     prefix, each trapezoid term lands on the 2^-40 grid before the
     final sum (order-free exact), ordering ties broken by
     (income, tax) so the curve is engine-identical."""
-    qi = F.floor(F.col(income_col).cast("double") * _Q) / _Q
-    qt = F.floor(F.col(tax_col).cast("double") * _Q) / _Q
+    qi = grid(F.col(income_col).cast("double"))
+    qt = grid(F.col(tax_col).cast("double"))
     src = df.select(qi.alias("_i"), qt.alias("_t")).filter(
         F.col("_i").isNotNull() & F.col("_t").isNotNull()
     )
     # totals and prefixes can exceed 2^53: accumulate the grid units
     # as exact LONGs (the SQL twin uses HUGEINT + the VARCHAR
     # round-trip), then one correctly-rounded long->double conversion
-    iu = (F.col("_i") * _Q).cast("long")
-    tu = (F.col("_t") * _Q).cast("long")
+    iu = (F.col("_i") * GRID).cast("long")
+    tu = (F.col("_t") * GRID).cast("long")
     tot = src.agg(
         F.count("*").alias("_n"),
-        (F.sum(iu).cast("double") / _Q).alias("_ti"),
-        (F.sum(tu).cast("double") / _Q).alias("_tt"),
+        (F.sum(iu).cast("double") / GRID).alias("_ti"),
+        (F.sum(tu).cast("double") / GRID).alias("_tt"),
     )
     w = Window.orderBy("_i", "_t").rowsBetween(
         Window.unboundedPreceding, 0
@@ -7887,8 +7668,8 @@ def suits_index(
     t = src.select(
         "_i",
         "_t",
-        (F.sum(iu).over(w).cast("double") / _Q).alias("_ci"),
-        (F.sum(tu).over(w).cast("double") / _Q).alias("_ct"),
+        (F.sum(iu).over(w).cast("double") / GRID).alias("_ci"),
+        (F.sum(tu).over(w).cast("double") / GRID).alias("_ct"),
     ).crossJoin(F.broadcast(tot))
     x = F.col("_ci") / F.col("_ti")
     y = F.col("_ct") / F.col("_tt")
@@ -7896,7 +7677,7 @@ def suits_index(
     yp = y - F.col("_t") / F.col("_tt")
     term = (x - xp) * (y + yp)
     agg = t.groupBy("_n", "_ti", "_tt").agg(
-        (F.sum(F.floor(term * _LQ)) / _LQ).alias("_area2")
+        grid_sum(term, LOG_GRID).alias("_area2")
     )
     return agg.select(
         F.col("_n").cast("long").alias("n"),
@@ -7950,10 +7731,7 @@ def aalen_johansen(
     base = base.withColumn(
         "_s_minus",
         F.exp(
-            F.coalesce(
-                F.sum(lf).over(w.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0.0),
-            )
+            before(lf, "_t")
         ),
     )
     per_tc = src.filter(F.col("_c") != 0).groupBy("_t", "_c").agg(
@@ -8003,7 +7781,7 @@ def moses_test(
     ranking is one ordered window with (value, group) tiebreak."""
     src = df.select(
         F.col(group_col).alias("_g"),
-        (F.floor(F.col(value_col).cast("double") * _Q) / _Q).alias("_v"),
+        grid(F.col(value_col).cast("double")).alias("_v"),
     ).filter(
         F.col("_v").isNotNull() & F.col("_g").isin([control, experimental])
     )
@@ -8048,10 +7826,9 @@ def moses_test(
     denom_spine = base.select(
         "_ne", "_c", F.explode(F.sequence(F.lit(1), F.col("_c"))).alias("_j")
     )
-    gl = lambda x: F.floor(F.log(x.cast("double")) * _LQ)  # noqa: E731
     lnc = denom_spine.groupBy("_ne", "_c").agg(
         F.sum(
-            gl(F.col("_ne") + F.col("_j")) - gl(F.col("_j"))
+            log_grid(F.col("_ne") + F.col("_j")) - log_grid(F.col("_j"))
         ).alias("_lnC")
     )
     # weights w(i) = C(i+c-2, i)·(ne-i+1), i = 0..g by ratio recurrence
@@ -8060,20 +7837,20 @@ def moses_test(
         F.explode(F.sequence(F.lit(0), F.col("_gin"))).alias("_i"),
     )
     step = F.when(F.col("_i") == 0, F.lit(0)).otherwise(
-        gl(F.col("_i") + F.col("_c") - 2)
-        - gl(F.col("_i"))
-        + gl(F.col("_ne") - F.col("_i") + 1)
-        - gl(F.col("_ne") - F.col("_i") + 2)
+        log_grid(F.col("_i") + F.col("_c") - 2)
+        - log_grid(F.col("_i"))
+        + log_grid(F.col("_ne") - F.col("_i") + 1)
+        - log_grid(F.col("_ne") - F.col("_i") + 2)
     )
     wi = Window.partitionBy("_c").orderBy("_i").rowsBetween(
         Window.unboundedPreceding, 0
     )
-    lnw0 = gl(F.col("_ne") + 1)  # w(0) = ne + 1
+    lnw0 = log_grid(F.col("_ne") + 1)  # w(0) = ne + 1
     t2 = wspine.withColumn("_lnw", lnw0 + F.sum(step).over(wi))
     t2 = t2.join(lnc, ["_ne", "_c"])
-    p = F.exp((F.col("_lnw") - F.col("_lnC")).cast("double") / _LQ)
+    p = F.exp((F.col("_lnw") - F.col("_lnC")).cast("double") / LOG_GRID)
     agg = t2.groupBy("_nc", "_ne", "_gin", "_c").agg(
-        (F.sum(F.floor(p * _LQ)) / _LQ).alias("_p")
+        grid_sum(p, LOG_GRID).alias("_p")
     )
     pv = F.least(F.col("_p"), F.lit(1.0))
     return agg.select(
@@ -8100,27 +7877,19 @@ def cucconi_test(
     downstream is IEEE of exact sums."""
     src = df.select(
         F.col(group_col).alias("_g"),
-        (F.floor(F.col(value_col).cast("double") * _Q) / _Q).alias("_v"),
+        grid(F.col(value_col).cast("double")).alias("_v"),
     ).filter(F.col("_v").isNotNull() & F.col("_g").isin([a, b]))
-    w = Window.orderBy("_v")
-    tie = Window.partitionBy("_v")
-    r = (
-        F.rank().over(w).cast("double")
-        + (F.count("*").over(tie).cast("double") - 1.0) / 2.0
+    t = value_ranks(
+        src, "_v",
+        _ca=F.count(F.when(F.col("_g") == a, 1)),
+        _cb=F.count(F.when(F.col("_g") == b, 1)),
     )
-    t = src.select("_g", r.alias("_r"))
+    ca, r = F.col("_ca"), F.col("_mr")
     agg = t.agg(
-        F.count(F.when(F.col("_g") == a, 1)).alias("_na"),
-        F.count(F.when(F.col("_g") == b, 1)).alias("_nb"),
-        (
-            F.sum(
-                F.when(F.col("_g") == a, F.col("_r") * F.col("_r") * 4.0)
-            )
-            / 4.0
-        ).alias("_sr2"),
-        (
-            F.sum(F.when(F.col("_g") == a, F.col("_r") * 2.0)) / 2.0
-        ).alias("_sr"),
+        F.coalesce(F.sum("_ca"), F.lit(0)).alias("_na"),
+        F.coalesce(F.sum("_cb"), F.lit(0)).alias("_nb"),
+        (F.sum(F.when(ca > 0, ca * r * r * 4.0)) / 4.0).alias("_sr2"),
+        (F.sum(F.when(ca > 0, ca * r * 2.0)) / 2.0).alias("_sr"),
     )
     na = F.col("_na").cast("double")
     nb = F.col("_nb").cast("double")
@@ -8134,12 +7903,17 @@ def cucconi_test(
     den = F.sqrt(
         na * nb * (nn + 1.0) * (2.0 * nn + 1.0) * (8.0 * nn + 11.0) / 5.0
     )
-    u = (6.0 * F.col("_sr2") - na * (nn + 1.0) * (2.0 * nn + 1.0)) / den
-    v = (6.0 * sc2 - na * (nn + 1.0) * (2.0 * nn + 1.0)) / den
+    # an empty arm (den = 0) or N = 2 (rho = -1) has no distribution
+    null_mean = na * (nn + 1.0) * (2.0 * nn + 1.0)
+    u = F.when(den > 0, (6.0 * F.col("_sr2") - null_mean) / den)
+    v = F.when(den > 0, (6.0 * sc2 - null_mean) / den)
     rho = 2.0 * (nn * nn - 4.0) / (
         (2.0 * nn + 1.0) * (8.0 * nn + 11.0)
     ) - 1.0
-    c = (u * u + v * v - 2.0 * rho * u * v) / (2.0 * (1.0 - rho * rho))
+    c = F.when(
+        1.0 - rho * rho > 0,
+        (u * u + v * v - 2.0 * rho * u * v) / (2.0 * (1.0 - rho * rho)),
+    )
     p = F.exp(-c)
     return agg.select(
         F.col("_na").cast("long").alias("n_a"),
@@ -8170,56 +7944,33 @@ def van_der_waerden(
     before its sum."""
     src = df.select(
         F.col(group_col).alias("_g"),
-        (F.floor(F.col(value_col).cast("double") * _Q) / _Q).alias("_v"),
+        grid(F.col(value_col).cast("double")).alias("_v"),
     ).filter(F.col("_v").isNotNull() & F.col("_g").isNotNull())
-    w = Window.orderBy("_v")
-    tie = Window.partitionBy("_v")
-    r = (
-        F.rank().over(w).cast("double")
-        + (F.count("*").over(tie).cast("double") - 1.0) / 2.0
+    pv = src.groupBy("_v", "_g").agg(F.count("*").alias("_c"))
+    ranks = value_ranks(pv, "_v", t=F.sum("_c")).withColumn(
+        "_nn", F.sum("_t").over(Window.partitionBy())
     )
-    t = src.select("_g", r.alias("_r"))
-    nn_df = t.agg(F.count("*").alias("_nn"))
-    t = t.crossJoin(F.broadcast(nn_df))
-    a = probit_approx(F.col("_r") / (F.col("_nn").cast("double") + 1.0))
-    t = t.select("_g", "_nn", a.alias("_a"))
+    a = probit_approx(F.col("_mr") / (F.col("_nn").cast("double") + 1.0))
+    t = pv.join(ranks.select("_v", "_nn", a.alias("_a")), "_v")
+    c = F.col("_c")
     per = t.groupBy("_g", "_nn").agg(
-        F.count("*").alias("_ng"),
-        (F.sum(F.floor(F.col("_a") * _Q)) / _Q).alias("_sa"),
-        (F.sum(F.floor(F.col("_a") * F.col("_a") * _Q)) / _Q).alias(
-            "_sa2"
-        ),
+        F.sum("_c").alias("_ng"),
+        grid_sum(F.col("_a"), count=c).alias("_sa"),
+        grid_sum(F.col("_a") * F.col("_a"), count=c).alias("_sa2"),
     )
     agg = per.groupBy("_nn").agg(
         F.count("*").alias("_k"),
-        (
-            F.sum(
-                F.floor(
-                    F.col("_sa") * F.col("_sa")
-                    / F.col("_ng").cast("double")
-                    * _Q
-                )
-            )
-            / _Q
+        grid_sum(
+            F.col("_sa") * F.col("_sa") / F.col("_ng").cast("double")
         ).alias("_t1"),
         F.sum("_sa2").alias("_ssq"),
     )
     nn = F.col("_nn").cast("double")
-    s2 = F.col("_ssq") / (nn - 1.0)
-    tstat = F.col("_t1") / s2
+    # one row, or every value tied, leaves no score variance
+    s2 = F.when(nn > 1.0, F.col("_ssq") / (nn - 1.0))
+    tstat = F.when(s2 > 0, F.col("_t1") / s2)
     dof = (F.col("_k") - 1).cast("double")
-    # Wilson-Hilferty chi2 upper tail via the shared erf polynomial
-    zwh = (
-        F.pow(tstat / dof, F.lit(1.0 / 3.0))
-        - (1.0 - 2.0 / (9.0 * dof))
-    ) / F.sqrt(2.0 / (9.0 * dof))
-    # mirrored-tail sf: the A&S erf polynomial is x >= 0 only
-    p = F.when(
-        F.col("_k") > 1,
-        F.when(zwh >= 0, normal_sf(zwh)).otherwise(
-            1.0 - normal_sf(-zwh)
-        ),
-    )
+    p = F.when(F.col("_k") > 1, chi2_p_value(tstat, dof))
     return agg.select(
         F.col("_k").cast("long").alias("k"),
         F.col("_nn").cast("long").alias("n"),
@@ -8241,38 +7992,31 @@ def klotz_test(
     Var[T] = n_a n_b (Σa² − N ā²)/(N(N−1))."""
     src = df.select(
         F.col(group_col).alias("_g"),
-        (F.floor(F.col(value_col).cast("double") * _Q) / _Q).alias("_v"),
+        grid(F.col(value_col).cast("double")).alias("_v"),
     ).filter(F.col("_v").isNotNull() & F.col("_g").isin([a, b]))
-    w = Window.orderBy("_v")
-    tie = Window.partitionBy("_v")
-    r = (
-        F.rank().over(w).cast("double")
-        + (F.count("*").over(tie).cast("double") - 1.0) / 2.0
+    t = value_ranks(
+        src, "_v",
+        _ca=F.count(F.when(F.col("_g") == a, 1)),
+        _cb=F.count(F.when(F.col("_g") == b, 1)),
     )
-    t = src.select("_g", r.alias("_r"))
-    nn_df = t.agg(F.count("*").alias("_nn"))
-    t = t.crossJoin(F.broadcast(nn_df))
-    sc = probit_approx(F.col("_r") / (F.col("_nn").cast("double") + 1.0))
-    sc = sc * sc
-    t = t.select("_g", "_nn", sc.alias("_a"))
+    t = t.withColumn("_nn", F.sum("_t").over(Window.partitionBy()))
+    sc = probit_approx(F.col("_mr") / (F.col("_nn").cast("double") + 1.0))
+    t = t.select("_ca", "_cb", "_t", "_nn", (sc * sc).alias("_a"))
+    ca, ct, sa = F.col("_ca"), F.col("_t"), F.col("_a")
     agg = t.groupBy("_nn").agg(
-        F.count(F.when(F.col("_g") == a, 1)).alias("_na"),
-        F.count(F.when(F.col("_g") == b, 1)).alias("_nb"),
-        (
-            F.sum(F.when(F.col("_g") == a, F.floor(F.col("_a") * _Q)))
-            / _Q
-        ).alias("_ta"),
-        (F.sum(F.floor(F.col("_a") * _Q)) / _Q).alias("_sa"),
-        (F.sum(F.floor(F.col("_a") * F.col("_a") * _Q)) / _Q).alias(
-            "_sa2"
-        ),
+        F.sum("_ca").alias("_na"),
+        F.sum("_cb").alias("_nb"),
+        grid_sum(F.when(ca > 0, sa), count=ca).alias("_ta"),
+        grid_sum(sa, count=ct).alias("_sa"),
+        grid_sum(sa * sa, count=ct).alias("_sa2"),
     )
     nn = F.col("_nn").cast("double")
     na = F.col("_na").cast("double")
     nb = F.col("_nb").cast("double")
     abar = F.col("_sa") / nn
-    var = na * nb * (F.col("_sa2") - nn * abar * abar) / (
-        nn * (nn - 1.0)
+    var = F.when(
+        nn > 1.0,
+        na * nb * (F.col("_sa2") - nn * abar * abar) / (nn * (nn - 1.0)),
     )
     z = F.when(var > 0, (F.col("_ta") - na * abar) / F.sqrt(var))
     return agg.select(
@@ -8298,7 +8042,7 @@ def siegel_tukey(
     E = n_a(N+1)/2, Var = n_a n_b(N+1)/12."""
     src = df.select(
         F.col(group_col).alias("_g"),
-        (F.floor(F.col(value_col).cast("double") * _Q) / _Q).alias("_v"),
+        grid(F.col(value_col).cast("double")).alias("_v"),
     ).filter(F.col("_v").isNotNull() & F.col("_g").isin([a, b]))
     w = Window.orderBy("_v", "_g")
     t = src.select(
@@ -8348,28 +8092,22 @@ def lepage_test(
     documented."""
     src = df.select(
         F.col(group_col).alias("_g"),
-        (F.floor(F.col(value_col).cast("double") * _Q) / _Q).alias("_v"),
+        grid(F.col(value_col).cast("double")).alias("_v"),
     ).filter(F.col("_v").isNotNull() & F.col("_g").isin([a, b]))
-    w = Window.orderBy("_v")
-    tie = Window.partitionBy("_v")
-    r = (
-        F.rank().over(w).cast("double")
-        + (F.count("*").over(tie).cast("double") - 1.0) / 2.0
+    t = value_ranks(
+        src, "_v",
+        _ca=F.count(F.when(F.col("_g") == a, 1)),
+        _cb=F.count(F.when(F.col("_g") == b, 1)),
     )
-    t = src.select("_g", r.alias("_r"))
-    nn_df = t.agg(F.count("*").alias("_nn"))
-    t = t.crossJoin(F.broadcast(nn_df))
+    t = t.withColumn("_nn", F.sum("_t").over(Window.partitionBy()))
     nn = F.col("_nn").cast("double")
-    asc = F.least(F.col("_r"), nn + 1.0 - F.col("_r"))
+    ca, r = F.col("_ca"), F.col("_mr")
+    asc = F.least(r, nn + 1.0 - r)
     agg = t.groupBy("_nn").agg(
-        F.count(F.when(F.col("_g") == a, 1)).alias("_na"),
-        F.count(F.when(F.col("_g") == b, 1)).alias("_nb"),
-        (
-            F.sum(F.when(F.col("_g") == a, F.col("_r") * 2.0)) / 2.0
-        ).alias("_w"),
-        (
-            F.sum(F.when(F.col("_g") == a, asc * 2.0)) / 2.0
-        ).alias("_ab"),
+        F.sum("_ca").alias("_na"),
+        F.sum("_cb").alias("_nb"),
+        (F.sum(F.when(ca > 0, ca * r * 2.0)) / 2.0).alias("_w"),
+        (F.sum(F.when(ca > 0, ca * asc * 2.0)) / 2.0).alias("_ab"),
     )
     na = F.col("_na").cast("double")
     nb = F.col("_nb").cast("double")
@@ -8386,8 +8124,9 @@ def lepage_test(
     ).otherwise(
         na * nb * (nn + 1.0) * (3.0 + nn * nn) / (48.0 * nn * nn)
     )
-    zw = (F.col("_w") - ew) / F.sqrt(vw)
-    za = (F.col("_ab") - ea) / F.sqrt(va)
+    # an empty arm, or N <= 2, has no null variance
+    zw = F.when(vw > 0, (F.col("_w") - ew) / F.sqrt(vw))
+    za = F.when(va > 0, (F.col("_ab") - ea) / F.sqrt(va))
     lstat = zw * zw + za * za
     p = F.exp(-lstat / 2.0)
     return agg.select(
@@ -8430,36 +8169,16 @@ def rate_ratio_test(
     sup = base.select(
         "*", F.explode(F.sequence(F.lit(0), F.col("_t"))).alias("_x")
     )
-    gl = lambda x: F.floor(F.log(x.cast("double")) * _LQ)  # noqa: E731
-    glf = lambda x: F.floor(F.log(x) * _LQ)  # noqa: E731
     # w(x) = C(t, x) pi^x (1-pi)^(t-x); ratio w(x)/w(x-1) =
     # ((t-x+1)/x) * (pi/(1-pi))
     step = F.when(F.col("_x") == 0, F.lit(0)).otherwise(
-        gl(F.col("_t") - F.col("_x") + 1)
-        - gl(F.col("_x"))
-        + glf(F.col("_pi"))
-        - glf(1.0 - F.col("_pi"))
+        log_grid(F.col("_t") - F.col("_x") + 1)
+        - log_grid(F.col("_x"))
+        + log_grid(F.col("_pi"))
+        - log_grid(1.0 - F.col("_pi"))
     )
-    w = Window.partitionBy("_g").orderBy("_x").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    t = sup.withColumn("_lnw", F.sum(step).over(w))
-    mx = Window.partitionBy("_g")
-    t = t.withColumn("_m", F.max("_lnw").over(mx))
-    obsw = t.filter(F.col("_x") == F.col("_og")).select(
-        "_g", F.col("_lnw").alias("_lnobs")
-    )
-    t = t.join(obsw, "_g")
-    tol = int(1e-7 * _LQ)
-    pm = F.floor(
-        F.exp((F.col("_lnw") - F.col("_m")).cast("double") / _LQ) * _LQ
-    ).cast("decimal(38,0)")
-    sums = t.groupBy("_g", "_og", "_or", "_eg", "_er").agg(
-        F.sum(pm).alias("_tot"),
-        F.sum(
-            F.when(F.col("_lnw") <= F.col("_lnobs") + tol, pm)
-        ).alias("_inc"),
-    )
+    t, tot, inc = pmf_two_sided(sup, step, "_x", F.col("_og"), ["_g"])
+    sums = t.groupBy("_g", "_og", "_or", "_eg", "_er").agg(tot, inc)
     rr = (
         F.col("_og").cast("double") / F.col("_eg")
     ) / (F.col("_or").cast("double") / F.col("_er"))
@@ -8496,21 +8215,15 @@ def weibull_mrr(
     )
     n = F.col("_n").cast("double")
     fr = (F.col("_i") - 0.3) / (n + 0.4)
-    x = F.floor(F.log("_t") * _Q) / _Q
-    y = F.floor(F.log(-F.log(1.0 - fr)) * _Q) / _Q
+    x = grid(F.log("_t"))
+    y = grid(F.log(-F.log(1.0 - fr)))
     t = t.select("_n", x.alias("_x"), y.alias("_y"))
     agg = t.groupBy("_n").agg(
-        (F.sum(F.col("_x") * _Q) / _Q).alias("_sx"),
-        (F.sum(F.col("_y") * _Q) / _Q).alias("_sy"),
-        (F.sum(F.floor(F.col("_x") * F.col("_x") * _Q)) / _Q).alias(
-            "_sxx"
-        ),
-        (F.sum(F.floor(F.col("_y") * F.col("_y") * _Q)) / _Q).alias(
-            "_syy"
-        ),
-        (F.sum(F.floor(F.col("_x") * F.col("_y") * _Q)) / _Q).alias(
-            "_sxy"
-        ),
+        (F.sum(F.col("_x") * GRID) / GRID).alias("_sx"),
+        (F.sum(F.col("_y") * GRID) / GRID).alias("_sy"),
+        grid_sum(F.col("_x") * F.col("_x")).alias("_sxx"),
+        grid_sum(F.col("_y") * F.col("_y")).alias("_syy"),
+        grid_sum(F.col("_x") * F.col("_y")).alias("_sxy"),
     )
     n = F.col("_n").cast("double")
     sxx = F.col("_sxx") - F.col("_sx") * F.col("_sx") / n
@@ -8544,36 +8257,32 @@ def mood_scale_test(
     integer."""
     src = df.select(
         F.col(group_col).alias("_g"),
-        (F.floor(F.col(value_col).cast("double") * _Q) / _Q).alias("_v"),
+        grid(F.col(value_col).cast("double")).alias("_v"),
     ).filter(F.col("_v").isNotNull() & F.col("_g").isin([a, b]))
-    w = Window.orderBy("_v")
-    tie = Window.partitionBy("_v")
-    r = (
-        F.rank().over(w).cast("double")
-        + (F.count("*").over(tie).cast("double") - 1.0) / 2.0
+    t = value_ranks(
+        src, "_v",
+        _ca=F.count(F.when(F.col("_g") == a, 1)),
+        _cb=F.count(F.when(F.col("_g") == b, 1)),
     )
-    t = src.select("_g", r.alias("_r"))
-    nn_df = t.agg(F.count("*").alias("_nn"))
-    t = t.crossJoin(F.broadcast(nn_df))
+    t = t.withColumn("_nn", F.sum("_t").over(Window.partitionBy()))
     nn = F.col("_nn").cast("double")
-    dev = F.col("_r") - (nn + 1.0) / 2.0
+    ca = F.col("_ca")
+    dev = F.col("_mr") - (nn + 1.0) / 2.0
     agg = t.groupBy("_nn").agg(
-        F.count(F.when(F.col("_g") == a, 1)).alias("_na"),
-        F.count(F.when(F.col("_g") == b, 1)).alias("_nb"),
-        (
-            F.sum(F.when(F.col("_g") == a, dev * dev * 4.0)) / 4.0
-        ).alias("_t"),
+        F.sum("_ca").alias("_na"),
+        F.sum("_cb").alias("_nb"),
+        (F.sum(F.when(ca > 0, ca * dev * dev * 4.0)) / 4.0).alias("_ts"),
     )
     na = F.col("_na").cast("double")
     nb = F.col("_nb").cast("double")
     nn = F.col("_nn").cast("double")
     e = na * (nn * nn - 1.0) / 12.0
     var = na * nb * (nn + 1.0) * (nn * nn - 4.0) / 180.0
-    z = F.when(var > 0, (F.col("_t") - e) / F.sqrt(var))
+    z = F.when(var > 0, (F.col("_ts") - e) / F.sqrt(var))
     return agg.select(
         F.col("_na").cast("long").alias("n_a"),
         F.col("_nb").cast("long").alias("n_b"),
-        F.round("_t", 6).alias("t_stat"),
+        F.round("_ts", 6).alias("t_stat"),
         F.round(z, 6).alias("z_stat"),
         (F.abs(z) > 1.96).cast("int").alias("reject_5pct"),
     )

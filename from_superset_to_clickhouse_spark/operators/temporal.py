@@ -28,6 +28,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._exact import GRID, GRID as _Q2, GRID as _QG
+
 
 def asof_join(
     left: DataFrame,
@@ -1367,9 +1369,6 @@ def markov_transitions(
 
 # -- ClickHouse-parity interval / delta aggregates -------------------------
 
-_QG = float(1 << 20)
-
-
 def delta_sum(
     df: DataFrame,
     key_col: str,
@@ -2008,7 +2007,7 @@ def control_chart(
     rule flag, which compares z against exact integers via side
     indicators — is engine-identical. One bucketing pass + one keyed
     window pass over the bounded series."""
-    q = float(1 << 20)
+    q = GRID
     b = (
         df.groupBy(
             F.col(key_col).alias("key"),
@@ -2188,7 +2187,7 @@ def binary_segment(
     Bucket means land on the 2^-20 grid, so prefix sums are exact and
     the argmax comparison is engine-identical. One bucketing pass,
     one keyed window for the prefix sums, one max_by aggregate."""
-    q = float(1 << 20)
+    q = GRID
     b = (
         df.groupBy(
             F.col(key_col).alias("key"),
@@ -2468,7 +2467,7 @@ def cohort_ltv(
     Two shuffles (first-activity per user, cohort×age rollup) + one
     ordered window over the triangle (cohorts × ages rows). Exact
     integer arithmetic until the final per-user division."""
-    fxp = float(1 << 20)
+    fxp = GRID
     src = df.select(
         F.col(user_col).alias("_u"),
         F.date_trunc(bucket, F.col(ts_col)).alias("_b"),
@@ -2732,9 +2731,6 @@ def hurst_rs(
         F.col("_k").cast("long").alias("n_scales"),
         F.round(h, 6).alias("h"),
     )
-
-
-_Q2 = float(1 << 20)
 
 
 def max_drawdown(

@@ -171,10 +171,79 @@ def assert_unique_registry_keys(entrymod) -> None:
     assert seq == runtime, "AST key order != runtime dict order"
 
 
+def module_entries(entrymod, module: str) -> list[str]:
+    """Registry entries whose query body calls a public function of
+    ``operators/<module>.py``: a call, found by AST, to a name imported
+    from that module (in the body or at module level) or to an
+    attribute of an alias of it. Entries that reach the module only
+    through another helper are not selected."""
+    import ast
+    import inspect
+
+    modpath = f"from_superset_to_clickhouse_spark.operators.{module}"
+    tree = ast.parse(inspect.getsource(entrymod))
+
+    def imports(body) -> tuple[set[str], set[str]]:
+        names, aliases = set(), set()
+        for node in body:
+            if isinstance(node, ast.ImportFrom):
+                if node.module == modpath:
+                    names |= {
+                        a.asname or a.name for a in node.names
+                        if not a.name.startswith("_")
+                    }
+                elif node.module == modpath.rsplit(".", 1)[0]:
+                    aliases |= {
+                        a.asname or a.name for a in node.names
+                        if a.name == module
+                    }
+            elif isinstance(node, ast.Import):
+                aliases |= {a.asname for a in node.names if a.name == modpath}
+        return names, aliases
+
+    top_names, top_aliases = imports(tree.body)
+    funcs = {
+        n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)
+    }
+
+    def calls_module(fn: ast.FunctionDef) -> bool:
+        names, aliases = imports(ast.walk(fn))
+        names |= top_names
+        aliases |= top_aliases
+        for node in ast.walk(fn):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Name) and f.id in names:
+                return True
+            if (
+                isinstance(f, ast.Attribute)
+                and isinstance(f.value, ast.Name)
+                and f.value.id in aliases
+                and not f.attr.startswith("_")
+            ):
+                return True
+        return False
+
+    return [
+        name
+        for name, fn in entrymod.queries().items()
+        if getattr(fn, "__name__", None) in funcs
+        and calls_module(funcs[fn.__name__])
+    ]
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--only", nargs="*", help="subset of query names")
+    ap.add_argument(
+        "--module",
+        help="check only the entries whose q_* body calls a public "
+        "function of operators/<MODULE>.py (found by AST: a call to a "
+        "name imported from that module, in the body or at module "
+        "level, or to an attribute of an alias of it)",
+    )
     ap.add_argument(
         "--pandas-canon",
         action="store_true",
@@ -219,7 +288,10 @@ def main() -> int:
     assert_unique_registry_keys(entrymod)
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    names = args.only or list(queries)
+    names = args.only or (
+        module_entries(entrymod, args.module) if args.module
+        else list(queries)
+    )
     failures, no_oracle = [], []
     for name in names:
         fn = queries[name]

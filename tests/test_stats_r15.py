@@ -9,7 +9,6 @@ import random
 import pytest
 
 import from_superset_to_clickhouse_spark.operators.stats as st
-import from_superset_to_clickhouse_spark.operators.temporal as tmp
 
 
 def test_stouffer_z_hand(spark):
