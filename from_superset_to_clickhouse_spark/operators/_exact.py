@@ -48,18 +48,22 @@ def grid(x: Column) -> Column:
     return F.floor(x * GRID) / GRID
 
 
-def grid_sum(x: Column, unit: float = GRID, count: Column = None) -> Column:
+def grid_sum(
+    x: Column, unit: float = GRID, count: Column = None, over=None
+) -> Column:
     """Σ floor(x·unit) as an exact BIGINT sum, scaled back once. Over
-    a rank table, ``count`` weights each value by its rows."""
+    a rank table, ``count`` weights each value by its rows; ``over``
+    (a window spec) makes it a windowed sum."""
     q = F.floor(x * unit)
-    return F.sum(q if count is None else count * q) / unit
+    s = F.sum(q if count is None else count * q)
+    return (s if over is None else s.over(over)) / unit
 
 
-def grid_sum128(x: Column) -> Column:
-    """Σ floor(x·2^20) in decimal(38,0), then one cast to double: the
+def grid_sum128(x: Column, unit: float = GRID) -> Column:
+    """Σ floor(x·unit) in decimal(38,0), then one cast to double: the
     exact sum for squared price-scale deviations, where a BIGINT sum
-    overflows at ~2^63/2^20 (ANSI aborts the job)."""
-    return F.sum(F.floor(x * GRID).cast("decimal(38,0)")).cast("double") / GRID
+    overflows at ~2^63/unit (ANSI aborts the job)."""
+    return F.sum(F.floor(x * unit).cast("decimal(38,0)")).cast("double") / unit
 
 
 def log_grid(x: Column) -> Column:

@@ -1,23 +1,38 @@
-"""Temporal joins Spark lacks as built-ins: as-of join and range join.
+"""Time-series and event-stream operators.
 
-Scale design:
+Families, in file order:
 
-- ``asof_join`` is the union + single-window-pass formulation — the ONLY
-  shape that survives 100 TB. The naive formulation (equi-join on key +
-  range predicate + argmax) explodes to |left| × |right rows per key|
-  intermediate rows before pruning; the window formulation shuffles each
-  row exactly once on the join key and fills values with a running
-  ``last(ignorenulls)`` inside the sorted partition. One shuffle, no
-  blowup, AQE-friendly.
-- ``range_join_bands`` broadcasts the (tiny) band table so the fact side
-  never shuffles; Spark executes it as a BroadcastNestedLoopJoin, which
-  is the right plan when one side is a handful of rows.
+- **Joins**: as-of joins (backward, forward, with tolerance), banded,
+  gridded and binned range/proximity joins.
+- **Sessions and funnels**: sessionization, ``windowFunnel`` /
+  ``sequenceMatch`` / ``sequenceCount`` folds, retention, cohorts,
+  Markov transitions, touch attribution.
+- **Series rollups**: OHLC bars, resampling with forward fill, EWMA,
+  CUSUM, Holt / Holt–Winters, ClickHouse-parity delta and interval
+  aggregates.
+- **Spectral and autoregressive diagnostics**: ACF/PACF, Yule–Walker,
+  periodograms, Haar energy, ADF/KPSS, Hurst, entropies.
+- **Control charts**: Shewhart x̄/I-MR/p/np/c/u/g, EWMA chart.
+- **Indicators**: the bounded-series and OHLC-bar technical
+  indicators (RSI, Bollinger, MACD, Keltner, Supertrend, SAR, …).
+- **Forecasting and anomalies**: theta, Croston, seasonal ESD, Theil's
+  U, variance ratio.
 
-Reference parity: the reference has no temporal-join surface (its
-ClickHouse schema is append + ReplacingMergeTree, see
-``v2/sql/create_tables.sql``); these operators are part of the
-LLM-pipeline extension surface (point-in-time feature attachment,
-banded bucketing for curriculum/quality tiers).
+Every statistic keeps the exact-arithmetic contract of
+:mod:`._exact` (the 2^-20 grid, exact sums, NULL for undefined), so
+its result hash-matches a DuckDB replay. Two private helpers carry
+the shapes most operators share: :func:`_series` (the gridded
+``(_g, _o, _v)`` series prologue) and :func:`_ema_fold` (the seeded
+EMA recursion unrolled into one weighted fold).
+
+Scale design of the joins: ``asof_join`` is the union + single
+window pass formulation — the naive equi-join on key + range predicate
++ argmax explodes to |left| × |right rows per key| before pruning; the
+window formulation shuffles each row once on the key and fills values
+with a running ``last(ignorenulls)`` inside the sorted partition.
+``range_join_bands`` broadcasts the (tiny) band table so the fact side
+never shuffles (a BroadcastNestedLoopJoin, the right plan when one side
+is a handful of rows).
 """
 
 from __future__ import annotations
@@ -28,7 +43,47 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._exact import GRID, GRID as _Q2, GRID as _QG
+from ..functions.scalar import let_bind
+from ._exact import GRID, grid, grid_sum, grid_sum128, row_ranks
+
+
+def _series(
+    df: DataFrame, group_col: str, order_col: str, value_col: str
+) -> DataFrame:
+    """The bounded-series prologue: one row per observation as
+    (``_g`` group, ``_o`` order, ``_v`` value on the 2^-20 grid), NULL
+    values dropped."""
+    return df.select(
+        F.col(group_col).alias("_g"),
+        F.col(order_col).alias("_o"),
+        grid(F.col(value_col).cast("double")).alias("_v"),
+    ).filter(F.col("_v").isNotNull())
+
+
+def _ema_fold(alpha: float, term=lambda x: x.cast("double")):
+    """The EMA e_t = α·x_t + (1−α)·e_{t−1} seeded at x_1, unrolled
+    over a prefix list ``l`` (for :func:`let_bind`) as one left-to-right
+    weighted sum Σ term(x_i)·w_i with w_1 = (1−α)^(n−1) and
+    w_i = α·(1−α)^(n−i): the recursion would serialize the series and
+    resist SQL replay, the fold is an ordinary list lambda."""
+    a, d = float(alpha), 1.0 - float(alpha)
+
+    def fold(l):
+        n = F.size(l)
+        return F.aggregate(
+            F.transform(
+                l,
+                lambda x, i: term(x)
+                * F.when(i == 0, F.pow(F.lit(d), (n - 1).cast("double")))
+                .otherwise(
+                    F.lit(a) * F.pow(F.lit(d), (n - 1 - i).cast("double"))
+                ),
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+
+    return fold
 
 
 def asof_join(
@@ -520,8 +575,6 @@ def ewma_smooth(
     fold order is left-to-right over the frame, bit-replayable by an
     ANSI engine with list lambdas. NULL values are excluded before the
     frame so decay ages refer to observed points."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
     decay = 1.0 - alpha
     order = [F.col(ts_col)]
     if tiebreak_col:
@@ -820,7 +873,10 @@ def acf(
         .select(
             "key",
             "lag",
-            F.round(F.col("_num") / F.col("_den"), 6).alias("acf"),
+            # a constant series has no autocorrelation: NULL
+            F.round(
+                F.when(F.col("_den") > 0, F.col("_num") / F.col("_den")), 6
+            ).alias("acf"),
         )
     )
 
@@ -1243,7 +1299,16 @@ def rolling_corr(
     identically — so the windowed moments run on small-magnitude
     values and the classic sum-of-products formula never hits
     catastrophic cancellation (corr is shift-invariant, so results
-    are unchanged). One keyed window pass; output rounded to 6 dp."""
+    are unchanged). One keyed window pass collects each frame's
+    ≤ ``window_rows`` pairs; output rounded to 6 dp.
+
+    The frame's correlation is Spark's own ``corr`` update (running
+    means, co-moment C, moments Mx and My) replayed as a fold over the
+    collected pairs — the same IEEE operations in the same order, so
+    the value is ``corr``'s to the bit — with its final C/√(Mx·My)
+    guarded: a frame where one column is constant has no correlation
+    and reads NULL, where the ``corr`` window function kills the query
+    with an ANSI divide-by-zero."""
     pc = list(part_cols)
     x = F.col(x_col).cast("double")
     y = F.col(y_col).cast("double")
@@ -1261,15 +1326,38 @@ def rolling_corr(
         .orderBy(F.col(ts_col))
         .rowsBetween(-(window_rows - 1), 0)
     )
-    cx = x - F.col("_mx")
-    cy = y - F.col("_my")
+    pairs = F.collect_list(
+        F.struct((x - F.col("_mx")).alias("x"), (y - F.col("_my")).alias("y"))
+    ).over(w)
+    zero = F.lit(0.0)
+    init = F.struct(
+        *(zero.alias(f) for f in ("n", "xa", "ya", "ck", "xm", "ym"))
+    )
+
+    def update(s, e):
+        n = s["n"] + 1.0
+        dx, dy = e["x"] - s["xa"], e["y"] - s["ya"]
+        xa, ya = s["xa"] + dx / n, s["ya"] + dy / n
+        return F.when(e["x"].isNull() | e["y"].isNull(), s).otherwise(
+            F.struct(
+                n.alias("n"), xa.alias("xa"), ya.alias("ya"),
+                (s["ck"] + dx * (e["y"] - ya)).alias("ck"),
+                (s["xm"] + dx * (e["x"] - xa)).alias("xm"),
+                (s["ym"] + dy * (e["y"] - ya)).alias("ym"),
+            )
+        )
+
+    def corr(s):
+        den = s["xm"] * s["ym"]
+        return F.when(den > 0, s["ck"] / F.sqrt(den))
+
     return base.select(
         *pc,
         ts_col,
         x_col,
         y_col,
         F.count(F.lit(1)).over(w).alias("n_window"),
-        F.round(F.corr(cx, cy).over(w), 6).alias("roll_corr"),
+        F.round(F.aggregate(pairs, init, update, corr), 6).alias("roll_corr"),
     )
 
 
@@ -1398,21 +1486,11 @@ def delta_sum(
     )
     return rows.groupBy("key").agg(
         F.count("*").alias("n"),
-        (
-            F.sum(
-                F.when(F.col("_d") > 0, F.floor(F.col("_d") * _QG)).otherwise(
-                    F.lit(0)
-                )
-            )
-            / _QG
+        grid_sum(
+            F.when(F.col("_d") > 0, F.col("_d")).otherwise(F.lit(0))
         ).alias("delta_sum"),
-        (
-            F.sum(
-                F.when(
-                    F.col("_d") < 0, F.floor(-F.col("_d") * _QG)
-                ).otherwise(F.lit(0))
-            )
-            / _QG
+        grid_sum(
+            F.when(F.col("_d") < 0, -F.col("_d")).otherwise(F.lit(0))
         ).alias("neg_delta_sum"),
         F.round(
             F.max(F.when(F.col("_rn") == F.col("_n"), F.col("_v")))
@@ -1629,8 +1707,6 @@ def periodogram(
         .withColumn("_c", F.col("_x") - F.col("_mu"))
         .crossJoin(F.broadcast(ks))
     )
-    import math
-
     ang = (
         F.lit(2.0 * math.pi)
         * F.col("k")
@@ -1680,12 +1756,12 @@ def _acf_rounded(
         "_c",
         *[F.lag("_c", i).over(w).alias(f"_l{i}") for i in range(1, lags + 1)],
     )
+    den = F.sum(F.col("_c") * F.col("_c"))
     return lagged.groupBy("key").agg(
         F.count("*").alias("n"),
         *[
             F.round(
-                F.sum(F.col("_c") * F.col(f"_l{i}"))
-                / F.sum(F.col("_c") * F.col("_c")),
+                F.when(den > 0, F.sum(F.col("_c") * F.col(f"_l{i}")) / den),
                 6,
             ).alias(f"r{i}")
             for i in range(1, lags + 1)
@@ -2007,31 +2083,28 @@ def control_chart(
     rule flag, which compares z against exact integers via side
     indicators — is engine-identical. One bucketing pass + one keyed
     window pass over the bounded series."""
-    q = GRID
     b = (
         df.groupBy(
             F.col(key_col).alias("key"),
             F.window(F.col(ts_col), bucket).alias("_w"),
         )
-        .agg(
-            (F.floor(F.avg(F.col(value_col).cast("double")) * q) / q).alias(
-                "xbar"
-            )
-        )
+        .agg(grid(F.avg(F.col(value_col).cast("double"))).alias("xbar"))
         .select("key", F.col("_w.start").alias("bucket_ts"), "xbar")
     )
     gm = b.groupBy("key").agg(
-        F.count("*").alias("_n"),
-        (F.floor(F.avg("xbar") * q) / q).alias("_mu"),
+        F.count("*").alias("_n"), grid(F.avg("xbar")).alias("_mu")
     )
     dev = b.join(gm, "key")
     d = F.col("xbar") - F.col("_mu")
-    ss = dev.groupBy("key").agg(
-        (F.sum(F.floor(d * d * q)) / q).alias("_ss")
-    )
+    ss = dev.groupBy("key").agg(grid_sum(d * d).alias("_ss"))
+    # one bucket has no spread: NULL sigma and z, as for a constant
+    # series (not an ANSI divide-by-zero)
     j = dev.join(ss, "key").withColumn(
         "_sigma",
-        F.sqrt(F.col("_ss") / (F.col("_n").cast("double") - 1.0)),
+        F.when(
+            F.col("_n") > 1,
+            F.sqrt(F.col("_ss") / (F.col("_n").cast("double") - 1.0)),
+        ),
     )
     # sigma = 0 (constant series) has no control limits -> NULL z and
     # all-false rules, not an ANSI divide-by-zero
@@ -2187,16 +2260,12 @@ def binary_segment(
     Bucket means land on the 2^-20 grid, so prefix sums are exact and
     the argmax comparison is engine-identical. One bucketing pass,
     one keyed window for the prefix sums, one max_by aggregate."""
-    q = GRID
     b = (
         df.groupBy(
             F.col(key_col).alias("key"),
             F.window(F.col(ts_col), bucket).alias("_w"),
         )
-        .agg(
-            (F.floor(F.avg(F.col(value_col).cast("double")) * q) / q)
-            .alias("_x")
-        )
+        .agg(grid(F.avg(F.col(value_col).cast("double"))).alias("_x"))
         .select("key", F.col("_w.start").alias("_b"), "_x")
     )
     w = Window.partitionBy("key").orderBy("_b")
@@ -2467,11 +2536,10 @@ def cohort_ltv(
     Two shuffles (first-activity per user, cohort×age rollup) + one
     ordered window over the triangle (cohorts × ages rows). Exact
     integer arithmetic until the final per-user division."""
-    fxp = GRID
     src = df.select(
         F.col(user_col).alias("_u"),
         F.date_trunc(bucket, F.col(ts_col)).alias("_b"),
-        F.floor(F.col(value_col).cast("double") * fxp).alias("_qv"),
+        F.floor(F.col(value_col).cast("double") * GRID).alias("_qv"),
     )
     first = src.groupBy("_u").agg(F.min("_b").alias("_cohort"))
     j = src.join(first, "_u")
@@ -2499,10 +2567,10 @@ def cohort_ltv(
         F.col("_cohort").alias("cohort_ts"),
         "age",
         "n_users",
-        F.round(F.col("_qr") / fxp, 6).alias("revenue"),
-        F.round(F.col("_cum") / fxp, 6).alias("cum_revenue"),
+        F.round(F.col("_qr") / GRID, 6).alias("revenue"),
+        F.round(F.col("_cum") / GRID, 6).alias("cum_revenue"),
         F.round(
-            F.col("_cum") / fxp / F.col("n_users").cast("double"), 6
+            F.col("_cum") / GRID / F.col("n_users").cast("double"), 6
         ).alias("cum_ltv"),
     )
 
@@ -2672,7 +2740,7 @@ def hurst_rs(
         ex.groupBy("grp", "_ws", "_blk")
         .agg(
             F.count("*").alias("_nb"),
-            (F.floor(F.avg("_v") * _QG) / _QG).alias("_mb"),
+            grid(F.avg("_v")).alias("_mb"),
         )
         .filter(F.col("_nb") == F.col("_ws"))
     )
@@ -2688,21 +2756,14 @@ def hurst_rs(
     per_blk = cd.groupBy("grp", "_ws", "_blk").agg(
         (F.max("_cum") - F.least(F.min("_cum"), F.lit(0.0))).alias("_r"),
         F.sqrt(
-            (F.sum(F.floor(dev * dev * _QG)) / _QG)
+            grid_sum(dev * dev)
             / F.col("_ws").cast("double")
         ).alias("_s"),
     )
     per_ws = (
         per_blk.filter(F.col("_s") > 0)
         .groupBy("grp", "_ws")
-        .agg(
-            (
-                F.floor(
-                    F.avg(F.col("_r") / F.col("_s")) * _QG
-                )
-                / _QG
-            ).alias("_rs")
-        )
+        .agg(grid(F.avg(F.col("_r") / F.col("_s"))).alias("_rs"))
         .filter(F.col("_rs") > 0)
     )
     pts = per_ws.select(
@@ -2749,10 +2810,7 @@ def max_drawdown(
     contract — daily rollups — so no skewed global sort). Values
     quantize to the 2^-20 grid first: every max/ratio is then exact
     and engine-identical."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"), F.col(order_col).alias("_o"), v.alias("_v")
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     w = (
         Window.partitionBy("_g")
         .orderBy("_o")
@@ -2796,10 +2854,7 @@ def rsi(
 
     Two windows per series partition (lag + trailing frame); deltas
     are grid-quantized so the frame sums are exact."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"), F.col(order_col).alias("_o"), v.alias("_v")
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     wl = Window.partitionBy("_g").orderBy("_o")
     d = src.withColumn("_d", F.col("_v") - F.lag("_v").over(wl))
     wf = wl.rowsBetween(-(period - 1), 0)
@@ -2850,10 +2905,7 @@ def bollinger(
     2^-20/2^-40 — identical on every engine regardless of frame
     iteration order; sd uses the (Σv² − n·m²)/(n−1) form with the
     SAME operation order in the SQL twin."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"), F.col(order_col).alias("_o"), v.alias("_v")
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     wf = (
         Window.partitionBy("_g")
         .orderBy("_o")
@@ -2901,7 +2953,7 @@ def var_cvar(
     per-group distinct-value prefix window (mood_median convention —
     no approximate percentile, no full sort); CVaR is one fxp-summed
     conditional aggregate against the broadcast per-group cutoffs."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(
         F.col(group_col).alias("_g"), v.alias("_v")
     ).filter(F.col("_v").isNotNull())
@@ -2924,9 +2976,7 @@ def var_cvar(
         .filter(F.col("_v") >= F.col("_var"))
         .groupBy("_g")
         .agg(
-            (
-                F.sum(F.floor(F.col("_v") * F.col("_c") * _Q2)) / _Q2
-            ).alias("_ts"),
+            grid_sum(F.col("_v") * F.col("_c")).alias("_ts"),
             F.sum("_c").alias("_tc"),
         )
     )
@@ -2955,21 +3005,12 @@ def pettitt_test(
     K = max|U_t|, first-argmax position reported, p ≈
     2·exp(−6K²/(n³+n²)).
 
-    Midranks via rank() + (ties−1)/2 inside the series partition
+    Midranks via :func:`row_ranks` inside the series partition
     (bounded series by contract), one running sum, one argmax via
     min(struct) — everything per-partition, exact 0.5-grid rank
     arithmetic."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"), F.col(order_col).alias("_o"), v.alias("_v")
-    ).filter(F.col("_v").isNotNull())
-    wr = Window.partitionBy("_g").orderBy("_v")
-    wt = Window.partitionBy("_g", "_v")
-    mid = src.withColumn(
-        "_r",
-        F.rank().over(wr).cast("double")
-        + (F.count("*").over(wt) - F.lit(1)) / F.lit(2.0),
-    )
+    src = _series(df, group_col, order_col, value_col)
+    mid = row_ranks(src, "_v", ["_g"])
     wo = (
         Window.partitionBy("_g")
         .orderBy("_o")
@@ -3022,26 +3063,23 @@ def _lag1_moments(
     (y_{t-1}, y_t) pairs — the OLS primitive behind the ADF and AR(1)
     operators. Series values grid-quantize first; means grid-floor;
     cross-moment sums floor-quantize (corr_matrix discipline)."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"), F.col(order_col).alias("_o"), v.alias("_v")
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     wl = Window.partitionBy("_g").orderBy("_o")
     pairs = src.withColumn("_x", F.lag("_v").over(wl)).filter(
         F.col("_x").isNotNull()
     )
     m = pairs.groupBy("_g").agg(
         F.count("*").alias("_n"),
-        (F.floor(F.avg("_x") * _Q2) / _Q2).alias("_mx"),
-        (F.floor(F.avg("_v") * _Q2) / _Q2).alias("_my"),
+        grid(F.avg("_x")).alias("_mx"),
+        grid(F.avg("_v")).alias("_my"),
     )
     j = pairs.join(m, "_g")
     dx = F.col("_x") - F.col("_mx")
     dy = F.col("_v") - F.col("_my")
     return j.groupBy("_g", "_n", "_mx", "_my").agg(
-        (F.sum(F.floor(dx * dx * _Q2)) / _Q2).alias("_sxx"),
-        (F.sum(F.floor(dx * dy * _Q2)) / _Q2).alias("_sxy"),
-        (F.sum(F.floor(dy * dy * _Q2)) / _Q2).alias("_syy"),
+        grid_sum(dx * dx).alias("_sxx"),
+        grid_sum(dx * dy).alias("_sxy"),
+        grid_sum(dy * dy).alias("_syy"),
     )
 
 
@@ -3071,7 +3109,7 @@ def adf_test(
         F.col("_sxx") > 0, F.col("_sxy") * F.col("_sxy") / F.col("_sxx")
     ).otherwise(F.lit(0.0))
     s2 = F.when(n > 2, rss / (n - 2.0))
-    se = F.sqrt(s2 / F.col("_sxx"))
+    se = F.when(F.col("_sxx") > 0, F.sqrt(s2 / F.col("_sxx")))
     t = F.when(se > 0, beta / se)
     return m.select(
         F.col("_g").alias(group_col),
@@ -3161,7 +3199,7 @@ def spectral_entropy(
     achieving the max power; peak_frac its share."""
     p = periodogram(df, key_col, ts_col, value_col, bucket, max_k)
     tot = p.groupBy("key").agg(
-        (F.sum(F.floor(F.col("power") * _Q2)) / _Q2).alias("_tot"),
+        grid_sum(F.col("power")).alias("_tot"),
         F.count("*").alias("_k"),
     )
     j = (
@@ -3179,10 +3217,10 @@ def spectral_entropy(
             F.sum(
                 F.when(
                     F.col("_p") > 0,
-                    F.floor(-F.col("_p") * F.log("_p") * _Q2),
+                    F.floor(-F.col("_p") * F.log("_p") * GRID),
                 ).otherwise(F.lit(0.0))
             )
-            / _Q2
+            / GRID
         ).alias("_h"),
         F.max("_p").alias("_pmax"),
         F.min(
@@ -3242,19 +3280,17 @@ def sax_symbols(
     wk = Window.partitionBy("key")
     s = b.select(
         "key",
-        (F.floor(F.col("_x") * _Q2) / _Q2).alias("_x"),
+        grid(F.col("_x")).alias("_x"),
         (F.row_number().over(wo) - 1).alias("_t"),
         F.count("*").over(wk).alias("_n"),
     )
     mom = s.groupBy("key").agg(
         F.min("_n").alias("_n2"),
-        (F.floor(F.avg("_x") * _Q2) / _Q2).alias("_m"),
+        grid(F.avg("_x")).alias("_m"),
     )
     withm = s.join(mom, "key")
     ss = withm.groupBy("key").agg(
-        (
-            F.sum(F.floor((F.col("_x") - F.col("_m")) ** 2 * _Q2)) / _Q2
-        ).alias("_ss"),
+        grid_sum((F.col("_x") - F.col("_m")) ** 2).alias("_ss"),
         F.min("_m").alias("_m"),
         F.min("_n2").alias("_n"),
     )
@@ -3262,7 +3298,10 @@ def sax_symbols(
         s.drop("_n").join(ss, "key")
         .withColumn(
             "_sd",
-            F.sqrt(F.col("_ss") / (F.col("_n").cast("double") - 1.0)),
+            F.when(
+                F.col("_n") > 1,
+                F.sqrt(F.col("_ss") / (F.col("_n").cast("double") - 1.0)),
+            ),
         )
         .withColumn(
             "_z",
@@ -3279,7 +3318,7 @@ def sax_symbols(
         )
     )
     paa = z.groupBy("key", "_seg").agg(
-        (F.floor(F.avg("_z") * _Q2) / _Q2).alias("_pz"),
+        grid(F.avg("_z")).alias("_pz"),
         F.min("_n").alias("_n"),
     )
     b1, b2, b3 = (F.lit(x) for x in _SAX_BREAKS_4)
@@ -3329,12 +3368,8 @@ def croston_profile(
             F.window(F.col(ts_col), bucket).alias("_w"),
         )
         .agg(
-            (
-                F.floor(
-                    F.sum(F.coalesce(F.col(value_col).cast("double"), F.lit(0.0)))
-                    * _Q2
-                )
-                / _Q2
+            grid(
+                F.sum(F.coalesce(F.col(value_col).cast("double"), F.lit(0.0)))
             ).alias("_z")
         )
         .select("key", F.col("_z"))
@@ -3342,18 +3377,9 @@ def croston_profile(
     agg = b.groupBy("key").agg(
         F.count("*").alias("_nb"),
         F.count(F.when(F.col("_z") != 0, 1)).alias("_nz"),
-        (
-            F.sum(F.when(F.col("_z") != 0, F.floor(F.col("_z") * _Q2)))
-            / _Q2
-        ).alias("_sz"),
-        (
-            F.sum(
-                F.when(
-                    F.col("_z") != 0,
-                    F.floor(F.col("_z") * F.col("_z") * _Q2),
-                )
-            )
-            / _Q2
+        grid_sum(F.when(F.col("_z") != 0, F.col("_z"))).alias("_sz"),
+        grid_sum(
+            F.when(F.col("_z") != 0, F.col("_z") * F.col("_z"))
         ).alias("_sz2"),
     )
     nz = F.col("_nz").cast("double")
@@ -3410,7 +3436,7 @@ def ts_features(
         .select(
             "key",
             F.col("_w.start").alias("_b"),
-            (F.floor(F.col("_x0") * _Q2) / _Q2).alias("_v"),
+            grid(F.col("_x0")).alias("_v"),
         )
     )
     wo = Window.partitionBy("key").orderBy("_b")
@@ -3442,8 +3468,8 @@ def ts_features(
     )
     m = s.groupBy("key").agg(
         F.count("*").alias("_n"),
-        (F.floor(F.avg("_v") * _Q2) / _Q2).alias("_mv"),
-        (F.floor(F.avg("_t") * _Q2) / _Q2).alias("_mt"),
+        grid(F.avg("_v")).alias("_mv"),
+        grid(F.avg("_t")).alias("_mt"),
         F.count(
             F.when(
                 F.col("_pr").isNotNull()
@@ -3460,54 +3486,29 @@ def ts_features(
     dv = F.col("_v") - F.col("_mv")
     dt = F.col("_t") - F.col("_mt")
     mom = jm.groupBy("key", "_n", "_mv", "_turns").agg(
-        (F.sum(F.floor(dv * dv * _Q2)) / _Q2).alias("_svv"),
-        (F.sum(F.floor(dt * dt * _Q2)) / _Q2).alias("_stt"),
-        (F.sum(F.floor(dt * dv * _Q2)) / _Q2).alias("_stv"),
+        grid_sum(dv * dv).alias("_svv"),
+        grid_sum(dt * dt).alias("_stt"),
+        grid_sum(dt * dv).alias("_stv"),
     )
     lagm = (
         s.filter(F.col("_pr").isNotNull())
         .groupBy("key")
         .agg(
             F.count("*").alias("_np"),
-            (F.floor(F.avg("_pr") * _Q2) / _Q2).alias("_mx"),
-            (F.floor(F.avg("_v") * _Q2) / _Q2).alias("_my"),
+            grid(F.avg("_pr")).alias("_mx"),
+            grid(F.avg("_v")).alias("_my"),
         )
     )
+    lx = F.col("_pr") - F.col("_mx")
+    ly = F.col("_v") - F.col("_my")
     lagj = (
         s.filter(F.col("_pr").isNotNull())
         .join(lagm, "key")
         .groupBy("key")
         .agg(
-            (
-                F.sum(
-                    F.floor(
-                        (F.col("_pr") - F.col("_mx"))
-                        * (F.col("_pr") - F.col("_mx"))
-                        * _Q2
-                    )
-                )
-                / _Q2
-            ).alias("_lxx"),
-            (
-                F.sum(
-                    F.floor(
-                        (F.col("_v") - F.col("_my"))
-                        * (F.col("_v") - F.col("_my"))
-                        * _Q2
-                    )
-                )
-                / _Q2
-            ).alias("_lyy"),
-            (
-                F.sum(
-                    F.floor(
-                        (F.col("_pr") - F.col("_mx"))
-                        * (F.col("_v") - F.col("_my"))
-                        * _Q2
-                    )
-                )
-                / _Q2
-            ).alias("_lxy"),
+            grid_sum(lx * lx).alias("_lxx"),
+            grid_sum(ly * ly).alias("_lyy"),
+            grid_sum(lx * ly).alias("_lxy"),
         )
     )
     out = mom.join(lagj, "key").join(flat, "key")
@@ -3534,9 +3535,9 @@ def ts_features(
 
 
 # ---------------------------------------------------------------------------
-# Round-13 additions: channel/beta indicators over the existing
-# ``ohlc_bars`` aggregate, plus the seasonal-strength summary of
-# ``seasonal_decompose``.
+# Channel and beta indicators over the gridded ``ohlc_bars`` aggregate,
+# the seasonal-strength summary of ``seasonal_decompose``, control
+# charts, and the EMA / oscillator / volatility indicator tier.
 
 
 def _ohlc_grid(
@@ -3550,7 +3551,7 @@ def _ohlc_grid(
     """:func:`ohlc_bars` with the value column pre-quantized onto the
     2^-20 grid — the indicator operators need exact H/L/C inputs so
     every downstream window sum is engine-identical."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
+    v = grid(F.col(value_col).cast("double"))
     src = df.filter(v.isNotNull()).withColumn("_qv", v)
     return ohlc_bars(src, key_col, ts_col, "_qv", tiebreak_col, bar).select(
         F.col(key_col).alias("key"),
@@ -3600,10 +3601,7 @@ def keltner_channel(
     # iteration order (Spark recomputes frames, DuckDB segment-trees
     # them; only exact terms make the two orders agree)
     typ = (
-        F.floor(
-            (F.col("high") + F.col("low") + F.col("close")) / 3.0 * _Q2
-        )
-        / _Q2
+        grid((F.col("high") + F.col("low") + F.col("close")) / 3.0)
     )
     lt = bars.withColumn("_tr", tr).withColumn("_typ", typ)
     wf = w.rowsBetween(-(period - 1), 0)
@@ -3698,8 +3696,8 @@ def rolling_beta(
     Both columns grid-quantize; the frame's Σx, Σy, Σxy, Σx², Σy²
     are exact sums of grid products, so cov/var/corr are
     engine-identical IEEE expressions of exact integers."""
-    qv = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    qm = F.floor(F.col(market_col).cast("double") * _Q2) / _Q2
+    qv = grid(F.col(value_col).cast("double"))
+    qm = grid(F.col(market_col).cast("double"))
     src = df.select(
         F.col(group_col).alias("_g"),
         F.col(order_col).alias("_o"),
@@ -3715,14 +3713,13 @@ def rolling_beta(
     # at metric scale — floor each product back onto the 2^-20 grid
     # so the frame sums are exact integers (order-independent across
     # engines' differing frame-iteration strategies)
-    fq = lambda e: F.sum(F.floor(e * _Q2)).over(wf) / _Q2  # noqa: E731
     out = (
         src.withColumn("_cnt", F.count("_v").over(wf))
         .withColumn("_sv", F.sum("_v").over(wf))
         .withColumn("_sm", F.sum("_m").over(wf))
-        .withColumn("_svm", fq(F.col("_v") * F.col("_m")))
-        .withColumn("_smm", fq(F.col("_m") * F.col("_m")))
-        .withColumn("_svv", fq(F.col("_v") * F.col("_v")))
+        .withColumn("_svm", grid_sum(F.col("_v") * F.col("_m"), over=wf))
+        .withColumn("_smm", grid_sum(F.col("_m") * F.col("_m"), over=wf))
+        .withColumn("_svv", grid_sum(F.col("_v") * F.col("_v"), over=wf))
     )
     n = F.col("_cnt").cast("double")
     cov = F.col("_svm") - F.col("_sv") * F.col("_sm") / n
@@ -3764,29 +3761,27 @@ def seasonal_strength(
     dec = seasonal_decompose(
         df, key_col, ts_col, value_col, bucket, period
     ).filter(F.col("trend").isNotNull())
-    g = lambda c: F.floor(c * _Q2) / _Q2  # noqa: E731
     src = dec.select(
         "key",
-        g(F.col("resid")).alias("_r"),
-        g(F.col("y") - F.col("trend")).alias("_dt"),
-        g(F.col("y") - F.col("seasonal")).alias("_ds"),
+        grid(F.col("resid")).alias("_r"),
+        grid(F.col("y") - F.col("trend")).alias("_dt"),
+        grid(F.col("y") - F.col("seasonal")).alias("_ds"),
     )
     m = src.groupBy("key").agg(
         F.count("*").alias("_n"),
-        g(F.avg("_r")).alias("_mr"),
-        g(F.avg("_dt")).alias("_mdt"),
-        g(F.avg("_ds")).alias("_mds"),
+        grid(F.avg("_r")).alias("_mr"),
+        grid(F.avg("_dt")).alias("_mdt"),
+        grid(F.avg("_ds")).alias("_mds"),
     )
     c = src.join(F.broadcast(m), "key")
-    fx = lambda e: F.sum(F.floor(e * _Q2)) / _Q2  # noqa: E731
     agg = c.groupBy("key", "_n").agg(
-        fx((F.col("_r") - F.col("_mr")) * (F.col("_r") - F.col("_mr"))).alias(
-            "_vr"
-        ),
-        fx(
+        grid_sum(
+            (F.col("_r") - F.col("_mr")) * (F.col("_r") - F.col("_mr"))
+        ).alias("_vr"),
+        grid_sum(
             (F.col("_dt") - F.col("_mdt")) * (F.col("_dt") - F.col("_mdt"))
         ).alias("_vdt"),
-        fx(
+        grid_sum(
             (F.col("_ds") - F.col("_mds")) * (F.col("_ds") - F.col("_mds"))
         ).alias("_vds"),
     )
@@ -3829,7 +3824,7 @@ def imr_chart(
     ranges land on the 2^-20 grid (differences of grid values), so
     every mean is an exact sum divided once."""
     w = Window.partitionBy("key").orderBy("_ts", "_tb")
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(
         F.col(key_col).alias("key"),
         F.col(ts_col).alias("_ts"),
@@ -3839,8 +3834,8 @@ def imr_chart(
     lagged = src.withColumn("_mr", F.abs(F.col("_v") - F.lag("_v").over(w)))
     m = lagged.groupBy("key").agg(
         F.count("*").alias("_n"),
-        (F.floor(F.avg("_v") * _Q2) / _Q2).alias("_c"),
-        (F.floor(F.avg("_mr") * _Q2) / _Q2).alias("_mrb"),
+        grid(F.avg("_v")).alias("_c"),
+        grid(F.avg("_mr")).alias("_mrb"),
     )
     ucl = F.col("_c") + F.lit(2.66) * F.col("_mrb")
     lcl = F.col("_c") - F.lit(2.66) * F.col("_mrb")
@@ -3888,10 +3883,11 @@ def ccf(
     Per lag: pairwise-complete rows, grid-floored means, floored
     cross sums — every correlation is engine-exact before the 6dp
     round."""
-    q = lambda c: F.floor(F.col(c).cast("double") * _Q2) / _Q2  # noqa: E731
     w = Window.orderBy(ts_col)
     src = df.select(
-        F.col(ts_col), q(x_col).alias("_x"), q(y_col).alias("_y")
+        F.col(ts_col),
+        grid(F.col(x_col).cast("double")).alias("_x"),
+        grid(F.col(y_col).cast("double")).alias("_y"),
     )
     for k in range(1, max_lag + 1):
         src = src.withColumn(f"_x{k}", F.lag("_x", k).over(w))
@@ -3901,17 +3897,16 @@ def ccf(
         rows = src.filter(xk.isNotNull() & F.col("_y").isNotNull())
         m = rows.agg(
             F.count("*").alias("_n"),
-            (F.floor(F.avg(xk) * _Q2) / _Q2).alias("_mx"),
-            (F.floor(F.avg("_y") * _Q2) / _Q2).alias("_my"),
+            grid(F.avg(xk)).alias("_mx"),
+            grid(F.avg("_y")).alias("_my"),
         )
         c = rows.crossJoin(F.broadcast(m))
         dx = xk - F.col("_mx")
         dy = F.col("_y") - F.col("_my")
-        fx = lambda e: F.sum(F.floor(e * _Q2)) / _Q2  # noqa: E731
         s = c.groupBy("_n").agg(
-            fx(dx * dx).alias("_sxx"),
-            fx(dy * dy).alias("_syy"),
-            fx(dx * dy).alias("_sxy"),
+            grid_sum(dx * dx).alias("_sxx"),
+            grid_sum(dy * dy).alias("_syy"),
+            grid_sum(dx * dy).alias("_sxy"),
         )
         r = F.when(
             (F.col("_sxx") > 0) & (F.col("_syy") > 0),
@@ -4004,7 +3999,7 @@ def hampel_outliers(
     (≤ window+1)-element arrays — tiny interpreted transforms over
     bounded arrays, never over the corpus. Engine-exact: grid values,
     half-grid medians, IEEE thresholds of exact inputs."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(
         F.col(key_col).alias("key"),
         F.col(ts_col).alias("_ts"),
@@ -4119,16 +4114,11 @@ def sortino_ratio(
     grid-quantized (2^-20), so every sum of returns and of squared
     downside is an exact multiple of 2^-20/2^-40 far below the 2^53
     mantissa — order-free exact, any engine."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     wl = Window.partitionBy("_g").orderBy("_o")
     prev = F.lag("_v").over(wl)
     r = F.when(
-        prev > 0, F.floor((F.col("_v") - prev) / prev * _Q2) / _Q2
+        prev > 0, grid((F.col("_v") - prev) / prev)
     )
     t = src.withColumn("_r", r).filter(F.col("_r").isNotNull())
     ex = F.col("_r") - F.lit(float(target))
@@ -4161,64 +4151,28 @@ def macd(
 ) -> DataFrame:
     """MACD per series point → (group, order, macd, signal, histogram):
     EMA(fast) − EMA(slow) of the value, with the signal line an
-    EMA(signal) of the MACD itself. EMAs are the standard full-prefix
-    recursion e_t = αx_t + (1−α)e_{t−1} seeded at x_1, UNROLLED into a
-    left-to-right weighted fold over the prefix frame — series are
-    bounded buckets by contract (daily rollups), so the prefix arrays
-    are small and the JVM-side fold — interpreted, as all HOF lambdas
-    are — stays cheap and replayable by any engine
-    with list lambdas (same discipline as ``ewma_smooth``); the
-    recursion itself would serialize the series AND resist SQL replay.
+    EMA(signal) of the MACD itself. Each EMA is :func:`_ema_fold` over
+    the full prefix frame — series are bounded buckets by contract
+    (daily rollups), so the prefix arrays are small and the JVM-side
+    fold — interpreted, as all HOF lambdas are — stays cheap.
     """
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     wp = (
         Window.partitionBy("_g")
         .orderBy("_o")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-
-    def ema_fold(alpha):
-        a, d = float(alpha), 1.0 - float(alpha)
-
-        def fold(l):
-            n = F.size(l)
-            return F.aggregate(
-                F.transform(
-                    l,
-                    lambda x, i: x.cast("double")
-                    * F.when(i == 0, F.pow(F.lit(d), (n - 1).cast("double")))
-                    .otherwise(
-                        F.lit(a)
-                        * F.pow(F.lit(d), (n - 1 - i).cast("double"))
-                    ),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        return fold
-
     frame = F.collect_list("_v").over(wp)
     t = src.select(
         "_g",
         "_o",
-        let_bind(frame, ema_fold(2.0 / (fast + 1.0))).alias("_ef"),
-        let_bind(frame, ema_fold(2.0 / (slow + 1.0))).alias("_es"),
+        let_bind(frame, _ema_fold(2.0 / (fast + 1.0))).alias("_ef"),
+        let_bind(frame, _ema_fold(2.0 / (slow + 1.0))).alias("_es"),
     )
     t = t.withColumn("_macd", F.col("_ef") - F.col("_es"))
-    mframe = F.collect_list("_macd").over(
-        Window.partitionBy("_g")
-        .orderBy("_o")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    mframe = F.collect_list("_macd").over(wp)
     t = t.withColumn(
-        "_sig", let_bind(mframe, ema_fold(2.0 / (signal + 1.0)))
+        "_sig", let_bind(mframe, _ema_fold(2.0 / (signal + 1.0)))
     )
     return t.select(
         F.col("_g").alias(group_col),
@@ -4243,12 +4197,7 @@ def stochastic_oscillator(
     the ``d_period``-point SMA of %K (NULL until fully warmed). Two
     keyed window frames over grid values — min/max are exact, %K is
     one IEEE ratio of exact inputs."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     wk = (
         Window.partitionBy("_g")
         .orderBy("_o")
@@ -4299,7 +4248,7 @@ def obv(
     'is volume confirming the trend' accumulator. Grid values make
     every direction comparison exact; volumes are integer counts, so
     the running sum is exact integer arithmetic."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(
         F.col(group_col).alias("_g"),
         F.col(order_col).alias("_o"),
@@ -4337,12 +4286,7 @@ def ulcer_index(
     water, not just the worst dip. Grid values make each drawdown an
     IEEE ratio of exact inputs; the squared-drawdown sum accumulates
     on the 2^-20 grid in decimal(38,0), order-free exact."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     w = (
         Window.partitionBy("_g")
         .orderBy("_o")
@@ -4357,14 +4301,7 @@ def ulcer_index(
     agg = t.groupBy("_g").agg(
         F.count("*").alias("_n"),
         F.max("_dd").alias("_mx"),
-        (
-            F.sum(
-                F.floor(F.col("_dd") * F.col("_dd") * _Q2).cast(
-                    "decimal(38,0)"
-                )
-            ).cast("double")
-            / _Q2
-        ).alias("_sq"),
+        grid_sum128(F.col("_dd") * F.col("_dd")).alias("_sq"),
     )
     return agg.select(
         F.col("_g").alias(group_col),
@@ -4404,14 +4341,8 @@ def garman_klass(
     t = ok.withColumn("_t", term)
     agg = t.groupBy(key_col).agg(
         F.count("*").alias("_n"),
-        (
-            F.sum(
-                F.floor(F.col("_t") * _Q2 * 1048576.0).cast(
-                    "decimal(38,0)"
-                )
-            ).cast("double")
-            / (_Q2 * 1048576.0)
-        ).alias("_s"),
+        # the 2^-40 grid: the log-ratio terms are ~1e-4
+        grid_sum128(F.col("_t"), GRID * GRID).alias("_s"),
     )
     var = F.col("_s") / F.col("_n").cast("double")
     return agg.select(
@@ -4437,12 +4368,7 @@ def permutation_entropy(
     (ties collapse deterministically toward the earlier index); the
     pattern table is ≤ 8 cells, every probability an exact integer
     ratio."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     wl = Window.partitionBy("_g").orderBy("_o")
     t = src.select(
         "_g",
@@ -4494,14 +4420,9 @@ def kpss_test(
     0.463. Demeaned values sit on the exact 2^-20 grid (grid-floored
     mean), partial sums stay exact; Σ S² and the autocovariance sums
     accumulate grid-floored in decimal, order-free."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     m = src.groupBy("_g").agg(
-        (F.floor(F.avg("_v") * _Q2) / _Q2).alias("_m"),
+        grid(F.avg("_v")).alias("_m"),
         F.count("*").alias("_n"),
     )
     t = src.join(F.broadcast(m), "_g").withColumn(
@@ -4513,28 +4434,21 @@ def kpss_test(
     lagged = [F.lag("_e", ell).over(wl).alias(f"_e{ell}") for ell in
               range(1, lags + 1)]
     t = t.select("_g", "_n", "_e", "_s", *lagged)
-    dec = "decimal(38,0)"
     # 2^30 grid: fine enough that the ≤2^-30-per-term floor loss is
     # invisible under the 1e-6 output rounding, coarse enough that
     # floor(S_t² · 2^30) stays inside the long range for partial sums
     # of price-scale series (S_t ≤ n·|e|max).
     q2 = float(1 << 30)
-
-    def fsum(e):
-        return F.sum(F.floor(e * q2).cast(dec)).cast("double") / q2
-
     aggs = [
         F.max("_n").alias("_nn"),
-        fsum(F.col("_s") * F.col("_s")).alias("_ss2"),
-        fsum(F.col("_e") * F.col("_e")).alias("_g0"),
+        grid_sum128(F.col("_s") * F.col("_s"), q2).alias("_ss2"),
+        grid_sum128(F.col("_e") * F.col("_e"), q2).alias("_g0"),
     ]
     for ell in range(1, lags + 1):
+        e_l = F.col(f"_e{ell}")
         aggs.append(
-            fsum(
-                F.when(
-                    F.col(f"_e{ell}").isNotNull(),
-                    F.col("_e") * F.col(f"_e{ell}"),
-                )
+            grid_sum128(
+                F.when(e_l.isNotNull(), F.col("_e") * e_l), q2
             ).alias(f"_g{ell}")
         )
     agg = t.groupBy("_g").agg(*aggs)
@@ -4568,7 +4482,7 @@ def amihud_illiquidity(
     each |r|/vol is an IEEE ratio of exact inputs; the mean
     accumulates the ×10⁶-scaled terms grid-floored in decimal,
     order-free exact."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(
         F.col(group_col).alias("_g"),
         F.col(order_col).alias("_o"),
@@ -4578,16 +4492,12 @@ def amihud_illiquidity(
     wl = Window.partitionBy("_g").orderBy("_o")
     prev = F.lag("_v").over(wl)
     r = F.when(
-        prev > 0, F.floor(F.abs(F.col("_v") - prev) / prev * _Q2) / _Q2
+        prev > 0, grid(F.abs(F.col("_v") - prev) / prev)
     )
     t = src.withColumn("_r", r).filter(F.col("_r").isNotNull())
     term = F.col("_r") / F.col("_vol") * 1000000.0
-    dec = "decimal(38,0)"
     agg = t.groupBy("_g").agg(
-        F.count("*").alias("_n"),
-        (
-            F.sum(F.floor(term * _Q2).cast(dec)).cast("double") / _Q2
-        ).alias("_s"),
+        F.count("*").alias("_n"), grid_sum128(term).alias("_s")
     )
     return agg.select(
         F.col("_g").alias(group_col),
@@ -4613,14 +4523,7 @@ def cci(
     folds (the ``ewma_smooth`` discipline); NULL until the window
     fills. Callers pass the typical price ((H+L+C)/3 off
     ``ohlc_bars``) or any bounded series."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     w = (
         Window.partitionBy("_g")
         .orderBy("_o")
@@ -4666,7 +4569,7 @@ def mfi(
     one side is empty, 50 on an all-flat window. Grid prices × integer
     volumes keep every flow an exact 2^-20 multiple; the frame sums
     are window-ordered and exact."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(
         F.col(group_col).alias("_g"),
         F.col(order_col).alias("_o"),
@@ -4721,12 +4624,7 @@ def tracking_signal(
     unbiased forecast oscillates near 0). Naive forecast = previous
     value; errors are exact grid differences, both sums order-free
     exact."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     wl = Window.partitionBy("_g").orderBy("_o")
     e = F.col("_v") - F.lag("_v").over(wl)
     t = src.withColumn("_e", e).filter(F.col("_e").isNotNull())
@@ -4860,24 +4758,17 @@ def ewma_chart(
     miss. The recursion unrolls into one prefix fold per row (the
     ``macd`` discipline); the time-varying limit factor is exact
     arithmetic of the row index."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
     lam = float(lam)
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(key_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, key_col, order_col, value_col)
     wl = Window.partitionBy("_g").orderBy("_o")
     stats = src.groupBy("_g").agg(
-        (F.floor(F.avg("_v") * _Q2) / _Q2).alias("_c"),
+        grid(F.avg("_v")).alias("_c"),
         F.count("*").alias("_n"),
     )
     mr = src.withColumn(
         "_mr", F.abs(F.col("_v") - F.lag("_v").over(wl))
     ).groupBy("_g").agg(
-        (F.floor(F.avg("_mr") * _Q2) / _Q2).alias("_mrb")
+        grid(F.avg("_mr")).alias("_mrb")
     )
     base = stats.join(mr, "_g")
     t = src.join(F.broadcast(base), "_g")
@@ -5019,18 +4910,14 @@ def heikin_ashi(
     prefix fold over the bounded bar series (2^{1−t}·seed +
     Σ 2^{i−t}·ha_closeᵢ — the ``macd`` discipline), a bounded
     JVM-side interpreted fold."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
     bars = ohlc_bars(df, key_col, ts_col, value_col, tiebreak_col, bar)
-    q = _Q2
-    g = lambda c: F.floor(F.col(c).cast("double") * q) / q  # noqa: E731
     b = bars.select(
         F.col(key_col).alias("_g"),
         F.col("bar_start").alias("_d"),
-        g("open").alias("_o"),
-        g("high").alias("_h"),
-        g("low").alias("_l"),
-        g("close").alias("_c"),
+        grid(F.col("open").cast("double")).alias("_o"),
+        grid(F.col("high").cast("double")).alias("_h"),
+        grid(F.col("low").cast("double")).alias("_l"),
+        grid(F.col("close").cast("double")).alias("_c"),
     )
     hac = (F.col("_o") + F.col("_h") + F.col("_l") + F.col("_c")) / 4.0
     b = b.withColumn("_hac", hac)
@@ -5070,8 +4957,8 @@ def heikin_ashi(
 
 
 # ---------------------------------------------------------------------------
-# Round-15 additions: indicator + forecasting + anomaly tier over the
-# shared bounded-series / OHLC-bar machinery.
+# Trend and money-flow indicators, theta forecasting and seasonal ESD
+# anomalies over the shared bounded-series / OHLC-bar machinery.
 
 
 def aroon(
@@ -5092,12 +4979,7 @@ def aroon(
     aggregates (both engines order structs field-by-field), so bars-
     since is exact integer arithmetic — no self-join, no sort beyond
     the keyed window."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     wo = Window.partitionBy("_g").orderBy("_o")
     t = src.withColumn("_i", F.row_number().over(wo).cast("long"))
     wf = (
@@ -5156,7 +5038,7 @@ def chaikin_money_flow(
     mfm = F.when(h > lo, ((c - lo) - (h - c)) / (h - lo)).otherwise(
         F.lit(0.0)
     )
-    mfv = F.floor(mfm * F.col("volume").cast("double") * _Q2) / _Q2
+    mfv = grid(mfm * F.col("volume").cast("double"))
     t = bars.select(
         F.col(key_col).alias("_k"),
         F.col("bar_start").alias("_b"),
@@ -5170,7 +5052,7 @@ def chaikin_money_flow(
     )
     cmf = F.when(
         F.count("*").over(w) >= period,
-        (F.sum(F.col("_mfv") * _Q2).over(w) / _Q2)
+        (F.sum(F.col("_mfv") * GRID).over(w) / GRID)
         / F.sum("_vol").over(w).cast("double"),
     )
     return t.select(
@@ -5212,15 +5094,14 @@ def vortex_indicator(
         F.lag("_l").over(wo).alias("_pl"),
         F.lag("_c").over(wo).alias("_pc"),
     )
-    q = lambda x: F.floor(x * _Q2) / _Q2  # noqa: E731
-    vmp = q(F.abs(F.col("_h") - F.col("_pl")))
-    vmm = q(F.abs(F.col("_l") - F.col("_ph")))
+    vmp = grid(F.abs(F.col("_h") - F.col("_pl")))
+    vmm = grid(F.abs(F.col("_l") - F.col("_ph")))
     # greatest() SKIPS nulls, so the first bar would get a TR with no
     # VM terms and the warm-up ratio would mix 4 VM over 5 TR — gate
     # TR on the previous close explicitly
     tr = F.when(
         F.col("_pc").isNotNull(),
-        q(
+        grid(
             F.greatest(
                 F.col("_h") - F.col("_l"),
                 F.abs(F.col("_h") - F.col("_pc")),
@@ -5237,14 +5118,14 @@ def vortex_indicator(
         .rowsBetween(-(period - 1), 0)
     )
     ok = F.count("_tr").over(w) >= period
-    str_ = F.sum(F.col("_tr") * _Q2).over(w) / _Q2
+    str_ = F.sum(F.col("_tr") * GRID).over(w) / GRID
     vip = F.when(
         ok & (str_ > 0),
-        (F.sum(F.col("_vmp") * _Q2).over(w) / _Q2) / str_,
+        (F.sum(F.col("_vmp") * GRID).over(w) / GRID) / str_,
     )
     vim = F.when(
         ok & (str_ > 0),
-        (F.sum(F.col("_vmm") * _Q2).over(w) / _Q2) / str_,
+        (F.sum(F.col("_vmm") * GRID).over(w) / GRID) / str_,
     )
     return t.select(
         F.col("_k").alias(key_col),
@@ -5279,8 +5160,6 @@ def supertrend(
     ever selects/compares gridded values — zero accumulation drift,
     so any engine with list lambdas replays it bit-for-bit. NULL
     until the first post-warm-up bar."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
     bars = ohlc_bars(df, key_col, ts_col, value_col, tiebreak_col, bar)
     t = bars.select(
         F.col(key_col).alias("_k"),
@@ -5291,14 +5170,13 @@ def supertrend(
     )
     wo = Window.partitionBy("_k").orderBy("_b")
     pc = F.lag("_c").over(wo)
-    tr = F.floor(
+    tr = grid(
         F.greatest(
             F.col("_h") - F.col("_l"),
             F.coalesce(F.abs(F.col("_h") - pc), F.col("_h") - F.col("_l")),
             F.coalesce(F.abs(F.col("_l") - pc), F.col("_h") - F.col("_l")),
         )
-        * _Q2
-    ) / _Q2
+    )
     t = t.withColumn("_tr", tr)
     wp = (
         Window.partitionBy("_k")
@@ -5307,23 +5185,21 @@ def supertrend(
     )
     atr = F.when(
         F.count("_tr").over(wp) >= period,
-        F.floor(
-            (F.sum(F.col("_tr") * _Q2).over(wp) / _Q2)
+        grid(
+            (F.sum(F.col("_tr") * GRID).over(wp) / GRID)
             / F.lit(float(period))
-            * _Q2
-        )
-        / _Q2,
+        ),
     )
     hl2 = (F.col("_h") + F.col("_l")) / 2.0
-    bu = F.floor((hl2 + F.lit(float(mult)) * F.col("_atr")) * _Q2) / _Q2
-    bl = F.floor((hl2 - F.lit(float(mult)) * F.col("_atr")) * _Q2) / _Q2
+    bu = grid(hl2 + F.lit(float(mult)) * F.col("_atr"))
+    bl = grid(hl2 - F.lit(float(mult)) * F.col("_atr"))
     t = t.withColumn("_atr", atr)
     elem = F.when(
         F.col("_atr").isNotNull(),
         F.struct(
             bu.alias("bu"),
             bl.alias("bl"),
-            (F.floor(F.col("_c") * _Q2) / _Q2).alias("cq"),
+            grid(F.col("_c")).alias("cq"),
         ),
     )
     t = t.withColumn("_e", elem)
@@ -5433,27 +5309,17 @@ def theta_forecast(
     ŷ_{n+h} = ½(a + b(n+h)) + ½·SES_n(z).
 
     Two passes: grid-exact OLS sums (t = 1..n by row_number), then
-    the SES recursion unrolled as one weighted fold over the sorted
-    per-series array (the ``macd`` discipline — bounded series by
-    contract)."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    the SES recursion as one :func:`_ema_fold` over the sorted
+    per-series array (bounded series by contract)."""
+    src = _series(df, group_col, order_col, value_col)
     wo = Window.partitionBy("_g").orderBy("_o")
     t = src.withColumn("_t", F.row_number().over(wo).cast("double"))
     agg = t.groupBy("_g").agg(
         F.count("*").alias("_n"),
-        (F.sum(F.col("_v") * _Q2) / _Q2).alias("_sv"),
+        (F.sum(F.col("_v") * GRID) / GRID).alias("_sv"),
         F.sum("_t").alias("_st"),
         F.sum(F.col("_t") * F.col("_t")).alias("_st2"),
-        (F.sum(F.floor(F.col("_t") * F.col("_v") * _Q2)) / _Q2).alias(
-            "_stv"
-        ),
+        grid_sum(F.col("_t") * F.col("_v")).alias("_stv"),
         F.sort_array(
             F.collect_list(F.struct(F.col("_t"), F.col("_v")))
         ).alias("_arr"),
@@ -5466,29 +5332,10 @@ def theta_forecast(
     agg = agg.select(
         "_g", "_n", "_arr", a.alias("_a"), b.alias("_b")
     )
-    al, de = float(alpha), 1.0 - float(alpha)
-
-    def ses(l):
-        # z_i = 2v_i - (a + b t_i); SES_n = Σ w_i z_i with
-        # w_1 = (1-α)^{n-1}, w_i = α(1-α)^{n-i}
-        nn = F.size(l)
-        return F.aggregate(
-            F.transform(
-                l,
-                lambda x, i: (
-                    2.0 * x["_v"]
-                    - (F.col("_a") + F.col("_b") * x["_t"])
-                )
-                * F.when(
-                    i == 0, F.pow(F.lit(de), (nn - 1).cast("double"))
-                ).otherwise(
-                    F.lit(al) * F.pow(F.lit(de), (nn - 1 - i).cast("double"))
-                ),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
+    # SES of z_i = 2v_i − (a + b·t_i)
+    ses = _ema_fold(
+        alpha, lambda x: 2.0 * x["_v"] - (F.col("_a") + F.col("_b") * x["_t"])
+    )
     agg = agg.withColumn("_ses", let_bind(F.col("_arr"), ses))
     trend = F.col("_a") + F.col("_b") * (n + float(h))
     fc = 0.5 * trend + 0.5 * F.col("_ses")
@@ -5525,7 +5372,7 @@ def seasonal_esd(
     lexicographic max_by pick + anti-join removal), the ``k_truss``
     unrolled-program discipline; medians are exact order statistics
     of bounded per-(g, weekday) arrays."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
+    v = grid(F.col(value_col).cast("double"))
     src = df.select(
         F.col(group_col).alias("_g"),
         F.col(date_col).alias("_d"),
@@ -5546,7 +5393,7 @@ def seasonal_esd(
     )
     # residual = v − seasonal − level with seasonal = med_weekday − med
     # and level = med: the overall-median terms cancel to v − med_wd
-    r = F.floor((F.col("_v") - F.col("_mw")) * _Q2) / _Q2
+    r = grid(F.col("_v") - F.col("_mw"))
     cur = t.select("_g", "_d", "_v", r.alias("_r")).localCheckpoint(
         eager=True
     )
@@ -5554,10 +5401,8 @@ def seasonal_esd(
     for rnd, lam in enumerate(lambdas):
         m = cur.groupBy("_g").agg(
             F.count("*").alias("_n"),
-            (F.sum(F.col("_r") * _Q2) / _Q2).alias("_s1"),
-            (F.sum(F.floor(F.col("_r") * F.col("_r") * _Q2)) / _Q2).alias(
-                "_s2"
-            ),
+            (F.sum(F.col("_r") * GRID) / GRID).alias("_s1"),
+            grid_sum(F.col("_r") * F.col("_r")).alias("_s2"),
         )
         nn = F.col("_n").cast("double")
         mean = F.col("_s1") / nn
@@ -5613,9 +5458,9 @@ def seasonal_esd(
 
 
 # ---------------------------------------------------------------------------
-# Round-15 QUEUE additions (r16-window candidates): forecast accuracy,
-# volatility diagnostics, event-gap control, and the indicator tier
-# completion — all on the shared bounded-series / OHLC machinery.
+# Forecast accuracy, volatility diagnostics, event-gap control, the
+# remaining indicators (KAMA, TRIX, Ichimoku, Coppock, Elder ray, SAR)
+# and the fixed-length periodogram.
 
 
 def theil_u(
@@ -5632,12 +5477,7 @@ def theil_u(
     today', the question ``tracking_signal`` never answers). All
     ratio terms grid-floored (2^-20) before their sums; warm-up rows
     excluded from both numerator and denominator identically."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     wl = Window.partitionBy("_g").orderBy("_o")
     prev = F.lag("_v").over(wl)
     wp = (
@@ -5647,45 +5487,27 @@ def theil_u(
     )
     fc = F.when(
         F.count("_v").over(wp) >= sma_period,
-        F.floor(
-            F.sum(F.col("_v") * _Q2).over(wp)
+        grid(
+            F.sum(F.col("_v") * GRID).over(wp)
             / F.lit(float(sma_period))
-            / _Q2
-            * _Q2
-        )
-        / _Q2,
+            / GRID
+        ),
     )
     t = src.select(
         "_g", "_o", "_v", prev.alias("_p"), fc.alias("_f")
     ).filter(F.col("_p").isNotNull() & (F.col("_p") != 0))
-    q = lambda x: F.floor(x * _Q2) / _Q2  # noqa: E731
-    naive_e = q((F.col("_v") - F.col("_p")) / F.col("_p"))
-    fc_e = q((F.col("_f") - F.col("_v")) / F.col("_p"))
+    naive_e = grid((F.col("_v") - F.col("_p")) / F.col("_p"))
+    fc_e = grid((F.col("_f") - F.col("_v")) / F.col("_p"))
     ok = F.col("_f").isNotNull()
     agg = t.groupBy("_g").agg(
         F.count("*").alias("_n"),
-        (F.sum(F.floor(naive_e * naive_e * _Q2)) / _Q2).alias("_sn"),
-        (
-            F.sum(F.when(ok, F.floor(fc_e * fc_e * _Q2))) / _Q2
-        ).alias("_sf"),
-        (
-            F.sum(F.when(ok, F.floor(naive_e * naive_e * _Q2))) / _Q2
-        ).alias("_snf"),
-        (F.sum(F.floor(F.col("_v") * F.col("_v") * _Q2)) / _Q2).alias(
-            "_sv2"
-        ),
-        (F.sum(F.floor(F.col("_p") * F.col("_p") * _Q2)) / _Q2).alias(
-            "_sp2"
-        ),
-        (
-            F.sum(
-                F.floor(
-                    (F.col("_v") - F.col("_p"))
-                    * (F.col("_v") - F.col("_p"))
-                    * _Q2
-                )
-            )
-            / _Q2
+        grid_sum(naive_e * naive_e).alias("_sn"),
+        grid_sum(F.when(ok, fc_e * fc_e)).alias("_sf"),
+        grid_sum(F.when(ok, naive_e * naive_e)).alias("_snf"),
+        grid_sum(F.col("_v") * F.col("_v")).alias("_sv2"),
+        grid_sum(F.col("_p") * F.col("_p")).alias("_sp2"),
+        grid_sum(
+            (F.col("_v") - F.col("_p")) * (F.col("_v") - F.col("_p"))
         ).alias("_sd2"),
     )
     n = F.col("_n").cast("double")
@@ -5713,24 +5535,19 @@ def arch_lm(
     ``ljung_box`` asks of LEVELS. Lag-1 contract documented (the
     closed-form simple-regression R² keeps every moment a grid-exact
     sum; multi-lag needs a matrix solve)."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     wl = Window.partitionBy("_g").orderBy("_o")
     prev = F.lag("_v").over(wl)
     r = F.when(
         prev.isNotNull() & (prev != 0),
-        F.floor((F.col("_v") - prev) / prev * _Q2) / _Q2,
+        grid((F.col("_v") - prev) / prev),
     )
     t = src.select("_g", "_o", (r * r).alias("_r2"))
     t = t.select(
         "_g",
         "_o",
-        F.floor(F.col("_r2") * _Q2).alias("_yq"),
-        F.floor(F.lag("_r2").over(wl) * _Q2).alias("_xq"),
+        F.floor(F.col("_r2") * GRID).alias("_yq"),
+        F.floor(F.lag("_r2").over(wl) * GRID).alias("_xq"),
     )
     t = t.filter(F.col("_yq").isNotNull() & F.col("_xq").isNotNull())
     # regress on the INTEGER grid units themselves: R² is invariant
@@ -5786,12 +5603,7 @@ def variance_ratio(
     and ``adf_test`` approach through unit roots). Homoskedastic
     z = (VR−1)/√(2(2q−1)(q−1)/(3qn)). Mean-adjusted increments on
     the 2^-20 grid; overlapping q-sums from one trailing window."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     wl = Window.partitionBy("_g").orderBy("_o")
     d = F.when(
         F.lag("_v").over(wl).isNotNull(),
@@ -5809,21 +5621,17 @@ def variance_ratio(
         "_d",
         F.when(
             F.count("_d").over(wq) >= q,
-            F.sum(F.col("_d") * _Q2).over(wq) / _Q2,
+            F.sum(F.col("_d") * GRID).over(wq) / GRID,
         ).alias("_dq"),
     )
     agg = t.groupBy("_g").agg(
         F.count("_d").alias("_n"),
-        (F.sum(F.col("_d") * _Q2) / _Q2).alias("_sd"),
-        (F.sum(F.floor(F.col("_d") * F.col("_d") * _Q2)) / _Q2).alias(
-            "_sd2"
-        ),
+        (F.sum(F.col("_d") * GRID) / GRID).alias("_sd"),
+        grid_sum(F.col("_d") * F.col("_d")).alias("_sd2"),
         F.count("_dq").alias("_nq"),
-        (F.sum(F.when(F.col("_dq").isNotNull(), F.col("_dq") * _Q2))
-         / _Q2).alias("_sq"),
-        (
-            F.sum(F.floor(F.col("_dq") * F.col("_dq") * _Q2)) / _Q2
-        ).alias("_sq2"),
+        (F.sum(F.when(F.col("_dq").isNotNull(), F.col("_dq") * GRID))
+         / GRID).alias("_sq"),
+        grid_sum(F.col("_dq") * F.col("_dq")).alias("_sq2"),
     )
     n = F.col("_n").cast("double")
     nq = F.col("_nq").cast("double")
@@ -5916,13 +5724,12 @@ def ultimate_oscillator(
     )
     wo = Window.partitionBy("_k").orderBy("_b")
     pc = F.lag("_c").over(wo)
-    q = lambda x: F.floor(x * _Q2) / _Q2  # noqa: E731
     bp = F.when(
-        pc.isNotNull(), q(F.col("_c") - F.least(F.col("_l"), pc))
+        pc.isNotNull(), grid(F.col("_c") - F.least(F.col("_l"), pc))
     )
     tr = F.when(
         pc.isNotNull(),
-        q(F.greatest(F.col("_h"), pc) - F.least(F.col("_l"), pc)),
+        grid(F.greatest(F.col("_h"), pc) - F.least(F.col("_l"), pc)),
     )
     t = t.select("_k", "_b", bp.alias("_bp"), tr.alias("_tr"))
 
@@ -5930,10 +5737,10 @@ def ultimate_oscillator(
         wp = (
             Window.partitionBy("_k").orderBy("_b").rowsBetween(-(p - 1), 0)
         )
-        s_tr = F.sum(F.col("_tr") * _Q2).over(wp) / _Q2
+        s_tr = F.sum(F.col("_tr") * GRID).over(wp) / GRID
         return F.when(
             (F.count("_tr").over(wp) >= p) & (s_tr > 0),
-            (F.sum(F.col("_bp") * _Q2).over(wp) / _Q2) / s_tr,
+            (F.sum(F.col("_bp") * GRID).over(wp) / GRID) / s_tr,
         )
 
     uo = 100.0 * (4.0 * avg_p(p1) + 2.0 * avg_p(p2) + avg_p(p3)) / 7.0
@@ -5963,14 +5770,7 @@ def kama(
     grid-floored first — identical left-to-right IEEE order on every
     engine (the macd discipline); seed = the first ready value.
     NULL during the er_period warm-up."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     wl = Window.partitionBy("_g").orderBy("_o")
     prev = F.lag("_v").over(wl)
     move = F.abs(F.col("_v") - prev)
@@ -5987,7 +5787,7 @@ def kama(
         "_g", "_o", "_v",
         F.when(
             F.count("_m").over(wp) >= er_period,
-            F.sum(F.col("_m") * _Q2).over(wp) / _Q2,
+            F.sum(F.col("_m") * GRID).over(wp) / GRID,
         ).alias("_vol"),
         net.alias("_net"),
     )
@@ -5999,9 +5799,7 @@ def kama(
             F.lit(0.0)
         ),
     )
-    sc = F.floor(
-        (er * (fa - sl) + sl) * (er * (fa - sl) + sl) * _Q2
-    ) / _Q2
+    sc = grid((er * (fa - sl) + sl) * (er * (fa - sl) + sl))
     elem = F.when(
         sc.isNotNull(),
         F.struct(sc.alias("sc"), F.col("_v").alias("v")),
@@ -6043,36 +5841,10 @@ def trix(
     1-period rate of change (×10,000) of a TRIPLE-smoothed EMA — the
     momentum line whose triple pass filters out cycles shorter than
     the period entirely (``macd``'s two EMAs still pass them). Each
-    EMA level is the standard seeded-at-first-value recursion
-    unrolled as a weighted prefix fold (the macd discipline), level
-    feeding level through a collected prefix frame — bounded series
-    by contract."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
-    al = 2.0 / (period + 1.0)
-    de = 1.0 - al
-
-    def ema_fold(l):
-        n = F.size(l)
-        return F.aggregate(
-            F.transform(
-                l,
-                lambda x, i: x.cast("double")
-                * F.when(i == 0, F.pow(F.lit(de), (n - 1).cast("double")))
-                .otherwise(
-                    F.lit(al) * F.pow(F.lit(de), (n - 1 - i).cast("double"))
-                ),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    EMA level is one :func:`_ema_fold` over a collected prefix frame,
+    level feeding level — bounded series by contract."""
+    ema_fold = _ema_fold(2.0 / (period + 1.0))
+    src = _series(df, group_col, order_col, value_col)
     wf = (
         Window.partitionBy("_g")
         .orderBy("_o")
@@ -6174,20 +5946,14 @@ def coppock_curve(
     to too fast. ROCs are grid-floored ratios; the WMA is an exact
     weighted window sum (weights 1..p); NULL until every component
     is warm."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     wl = Window.partitionBy("_g").orderBy("_o")
-    q = lambda x: F.floor(x * _Q2) / _Q2  # noqa: E731
 
     def roc(p):
         pv = F.lag("_v", p).over(wl)
         return F.when(
             pv.isNotNull() & (pv != 0),
-            q(100.0 * (F.col("_v") - pv) / pv),
+            grid(100.0 * (F.col("_v") - pv) / pv),
         )
 
     t = src.select(
@@ -6201,7 +5967,6 @@ def coppock_curve(
         .rowsBetween(-(wma_period - 1), 0)
     )
     arr = F.collect_list(F.struct(F.col("_i"), F.col("_rc"))).over(wp)
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
 
     def wma(l):
         n = F.size(l)
@@ -6240,45 +6005,23 @@ def elder_ray(
     """Elder-ray bull/bear power per bar → (key, bar_start, ema,
     bull_power, bear_power): H − EMA(close) and L − EMA(close) — can
     the bulls push above / bears below consensus value; the
-    band-free complement to ``keltner_channel``. EMA is the seeded
-    full-prefix recursion unrolled as a weighted fold (the macd
-    discipline) over grid closes."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
-    al = 2.0 / (period + 1.0)
-    de = 1.0 - al
+    band-free complement to ``keltner_channel``. The EMA is
+    :func:`_ema_fold` over the prefix of grid closes."""
     bars = ohlc_bars(df, key_col, ts_col, value_col, tiebreak_col, bar)
     t = bars.select(
         F.col(key_col).alias("_k"),
         F.col("bar_start").alias("_b"),
         F.col("high").cast("double").alias("_h"),
         F.col("low").cast("double").alias("_l"),
-        (F.floor(F.col("close").cast("double") * _Q2) / _Q2).alias("_c"),
+        grid(F.col("close").cast("double")).alias("_c"),
     )
     wf = (
         Window.partitionBy("_k")
         .orderBy("_b")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-
-    def ema_fold(l):
-        n = F.size(l)
-        return F.aggregate(
-            F.transform(
-                l,
-                lambda x, i: x.cast("double")
-                * F.when(i == 0, F.pow(F.lit(de), (n - 1).cast("double")))
-                .otherwise(
-                    F.lit(al) * F.pow(F.lit(de), (n - 1 - i).cast("double"))
-                ),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    t = t.withColumn(
-        "_ema", let_bind(F.collect_list("_c").over(wf), ema_fold)
-    )
+    ema = _ema_fold(2.0 / (period + 1.0))
+    t = t.withColumn("_ema", let_bind(F.collect_list("_c").over(wf), ema))
     return t.select(
         F.col("_k").alias(key_col),
         F.col("_b").alias("bar_start"),
@@ -6306,25 +6049,18 @@ def sample_entropy(
     bounded-series contract (``kendall_tau_b`` precedent), exact
     integer counts; σ from grid moments, r floored to the grid so
     every tolerance comparison is exact."""
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     mom = src.groupBy("_g").agg(
         F.count("*").alias("_n"),
-        (F.sum(F.col("_v") * _Q2) / _Q2).alias("_s1"),
-        (F.sum(F.floor(F.col("_v") * F.col("_v") * _Q2)) / _Q2).alias(
-            "_s2"
-        ),
+        (F.sum(F.col("_v") * GRID) / GRID).alias("_s1"),
+        grid_sum(F.col("_v") * F.col("_v")).alias("_s2"),
     )
     nn = F.col("_n").cast("double")
     mean = F.col("_s1") / nn
     sd = F.sqrt(
         F.greatest((F.col("_s2") - nn * mean * mean) / nn, F.lit(0.0))
     )
-    r = F.floor(sd * F.lit(float(r_frac)) * _Q2) / _Q2
+    r = grid(sd * F.lit(float(r_frac)))
     mom = mom.select("_g", "_n", r.alias("_r"))
     wl = Window.partitionBy("_g").orderBy("_o")
     t = src.select(
@@ -6402,15 +6138,12 @@ def parabolic_sar(
     over each bar's prefix of gridded (h, l, prev-lows/highs)
     elements — the ``supertrend`` discipline, replayable via
     list_reduce with the same unified-struct trick. NULL on bar 1."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
     bars = ohlc_bars(df, key_col, ts_col, value_col, tiebreak_col, bar)
-    q = lambda x: F.floor(x * _Q2) / _Q2  # noqa: E731
     t = bars.select(
         F.col(key_col).alias("_k"),
         F.col("bar_start").alias("_b"),
-        q(F.col("high").cast("double")).alias("_h"),
-        q(F.col("low").cast("double")).alias("_l"),
+        grid(F.col("high").cast("double")).alias("_h"),
+        grid(F.col("low").cast("double")).alias("_l"),
     )
     wo = Window.partitionBy("_k").orderBy("_b")
     t = t.select(
@@ -6554,10 +6287,6 @@ def periodogram_fixed(
     Skipping mean-centering is exact here: Fourier frequencies are
     orthogonal to the constant (the literal-table residual ~1e-15·n·v̄
     sits far below the 1e-6 output rounding)."""
-    import math
-
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
     m = (n - 1) // 2
     cos_t = [
         [math.cos(2.0 * math.pi * j * t / n) for t in range(n)]
@@ -6567,12 +6296,7 @@ def periodogram_fixed(
         [math.sin(2.0 * math.pi * j * t / n) for t in range(n)]
         for j in range(1, m + 1)
     ]
-    v = F.floor(F.col(value_col).cast("double") * _Q2) / _Q2
-    src = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(order_col).alias("_o"),
-        v.alias("_v"),
-    ).filter(F.col("_v").isNotNull())
+    src = _series(df, group_col, order_col, value_col)
     arr = (
         src.groupBy("_g")
         .agg(

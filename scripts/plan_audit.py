@@ -11,6 +11,10 @@ a plan regression is a scale regression even when every value is still
 correct.
 
 Usage: python scripts/plan_audit.py [--sf-dir /root/testdata/sf0.001]
+       [--module temporal] [--out PLANS.md]
+
+``--module`` audits only the entries ``check_oracle.py --module``
+selects, to diff one module's rows before and after a change.
 """
 
 from __future__ import annotations
@@ -61,6 +65,11 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     ap.add_argument("--out", default="PLANS.md")
+    ap.add_argument(
+        "--module",
+        help="audit only the entries whose q_* body calls a public "
+        "function of operators/<MODULE>.py (check_oracle.py's rule)",
+    )
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
@@ -81,8 +90,15 @@ def main() -> int:
     workdir = tempfile.mkdtemp(prefix="plan_audit_")
     tempfile.tempdir = workdir
 
+    queries = entrymod.queries()
+    if args.module:
+        from check_oracle import module_entries
+
+        queries = {
+            n: queries[n] for n in module_entries(entrymod, args.module)
+        }
     rows = []
-    for name, fn in entrymod.queries().items():
+    for name, fn in queries.items():
         try:
             plan = _plan(fn(spark, args.sf_dir))
         except Exception as exc:  # noqa: BLE001 - audit keeps going

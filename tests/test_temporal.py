@@ -1433,3 +1433,265 @@ def test_hurst_rejects_bad_scales(spark):
     df = spark.createDataFrame([("g", 1, 1.0)], "g string, o int, v double")
     with pytest.raises(ValueError, match="scales"):
         hurst_rs(df, "v", "o", "g", window_sizes=(8,))
+
+
+# -- degenerate inputs, NULL-valued OHLC bars, the shared EMA fold ------
+
+DEGENERATE = {
+    "empty": [],
+    "one_row": [(0, 1.0)],
+    "two_rows": [(0, 1.0), (1, 2.0)],  # two hours of one daily bucket
+    "constant": [(24 * d, 5.0) for d in range(40)],
+    "all_null": [(0, None), (24, None)],
+}
+
+# operator -> (call, statistic columns that are NULL on a constant series)
+DEGENERATE_OPS = {
+    "acf": (lambda d, t: t.acf(d, "k", "ts", "v", max_lag=3), ("acf",)),
+    "pacf": (lambda d, t: t.pacf(d, "k", "ts", "v"), ("pacf",)),
+    "yule_walker_ar2": (
+        lambda d, t: t.yule_walker_ar2(d, "k", "ts", "v"),
+        ("r1", "r2", "phi1", "phi2", "sigma2_ratio"),
+    ),
+    "adf_test": (
+        lambda d, t: t.adf_test(d, "k", "i", "v"), ("beta", "t_stat")
+    ),
+    "rolling_corr": (
+        lambda d, t: t.rolling_corr(d, "ts", "v", "w", 3, ["k"]),
+        ("roll_corr",),
+    ),
+    "control_chart": (
+        lambda d, t: t.control_chart(d, "k", "ts", "v"), ("z",)
+    ),
+    "sax_symbols": (lambda d, t: t.sax_symbols(d, "k", "ts", "v", w=4), ()),
+}
+
+
+def _degenerate_frame(spark, rows):
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    return spark.createDataFrame(
+        [
+            ("k", t0 + dt.timedelta(hours=h), i, v, float(i))
+            for i, (h, v) in enumerate(rows)
+        ],
+        "k string, ts timestamp, i int, v double, w double",
+    )
+
+
+@pytest.mark.parametrize("op", list(DEGENERATE_OPS))
+def test_series_statistics_on_degenerate_inputs(spark, op):
+    """A series too short or too flat to have the statistic returns
+    NULL for it — DuckDB's answer for a division by zero — instead of
+    killing the query with an ANSI DIVIDE_BY_ZERO."""
+    import math
+    from concurrent.futures import ThreadPoolExecutor
+
+    from from_superset_to_clickhouse_spark.operators import temporal
+
+    call, stats = DEGENERATE_OPS[op]
+    # independent tiny queries: run the inputs side by side
+    with ThreadPoolExecutor(len(DEGENERATE)) as pool:
+        outs = dict(zip(DEGENERATE, pool.map(
+            lambda rows: call(_degenerate_frame(spark, rows), temporal)
+            .collect(),
+            DEGENERATE.values(),
+        )))
+    for case, out in outs.items():
+        for r in out:
+            for v in r:
+                assert not isinstance(v, float) or math.isfinite(v), (case, r)
+    assert outs["empty"] == []
+    assert outs["constant"], op
+    for r in outs["constant"]:
+        assert all(r[c] is None for c in stats), r
+    if op == "control_chart":  # one bucket has no sigma
+        assert [r["z"] for r in outs["two_rows"]] == [None]
+    if op == "sax_symbols":
+        assert [(r["n"], r["sax"]) for r in outs["constant"]] == [
+            (40, "cccc")
+        ]
+        assert [r["n"] for r in outs["one_row"]] == [1]
+
+
+# one key, six daily bars of three ticks; NULL values: bar 2 opens
+# NULL, bar 3 closes NULL, bar 4 is all NULL, bar 5 has a NULL middle
+_NULL_TICKS = [
+    (10.0, 12.5, 11.0), (None, 13.25, 12.0), (12.5, 9.75, None),
+    (None, None, None), (11.0, None, 14.5), (14.0, 15.5, 13.0),
+]
+
+_A = ("k", "ts", "v", "tb")
+# operator -> (call, expected rows as (day of bar, *output columns))
+OHLC_NULL_OPS = {
+    "garman_klass": (
+        lambda d, t: t.garman_klass(d, *_A),
+        [(4, 0.01085305, 0.104178)],
+    ),
+    "pivot_points": (
+        lambda d, t: t.pivot_points(d, *_A),
+        [(1, 11.166667, 12.333333, 9.833333, 13.666667, 8.666667),
+         (2, 12.416667, 12.833333, 11.583333, 13.666667, 11.166667),
+         (3, None, None, None, None, None),
+         (4, None, None, None, None, None),
+         (5, 13.333333, 15.666667, 12.166667, 16.833333, 9.833333),
+         (6, 13.833333, 14.666667, 12.166667, 16.333333, 11.333333)],
+    ),
+    "heikin_ashi": (
+        lambda d, t: t.heikin_ashi(d, *_A),
+        [(1, 10.5, 12.5, 10.0, 10.875), (2, 10.5, 13.25, 10.5, None),
+         (3, 10.5, 12.5, 9.75, None), (4, 10.5, 10.5, 10.5, None),
+         (5, 10.6875, 14.5, 10.6875, 12.75),
+         (6, 11.71875, 15.5, 11.71875, 13.875)],
+    ),
+    "chaikin_money_flow": (
+        lambda d, t: t.chaikin_money_flow(d, *_A, period=2),
+        [(1, None), (2, -0.6), (3, -0.5), (4, 0.0), (5, 0.5), (6, 0.0)],
+    ),
+    "vortex_indicator": (
+        lambda d, t: t.vortex_indicator(d, *_A, period=2),
+        [(1, None, None), (2, None, None), (3, 0.75, 0.8),
+         (4, None, None), (5, None, None), (6, None, None)],
+    ),
+    "supertrend": (
+        lambda d, t: t.supertrend(d, *_A, period=2, mult=2.0),
+        [(1, None, None), (2, 17.375, "down"), (3, 7.875, "up"),
+         (4, None, None), (5, None, None), (6, 8.25, "up")],
+    ),
+    "ultimate_oscillator": (
+        lambda d, t: t.ultimate_oscillator(d, *_A, p1=1, p2=1, p3=1),
+        [(1, None), (2, 44.444444), (3, None), (4, None), (5, None),
+         (6, 0.0)],
+    ),
+    "ichimoku": (
+        lambda d, t: t.ichimoku(d, *_A, p1=2, p2=3),
+        [(1, None, None, None, None, None),
+         (2, 11.625, None, None, None, 14.5),
+         (3, 11.5, 11.5, None, None, 13.0),
+         (4, 11.125, 11.5, None, None, None),
+         (5, 12.75, 12.125, None, None, None),
+         (6, 13.25, 13.25, 11.5, None, None)],
+    ),
+    "elder_ray": (
+        lambda d, t: t.elder_ray(d, *_A, period=3),
+        [(1, 11.0, 1.5, -1.0), (2, 11.5, 1.75, 0.5), (3, 11.5, 1.0, -1.75),
+         (4, 11.5, None, None), (5, 13.0, 1.5, -2.0), (6, 13.0, 2.5, 0.0)],
+    ),
+    "parabolic_sar": (
+        lambda d, t: t.parabolic_sar(d, *_A),
+        [(1, None, None), (2, 10.0, "up"), (3, 13.25, "down"),
+         (4, 13.25, "down"), (5, None, None), (6, 11.0, "up")],
+    ),
+    "keltner_channel": (
+        lambda d, t: t.keltner_channel(d, *_A, period=2),
+        [(1, None, None, None, None),
+         (2, 11.791666, 16.541666, 7.041666, 2.375),
+         (3, 11.541666, 16.541666, 6.541666, 2.5),
+         (5, 12.0, 19.5, 4.5, 3.75),
+         (6, 13.583333, 20.833333, 6.333333, 3.625)],
+    ),
+    "donchian_channel": (
+        lambda d, t: t.donchian_channel(d, *_A, period=2),
+        [(1, None, None, None, 0), (2, 13.25, 10.0, 11.625, 0),
+         (3, 13.25, 9.75, 11.5, -1), (5, 14.5, 9.75, 12.125, 1),
+         (6, 15.5, 11.0, 13.25, 0)],
+    ),
+}
+
+
+def test_ohlc_indicators_on_null_values(spark):
+    """The OHLC indicators' rows on NULL-valued ticks, pinned: a NULL
+    first/last tick makes a NULL open/close, an all-NULL day is a bar
+    of NULL prices (``ohlc_bars`` counts it), while ``keltner_channel``
+    and ``donchian_channel`` grid and drop NULL values before
+    bucketing (no bar 4). The fixtures have no NULL value."""
+    import datetime as dt
+    from concurrent.futures import ThreadPoolExecutor
+
+    from from_superset_to_clickhouse_spark.operators import temporal
+
+    df = spark.createDataFrame(
+        [
+            ("k", dt.datetime(2024, 1, 1 + d, 1 + 8 * i), 3 * d + i, v)
+            for d, ticks in enumerate(_NULL_TICKS)
+            for i, v in enumerate(ticks)
+        ],
+        "k string, ts timestamp, tb int, v double",
+    )
+
+    def rows(call):
+        out = sorted(tuple(r) for r in call(df, temporal).collect())
+        return [
+            tuple(v.day if isinstance(v, dt.datetime) else v for v in r[1:])
+            for r in out
+        ]
+
+    with ThreadPoolExecutor(4) as pool:
+        got = dict(zip(OHLC_NULL_OPS, pool.map(
+            rows, [call for call, _ in OHLC_NULL_OPS.values()]
+        )))
+    for op, (_, want) in OHLC_NULL_OPS.items():
+        assert got[op] == want, op
+
+
+def test_ema_fold_reproduces_macd_trix_elder_ray(spark):
+    """The shared EMA fold, applied to each prefix of a 30-point series
+    (test_macd_matches_pandas_ewm_recursion's shape), gives macd's,
+    trix's and elder_ray's EMAs bit for bit — and the textbook
+    recursion to 1e-9."""
+    import datetime as dt
+
+    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
+    from from_superset_to_clickhouse_spark.operators import temporal as tmp
+
+    vals = [float(50 + ((i * 17) % 23) - 11) for i in range(30)]
+
+    def fold(xs, alpha):
+        pre = spark.createDataFrame(
+            [(i, xs[: i + 1]) for i in range(len(xs))],
+            "i int, l array<double>",
+        )
+        e = let_bind(F.col("l"), tmp._ema_fold(alpha))
+        return [r[0] for r in pre.orderBy("i").select(e).collect()]
+
+    def rounded(*cols):
+        df = spark.createDataFrame(
+            list(zip(range(len(cols[0])), *cols)),
+            ["i"] + [f"c{j}" for j in range(len(cols))],
+        )
+        return [
+            tuple(r) for r in df.orderBy("i").select(
+                "i", *(F.round(f"c{j}", 6) for j in range(len(cols)))
+            ).collect()
+        ]
+
+    series = spark.createDataFrame(
+        [("k", i, v) for i, v in enumerate(vals)], "g string, o int, v double"
+    )
+    ef, es = fold(vals, 2.0 / 13.0), fold(vals, 2.0 / 27.0)
+    m = [a - b for a, b in zip(ef, es)]
+    sig = fold(m, 2.0 / 10.0)
+    got = tmp.macd(series, "g", "o", "v").orderBy("o")
+    assert [tuple(r) for r in got.select("o", "macd", "signal").collect()] \
+        == rounded(m, sig)
+
+    e1 = fold(vals, 2.0 / 6.0)
+    e3 = fold(fold(e1, 2.0 / 6.0), 2.0 / 6.0)
+    got = tmp.trix(series, "g", "o", "v", period=5).orderBy("o")
+    assert [tuple(r) for r in got.select("o", "ema3").collect()] \
+        == rounded(e3)
+
+    bars = spark.createDataFrame(
+        [("k", dt.datetime(2024, 1, 1) + dt.timedelta(days=i), i, v)
+         for i, v in enumerate(vals)],
+        "k string, ts timestamp, tb int, v double",
+    )
+    got = tmp.elder_ray(bars, "k", "ts", "v", "tb", period=7)
+    assert [r["ema"] for r in got.orderBy("bar_start").collect()] \
+        == [r[1] for r in rounded(fold(vals, 2.0 / 8.0))]
+
+    ref = [vals[0]]
+    for x in vals[1:]:
+        ref.append(0.25 * x + 0.75 * ref[-1])
+    assert max(abs(a - b) for a, b in zip(fold(vals, 0.25), ref)) < 1e-9
