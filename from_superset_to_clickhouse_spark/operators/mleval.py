@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._exact import GRID as _Q
+from ._exact import grid, grid_sum
 
 
 def roc_auc(
@@ -95,7 +95,7 @@ def classifier_eval(
         F.sum(((pred == 1) & (F.col("_y") == 0)).cast("long")).alias("fp"),
         F.sum(((pred == 0) & (F.col("_y") == 0)).cast("long")).alias("tn"),
         F.sum(((pred == 0) & (F.col("_y") == 1)).cast("long")).alias("fn"),
-        (F.sum(F.floor(e * e * _Q)) / _Q).alias("_se"),
+        grid_sum(e * e).alias("_se"),
     )
     b = src.groupBy(
         F.least(F.floor(F.col("_p") * bins), F.lit(bins - 1)).alias("_b")
@@ -851,7 +851,7 @@ def mrr(
         .join(first_hit, "_q", "left")
     )
     rr = F.when(
-        F.col("_fr").isNotNull(), F.floor(1.0 / F.col("_fr") * _Q) / _Q
+        F.col("_fr").isNotNull(), grid(1.0 / F.col("_fr"))
     ).otherwise(F.lit(0.0))
     agg = per_q.agg(
         F.count("*").alias("_nq"),
@@ -908,10 +908,7 @@ def map_at_k(
     )
     term = F.when(
         (F.col("_r") == 1) & (F.col("_rk") <= k),
-        F.floor(
-            F.col("_hits").cast("double") / F.col("_rk") * _Q
-        )
-        / _Q,
+        grid(F.col("_hits").cast("double") / F.col("_rk")),
     ).otherwise(F.lit(0.0))
     per_q = ranked.groupBy("_q").agg(
         F.sum(term).alias("_ap_num"),
@@ -920,7 +917,7 @@ def map_at_k(
     denom = F.least(F.col("_rtot"), F.lit(k)).cast("double")
     ap = F.when(
         F.col("_rtot") > 0,
-        F.floor(F.col("_ap_num") / denom * _Q) / _Q,
+        grid(F.col("_ap_num") / denom),
     ).otherwise(F.lit(0.0))
     agg = per_q.agg(
         F.count("*").alias("_nq"), F.sum(ap).alias("_sap")
@@ -1098,10 +1095,7 @@ def silhouette_centroid(
     nearest = F.least(*others) if len(others) > 1 else others[0]
     s = F.when(
         F.greatest(own, nearest) > 0,
-        F.floor(
-            (nearest - own) / F.greatest(own, nearest) * _Q
-        )
-        / _Q,
+        grid((nearest - own) / F.greatest(own, nearest)),
     ).otherwise(F.lit(0.0))
     per = src.filter(F.col("_l").isNotNull()).groupBy("_l").agg(
         F.count("*").alias("_n"), F.sum(s).alias("_ss")
@@ -1144,20 +1138,12 @@ def brier_decomposition(
     src = df.select(
         b.alias("_bin"), s.alias("_s"), y.alias("_y")
     ).filter(F.col("_s").isNotNull() & F.col("_y").isNotNull())
-    q = F.lit(1048576.0)
     per = src.groupBy("_bin").agg(
         F.count("*").alias("_nb"),
         F.sum("_y").alias("_pb"),
         F.sum("_s").alias("_sb"),
-        (
-            F.sum(
-                F.floor(
-                    (F.col("_s") - F.col("_y"))
-                    * (F.col("_s") - F.col("_y"))
-                    * q
-                )
-            )
-            / q
+        grid_sum(
+            (F.col("_s") - F.col("_y")) * (F.col("_s") - F.col("_y"))
         ).alias("_sq"),
     )
     tot = per.agg(
@@ -1361,9 +1347,7 @@ def hosmer_lemeshow(
     floor(g·cum_before/n) — deterministic on every engine, no global
     row sort, no tie ambiguity. With fewer distinct scores than g the
     realized group count g_used drops and dof follows it."""
-    q = F.floor(F.col(prob_col).cast("double") * F.lit(1048576.0)) / F.lit(
-        1048576.0
-    )
+    q = grid(F.col(prob_col).cast("double"))
     src = df.select(
         q.alias("_s"), F.col(label_col).cast("int").alias("_y")
     ).filter(F.col("_s").isNotNull() & F.col("_y").isNotNull())
@@ -1395,7 +1379,7 @@ def hosmer_lemeshow(
     ).agg(
         F.sum("_ng").cast("long").alias("n"),
         F.count("*").cast("int").alias("g_used"),
-        _fxp_sum_local(
+        grid_sum(
             (F.col("_ogd") - F.col("_eg")) * (F.col("_ogd") - F.col("_eg"))
             / F.when(
                 (F.col("_eg") > 0) & (F.col("_e0") > 0),
@@ -1416,12 +1400,6 @@ def hosmer_lemeshow(
         F.round(
             F.when(dof > 0, chi2_p_value(F.col("_chi2"), dof)), 6
         ).alias("p_value"),
-    )
-
-
-def _fxp_sum_local(col):
-    return F.sum(F.floor(col * F.lit(1048576.0))).cast("double") / F.lit(
-        1048576.0
     )
 
 
@@ -1656,7 +1634,7 @@ def mcfadden_r2(
     for c in feature_cols:
         src = src.filter(F.col(c).isNotNull())
     src = src.filter(F.col("_y").isNotNull())
-    pb = src.agg((F.floor(F.avg("_y") * _Q) / _Q).alias("_p"))
+    pb = src.agg(grid(F.avg("_y")).alias("_p"))
     eps = F.lit(1e-12)
     p = F.col("_p")
     ll0 = -(
@@ -1707,29 +1685,13 @@ def feature_gain(
     per_f = cells.groupBy("_f").agg(
         F.sum("_c").alias("_n"),
         F.sum("_p").alias("_np"),
-        (
-            F.sum(
-                F.floor(
-                    F.col("_c").cast("double")
-                    * _gini_term(
-                        F.col("_p").cast("double") / F.col("_c")
-                    )
-                    * _Q
-                )
-            )
-            / _Q
+        grid_sum(
+            F.col("_c").cast("double")
+            * _gini_term(F.col("_p").cast("double") / F.col("_c"))
         ).alias("_wg"),
-        (
-            F.sum(
-                F.floor(
-                    F.col("_c").cast("double")
-                    * _entropy_term(
-                        F.col("_p").cast("double") / F.col("_c")
-                    )
-                    * _Q
-                )
-            )
-            / _Q
+        grid_sum(
+            F.col("_c").cast("double")
+            * _entropy_term(F.col("_p").cast("double") / F.col("_c"))
         ).alias("_we"),
     )
     pr = F.col("_np").cast("double") / F.col("_n")

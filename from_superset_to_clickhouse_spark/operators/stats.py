@@ -3083,7 +3083,7 @@ def cliffs_delta(
     )
     na, nb = F.col("n_a"), F.col("n_b")
     u = F.col("_ra") - na * (na + 1.0) / 2.0
-    # one arm absent: no cross-arm pair, no delta
+    # one arm absent: no cross-arm pair, no delta, no magnitude
     delta = F.when(
         na * nb > 0, 2.0 * u / (na.cast("double") * nb) - 1.0
     )
@@ -3091,7 +3091,7 @@ def cliffs_delta(
         F.when(F.abs(delta) < 0.147, "negligible")
         .when(F.abs(delta) < 0.33, "small")
         .when(F.abs(delta) < 0.474, "medium")
-        .otherwise("large")
+        .when(delta.isNotNull(), "large")
     )
     return agg.select(
         na.cast("long").alias("n_a"),

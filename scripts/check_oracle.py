@@ -134,43 +134,6 @@ def table_hash(cols: list[str], rows: list[tuple]) -> tuple[int, str, str]:
     return len(rows), ",".join(sorted_cols), h
 
 
-def assert_unique_registry_keys(entrymod) -> None:
-    """AST-level duplicate-key guard (VERDICT r10 item 3).
-
-    A duplicate string key inside queries()'s return literal (or across
-    the spread component dicts) is invisible at runtime — the dict just
-    keeps the first occurrence — but it silently shifts every LATER
-    entry's position, and the driver window is positional (first 50).
-    Reconstruct the full key sequence, explicit keys in place and spread
-    dicts expanded via their runtime values, and demand global
-    uniqueness plus exact agreement with the runtime dict order.
-    """
-    import ast
-    import inspect
-
-    src = inspect.getsource(entrymod)
-    tree = ast.parse(src)
-    ret = None
-    for node in ast.walk(tree):
-        if isinstance(node, ast.FunctionDef) and node.name == "queries":
-            for stmt in node.body:
-                if isinstance(stmt, ast.Return):
-                    ret = stmt.value
-    assert isinstance(ret, ast.Dict), "queries() must return a dict literal"
-    seq: list[str] = []
-    for k, v in zip(ret.keys, ret.values):
-        if k is None:  # **spread
-            assert isinstance(v, ast.Name), "spread must be a module dict"
-            seq.extend(getattr(entrymod, v.id).keys())
-        else:
-            assert isinstance(k, ast.Constant), "keys must be str literals"
-            seq.append(k.value)
-    dups = sorted({k for k in seq if seq.count(k) > 1})
-    assert not dups, f"duplicate queries() keys (positions shift!): {dups}"
-    runtime = list(entrymod.queries())
-    assert seq == runtime, "AST key order != runtime dict order"
-
-
 def module_entries(entrymod, module: str) -> list[str]:
     """Registry entries whose query body calls a public function of
     ``operators/<module>.py``: a call, found by AST, to a name imported
@@ -285,7 +248,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf_dir}/{t}.parquet')"
         )
 
-    assert_unique_registry_keys(entrymod)
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     names = args.only or (

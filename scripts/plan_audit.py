@@ -1,6 +1,8 @@
 #!/usr/bin/env python3
 """Physical-plan audit: one row per ``queries()`` entry → PLANS.md.
 
+Rows are sorted by entry name, so the file changes only when a plan does.
+
 For every registry entry, captures the plan features the 100 TB design
 claims hinge on: join strategies, shuffle (hash-partitioned exchange)
 count, single-partition exchanges (global sorts — almost always a scale
@@ -98,9 +100,9 @@ def main() -> int:
             n: queries[n] for n in module_entries(entrymod, args.module)
         }
     rows = []
-    for name, fn in queries.items():
+    for name in sorted(queries):
         try:
-            plan = _plan(fn(spark, args.sf_dir))
+            plan = _plan(queries[name](spark, args.sf_dir))
         except Exception as exc:  # noqa: BLE001 - audit keeps going
             rows.append((name, f"PLAN FAILED: {type(exc).__name__}"))
             continue

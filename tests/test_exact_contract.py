@@ -20,7 +20,7 @@ OPS = os.path.join(
     os.path.dirname(__file__), "..", "from_superset_to_clickhouse_spark",
     "operators",
 )
-MODULES = ("stats.py", "temporal.py")
+MODULES = ("stats.py", "temporal.py", "mleval.py")
 
 # (module, the unparsed ``… / GRID`` expression) -> reason
 ALLOWED = {

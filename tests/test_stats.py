@@ -212,3 +212,44 @@ def test_value_and_row_ranks_agree(spark):
     )
     out = st.spearman_corr(sp, "x", "y", ["k"]).collect()
     assert [(r["k"], r["n"], r["rho"]) for r in out] == [("x", 3, 0.5)]
+
+
+def test_rank_oracles_match_spark_on_null_values_and_a_missing_arm(
+    spark, tmp_path
+):
+    """The registry's cliffs_delta, mann_whitney and fdr_tests twins on
+    an events table the fixtures never produce: NULL values, which Spark
+    drops before ranking, and no 'purchase' rows, so cliffs_delta's arm
+    'a' is empty and its magnitude is NULL like its delta."""
+    import datetime as dt
+
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entry
+
+    rows = [
+        (i, dt.datetime(2024, 1, 1 + i % 28), i % 5, typ,
+         None if i % 7 == 3 else float(i % 6), "")
+        for i, typ in enumerate(["click", "view", "cart"] * 12)
+    ]
+    pd.DataFrame(
+        rows,
+        columns=["event_id", "ts", "user_id", "event_type", "value", "props"],
+    ).to_parquet(tmp_path / "events.parquet")
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'events.parquet'}')"
+    )
+    oracles, qmap = entry.oracle_sql(), entry.queries()
+    for name in ("cliffs_delta", "mann_whitney", "fdr_tests"):
+        got = sorted(
+            (tuple(r) for r in qmap[name](spark, str(tmp_path)).collect()),
+            key=repr,
+        )
+        want = sorted(con.execute(oracles[name]).fetchall(), key=repr)
+        assert got == want, name
+    (cliffs,) = qmap["cliffs_delta"](spark, str(tmp_path)).collect()
+    assert cliffs["n_a"] == 0 and cliffs["delta"] is None
+    assert cliffs["magnitude"] is None
