@@ -1822,8 +1822,8 @@ def q_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ngram_jaccard_pairs oracle: exact ALL-PAIRS Jaccard ≥ threshold. Valid
-# because (a) the LSH+verify output is deterministic (xxhash64 banding on
-# a fixed fixture), and (b) the fixture has no pairs in [0.25, 0.75) —
+# because (a) the LSH+verify output is deterministic (md5-seeded Arrow
+# banding on a fixed fixture), and (b) the fixture has no pairs in [0.25, 0.75) —
 # planted near-dups sit ≥0.75 where 16-band/4-row collision probability
 # is ≥1-4e-8, so candidate recall over the threshold set is exactly 1.
 # A genuine LSH miss would (correctly) fail this gate.
@@ -2153,7 +2153,7 @@ def q_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings) and band buckets in DuckDB, so the full LSH pipeline —
     shingle → signature → band → self-join → shared-band count — is
     hash-verified, not just row-counted. Production callers default to
-    the faster xxhash64 family; the banding logic is identical."""
+    the faster Arrow family; both families share one band self-join."""
     return ddp.minhash_candidates(_docs(spark, sf_dir), hash_family="md5")
 
 
@@ -2225,7 +2225,8 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs within Hamming ≤ 3, md5 hash family: the
     oracle recomputes the exact per-bit majority votes, band buckets and
     Hamming distances in DuckDB. Production callers default to the
-    faster xxhash64 family; the blocking/verify logic is identical."""
+    faster Arrow family; both families share one band self-join and
+    Hamming filter."""
     return ddp.simhash_pairs(_docs(spark, sf_dir), hash_family="md5")
 
 

@@ -383,9 +383,10 @@ def main() -> None:
     for name in graph_tier:
         _record(name, graph_runs[name], "min")
 
-    # SimHash timed on the PRODUCTION xxhash64 family (the queries()
-    # entry runs the md5 oracle family, which trades leaf-hash speed for
-    # ANSI replicability — benching that would misstate the scale path).
+    # SimHash timed on the PRODUCTION Arrow family, the default (the
+    # queries() entry runs the md5 oracle family, which trades leaf-hash
+    # speed for ANSI replicability — benching that would misstate the
+    # scale path).
     from from_superset_to_clickhouse_spark.operators import dedup as ddp
 
     timed(

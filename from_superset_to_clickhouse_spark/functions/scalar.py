@@ -64,6 +64,22 @@ def let_bind(value: Column, body) -> Column:
     return F.transform(F.array(value), body)[0]
 
 
+def _spread(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` to the default parallelism when it has fewer
+    partitions, else return it unchanged.
+
+    A compute-heavy first stage (a Python kernel, a signature pass, an
+    explode + window) runs one task per input partition, and a small or
+    compacted source (one parquet file) would run it on one core. At
+    real scale the input already has at least that many partitions and
+    this is a no-op check.
+    """
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
 def json_get(col: Column | str, path: str) -> Column:
     """Extract a scalar from an opaque JSON text column.
 

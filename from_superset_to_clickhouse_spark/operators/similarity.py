@@ -47,7 +47,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from from_superset_to_clickhouse_spark.functions.scalar import let_bind
+from from_superset_to_clickhouse_spark.functions.scalar import _spread, let_bind
 from from_superset_to_clickhouse_spark.operators.dedup import _finalize
 
 from ._exact import GRID
@@ -400,13 +400,9 @@ def _srp_banded(
                 }
             )
 
-    src = df.select(F.col(id_col).alias("_sid"), F.col(vec_col).alias("vec"))
-    # Repartition a small/compacted source so the Python projection
-    # stage uses every core (no-op at real scale, where the input
-    # already has >= core partitions).
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target)
+    src = _spread(
+        df.select(F.col(id_col).alias("_sid"), F.col(vec_col).alias("vec"))
+    )
     return src.mapInPandas(
         gen, schema=f"{out_id} {id_type}, band int, bucket bigint"
     )

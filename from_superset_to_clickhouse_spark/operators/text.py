@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from from_superset_to_clickhouse_spark.functions.scalar import _spread, let_bind
+
 # Marker words per language for the deterministic stopword heuristic.
 # Scoring = occurrence count of each whitespace-delimited marker word;
 # zh is scored by CJK-codepoint count instead (Chinese is not written
@@ -37,7 +39,10 @@ CJK_RANGE = "一-鿿"
 LANG_UNKNOWN = "unknown"
 
 _PUNCT_RE = r"[.,;:!?]"
-_WORD_RE = r"[A-Za-z0-9']+"
+# Word-token separator on lowercased text: ``word_tokens`` splits on it
+# in Catalyst and the dedup Arrow kernels with Python ``re`` (the two
+# regex dialects agree on this class).
+TOKEN_SPLIT_RE = r"[^a-z0-9']+"
 
 
 def token_count(text: Column) -> Column:
@@ -51,8 +56,23 @@ def token_count(text: Column) -> Column:
 def word_tokens(text: Column) -> Column:
     """BPE-ish word tokens: lowercase alnum runs (array<string>)."""
     return F.filter(
-        F.split(F.lower(text), r"[^a-z0-9']+"), lambda x: x != F.lit("")
+        F.split(F.lower(text), TOKEN_SPLIT_RE), lambda x: x != F.lit("")
     )
+
+
+def word_ngrams(toks: Column, n: int) -> Column:
+    """Word n-grams of a token array in order, each the ``n`` tokens
+    joined by one space (array<string>, not de-duplicated); empty when
+    the array has fewer than ``n`` tokens or is NULL. ``toks`` is
+    let-bound, so a ``word_tokens`` expression passed in is evaluated
+    once per row, not once per gram."""
+    return let_bind(toks, lambda t: let_bind(F.size(t), lambda m: F.when(
+        m >= n,
+        F.transform(
+            F.sequence(F.lit(0), m - n),
+            lambda i: F.concat_ws(" ", F.slice(t, i + 1, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))))
 
 
 def occurrence_count(text: Column, needle: str) -> Column:
@@ -267,8 +287,6 @@ def token_chunks(
     array, and ``posexplode`` emits one row per chunk. One narrow
     projection + explode: no shuffle, no UDF, linear in corpus size.
     """
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
     chunks = let_bind(
         word_tokens(F.col(text_col)),
         lambda toks: let_bind(F.size(toks), lambda n: F.transform(
@@ -317,8 +335,6 @@ def sentence_chunks(
     Pure Catalyst: one regexp split bound once per row, window starts
     as a ``sequence`` + ``slice`` transform, ``posexplode`` to rows —
     no shuffle, no UDF, linear in corpus size."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
     if not 0 <= overlap < n_sent:
         raise ValueError("need 0 <= overlap < n_sent")
     stride = n_sent - overlap
@@ -396,23 +412,8 @@ def repetition_metrics(
     integer operands are engine-exact, so the double is replicable in
     ANSI SQL without any rounding detour.
     """
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
-    grams = let_bind(
-        word_tokens(F.col(text_col)),
-        lambda toks: let_bind(
-            F.size(toks),
-            lambda m: F.when(
-                m >= n,
-                F.transform(
-                    F.sequence(F.lit(0), m - n),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-                ),
-            ).otherwise(F.array().cast("array<string>")),
-        ),
-    )
     counted = let_bind(
-        grams,
+        word_ngrams(word_tokens(F.col(text_col)), n),
         lambda g: F.struct(
             F.size(g).alias("n_grams"),
             F.size(F.array_distinct(g)).alias("n_distinct"),
@@ -464,8 +465,6 @@ def canonical_url(url: Column, strip_www: bool = False) -> Column:
 
     Malformed rows (no ``scheme://host``) pass through trimmed and
     unparsed — quarantine-by-identity, never a wrong merge."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
     u = F.regexp_replace(F.trim(url), r"#.*", "")  # fragment off first
     scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
     host_base = F.lower(F.regexp_extract(u, r"^[^:/?#]+://([^/?#]*)", 1))
@@ -513,23 +512,7 @@ def ngram_rows(
     """Explode each document into its distinct word n-grams →
     (doc_id, gram). The building block for overlap/contamination
     checks; one narrow projection + explode, no shuffle."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
-    grams = let_bind(
-        word_tokens(F.col(text_col)),
-        lambda toks: let_bind(
-            F.size(toks),
-            lambda m: F.when(
-                m >= n,
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(0), m - n),
-                        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-                    )
-                ),
-            ).otherwise(F.array().cast("array<string>")),
-        ),
-    )
+    grams = F.array_distinct(word_ngrams(word_tokens(F.col(text_col)), n))
     return df.select(
         F.col(id_col).alias("doc_id"), F.explode(grams).alias("gram")
     )
@@ -599,8 +582,8 @@ def cut_repeated_spans(
     order. ``repeated_ngrams`` finds the boilerplate; this op excises
     it.
 
-    Plan shape: one windows pass (codegen transform/slice — the same
-    gram construction as ``ngram_rows`` so the two ops compose), a
+    Plan shape: one windows pass (``word_ngrams`` — the same gram
+    construction as ``ngram_rows`` so the two ops compose), a
     gram-keyed join against the (tiny, ``min_docs``-filtered) repeated
     head, covered positions exploded n-wide and de-duplicated, a
     (doc, pos) anti join, and a per-doc ordered rebuild
@@ -619,26 +602,11 @@ def cut_repeated_spans(
     tok = toks_arr.select(
         "doc_id", F.posexplode("t").alias("pos", "token")
     )
-    wins = toks_arr.filter(F.size("t") >= n).select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - n),
-                lambda i: F.struct(
-                    i.alias("pos"),
-                    F.concat_ws(" ", F.slice(F.col("t"), i + 1, n)).alias(
-                        "gram"
-                    ),
-                ),
-            )
-        ).alias("w"),
-    ).select(
-        "doc_id",
-        F.col("w.pos").alias("pos"),
-        (
-            F.xxhash64(F.col("w.gram")) if hash_grams else F.col("w.gram")
-        ).alias("gram"),
+    wins = toks_arr.select(
+        "doc_id", F.posexplode(word_ngrams(F.col("t"), n)).alias("pos", "gram")
     )
+    if hash_grams:
+        wins = wins.withColumn("gram", F.xxhash64("gram"))
     covered = (
         wins.join(reps, "gram")
         .select(
@@ -840,8 +808,6 @@ def word_bigrams(text: Column) -> Column:
     """Adjacent word-token pairs as 'w1 w2' strings — built ARRAY-side
     (zip of the token array with its own shift), so no positional
     self-join is ever needed to recover adjacency."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
     return let_bind(
         word_tokens(text),
         lambda t: let_bind(
@@ -990,8 +956,6 @@ def gopher_gate(
     exprs), zero shuffles. Thresholds follow the published heuristics
     (Rae et al. 2021 'Gopher' §A1.1; C4's line rules), adapted to
     whitespace tokens."""
-    from from_superset_to_clickhouse_spark.functions.scalar import let_bind
-
     t = F.col(text_col)
 
     def flags(toks, lines):
@@ -1558,10 +1522,7 @@ def rake_keywords(
     order, so selection is deterministic. Everything is keyed by
     doc_id; no global sorts, no Python.
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9']+"),
-        lambda x: x != F.lit(""),
-    )
+    toks = word_tokens(F.col(text_col))
     flat = (
         df.select(F.col(id_col).alias("_id"), F.posexplode(toks).alias("pos", "w"))
         .withColumn("is_stop", F.col("w").isin(*stopwords))
@@ -1636,10 +1597,7 @@ def pmi_pairs(
     hapax pairs). One token explode, one keyed join, three partial
     aggs, two broadcastable scalar totals.
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9']+"),
-        lambda x: x != F.lit(""),
-    )
+    toks = word_tokens(F.col(text_col))
     flat = df.select(
         F.col(id_col).alias("_id"), F.posexplode(toks).alias("pos", "w")
     )
@@ -1874,10 +1832,7 @@ def collocations_g2(
     bigrams from a lead window inside each document (corpus_tokens
     rows, no self-join needed at Δpos = 1), two broadcastable
     marginal tables, ``min_count`` pruning before the scoring joins."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9']+"),
-        lambda x: x != F.lit(""),
-    )
+    toks = word_tokens(F.col(text_col))
     flat = df.select(
         F.col(id_col).alias("_id"), F.posexplode(toks).alias("pos", "w")
     )
@@ -2071,9 +2026,7 @@ def winnow_fingerprints(
     few-partition source (one small parquet file) is spread across
     the cluster first — every downstream window is doc-partitioned,
     so the repartition is the only shuffle added."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
+    df = _spread(df)
     norm = F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]", "")
     base = df.select(
         F.col(id_col).alias("doc_id"), norm.alias("_s")
@@ -2312,19 +2265,9 @@ def ngram_novelty(
     crawl snapshots and the fixture's doc_id)."""
     if n < 1:
         raise ValueError(f"ngram_novelty needs n >= 1, got {n}")
-    toks = df.select(
-        F.col(id_col).alias("_id"), word_tokens(F.col(text_col)).alias("_t")
-    ).filter(F.size("_t") >= n)
-    grams = toks.select(
-        "_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("_t") - (n - 1)),
-                lambda i: F.concat_ws(
-                    " ", F.slice(F.col("_t"), i, n)
-                ),
-            )
-        ).alias("_g"),
+    grams = df.select(
+        F.col(id_col).alias("_id"),
+        F.explode(word_ngrams(word_tokens(F.col(text_col)), n)).alias("_g"),
     ).distinct()
     first = grams.groupBy("_g").agg(F.min("_id").alias("_first"))
     per = (

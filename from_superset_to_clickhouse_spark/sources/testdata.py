@@ -24,6 +24,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from from_superset_to_clickhouse_spark.functions.scalar import _spread
+
 TABLES = (
     "region",
     "nation",
@@ -79,9 +81,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Repartition node, and every registered query design is
     # row-order-free.
     if name in ("documents", "embeddings"):
-        target = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            df = df.repartition(target)
+        df = _spread(df)
     return df
 
 

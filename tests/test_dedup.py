@@ -1,6 +1,7 @@
 """Dedup operators: exact, MinHash+LSH, SimHash — planted-duplicate
 recall and idempotence (SURVEY.md §5 items 3-4; north-star surface)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from from_superset_to_clickhouse_spark.operators import dedup as ddp
@@ -53,14 +54,18 @@ def test_jaccard_identical_docs_is_one(spark):
     assert len(got) == 1 and got[0]["jaccard"] == 1.0
 
 
-def test_simhash_pairs_find_planted(spark):
+def _planted_simhash(spark):
+    """30 fixture docs plus a copy of each with " zz" appended (id +1000)."""
     docs = _docs(spark, 30)
     planted = docs.select(
         (F.col("doc_id") + 1000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zz")).alias("text"),
     )
-    both = docs.select("doc_id", "text").unionByName(planted)
-    pairs = ddp.simhash_pairs(both, max_hamming=3)
+    return docs.select("doc_id", "text").unionByName(planted)
+
+
+def test_simhash_pairs_find_planted(spark):
+    pairs = ddp.simhash_pairs(_planted_simhash(spark), max_hamming=3)
     hits = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     planted_pairs = {(i, i + 1000) for i in range(30)}
     recall = len(hits & planted_pairs) / len(planted_pairs)
@@ -68,15 +73,29 @@ def test_simhash_pairs_find_planted(spark):
 
 
 def test_simhash_candidates_superset_of_pairs(spark):
-    docs = _docs(spark, 30)
-    cand = {
-        (r["id_a"], r["id_b"])
-        for r in ddp.simhash_dedup_candidates(docs).collect()
-    }
-    verified = {
-        (r["id_a"], r["id_b"]) for r in ddp.simhash_pairs(docs).collect()
-    }
-    assert verified <= cand  # verify stage only ever removes pairs
+    """The candidates are simhash_pairs' own blocking stage, so the
+    Hamming verify only ever removes pairs. The plain fixture docs hold
+    one pair; the planted input has ~30 to find."""
+    for docs in (_docs(spark, 30), _planted_simhash(spark)):
+        cand = {
+            (r["id_a"], r["id_b"])
+            for r in ddp.simhash_dedup_candidates(docs).collect()
+        }
+        verified = {
+            (r["id_a"], r["id_b"]) for r in ddp.simhash_pairs(docs).collect()
+        }
+        assert verified and verified <= cand
+
+
+def test_simhash_families_skip_null_text(spark):
+    """Both SimHash families pair no NULL text: a NULL doc emits no band
+    rows (the arrow kernel used to give it the all-zero signature and
+    pair two NULL docs at Hamming 0)."""
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, "a b c d")], "doc_id int, text string"
+    )
+    for family in ("arrow", "md5"):
+        assert ddp.simhash_pairs(df, hash_family=family).collect() == []
 
 
 def test_incremental_minhash_equals_full_corpus_run(spark):
@@ -558,3 +577,96 @@ def test_fellegi_sunter_rare_agreement_outweighs_common(spark):
 
     want = m.log(0.95 / 0.68) + m.log(0.95 / 0.12)
     assert abs(out[(8, 9)]["score"] - want) < 1e-5
+
+
+_T = "the quick brown fox jumps over the lazy dog"
+_DEGENERATE_DOCS = {
+    "empty": [],
+    "one_row": [(1, _T)],
+    "null_text": [(1, None), (2, None), (3, "a b c d")],
+    "empty_text": [(1, ""), (2, ""), (3, "a b c d")],
+    "identical": [(1, _T), (2, _T), (3, _T)],
+}
+_SAME3 = [(1, 2), (1, 3), (2, 3)]
+
+
+def _sets(d):
+    from from_superset_to_clickhouse_spark.operators.text import word_tokens
+
+    return d.select("doc_id", word_tokens(F.col("text")).alias("s"))
+
+
+# op -> (call, {case: sorted pairs}); a case left out gives no pairs.
+# MinHash reads NULL text as the empty text (shingle ""), so NULL and
+# empty docs pair in all 16 bands; SimHash pairs no NULL text; the set
+# joins and fuzzy matchers drop NULL and match "" only to "".
+_DEGENERATE_PAIRS = {
+    "minhash_arrow": (
+        lambda d: ddp.minhash_candidates(d),
+        {"null_text": [(1, 2, 16)], "empty_text": [(1, 2, 16)],
+         "identical": [p + (16,) for p in _SAME3]},
+    ),
+    "minhash_md5": (
+        lambda d: ddp.minhash_candidates(d, hash_family="md5"),
+        {"null_text": [(1, 2, 16)], "empty_text": [(1, 2, 16)],
+         "identical": [p + (16,) for p in _SAME3]},
+    ),
+    "simhash_arrow": (
+        lambda d: ddp.simhash_pairs(d),
+        {"empty_text": [(1, 2, 0)], "identical": [p + (0,) for p in _SAME3]},
+    ),
+    "simhash_md5": (
+        lambda d: ddp.simhash_pairs(d, hash_family="md5"),
+        {"empty_text": [(1, 2, 0)], "identical": [p + (0,) for p in _SAME3]},
+    ),
+    "ngram_jaccard_pairs": (
+        lambda d: ddp.ngram_jaccard_pairs(d),
+        {"null_text": [(1, 2, 1.0)], "empty_text": [(1, 2, 1.0)],
+         "identical": [p + (1.0,) for p in _SAME3]},
+    ),
+    "simhash_dedup_candidates": (
+        lambda d: ddp.simhash_dedup_candidates(d),
+        {"empty_text": [(1, 2)], "identical": _SAME3},
+    ),
+    "set_similarity_join": (
+        lambda d: ddp.set_similarity_join(_sets(d), "doc_id", "s"),
+        {"identical": [p + (1.0,) for p in _SAME3]},
+    ),
+    "containment_join": (
+        lambda d: ddp.containment_join(_sets(d), "doc_id", "s"),
+        {"identical": sorted(
+            q + (1.0,) for p in _SAME3 for q in (p, p[::-1])
+        )},
+    ),
+    "fuzzy_pairs": (
+        lambda d: ddp.fuzzy_pairs(d, "doc_id", "text"),
+        {"empty_text": [(1, 2, 0)], "identical": [p + (0,) for p in _SAME3]},
+    ),
+    "fuzzy_pairs_pigeonhole": (
+        lambda d: ddp.fuzzy_pairs_pigeonhole(d, "doc_id", "text"),
+        {"empty_text": [(1, 2, 0)], "identical": [p + (0,) for p in _SAME3]},
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(_DEGENERATE_PAIRS))
+def test_dedup_pair_operators_on_degenerate_inputs(spark, op):
+    """Every pair operator on empty, one-row, NULL-text, empty-text and
+    three-identical-doc input: no pairs from fewer than two docs, every
+    pair from identical docs (all 16 bands, Hamming 0, Jaccard 1.0,
+    both orders for containment)."""
+    run, want = _DEGENERATE_PAIRS[op]
+    for case, rows in _DEGENERATE_DOCS.items():
+        df = spark.createDataFrame(rows, "doc_id int, text string")
+        got = sorted(map(tuple, run(df).collect()))
+        assert got == want.get(case, []), case
+
+
+@pytest.mark.parametrize(
+    "op", [ddp.minhash_band_rows, ddp.minhash_candidates,
+           ddp.ngram_jaccard_pairs, ddp.simhash_pairs],
+)
+def test_unknown_hash_family_raises(spark, op):
+    df = spark.createDataFrame([(1, _T)], "doc_id int, text string")
+    with pytest.raises(ValueError, match="hash_family"):
+        op(df, hash_family="xxhash64")
