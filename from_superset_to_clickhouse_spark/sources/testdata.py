@@ -26,19 +26,6 @@ from pyspark.sql import functions as F
 
 from from_superset_to_clickhouse_spark.functions.scalar import _spread
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -84,12 +71,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = _spread(df)
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every fixture table as a temp view; returns the DataFrames."""
-    out = {}
-    for t in TABLES:
-        df = load_table(spark, sf_dir, t)
-        df.createOrReplaceTempView(t)
-        out[t] = df
-    return out

@@ -41,7 +41,8 @@ unit (``data/`` itself). The steps:
 3. swap: move every staged unit into its place under ``data/``;
 4. drop trash: delete the staging dir (the mark that the swap is
    done), ``data/`` itself once a partitioned table's last partition
-   is gone, then the trash.
+   is gone, the skip-index entries of every vanished partition (one
+   meta write), then the trash.
 
 Between steps 2 and 3 a replaced unit exists only in the trash. So
 ``vacuum`` rolls back: while a commit's staging dir still exists, each
@@ -453,11 +454,13 @@ class TableStore:
         Per-structure semantics are unchanged: ``merge`` widens zone
         bounds / ORs bitmaps (append), ``replace`` swaps the touched
         partitions' entries (partition overwrite / mutation recompute),
-        ``reset`` rebuilds from scratch. Deletes/compaction leave
-        entries untouched: stale bounds/bits only cost pruning
-        tightness, never correctness. Every partition present in
-        ``staged`` gets an entry for every maintained structure — an
-        all-NULL or empty column still lands an empty bitmap, or the
+        ``reset`` rebuilds from scratch. Deletes/compaction leave the
+        entries of surviving partitions untouched: stale bounds/bits
+        only cost pruning tightness, never correctness (``_commit``
+        drops the entries of partitions that vanish). Every partition
+        present in ``staged`` gets an entry for every maintained
+        structure — an all-NULL or empty column still lands an empty
+        bitmap, or the
         coverage checks in the prune methods would disable the index
         forever. ``zone``/``bloom_cols``/``ngram_cols`` restrict the
         maintained set (the ``add_*_index`` backfills refresh exactly
@@ -579,16 +582,18 @@ class TableStore:
         self._save_meta(name, meta)
 
     def zone_prune_partitions(
-        self, name: str, col: str, lo=None, hi=None
+        self, name: str, col: str, lo=None, hi=None, *, meta=None, listing=None
     ) -> list[str] | None:
         """Partition values whose [min, max] zone intersects [lo, hi] —
         or None when pruning isn't safe (no maps for this column, or a
         partition on disk has no entry, e.g. a table written before the
-        feature existed; callers then fall back to a full scan)."""
-        meta = self._meta(name)
+        feature existed; callers then fall back to a full scan).
+        ``meta``/``listing``: the table's meta and ``data/`` listing when
+        the caller already holds them (``_pruned``)."""
+        meta = self._meta(name) if meta is None else meta
         zcol, part = self._zone_spec(meta)
         zm = meta.get("zone_maps")
-        if zcol != col or not zm or not self._covers(name, zm):
+        if zcol != col or not zm or not self._covers(name, listing, zm):
             return None
         klo, khi = self._zkey(lo), self._zkey(hi)
         return sorted(
@@ -598,14 +603,16 @@ class TableStore:
             and (klo is None or mx is None or mx >= klo)
         )
 
-    def _covers(self, name: str, keys) -> bool:
+    def _covers(self, name: str, listing, keys) -> bool:
         """Every partition on disk has an entry in ``keys`` — the
         coverage contract of all skip indexes: a partition written
         before an index existed has no entry and must not be pruned,
-        so the prune methods return None (full scan) instead."""
+        so the prune methods return None (full scan) instead.
+        ``listing`` None lists ``data/`` here."""
+        if listing is None:
+            listing = self._listing(name)
         on_disk = {
-            urllib.parse.unquote(e.split("=", 1)[1])
-            for e in self.partitions(name)
+            urllib.parse.unquote(e.split("=", 1)[1]) for e in listing if "=" in e
         }
         return on_disk <= set(keys)
 
@@ -759,18 +766,19 @@ class TableStore:
         )
 
     def ngram_prune_partitions(
-        self, name: str, col: str, needle: str
+        self, name: str, col: str, needle: str, *, meta=None, listing=None
     ) -> list[str] | None:
         """Partition values that may contain ``needle`` as a substring
         of ``col`` — or None when pruning isn't safe (no index, needle
         shorter than the indexed n, or a partition on disk with no
-        entry). Every n-gram of the needle must have all its bits set."""
-        meta = self._meta(name)
+        entry). Every n-gram of the needle must have all its bits set.
+        ``meta``/``listing`` as in ``zone_prune_partitions``."""
+        meta = self._meta(name) if meta is None else meta
         idx = (meta.get("ngram_bloom_indexes") or {}).get(col)
         if idx is None or needle is None or len(needle) < idx["n"]:
             return None
         filters = idx.get("filters") or {}
-        if not self._covers(name, filters):
+        if not self._covers(name, listing, filters):
             return None
         return self._bloom_keep(
             filters,
@@ -783,18 +791,20 @@ class TableStore:
         time, then the exact ``contains`` applies on survivors. Without
         an applicable index (or a needle shorter than n) this degrades
         to an ordinary filtered full scan."""
-        keep = self.ngram_prune_partitions(name, col, needle)
-        df = self._pruned(name, self.read(name), keep)
+        df = self._pruned(name, self.ngram_prune_partitions, col, needle)
         return df.filter(F.col(col).contains(F.lit(needle)))
 
-    def _pruned(self, name: str, df: DataFrame, keep) -> DataFrame:
-        """``df`` restricted to the partitions a prune method kept
-        (skip indexes need a single partition column); ``None`` keeps
-        everything."""
+    def _pruned(self, name: str, prune, *args) -> DataFrame:
+        """The table's read restricted to the partitions the prune
+        method ``prune(name, *args)`` keeps (skip indexes need a single
+        partition column); ``None`` keeps everything. One meta read and
+        one ``data/`` listing serve both the probe and the scan."""
+        meta, listing = self._meta(name), self._listing(name)
+        keep = prune(name, *args, meta=meta, listing=listing)
+        df = self._read(name, meta, listing)
         if keep is None:
             return df
-        part = F.col(self._meta(name)["partition_by"][0])
-        return df.filter(self._part_in(part, keep))
+        return df.filter(self._part_in(F.col(meta["partition_by"][0]), keep))
 
     # -- projections (pre-aggregated alternate representation) -----------
     #
@@ -919,17 +929,20 @@ class TableStore:
             F.sum("_rows").alias("_rows"),
         )
 
-    def bloom_prune_partitions(self, name: str, col: str, value) -> list[str] | None:
+    def bloom_prune_partitions(
+        self, name: str, col: str, value, *, meta=None, listing=None
+    ) -> list[str] | None:
         """Partition values whose bloom filter may contain ``value`` — or
         None when pruning isn't safe (no index on this column, NULL
         probe, or a partition on disk with no entry: callers fall back
-        to a full scan, same coverage contract as zone maps)."""
-        meta = self._meta(name)
+        to a full scan, same coverage contract as zone maps).
+        ``meta``/``listing`` as in ``zone_prune_partitions``."""
+        meta = self._meta(name) if meta is None else meta
         idx = (meta.get("bloom_indexes") or {}).get(col)
         if idx is None or value is None:
             return None
         filters = idx.get("filters") or {}
-        if not self._covers(name, filters):
+        if not self._covers(name, listing, filters):
             return None
         return self._bloom_keep(
             filters,
@@ -945,8 +958,7 @@ class TableStore:
         out are never listed or opened), then the exact predicate applies
         on the surviving partitions. Without an applicable index this
         degrades to an ordinary filtered read."""
-        keep = self.bloom_prune_partitions(name, col, value)
-        df = self._pruned(name, self.read(name), keep)
+        df = self._pruned(name, self.bloom_prune_partitions, col, value)
         return df.filter(F.col(col) == F.lit(value))
 
     def read_where(self, name: str, col: str, lo=None, hi=None) -> DataFrame:
@@ -958,8 +970,7 @@ class TableStore:
         surviving partitions. Without applicable maps this degrades to
         an ordinary filtered read (parquet row-group stats still skip
         within files, courtesy of the sorted layout)."""
-        keep = self.zone_prune_partitions(name, col, lo, hi)
-        df = self._pruned(name, self.read(name), keep)
+        df = self._pruned(name, self.zone_prune_partitions, col, lo, hi)
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo))
         if hi is not None:
@@ -976,12 +987,18 @@ class TableStore:
         like a missing dir — parquet schema inference would fail on it,
         and a read must NEVER mutate storage (deleting here would race a
         concurrent in-flight first write's ``_temporary`` dir)."""
+        return self._read(name, self._meta(name), self._listing(name))
+
+    def _listing(self, name: str) -> list[str]:
+        """Child names of the table's ``data/`` dir (``[]`` when it does
+        not exist): listed once per public read and passed down with
+        the meta, like it."""
         data = join(self.path(name), "data")
-        no_data = not self.fs.exists(data) or all(
-            e.startswith(("_", ".")) for e in self.fs.listdir(data)
-        )
-        if no_data:
-            meta = self._meta(name)
+        return self.fs.listdir(data) if self.fs.exists(data) else []
+
+    def _read(self, name: str, meta: dict, listing: list[str]) -> DataFrame:
+        """``read`` over the meta and ``data/`` listing the caller holds."""
+        if all(e.startswith(("_", ".")) for e in listing):
             from from_superset_to_clickhouse_spark.schema import Field, Schema as S
 
             fields = tuple(Field(n, t, nb, d) for n, t, nb, d in meta["fields"])
@@ -990,7 +1007,8 @@ class TableStore:
                 if p not in [f.name for f in fields]:
                     schema = schema.add(p, "date")
             return self.spark.createDataFrame([], schema)
-        return self._scan(self._meta(name), data, [data])
+        data = join(self.path(name), "data")
+        return self._scan(meta, data, [data])
 
     def _scan(self, meta: dict, base: str, dirs: list[str]) -> DataFrame:
         """Parquet scan of ``dirs`` (``base`` or partition dirs under
@@ -1078,7 +1096,7 @@ class TableStore:
                 f"table {name} declares sum_cols; use summing_view "
                 "(latest-per-key would discard accumulated partials)"
             )
-        df = self.read(name)
+        df = self._read(name, meta, self._listing(name))
         key = meta["dedup_key"]
         if not key:
             return df.drop(INGEST_SEQ_COL)
@@ -1124,7 +1142,7 @@ class TableStore:
             )
         if not key:
             raise ValueError(f"summing table {name} needs a dedup_key")
-        df = self.read(name)
+        df = self._read(name, meta, self._listing(name))
         parts = [p for p in meta["partition_by"] if p in df.columns]
         group = list(key) + parts
         payload = [
@@ -1349,7 +1367,8 @@ class TableStore:
         the trash, the only copy of their committed rows; ``vacuum``
         moves them back rather than deleting them."""
         root = self.path(name)
-        parts = self._meta(name)["partition_by"]
+        meta = self._meta(name)
+        parts = meta["partition_by"]
         stamp = int(time.time() * 1000)
         data = join(root, "data")
         tmp = join(root, f"data_staging_{stamp}")
@@ -1378,7 +1397,30 @@ class TableStore:
         gone = set(rels) - set(new)
         if parts and gone and not any("=" in e for e in self.fs.listdir(data)):
             self.fs.delete(data)
+        self._forget_partitions(name, meta, gone)
         self.fs.delete(trash)
+
+    def _forget_partitions(self, name: str, meta: dict, rels) -> None:
+        """Drop the zone-map and (n-gram-)bloom entries of the vanished
+        partition units ``rels`` in one meta write, so the meta tracks
+        the live partitions instead of growing with every expired one.
+        Runs once the swap is done: a crash before it leaves stale
+        entries, which cost pruning tightness, never correctness.
+        Skip indexes need a single partition column, so no other layout
+        has entries to drop."""
+        if len(meta["partition_by"]) != 1 or not rels:
+            return
+        keys = {urllib.parse.unquote(r.split("=", 1)[1]) for r in rels}
+        maps = [meta.get("zone_maps") or {}] + [
+            idx.get("filters") or {}
+            for kind in ("bloom_indexes", "ngram_bloom_indexes")
+            for idx in (meta.get(kind) or {}).values()
+        ]
+        stale = [(m, k) for m in maps for k in keys & m.keys()]
+        for m, k in stale:
+            del m[k]
+        if stale:
+            self._save_meta(name, meta)
 
     def _compact_partitionwise(self, name: str, meta: dict) -> None:
         """Rewrite only the partitions that hold duplicate dedup keys.
@@ -1500,14 +1542,9 @@ class TableStore:
     def partitions(self, name: str) -> list[str]:
         """SHOW PARTITIONS analog (reference lists system.parts,
         ``v1/dag.py:88-94``)."""
-        meta = self._meta(name)
-        parts = meta["partition_by"]
-        if not parts:
+        if not self._meta(name)["partition_by"]:
             return []
-        data = join(self.path(name), "data")
-        if not self.fs.exists(data):
-            return []
-        return [e for e in self.fs.listdir(data) if "=" in e]
+        return [e for e in self._listing(name) if "=" in e]
 
     def set_ttl(self, name: str, expiry_expr: str) -> None:
         """ClickHouse table ``TTL <expr> DELETE`` analog: declare a SQL

@@ -1549,3 +1549,114 @@ def test_vacuum_rolls_back_crashed_commit(spark, tmp_path, op, partitioned):
             assert got.get(u) in (before.get(u), after.get(u)), (k, u, got)
         _CRASH_OPS[op](store, name)
         assert units(name) == after, k
+
+
+def _indexed_logs(spark, store):
+    """``logs`` (monthly partitions, zone map on ``id``) with an equality
+    and an n-gram bloom on ``v``: ids 0-9 in Jan, 100-109 in Feb,
+    200-209 in Mar."""
+    store.create(logs_schema("logs"))
+    store.add_bloom_index("logs", "v")
+    store.add_ngram_bloom_index("logs", "v", n=3)
+    rows = [
+        (base + i, ts(m, 3 + i), f"{name}-{base + i}")
+        for m, base, name in ((1, 0, "jan"), (2, 100, "feb"), (3, 200, "mar"))
+        for i in range(10)
+    ]
+    store.append("logs", _mkdf(spark, rows))
+    return rows
+
+
+_PUBLIC_READS = {
+    "read_where": (lambda s: s.read_where("logs", "id", 100, 104),
+                   lambda r: 100 <= r[0] <= 104),
+    "read_eq": (lambda s: s.read_eq("logs", "v", "feb-103"),
+                lambda r: r[2] == "feb-103"),
+    "read_like": (lambda s: s.read_like("logs", "v", "mar-20"),
+                  lambda r: "mar-20" in r[2]),
+    "read_since": (lambda s: s.read_since("logs", 0), lambda r: True),
+    "latest_view": (lambda s: s.latest_view("logs"), lambda r: True),
+}
+
+
+def test_public_reads_read_table_meta_once(spark, tmp_path, monkeypatch):
+    """Each public read reads ``_table_meta.json`` exactly once — the
+    prune probe, the coverage check and the scan share it — and returns
+    what the full-scan filter returns, also when an index is missing a
+    partition's entry and pruning falls back to a full scan."""
+    from from_superset_to_clickhouse_spark.fsio import Fs
+    from from_superset_to_clickhouse_spark.tablestore import META_FILE
+
+    store = TableStore(spark, str(tmp_path))
+    rows = _indexed_logs(spark, store)
+    reads = []
+    real = Fs.read_text
+
+    def spy(self, path):
+        if path.endswith(META_FILE):
+            reads.append(path)
+        return real(self, path)
+
+    def check(label):
+        build, keep = _PUBLIC_READS[label]
+        reads.clear()
+        df = build(store)
+        assert len(reads) == 1, (label, len(reads))
+        got = sorted(r["id"] for r in df.collect())
+        assert got == sorted(r[0] for r in rows if keep(r)), label
+
+    monkeypatch.setattr(Fs, "read_text", spy)
+    for label in _PUBLIC_READS:
+        check(label)
+    assert store.zone_prune_partitions("logs", "id", 100, 104) == ["2024-02-01"]
+    # A legacy partition without entries: every prune declines.
+    meta = store._meta("logs")
+    del meta["zone_maps"]["2024-02-01"]
+    del meta["bloom_indexes"]["v"]["filters"]["2024-02-01"]
+    del meta["ngram_bloom_indexes"]["v"]["filters"]["2024-02-01"]
+    store._save_meta("logs", meta)
+    assert store.zone_prune_partitions("logs", "id", 100, 104) is None
+    assert store.bloom_prune_partitions("logs", "v", "feb-103") is None
+    assert store.ngram_prune_partitions("logs", "v", "mar-20") is None
+    for label in _PUBLIC_READS:
+        check(label)
+
+
+def test_vanished_partitions_leave_no_index_entries(spark, tmp_path):
+    """A mutation that empties a partition drops its zone-map, bloom and
+    n-gram-bloom entries, so the meta tracks the live partitions instead
+    of growing with every expired one; pruned reads still equal the
+    full-scan filter, and re-appending that partition value builds a
+    fresh entry rather than widening the dead one."""
+    store = TableStore(spark, str(tmp_path))
+    rows = _indexed_logs(spark, store)
+    feb = "2024-02-01"
+
+    def entries(meta):
+        return (
+            set(meta["zone_maps"]),
+            set(meta["bloom_indexes"]["v"]["filters"]),
+            set(meta["ngram_bloom_indexes"]["v"]["filters"]),
+        )
+
+    # A delete that leaves rows in its partition keeps the entries.
+    assert store.delete_where("logs", F.col("id") == 109) == 1
+    assert all(feb in keys for keys in entries(store._meta("logs")))
+    assert store.delete_where("logs", F.col("dttm") < ts(3, 1)) == 19
+    meta = store._meta("logs")
+    assert entries(meta) == ({"2024-03-01"},) * 3
+    assert store.partitions("logs") == ["dttm_month=2024-03-01"]
+    live = [r for r in rows if r[1] >= ts(3, 1)]
+    for build, keep in _PUBLIC_READS.values():
+        got = sorted(r["id"] for r in build(store).collect())
+        assert got == sorted(r[0] for r in live if keep(r))
+
+    store.append("logs", _mkdf(spark, [(150, ts(2, 20), "new-150")]))
+    meta = store._meta("logs")
+    assert meta["zone_maps"][feb] == [150, 150]
+    assert store.bloom_prune_partitions("logs", "v", "feb-103") == []
+    assert store.ngram_prune_partitions("logs", "v", "feb-10") == []
+    assert store.read_eq("logs", "v", "new-150").count() == 1
+    assert sorted(
+        r["id"] for r in store.read_where("logs", "id", 100, 160).collect()
+    ) == [150]
