@@ -60,6 +60,8 @@ def ingest(
     publish: str = "append",
     column_map: dict[str, str] | None = None,
     count_rows: bool = False,
+    *,
+    _after: dict | None = None,
 ) -> int | None:
     """One incremental load run. Returns rows ingested when
     ``count_rows=True``, else ``None`` after a write and ``0`` for an
@@ -79,9 +81,17 @@ def ingest(
     (stops at the first found row) to skip the write entirely; with the
     observation the write itself is the emptiness probe (an empty
     append/dynamic-overwrite is a no-op on the table data).
+
+    ``_after`` (private, for ``v2_daily_load``'s retention anchor; needs
+    ``count_rows=True`` and an append): a dict that receives the
+    table's MAX(``watermark_field``) after the load under
+    ``"watermark"`` (``_watermark_after``), from the same Observation
+    — no scan of the table.
     """
     from pyspark.sql import Observation
 
+    if _after is not None and (publish != "append" or not count_rows):
+        raise ValueError("_after needs count_rows=True and publish='append'")
     store.create(schema, if_not_exists=True)
     target = store.read(schema.name)
     if publish == "swap":
@@ -97,7 +107,10 @@ def ingest(
     inc_plain = inc
     if count_rows:
         obs = Observation()
-        inc = inc_plain.observe(obs, F.count(F.lit(1)).alias("n"))
+        aggs = [F.count(F.lit(1)).alias("n")]
+        if _after is not None:
+            aggs.append(F.max(F.col(watermark_field)).alias("wm"))
+        inc = inc_plain.observe(obs, *aggs)
     elif inc_plain.isEmpty():
         return 0
     if publish == "swap":
@@ -107,7 +120,7 @@ def ingest(
     if obs is None:
         return None
     try:
-        return int(obs.get["n"])
+        got = obs.get
     except Exception:
         # An empty increment schedules zero tasks, so the observation
         # collects no metric row. CONFIRM that before reporting 0 —
@@ -115,6 +128,22 @@ def ingest(
         # must surface, not masquerade as an empty load. (isEmpty on
         # the unobserved plan is cheap either way: first-row
         # short-circuit when rows exist, empty pruned scan when not.)
-        if inc_plain.isEmpty():
-            return 0
-        raise
+        if not inc_plain.isEmpty():
+            raise
+        got = {"n": 0}
+    if _after is not None:
+        _after["watermark"] = _watermark_after(value, got.get("wm"))
+    return int(got["n"])
+
+
+def _watermark_after(before: Any, inc_max: Any) -> Any:
+    """The target's MAX(watermark) after appending an increment whose
+    own maximum is ``inc_max`` (None: no rows), ``before`` being the
+    probe the increment was filtered against. Every increment row is
+    past ``before`` (``increment_predicate``), so a non-empty
+    increment's maximum is the new one; an empty one leaves ``before``
+    (the bootstrap for an empty target, as a probe would return).
+    Assumes the single writer per table that TableStore's commit
+    protocol already assumes: nothing else lands in the target between
+    the probe and the caller's use of the value."""
+    return before if inc_max is None else inc_max

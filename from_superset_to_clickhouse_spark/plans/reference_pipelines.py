@@ -67,10 +67,15 @@ def v2_daily_load(
             store.create(dim_schema, if_not_exists=True)
         return "created"
 
+    # The fact table's MAX(watermark) after its ingest, taken from the
+    # ingest's own Observation: the retention anchor, with no re-scan.
+    fact_after: dict = {}
+
     def upload_fact(ctx):
         return ingest(
             store, fact_source, fact_schema, fact_watermark,
             source_tag=source_tag, strict=True, count_rows=True,
+            _after=fact_after,
         )
 
     def upload_dim(ctx):
@@ -85,7 +90,9 @@ def v2_daily_load(
         # Reference: never delete from the legacy database (v2/dag.py:126-130).
         if ctx.get("connection") == "superset_old":
             raise SkipStep("legacy source — retention delete skipped")
-        anchor = wm.probe(store.read(fact_schema.name), fact_watermark)
+        # Single writer per table (TableStore's contract): the fact
+        # table has not changed since its ingest took this maximum.
+        anchor = fact_after["watermark"]
         cutoff = months_ago(retention_months, F.lit(anchor))
         return store.delete_where(
             fact_schema.name, F.col(fact_watermark) < cutoff

@@ -94,10 +94,11 @@ class Schema:
         """
         cols = []
         for f in self.fields:
+            # Cast inside the coalesce: coalesce widens to the wider of
+            # its arguments, so a bigint source would stay bigint.
+            c = F.col(f.name).cast(f.spark_type)
             if f.default is not None:
-                c = F.coalesce(F.col(f.name), F.lit(f.default).cast(f.spark_type))
-            else:
-                c = F.col(f.name).cast(f.spark_type)
+                c = F.coalesce(c, F.lit(f.default).cast(f.spark_type))
             cols.append(c.alias(f.name))
         return cols
 

@@ -51,6 +51,17 @@ whose place under ``data/`` is empty is moved back before the
 leftovers are deleted. No committed row is lost; each unit reads as
 either its old or its new contents, and re-running the mutation
 completes it.
+
+Physical-type contract: files under ``data/`` carry the declared
+types; reads declare them. Every write (``_prepare``, ``_commit``)
+casts each declared column, and ``_ingest_seq``, to its declared type
+(``_declared``), so every scan passes the schema derived from the meta
+to the reader and Spark plans it without a footer-inference job. A
+column that older files lack (``add_column``) reads as NULL and its
+DEFAULT fills it. A store written by an earlier version whose files
+hold a physical type that Spark cannot read as the declared one (e.g.
+INT64 under an ``int`` field) has no migration path: such a file fails
+the read, and the table must be reloaded from its sources.
 """
 
 from __future__ import annotations
@@ -96,6 +107,23 @@ def _file_dir() -> Column:
     Select it straight over a scan (after any filter): a projection of
     this nondeterministic expression blocks filter pushdown."""
     return F.regexp_replace(F.input_file_name(), "/[^/]*$", "").alias("_dir")
+
+
+def _declared(meta: dict, unit: bool = False) -> str:
+    """DDL of the table's read schema, from its meta alone: the declared
+    fields, ``_ingest_seq bigint``, then the partition columns (a
+    derived one as ``date``), last as partition discovery puts them.
+    ``unit`` leaves the partition columns out: the schema of one
+    partition directory's files read on their own. Meta dtypes are
+    Spark DDL type names (``long`` as well as ``bigint``), so Spark
+    parses them."""
+    parts = meta["partition_by"]
+    types = {n: t for n, t, _nb, _d in meta["fields"]}
+    cols = [(n, t) for n, t in types.items() if n not in parts]
+    cols.append((INGEST_SEQ_COL, "bigint"))
+    if not unit:
+        cols += [(p, types.get(p, "date")) for p in parts]
+    return ", ".join(f"`{n}` {t}" for n, t in cols)
 
 
 @dataclass
@@ -290,8 +318,22 @@ class TableStore:
         # Ingest sequence: monotone batch counter — the "physically last
         # inserted wins" ordering ReplacingMergeTree uses when no version
         # column is declared.
-        df = df.withColumn(INGEST_SEQ_COL, F.lit(seq))
-        return self._layout(df, meta), parts
+        df = df.withColumn(INGEST_SEQ_COL, F.lit(seq).cast("bigint"))
+        return self._layout(self._conform(df, meta), meta), parts
+
+    def _conform(self, df: DataFrame, meta: dict) -> DataFrame:
+        """``df`` with each declared column it carries cast to its
+        declared type (``_declared``) — the physical-type contract of
+        the module docstring, applied at both write choke points
+        (``_prepare``, ``_commit``). A frame already in the declared
+        types comes back unchanged."""
+        want = {f.name: f.dataType for f in T.StructType.fromDDL(_declared(meta))}
+        casts = {
+            f.name: F.col(f.name).cast(want[f.name])
+            for f in df.schema.fields
+            if want.get(f.name, f.dataType) != f.dataType
+        }
+        return df.withColumns(casts) if casts else df
 
     def _layout(self, df: DataFrame, meta: dict) -> DataFrame:
         """Write layout of every full-row write: hash-repartition by the
@@ -620,8 +662,15 @@ class TableStore:
         """Partition keys whose bitmap has every bit of ``positions``
         set — the probe of the equality and n-gram blooms. The
         positions come from the JVM hash on a 1-row relation, so probe
-        and build agree bit-for-bit."""
-        pos = self.spark.range(1).select(positions.alias("_p")).first()["_p"]
+        and build agree bit-for-bit. The relation is a ``VALUES`` row,
+        not ``range(1)``: the optimizer folds the projection over a
+        local relation into a ``LocalTableScan`` that the driver
+        evaluates itself, while a ``range`` runs a one-task job."""
+        pos = (
+            self.spark.sql("SELECT * FROM VALUES (0) AS t(_z)")
+            .select(positions.alias("_p"))
+            .first()["_p"]
+        )
         bitmaps = {key: bytes.fromhex(hx) for key, hx in filters.items()}
         return sorted(
             key
@@ -923,7 +972,10 @@ class TableStore:
             # projection partial; rebuild once, incrementality resumes.
             self._rebuild_projection(name, proj)
             spec = self._meta(name)["projections"][proj]
-        parts = self.spark.read.parquet(self._proj_dir(name, proj))
+        # The partials' schema is the partial aggregate's over the
+        # declared schema: analysis of an empty frame, no job.
+        schema = self._partial_agg(self._empty(meta), spec).schema
+        parts = self.spark.read.schema(schema).parquet(self._proj_dir(name, proj))
         return parts.groupBy(*spec["group_by"]).agg(
             *[F.sum(c).alias(c) for c in spec["sum_cols"]],
             F.sum("_rows").alias("_rows"),
@@ -999,41 +1051,35 @@ class TableStore:
     def _read(self, name: str, meta: dict, listing: list[str]) -> DataFrame:
         """``read`` over the meta and ``data/`` listing the caller holds."""
         if all(e.startswith(("_", ".")) for e in listing):
-            from from_superset_to_clickhouse_spark.schema import Field, Schema as S
-
-            fields = tuple(Field(n, t, nb, d) for n, t, nb, d in meta["fields"])
-            schema = S(name, fields).to_struct_type().add(INGEST_SEQ_COL, "long")
-            for p in meta["partition_by"]:
-                if p not in [f.name for f in fields]:
-                    schema = schema.add(p, "date")
-            return self.spark.createDataFrame([], schema)
+            return self._empty(meta)
         data = join(self.path(name), "data")
         return self._scan(meta, data, [data])
 
+    def _empty(self, meta: dict) -> DataFrame:
+        """An empty frame of the table's read schema (``_declared``)."""
+        return self.spark.createDataFrame([], _declared(meta))
+
     def _scan(self, meta: dict, base: str, dirs: list[str]) -> DataFrame:
         """Parquet scan of ``dirs`` (``base`` or partition dirs under
-        it) reconciled to the table schema — ``read`` and the mutations'
+        it) under the declared schema — ``read`` and the mutations'
         affected-partition reads share it, so a rewrite sees evolved
-        columns exactly as a read does."""
-        reader = self.spark.read.option("basePath", base)
-        evolved = meta.get("evolved_defaults") or {}
-        if not evolved:
-            return reader.parquet(*dirs)
-        # Schema evolution read: files written before add_column() lack
-        # the evolved columns. mergeSchema unions all file footers (paid
-        # only on evolved tables — it reads every footer, so plain
-        # tables keep the cheap single-footer planning path) and the
-        # declared DEFAULT backfills lazily, the ClickHouse
-        # ALTER ADD COLUMN semantic: no data rewrite, old rows read as
-        # the default. compact() materializes it physically.
-        df = reader.option("mergeSchema", "true").parquet(*dirs)
-        for cname, (dtype, default) in evolved.items():
-            filler = F.lit(default).cast(dtype)
-            if cname not in df.columns:
-                df = df.withColumn(cname, filler)
-            elif default is not None:
-                df = df.withColumn(cname, F.coalesce(F.col(cname), filler))
-        return df
+        columns exactly as a read does. The declared schema spares the
+        footer-inference job. Files written before add_column() lack
+        the evolved columns, which read as NULL; the declared DEFAULT
+        backfills them lazily, the ClickHouse ALTER ADD COLUMN
+        semantic: no data rewrite, old rows read as the default.
+        compact() materializes it physically."""
+        df = (
+            self.spark.read.schema(_declared(meta))
+            .option("basePath", base)
+            .parquet(*dirs)
+        )
+        fill = {
+            c: F.coalesce(F.col(c), F.lit(default).cast(dtype))
+            for c, (dtype, default) in (meta.get("evolved_defaults") or {}).items()
+            if default is not None
+        }
+        return df.withColumns(fill) if fill else df
 
     def current_seq(self, name: str) -> int:
         """The last committed ingest-sequence number — pair with
@@ -1186,7 +1232,9 @@ class TableStore:
             return
         else:
             latest = self.latest_view(name)
-        out = latest.withColumn(INGEST_SEQ_COL, F.lit(meta["ingest_seq"]))
+        out = latest.withColumn(
+            INGEST_SEQ_COL, F.lit(meta["ingest_seq"]).cast("bigint")
+        )
         self._commit(
             name,
             self._layout(out, meta),
@@ -1222,6 +1270,7 @@ class TableStore:
             return {}
         sort_by = meta.get("sort_by") or []
         shard_by = meta.get("shard_by")
+        unit = _declared(meta, unit=True)
         staged: dict[str, DataFrame] = {}
         rewritten: dict[str, tuple[int, int]] = {}
         for rel in self._partition_rel_dirs(data, len(meta["partition_by"])):
@@ -1235,7 +1284,7 @@ class TableStore:
             want = max(1, -(-total // target_bytes))
             if len(files) <= want:
                 continue
-            df = self.spark.read.parquet(d)
+            df = self.spark.read.schema(unit).parquet(d)
             df = (
                 df.repartition(want, F.col(shard_by))
                 if shard_by and shard_by in df.columns
@@ -1317,8 +1366,9 @@ class TableStore:
 
         zv = self._morton(scaled(cols[0], 0), scaled(cols[1], 1), nbits)
         staged = {}
+        unit = _declared(meta, unit=True)
         for rel in self._partition_rel_dirs(data, len(meta["partition_by"])):
-            df = self.spark.read.parquet(self._unit(data, rel))
+            df = self.spark.read.schema(unit).parquet(self._unit(data, rel))
             staged[rel] = (
                 df.withColumn("_zv", zv)
                 .repartitionByRange(files, F.col("_zv"))
@@ -1375,9 +1425,13 @@ class TableStore:
         trash = join(root, f"_trash_{stamp}")
         if isinstance(staged, dict):
             for rel, frame in staged.items():
-                frame.write.mode("overwrite").parquet(self._unit(tmp, rel))
+                self._conform(frame, meta).write.mode("overwrite").parquet(
+                    self._unit(tmp, rel)
+                )
         else:
-            staged.write.mode("overwrite").partitionBy(*parts).parquet(tmp)
+            self._conform(staged, meta).write.mode("overwrite").partitionBy(
+                *parts
+            ).parquet(tmp)
         new = (
             self._partition_rel_dirs(tmp, len(parts))
             if self.fs.exists(tmp)
@@ -1974,7 +2028,7 @@ class TableStore:
                 for p in parts:
                     if p not in ins.columns:
                         ins = ins.withColumn(p, _DERIVED_PARTITIONS[p]())
-                ins = ins.withColumn(INGEST_SEQ_COL, F.lit(seq))
+                ins = ins.withColumn(INGEST_SEQ_COL, F.lit(seq).cast("bigint"))
                 in_rewrite = self._rel_filter(parts, rels)
                 n_folded = ins.filter(in_rewrite).count()
                 if n_folded:

@@ -119,3 +119,27 @@ def test_ingest_counts_without_second_scan_and_empty_first_load(spark, tmp_path)
     n2 = ingest(store, rows, sch, "dttm", "t", count_rows=True)
     assert n2 == 0
     assert store.read("logs").count() == 2
+
+
+def test_bigint_source_lands_in_the_declared_types(spark, tmp_path):
+    """``Schema.coerce`` casts a defaulted field inside its coalesce, so
+    a bigint source column lands as the declared ``int``: the increment,
+    the empty table and the loaded table all show the declared types."""
+    from from_superset_to_clickhouse_spark.schema import LOGS
+
+    declared = [(f.name, f.dtype) for f in LOGS.fields]
+    src = spark.createDataFrame(
+        [(1, "view", 7, "{}", ts(1, 5), 3, None, 120, None)],
+        "id bigint, action string, user_id bigint, json string, dttm timestamp, "
+        "dashboard_id bigint, slice_id bigint, duration_ms bigint, referrer string",
+    )
+    inc = build_increment(src, LOGS, "dttm", wm.BOOTSTRAP, source_tag="pg")
+    assert inc.dtypes == declared
+    store = TableStore(spark, str(tmp_path))
+    store.create(LOGS)
+    empty = store.read("logs").dtypes
+    assert empty == declared + [("_ingest_seq", "bigint"), ("dttm_month", "date")]
+    assert ingest(store, src, LOGS, "dttm", source_tag="pg", count_rows=True) == 1
+    got = store.read("logs")
+    assert got.dtypes == empty
+    assert got.first()["slice_id"] == -1

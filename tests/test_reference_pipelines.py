@@ -2,8 +2,11 @@
 (SURVEY.md §3.1-3.2): split incremental runs == one full load, shard
 union == unsharded load, legacy-source retention skip."""
 
+import datetime as dt
+
 from pyspark.sql import functions as F
 
+from from_superset_to_clickhouse_spark import watermark as wm
 from from_superset_to_clickhouse_spark.plans.reference_pipelines import (
     v1_shard_load,
     v2_daily_load,
@@ -85,3 +88,34 @@ def test_v1_rerun_reprocesses_current_month_only(spark, tmp_path):
     v1_shard_load(store, src2, sch, "dttm")
     rows = {r["id"]: r["v"] for r in store.read("logs").collect()}
     assert rows == {1: "jan", 2: "feb-a", 3: "feb-b"}
+
+
+def test_v2_retention_anchor_comes_from_the_fact_ingest(spark, tmp_path, monkeypatch):
+    """The retention anchor is the fact table's MAX(dttm) as the fact
+    ingest's own write observed it (the pre-load watermark when nothing
+    new arrived), so a run probes the watermark once, for the ingest,
+    and deletes what a probe of the loaded table would have anchored."""
+    calls = []
+    real = wm.probe
+    monkeypatch.setattr(
+        wm, "probe", lambda df, field, **kw: calls.append(field) or real(df, field, **kw)
+    )
+    store = TableStore(spark, str(tmp_path))
+    sch = logs_schema("logs")
+    rows = [(i, ts(1 + i % 12, 1 + i % 27, i % 24), f"v{i}") for i in range(60)]
+    present, high = [], dt.datetime.min
+    runs = ((range(1, 7), 10), (range(7, 13), 30), (range(7, 13), 0))
+    for months, n_gone in runs:
+        batch = [r for r in rows if r[1].month in months]
+        calls.clear()
+        res = v2_daily_load(store, _src(spark, batch), sch, "dttm", retention_months=3)
+        loaded = [r for r in batch if r[1] > high]
+        present += loaded
+        high = max([high] + [r[1] for r in loaded])
+        cutoff = dt.datetime(2024, high.month - 3, 1)
+        gone = [r for r in present if r[1] < cutoff]
+        present = [r for r in present if r[1] >= cutoff]
+        assert calls == ["dttm"]
+        assert (res["fact_upload_data"], res["delete_old_rows"]) == (len(loaded), len(gone))
+        assert len(gone) == n_gone
+    assert sorted(r["id"] for r in store.read("logs").collect()) == sorted(r[0] for r in present)

@@ -1660,3 +1660,164 @@ def test_vanished_partitions_leave_no_index_entries(spark, tmp_path):
     assert sorted(
         r["id"] for r in store.read_where("logs", "id", 100, 160).collect()
     ) == [150]
+
+
+def _jobs_launched(spark, build) -> int:
+    """Spark jobs that ``build()`` launches, counted in a job group of
+    its own once the listener bus has delivered their start events."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"construct-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "construct only")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_constructing_a_public_read_launches_no_job(spark, tmp_path):
+    """Every read declares the schema its meta holds, so building one
+    plans without a footer-inference job, and the bloom probes hash
+    over a local relation the driver evaluates itself."""
+    store = TableStore(spark, str(tmp_path))
+    _indexed_logs(spark, store)
+    store.create(
+        Schema(
+            "sums",
+            (
+                Field("k", "string", nullable=False),
+                Field("dttm", "timestamp"),
+                Field("n", "long"),
+            ),
+            dedup_key=("k",),
+            partition_by=("dttm_month",),
+            sum_cols=("n",),
+        )
+    )
+    store.append(
+        "sums",
+        spark.createDataFrame(
+            [("a", ts(1, 5), 1), ("a", ts(1, 6), 2)], "k string, dttm timestamp, n long"
+        ),
+    )
+    reads = {
+        "read": lambda: store.read("logs"),
+        "read_as_of": lambda: store.read_as_of("logs", 1),
+        "summing_view": lambda: store.summing_view("sums"),
+        **{label: (lambda b=b: b(store)) for label, (b, _k) in _PUBLIC_READS.items()},
+    }
+    assert store.bloom_prune_partitions("logs", "v", "feb-103") == ["2024-02-01"]
+    assert store.ngram_prune_partitions("logs", "v", "mar-20") == ["2024-03-01"]
+    launched = {label: _jobs_launched(spark, build) for label, build in reads.items()}
+    assert launched == dict.fromkeys(reads, 0)
+    assert [tuple(r) for r in store.summing_view("sums").collect()] == [
+        ("a", ts(1, 6), 3, dt.date(2024, 1, 1))
+    ]
+
+
+def test_ingest_seq_and_declared_types_read_the_same_empty_or_not(spark, tmp_path):
+    """An empty table and a written one read the same column names and
+    types: the declared ones, ``_ingest_seq bigint`` and the derived
+    partition column last; a wider or narrower source type is cast to
+    the declared one on write."""
+    store = TableStore(spark, str(tmp_path))
+    sch = Schema(
+        "w",
+        (
+            Field("id", "int", nullable=False),
+            Field("dttm", "timestamp"),
+            Field("n", "long"),
+            Field("x", "float"),
+        ),
+        partition_by=("dttm_month",),
+    )
+    store.create(sch)
+    want = [
+        ("id", "int"), ("dttm", "timestamp"), ("n", "bigint"), ("x", "float"),
+        ("_ingest_seq", "bigint"), ("dttm_month", "date"),
+    ]
+    assert store.read("w").dtypes == want
+    store.append(
+        "w",
+        spark.createDataFrame(
+            [(1, ts(1, 5), 2, 0.5)], "id bigint, dttm timestamp, n int, x double"
+        ),
+    )
+    assert store.read("w").dtypes == want
+    assert store.read("w").collect()[0]["_ingest_seq"] == 1
+
+
+def test_merge_into_wider_source_type_reads_back(spark, tmp_path):
+    """A MERGE source whose column is wider than the target's (bigint
+    into int) is cast to the declared type by the rewrite, so every
+    file under ``data/`` reads under the declared schema."""
+    store = TableStore(spark, str(tmp_path))
+    store.create(
+        Schema(
+            "d",
+            (Field("id", "int", nullable=False), Field("fk", "int", default=-1)),
+            sort_by=("id",),
+        )
+    )
+    store.append("d", spark.createDataFrame([(1, 10), (2, 20)], "id int, fk int"))
+    res = store.merge_into(
+        "d", spark.createDataFrame([(2, 21), (3, 30)], "id bigint, fk bigint"), on=["id"]
+    )
+    assert res == {"updated": 1, "deleted": 0, "inserted": 1}
+    got = store.read("d")
+    assert got.dtypes[:2] == [("id", "int"), ("fk", "int")]
+    assert sorted((r["id"], r["fk"]) for r in got.collect()) == [(1, 10), (2, 21), (3, 30)]
+
+
+@pytest.mark.parametrize(
+    "rewrite",
+    [
+        lambda s: s.optimize("o"),
+        lambda s: s.optimize_zorder("o", ["id", "score"], files=2),
+    ],
+    ids=["optimize", "optimize_zorder"],
+)
+def test_layout_rewrites_keep_evolved_column_values(spark, tmp_path, rewrite):
+    """``optimize`` and ``optimize_zorder`` read each unit under the
+    declared schema: a partition holding files from before and after
+    ``add_column`` keeps the evolved column's values, whichever file's
+    footer Spark would have inferred the schema from (it takes the first
+    file by name, and the names differ by write job). Ten pre-ALTER
+    appends span all four partitions and one post-ALTER append lands in
+    each, so an inferring read keeps every value only if each of the
+    four new files sorts before all ten old ones: 1 in C(14, 4) = 1,001."""
+    store = TableStore(spark, str(tmp_path))
+    store.create(
+        Schema(
+            "o",
+            (Field("id", "int", nullable=False), Field("dttm", "timestamp")),
+            partition_by=("dttm_month",),
+        )
+    )
+    for i in range(10):
+        store.append(
+            "o",
+            spark.createDataFrame(
+                [(10 * i + m, ts(m, 5)) for m in range(1, 5)], "id int, dttm timestamp"
+            ),
+        )
+    store.add_column("o", Field("score", "double", default=0.5))
+    for m in range(1, 5):
+        store.append(
+            "o",
+            spark.createDataFrame(
+                [(100 + m, ts(m, 6), 9.0)], "id int, dttm timestamp, score double"
+            ),
+        )
+
+    def scores():
+        return sorted((r["id"], r["score"]) for r in store.read("o").collect())
+
+    before = scores()
+    assert [s for _i, s in before].count(9.0) == 4
+    rewrite(store)
+    assert scores() == before
