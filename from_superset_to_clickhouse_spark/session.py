@@ -4,9 +4,10 @@ The reference outsources all execution to ClickHouse; here Catalyst +
 Tungsten take that role, so the session config is where the "physical
 design" lives: AQE on (runtime re-plan, skew-join handling, partition
 coalescing), Arrow for any pandas interop, broadcast threshold sized for
-dimension tables, dynamic partition overwrite for the partition-swap
-publisher (reference: ``ALTER TABLE … REPLACE PARTITION``,
-``upload_superset_logs_to_clickhouse_v1/upload_superset_logs_to_clickhouse.py:96-102``).
+dimension tables, dynamic partition overwrite for partitioned
+``mode("overwrite")`` writes. (TableStore's partition swap, the
+``ALTER TABLE … REPLACE PARTITION`` analog, commits through its own
+staging protocol and does not rely on it.)
 """
 
 from __future__ import annotations
@@ -78,8 +79,8 @@ def get_spark(
         )
         # Arrow-accelerated toPandas/createDataFrame and pandas UDFs.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Partition-swap publisher: overwrite exactly the partitions present
-        # in the staged DataFrame (the REPLACE PARTITION analog).
+        # A partitioned overwrite replaces exactly the partitions present
+        # in the written DataFrame, not the whole directory.
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.session.timeZone", "UTC")
     )

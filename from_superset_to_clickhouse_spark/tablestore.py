@@ -11,8 +11,8 @@ Maps the reference's four physical table roles (SURVEY.md §1.1) onto Spark:
 - Distributed(…, id) sharding → Spark's native shuffle partitioning;
   ``repartition(shard_by)`` applied before write for co-location
   (``v2/sql/create_tables.sql:19-21``)
-- ALTER TABLE … REPLACE PARTITION atomic swap → dynamic partition
-  overwrite (``v1/dag.py:96-102``)
+- ALTER TABLE … REPLACE PARTITION atomic swap → ``overwrite_partitions``,
+  a ``_commit`` of the staged partitions (``v1/dag.py:96-102``)
 
 Scale notes: every write path repartitions by the shard key (co-located
 joins downstream), sorts within partitions by the sort key (Parquet
@@ -28,11 +28,15 @@ with a committer. Concurrency contract: SINGLE WRITER PER TABLE
 the ingest-sequence bump takes a best-effort lease so a misconfigured
 second writer fails fast instead of corrupting the sequence.
 
-Every rewrite (delete, update, merge, compact, optimize, z-order) builds
-only the frame to write and commits it through ``_commit``, one
-protocol for every layout. The unit of replacement is a partition
-directory under ``data/``; an unpartitioned table is one whole-table
-unit (``data/`` itself). The steps:
+Every replace (partition overwrite, delete, update, merge, compact,
+optimize, z-order) builds only the frame to write and commits it
+through ``_commit``, one protocol for every layout; no write uses
+Spark's own overwrite modes under ``data/``, and there is no
+whole-table ``overwrite``: a ``mode("overwrite")`` write deletes the
+old files before the job that writes the new ones, so a failed job
+leaves an unpartitioned table empty. The unit of replacement is a
+partition directory under ``data/``; an unpartitioned table is one
+whole-table unit (``data/`` itself). The steps:
 
 1. stage: write the frame to ``data_staging_<ms>`` next to ``data/``;
 2. trash: move every replaced unit to ``_trash_<ms>`` (same relative
@@ -50,7 +54,14 @@ unit in its trash (or in a ``data.old.*`` dir left by older versions)
 whose place under ``data/`` is empty is moved back before the
 leftovers are deleted. No committed row is lost; each unit reads as
 either its old or its new contents, and re-running the mutation
-completes it.
+completes it. The one write that is not a single commit is a merge on
+a partitioned table that inserts into a partition it does not rewrite:
+those inserts land in an append after the commit (see ``merge_into``).
+
+Every public method reads ``_table_meta.json`` once and passes the
+dict down; the private helpers take it as ``meta``. The one other read
+is ``_next_ingest_seq``'s, under the sequence lease, and the caller
+continues with the dict it saved.
 
 Physical-type contract: files under ``data/`` carry the declared
 types; reads declare them. Every write (``_prepare``, ``_commit``)
@@ -207,8 +218,9 @@ class TableStore:
         ``constraints.sql`` semantics): ``expr`` is a SQL boolean over
         the table's columns that every INSERTED row must satisfy.
         Matching ClickHouse, constraints are enforced on the WRITE path
-        only (append/overwrite — one extra aggregate pass over the
-        incoming batch, all constraints counted in a single job);
+        only (append, overwrite_partitions and merge inserts — one extra
+        aggregate pass over the incoming batch, all constraints counted
+        in a single job);
         mutations (UPDATE/MERGE of existing rows) are not re-checked,
         and existing data is not retro-validated. SQL-standard NULL
         semantics: a row violates only when the expression evaluates to
@@ -217,8 +229,8 @@ class TableStore:
         # table's own schema (F.expr alone is lazy in Spark 4) — an
         # unparseable expression or unknown column raises HERE, not on
         # the first insert.
-        self.read(name).limit(0).filter(F.expr(expr)).schema
         meta = self._meta(name)
+        self._empty(meta).filter(F.expr(expr)).schema
         checks = dict(meta.get("checks") or {})
         if check_name in checks:
             raise ValueError(f"check {check_name} already exists on {name}")
@@ -236,13 +248,13 @@ class TableStore:
         meta["checks"] = checks
         self._save_meta(name, meta)
 
-    def _validate_checks(self, name: str, df: DataFrame) -> None:
+    def _validate_checks(self, name: str, meta: dict, df: DataFrame) -> None:
         """Reject the whole batch if any CHECK constraint is violated —
         runs BEFORE the ingest sequence advances or any byte lands, so
         a failed insert leaves the table untouched (ClickHouse's
         exception-on-INSERT contract). One aggregate job counts every
         constraint's violations simultaneously."""
-        checks = self._meta(name).get("checks") or {}
+        checks = meta.get("checks") or {}
         if not checks:
             return
         counts = df.agg(
@@ -270,13 +282,18 @@ class TableStore:
         # writer wins — single-writer contract, see module docstring.
         self.fs.write_text(join(self.path(name), META_FILE), json.dumps(meta))
 
-    def _next_ingest_seq(self, name: str) -> int:
-        """Bump the monotone batch counter under a best-effort lease.
+    def _next_ingest_seq(self, name: str) -> dict:
+        """Bump the monotone batch counter under a best-effort lease;
+        returns the meta it saved, which the caller carries on with.
 
         The lease (atomic create-no-overwrite) makes a second concurrent
         writer fail fast rather than double-allocate a sequence; a lease
         older than 10 minutes is presumed crashed and broken. Not a
         substitute for the single-writer contract on raw object stores.
+        The meta is re-read under the lease, the one write-path read
+        besides the public call's own: it checks the sequence against
+        what is on disk, and the caller's later saves start from it, so
+        none writes back a stale ``ingest_seq``.
         """
         lock = join(self.path(name), ".meta.lock")
         deadline = time.time() + 30
@@ -301,16 +318,24 @@ class TableStore:
             meta = self._meta(name)
             meta["ingest_seq"] += 1
             self._save_meta(name, meta)
-            return meta["ingest_seq"]
+            return meta
         finally:
             self.fs.unlock(lock)
 
     # -- write paths (SURVEY §2.1 rows 2-4, 6; §2.7 row 36) -----------------
 
-    def _prepare(self, name: str, df: DataFrame, seq: int) -> tuple[DataFrame, list[str]]:
-        meta = self._meta(name)
-        parts = meta["partition_by"]
-        for p in parts:
+    def _prepare(
+        self, name: str, meta: dict, df: DataFrame
+    ) -> tuple[dict, DataFrame]:
+        """The one insert prologue of every write that adds rows
+        (``append``, ``overwrite_partitions``, merge inserts): validate
+        the CHECKs, take ONE ingest sequence, derive the partition
+        columns, stamp ``_ingest_seq`` and conform to the declared
+        types. Returns the meta ``_next_ingest_seq`` saved and the
+        prepared rows."""
+        self._validate_checks(name, meta, df)
+        meta = self._next_ingest_seq(name)
+        for p in meta["partition_by"]:
             if p not in df.columns:
                 if p not in _DERIVED_PARTITIONS:
                     raise ValueError(f"cannot derive partition column {p}")
@@ -318,8 +343,8 @@ class TableStore:
         # Ingest sequence: monotone batch counter — the "physically last
         # inserted wins" ordering ReplacingMergeTree uses when no version
         # column is declared.
-        df = df.withColumn(INGEST_SEQ_COL, F.lit(seq).cast("bigint"))
-        return self._layout(self._conform(df, meta), meta), parts
+        df = df.withColumn(INGEST_SEQ_COL, F.lit(meta["ingest_seq"]).cast("bigint"))
+        return meta, self._conform(df, meta)
 
     def _conform(self, df: DataFrame, meta: dict) -> DataFrame:
         """``df`` with each declared column it carries cast to its
@@ -387,49 +412,39 @@ class TableStore:
 
     def append(self, name: str, df: DataFrame) -> None:
         """INSERT INTO … SELECT (append ingest)."""
-        self._validate_checks(name, df)
-        seq = self._next_ingest_seq(name)
-        out, parts = self._prepare(name, df, seq)
+        self._append(name, *self._prepare(name, self._meta(name), df))
+
+    def _append(self, name: str, meta: dict, out: DataFrame) -> None:
+        """Write the prepared rows ``out`` as new files beside the
+        existing ones, then widen the skip indexes and add the
+        projection partials."""
+        out = self._layout(out, meta)
         w = out.write.mode("append")
-        if parts:
-            w = w.partitionBy(*parts)
+        if meta["partition_by"]:
+            w = w.partitionBy(*meta["partition_by"])
         w.parquet(join(self.path(name), "data"))
-        self._update_indexes(name, out, mode="merge")
-        self._update_projections(name, out)
+        self._update_indexes(name, meta, out, mode="merge")
+        self._update_projections(name, meta, out)
 
     def overwrite_partitions(self, name: str, df: DataFrame) -> None:
         """Atomic partition swap: replace exactly the partitions present in df.
 
         The Spark-native equivalent of the reference's staging-table +
-        ``ALTER TABLE … REPLACE PARTITION`` flow (``v1/dag.py:83-104``) —
-        dynamic partition overwrite touches only the months present in the
-        staged data, leaving other partitions untouched. (And unlike the
-        reference's ``partitions[0]`` bug, all staged partitions swap.)
+        ``ALTER TABLE … REPLACE PARTITION`` flow (``v1/dag.py:83-104``):
+        the batch is staged and ``_commit`` swaps each staged partition
+        in for its namesake, leaving other partitions untouched — the
+        same crash-recoverable protocol as every rewrite. (And unlike
+        the reference's ``partitions[0]`` bug, all staged partitions
+        swap.) An unpartitioned table has no partition to swap.
         """
-        self._validate_checks(name, df)
-        seq = self._next_ingest_seq(name)
-        out, parts = self._prepare(name, df, seq)
-        if not parts:
-            raise ValueError(f"table {name} is unpartitioned; use overwrite()")
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*parts)
-            .parquet(join(self.path(name), "data"))
-        )
-        self._update_indexes(name, out, mode="replace")
-        self._mark_projections_stale(name)
-
-    def overwrite(self, name: str, df: DataFrame) -> None:
-        self._validate_checks(name, df)
-        seq = self._next_ingest_seq(name)
-        out, parts = self._prepare(name, df, seq)
-        w = out.write.mode("overwrite")
-        if parts:
-            w = w.partitionBy(*parts)
-        w.parquet(join(self.path(name), "data"))
-        self._update_indexes(name, out, mode="reset")
-        self._mark_projections_stale(name)
+        meta = self._meta(name)
+        if not meta["partition_by"]:
+            raise ValueError(f"table {name} is unpartitioned: no partition to swap")
+        meta, out = self._prepare(name, meta, df)
+        out = self._layout(out, meta)
+        self._commit(name, meta, out)
+        self._update_indexes(name, meta, out, mode="replace")
+        self._mark_projections_stale(name, meta)
 
     # -- zone maps (sort-key min/max per partition — data skipping) ---------
 
@@ -478,6 +493,7 @@ class TableStore:
     def _update_indexes(
         self,
         name: str,
+        meta: dict,
         staged: DataFrame,
         mode: str,
         zone: bool = True,
@@ -513,8 +529,8 @@ class TableStore:
         ``bits`` positions per structure per touched partition cross
         the exchange, and zone min/max ride the same exchange (their
         values are duplicated per exploded position, which min/max
-        ignore)."""
-        meta = self._meta(name)
+        ignore). ``meta`` is the caller's held dict; it is updated in
+        place and saved."""
         zcol, part = self._zone_spec(meta)
         if not zone or zcol is None or zcol not in staged.columns:
             zcol = None
@@ -720,7 +736,7 @@ class TableStore:
         meta = self._meta(name)
         if len(meta["partition_by"]) != 1:
             raise ValueError("bloom indexes need a single-column partition layout")
-        existing = self.read(name)
+        existing = self._read(name, meta, self._listing(name))
         if col not in existing.columns:
             raise ValueError(f"no column {col} in table {name}")
         dtype = existing.schema[col].dataType.simpleString()
@@ -729,7 +745,7 @@ class TableStore:
         meta["bloom_indexes"] = idxs
         self._save_meta(name, meta)
         self._update_indexes(
-            name, existing, mode="reset",
+            name, meta, existing, mode="reset",
             zone=False, bloom_cols=[col], ngram_cols=[],
         )
 
@@ -773,7 +789,7 @@ class TableStore:
             raise ValueError(
                 "ngram bloom indexes need a single-column partition layout"
             )
-        existing = self.read(name)
+        existing = self._read(name, meta, self._listing(name))
         if col not in existing.columns:
             raise ValueError(f"no column {col} in table {name}")
         idxs = dict(meta.get("ngram_bloom_indexes") or {})
@@ -781,7 +797,7 @@ class TableStore:
         meta["ngram_bloom_indexes"] = idxs
         self._save_meta(name, meta)
         self._update_indexes(
-            name, existing, mode="reset",
+            name, meta, existing, mode="reset",
             zone=False, bloom_cols=[], ngram_cols=[col],
         )
 
@@ -840,15 +856,17 @@ class TableStore:
         time, then the exact ``contains`` applies on survivors. Without
         an applicable index (or a needle shorter than n) this degrades
         to an ordinary filtered full scan."""
-        df = self._pruned(name, self.ngram_prune_partitions, col, needle)
+        df = self._pruned(
+            name, self._meta(name), self.ngram_prune_partitions, col, needle
+        )
         return df.filter(F.col(col).contains(F.lit(needle)))
 
-    def _pruned(self, name: str, prune, *args) -> DataFrame:
+    def _pruned(self, name: str, meta: dict, prune, *args) -> DataFrame:
         """The table's read restricted to the partitions the prune
         method ``prune(name, *args)`` keeps (skip indexes need a single
-        partition column); ``None`` keeps everything. One meta read and
-        one ``data/`` listing serve both the probe and the scan."""
-        meta, listing = self._meta(name), self._listing(name)
+        partition column); ``None`` keeps everything. The caller's meta
+        and one ``data/`` listing serve both the probe and the scan."""
+        listing = self._listing(name)
         keep = prune(name, *args, meta=meta, listing=listing)
         df = self._read(name, meta, listing)
         if keep is None:
@@ -896,7 +914,7 @@ class TableStore:
         }
         meta["projections"] = projs
         self._save_meta(name, meta)
-        self._rebuild_projection(name, proj)
+        self._rebuild_projection(name, meta, proj)
 
     def _proj_dir(self, name: str, proj: str) -> str:
         return join(self.path(name), f"proj_{proj}")
@@ -907,10 +925,9 @@ class TableStore:
             F.count(F.lit(1)).alias("_rows"),
         )
 
-    def _rebuild_projection(self, name: str, proj: str) -> None:
-        meta = self._meta(name)
+    def _rebuild_projection(self, name: str, meta: dict, proj: str) -> None:
         spec = meta["projections"][proj]
-        out = self._partial_agg(self.read(name), spec)
+        out = self._partial_agg(self._read(name, meta, self._listing(name)), spec)
         tmp = self._proj_dir(name, proj) + ".rebuilding"
         out.write.mode("overwrite").parquet(tmp)
         final = self._proj_dir(name, proj)
@@ -922,12 +939,12 @@ class TableStore:
         meta["projections"][proj] = spec
         self._save_meta(name, meta)
 
-    def _update_projections(self, name: str, staged: DataFrame) -> None:
+    def _update_projections(self, name: str, meta: dict, staged: DataFrame) -> None:
         """Append path: one partial-aggregate batch per projection over
         the INCREMENT — output bounded by the increment's distinct key
         count, shuffles partial-aggregated map-side.
 
-        Crash consistency: the data parquet commits FIRST (in append()),
+        Crash consistency: the data parquet commits FIRST (in _append()),
         then each partial lands here. Unlike zone maps/blooms (pruning
         hints — a gap only widens scans), projection partials are
         correctness-bearing: a crash between the two steps would serve
@@ -935,7 +952,6 @@ class TableStore:
         its partials cover AFTER the partial write commits; a spec whose
         ``as_of_seq`` lags ``meta['ingest_seq']`` is detected in
         read_projection and rebuilt through the existing stale path."""
-        meta = self._meta(name)
         projs = meta.get("projections") or {}
         for proj, spec in projs.items():
             if spec.get("stale"):
@@ -947,8 +963,7 @@ class TableStore:
             meta["projections"][proj] = spec
             self._save_meta(name, meta)
 
-    def _mark_projections_stale(self, name: str) -> None:
-        meta = self._meta(name)
+    def _mark_projections_stale(self, name: str, meta: dict) -> None:
         projs = meta.get("projections") or {}
         if not projs:
             return
@@ -970,8 +985,8 @@ class TableStore:
         if spec.get("stale") or spec.get("as_of_seq") != meta["ingest_seq"]:
             # as_of_seq lag = a crash landed the data batch but not its
             # projection partial; rebuild once, incrementality resumes.
-            self._rebuild_projection(name, proj)
-            spec = self._meta(name)["projections"][proj]
+            self._rebuild_projection(name, meta, proj)
+            spec = meta["projections"][proj]
         # The partials' schema is the partial aggregate's over the
         # declared schema: analysis of an empty frame, no job.
         schema = self._partial_agg(self._empty(meta), spec).schema
@@ -1010,7 +1025,9 @@ class TableStore:
         out are never listed or opened), then the exact predicate applies
         on the surviving partitions. Without an applicable index this
         degrades to an ordinary filtered read."""
-        df = self._pruned(name, self.bloom_prune_partitions, col, value)
+        df = self._pruned(
+            name, self._meta(name), self.bloom_prune_partitions, col, value
+        )
         return df.filter(F.col(col) == F.lit(value))
 
     def read_where(self, name: str, col: str, lo=None, hi=None) -> DataFrame:
@@ -1022,7 +1039,9 @@ class TableStore:
         surviving partitions. Without applicable maps this degrades to
         an ordinary filtered read (parquet row-group stats still skip
         within files, courtesy of the sorted layout)."""
-        df = self._pruned(name, self.zone_prune_partitions, col, lo, hi)
+        df = self._pruned(
+            name, self._meta(name), self.zone_prune_partitions, col, lo, hi
+        )
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo))
         if hi is not None:
@@ -1133,7 +1152,9 @@ class TableStore:
         classic Replacing skew case) combines map-side instead of
         piling into a single sort partition.
         """
-        meta = self._meta(name)
+        return self._latest_view(name, self._meta(name))
+
+    def _latest_view(self, name: str, meta: dict) -> DataFrame:
         if meta.get("sum_cols"):
             # On a summing table "latest per key" would silently DROP
             # accumulated partials — the merged state is the SUM, not
@@ -1179,7 +1200,9 @@ class TableStore:
         Plan: a single partial-aggregated groupBy — sums combine
         map-side, so a hot key accumulates in each map task instead of
         shuffling every partial row."""
-        meta = self._meta(name)
+        return self._summing_view(name, self._meta(name))
+
+    def _summing_view(self, name: str, meta: dict) -> DataFrame:
         sum_cols = meta.get("sum_cols") or []
         key = meta["dedup_key"]
         if not sum_cols:
@@ -1226,17 +1249,18 @@ class TableStore:
             # compaction materializes summing_view (per-partition fold,
             # full rewrite). Post-compact appends keep accumulating —
             # sums of sums are the same sums.
-            latest = self.summing_view(name)
+            latest = self._summing_view(name, meta)
         elif parts and meta["dedup_key"]:
             self._compact_partitionwise(name, meta)
             return
         else:
-            latest = self.latest_view(name)
+            latest = self._latest_view(name, meta)
         out = latest.withColumn(
             INGEST_SEQ_COL, F.lit(meta["ingest_seq"]).cast("bigint")
         )
         self._commit(
             name,
+            meta,
             self._layout(out, meta),
             self._partition_rel_dirs(data, len(parts)),
         )
@@ -1295,7 +1319,7 @@ class TableStore:
             staged[rel] = df
             rewritten[rel] = (len(files), want)
         if staged:
-            self._commit(name, staged)
+            self._commit(name, meta, staged)
         return rewritten
 
     @staticmethod
@@ -1342,7 +1366,7 @@ class TableStore:
         data = join(self.path(name), "data")
         if not self.fs.exists(data):
             return
-        full = self.read(name)
+        full = self._read(name, meta, self._listing(name))
         for c in cols:
             if c not in full.columns:
                 raise ValueError(f"no column {c} in table {name}")
@@ -1375,7 +1399,7 @@ class TableStore:
                 .sortWithinPartitions("_zv")
                 .drop("_zv")
             )
-        self._commit(name, staged)
+        self._commit(name, meta, staged)
 
     def _partition_rel_dirs(self, base: str, depth: int) -> list[str]:
         """Relative partition directories exactly ``depth`` levels under
@@ -1402,11 +1426,11 @@ class TableStore:
         """Path of unit ``rel`` under ``base`` ("." is ``base`` itself)."""
         return base if rel == "." else join(base, rel)
 
-    def _commit(self, name: str, staged, rels=()) -> None:
-        """The one commit of every rewrite: stage ``staged``, then swap
+    def _commit(self, name: str, meta: dict, staged, rels=()) -> None:
+        """The one commit of every replace: stage ``staged``, then swap
         it in for the units in ``rels`` (steps 1-4 of the module
         docstring). ``staged`` is a frame written under the table's
-        partition layout, a ``{rel: frame}`` map whose frames are each
+        partition layout, or a ``{rel: frame}`` map whose frames are each
         written straight into their unit (layout rewrites that read one
         partition dir at a time). Every staged unit replaces
         its namesake under ``data/``; units in ``rels`` with no staged
@@ -1417,7 +1441,6 @@ class TableStore:
         the trash, the only copy of their committed rows; ``vacuum``
         moves them back rather than deleting them."""
         root = self.path(name)
-        meta = self._meta(name)
         parts = meta["partition_by"]
         stamp = int(time.time() * 1000)
         data = join(root, "data")
@@ -1479,49 +1502,39 @@ class TableStore:
     def _compact_partitionwise(self, name: str, meta: dict) -> None:
         """Rewrite only the partitions that hold duplicate dedup keys.
 
-        1. One agg finds (partition, key) groups with >1 row → the small
-           set of affected partition values (collected — it is bounded by
-           the partition count, not the data).
-        2. Within-partition latest-per-key rows for those partitions are
-           staged to a temp dir (window over (partition, key) — same
-           scope as a ClickHouse merge). The affected-partition filter is
-           NULL-safe (``eqNullSafe``), so NULL-partition rows compact too.
-        3. ``_commit`` swaps each staged partition directory (named by
-           what Spark actually wrote, not reconstructed from values) in
-           for its namesake.
+        1. The mutation probe (``_affected``) over one ``_file_dir()``
+           row per (directory, key) group with >1 row collects the
+           affected partition directories — as Spark wrote them, so
+           NULL and escaped partition values need no reconstruction —
+           and re-reads only those through ``_scan``.
+        2. Within-partition latest-per-key rows (window over
+           (partition, key) — same scope as a ClickHouse merge) are
+           committed through ``_commit``, each replacing its namesake.
         """
         parts = meta["partition_by"]
         key = meta["dedup_key"]
-        df = self.read(name)
-        dup_rows = (
-            df.groupBy(*parts, *key)
+        df = self._read(name, meta, self._listing(name))
+        dups = (
+            df.select(*key, _file_dir())
+            .groupBy("_dir", *key)
             .count()
             .filter(F.col("count") > 1)
-            .select(*parts)
-            .distinct()
-            .collect()
+            .select("_dir")
         )
-        if not dup_rows:
+        n_dup, rels, affected = self._affected(name, meta, df, dups)
+        if not n_dup:
             return
-        affected = None
-        for r in dup_rows:
-            clause = None
-            for c in parts:
-                cond = F.col(c).eqNullSafe(F.lit(r[c]))
-                clause = cond if clause is None else clause & cond
-            affected = clause if affected is None else affected | clause
         order = []
         if meta.get("version_col"):
             order.append(F.col(meta["version_col"]).desc())
         order.append(F.col(INGEST_SEQ_COL).desc())
         w = Window.partitionBy(*[F.col(c) for c in parts + key]).orderBy(*order)
         latest = (
-            df.filter(affected)
-            .withColumn("_rn", F.row_number().over(w))
+            affected.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        self._commit(name, self._layout(latest, meta))
+        self._commit(name, meta, self._layout(latest, meta), rels)
 
     # -- metadata (SURVEY §2.7 row 38) ---------------------------------------
 
@@ -1552,7 +1565,7 @@ class TableStore:
             "sort_by": meta["sort_by"],
             "shard_by": meta.get("shard_by"),
             "ingest_seq": meta["ingest_seq"],
-            "partitions": self.partitions(name),
+            "partitions": self._partitions(name, meta),
             "stats": (
                 dict(
                     meta["stats"],
@@ -1573,7 +1586,7 @@ class TableStore:
         flag once later writes land — the CBO-food freshness contract.
         Returns the stats dict."""
         meta = self._meta(name)
-        df = self.read(name).drop(INGEST_SEQ_COL)
+        df = self._read(name, meta, self._listing(name)).drop(INGEST_SEQ_COL)
         aggs = [F.count(F.lit(1)).alias("_rows")]
         for c in df.columns:
             aggs.append(
@@ -1596,7 +1609,10 @@ class TableStore:
     def partitions(self, name: str) -> list[str]:
         """SHOW PARTITIONS analog (reference lists system.parts,
         ``v1/dag.py:88-94``)."""
-        if not self._meta(name)["partition_by"]:
+        return self._partitions(name, self._meta(name))
+
+    def _partitions(self, name: str, meta: dict) -> list[str]:
+        if not meta["partition_by"]:
             return []
         return [e for e in self._listing(name) if "=" in e]
 
@@ -1609,11 +1625,10 @@ class TableStore:
         Spark-native cadence is a scheduled job, and an explicit call
         keeps the deletion auditable. Fails fast on unresolvable
         expressions, like ``add_check``."""
-        probe = self.read(name).limit(0).select(
-            F.expr(expiry_expr).cast("timestamp")
-        )
-        probe.schema  # force resolution
         meta = self._meta(name)
+        self._empty(meta).select(
+            F.expr(expiry_expr).cast("timestamp")
+        ).schema  # force resolution
         meta["ttl_expr"] = expiry_expr
         self._save_meta(name, meta)
 
@@ -1624,11 +1639,13 @@ class TableStore:
         directories drop without a rewrite. Returns rows deleted; 0 if
         no TTL is declared. NULL expiries never expire (SQL unknown),
         same contract as ``delete_where``."""
-        expr = self._meta(name).get("ttl_expr")
+        meta = self._meta(name)
+        expr = meta.get("ttl_expr")
         if not expr:
             return 0
-        return self.delete_where(
+        return self._delete_where(
             name,
+            meta,
             F.expr(expr).cast("timestamp") < F.current_timestamp(),
         )
 
@@ -1665,19 +1682,22 @@ class TableStore:
         empty-schema fallback); an unpartitioned table left without
         rows keeps one schema-only file.
         """
+        return self._delete_where(name, self._meta(name), condition)
+
+    def _delete_where(self, name: str, meta: dict, condition) -> int:
         if not self.fs.exists(join(self.path(name), "data")):
             return 0
-        df = self.read(name)
+        df = self._read(name, meta, self._listing(name))
         cond = F.coalesce(condition, F.lit(False))
         n_del, rels, affected = self._affected(
-            name, df, df.filter(cond).select(_file_dir())
+            name, meta, df, df.filter(cond).select(_file_dir())
         )
         if n_del:
-            self._mark_projections_stale(name)
-            self._commit(name, affected.filter(~cond), rels)
+            self._mark_projections_stale(name, meta)
+            self._commit(name, meta, affected.filter(~cond), rels)
         return n_del
 
-    def _affected(self, name: str, df: DataFrame, hits: DataFrame):
+    def _affected(self, name: str, meta: dict, df: DataFrame, hits: DataFrame):
         """(hit count, affected unit rel-dirs, affected rows DF) — the
         shared probe of the DELETE/UPDATE/MERGE mutations. ``hits``
         holds one ``_file_dir()`` row per target row the mutation
@@ -1707,7 +1727,7 @@ class TableStore:
         if rels == ["."]:
             return hit["n"], rels, df
         dirs = [join(data_base, r) for r in rels]
-        return hit["n"], rels, self._scan(self._meta(name), data_base, dirs)
+        return hit["n"], rels, self._scan(meta, data_base, dirs)
 
     def update_where(
         self, name: str, condition, assignments: dict[str, Column]
@@ -1730,13 +1750,10 @@ class TableStore:
         into wrong answers; projections go stale."""
         if not self.fs.exists(join(self.path(name), "data")):
             return 0
-        parts = self._meta(name)["partition_by"]
-        df = self.read(name)
+        meta = self._meta(name)
+        df = self._read(name, meta, self._listing(name))
         cond = F.coalesce(condition, F.lit(False))
-        frozen = set(parts)
-        for p in parts:
-            if p in _DERIVED_PARTITIONS:
-                frozen.add(p.split("_")[0])  # ts_day/ts_month derive from ts
+        frozen = self._frozen(meta)
         for col in assignments:
             if col in frozen:
                 raise ValueError(
@@ -1746,11 +1763,11 @@ class TableStore:
             if col not in df.columns:
                 raise ValueError(f"no column {col} in table {name}")
         n_upd, rels, affected = self._affected(
-            name, df, df.filter(cond).select(_file_dir())
+            name, meta, df, df.filter(cond).select(_file_dir())
         )
         if n_upd == 0:
             return 0
-        self._mark_projections_stale(name)
+        self._mark_projections_stale(name, meta)
         updated = affected.select(
             *[
                 F.when(cond, assignments[c]).otherwise(F.col(c)).alias(c)
@@ -1759,38 +1776,60 @@ class TableStore:
                 for c in affected.columns
             ]
         )
-        self._commit(name, updated, rels)
-        self._recompute_indexes(name, rels)
+        self._commit(name, meta, updated, rels)
+        self._recompute_indexes(name, meta, rels)
         return n_upd
+
+    @staticmethod
+    def _frozen(meta: dict) -> set:
+        """Columns a mutation may not assign: the partition columns and
+        the source column of each derived one (ts_day/ts_month derive
+        from ts) — assigning them would move rows between
+        directories."""
+        parts = meta["partition_by"]
+        return set(parts) | {
+            p.split("_")[0] for p in parts if p in _DERIVED_PARTITIONS
+        }
 
     @classmethod
     def _rel_filter(cls, parts: list, rels: list) -> Column:
         """NULL-total predicate "row belongs to one of these partition
-        rel-dirs" (single-column layouts). The rel-dir values are
-        Hive-ESCAPED ('a:b' → 'a%3Ab'); CAST(col AS STRING) yields the
-        unescaped value, so the keys are unquoted — the same
-        reconstruction trap _zone_part_key documents."""
-        return cls._part_in(
-            F.col(parts[0]),
-            [urllib.parse.unquote(r.split("=", 1)[1]) for r in rels],
-        )
+        rel-dirs", at any partition depth: the row's partition values,
+        each as the string its directory name decodes to, are one of
+        the rel-dirs' value lists. Spark writes NULL and '' alike into
+        the Hive NULL key's directory, so both map to that key. The
+        rel-dir values are Hive-ESCAPED ('a:b' → 'a%3Ab'); CAST(col AS
+        STRING) yields the unescaped value, so the keys are unquoted —
+        the same reconstruction trap _zone_part_key documents. Over
+        partition columns only, Catalyst applies it as a partition
+        filter."""
+        row = F.array(*[
+            F.coalesce(
+                F.nullif(F.col(p).cast("string"), F.lit("")), F.lit(cls._HIVE_NULL)
+            )
+            for p in parts
+        ])
+        dirs = [
+            [urllib.parse.unquote(v.split("=", 1)[1]) for v in r.split("/")]
+            for r in rels
+        ]
+        return row.isin([F.array(*map(F.lit, d)) for d in dirs])
 
-    def _recompute_indexes(self, name: str, rels: list) -> None:
+    def _recompute_indexes(self, name: str, meta: dict, rels: list) -> None:
         """Recompute (not widen) skip-index metadata for rewritten
         units from their full post-mutation contents — shared by UPDATE
         and MERGE, one fused scan (_update_indexes). A table without
         skip indexes (every unpartitioned one) skips the read."""
-        meta = self._meta(name)
         if (
             self._zone_spec(meta)[0] is None
             and not meta.get("bloom_indexes")
             and not meta.get("ngram_bloom_indexes")
         ):
             return
-        rewritten = self.read(name).filter(
+        rewritten = self._read(name, meta, self._listing(name)).filter(
             self._rel_filter(meta["partition_by"], rels)
         )
-        self._update_indexes(name, rewritten, mode="replace")
+        self._update_indexes(name, meta, rewritten, mode="replace")
 
     def merge_into(
         self,
@@ -1810,11 +1849,16 @@ class TableStore:
         Scale shape: ONE key-join scan finds the affected partition
         directories (``input_file_name``, same machinery as
         DELETE/UPDATE); only those partitions rewrite — untouched
-        directories are never read again, never written. Inserts into
-        rewritten partitions ride the rewrite; the rest take the normal
-        append path (incremental zone/bloom maintenance). The rewritten
-        partitions' skip indexes are RECOMPUTED (replace mode). The not-matched rows are materialized BEFORE the swap —
-        a lazy anti-join evaluated after the rewrite would re-read
+        directories are never read again, never written. The inserts
+        take the one insert prologue (``_prepare``: one CHECK pass, one
+        ingest sequence), then ride the rewrite's commit — every insert
+        of an unpartitioned table, and on a partitioned one each insert
+        into a rewritten partition; inserts into any other partition,
+        existing or new, take the append path (incremental zone/bloom
+        maintenance; staging an existing partition would replace it).
+        The rewritten partitions' skip indexes are RECOMPUTED (replace
+        mode). The not-matched rows are materialized BEFORE the swap — a
+        lazy anti-join evaluated after the rewrite would re-read
         post-merge state (and resurrect rows a delete_matched just
         removed).
 
@@ -1824,14 +1868,12 @@ class TableStore:
         tables refuse MERGE (their append IS an upsert — use append +
         latest_view/compact).
 
-        Crash window: a merge that rewrites AND inserts commits in two
-        steps. On a partitioned table, inserts that fall into rewritten
-        partitions land atomically with the partition swap; the
-        remaining inserts (all of them on an unpartitioned table) land
-        in a later append. A crash between the two leaves the merge
-        half-applied (updates and folded inserts, none of the rest),
-        and no staging marker records it, so ``vacuum`` cannot detect
-        it."""
+        Crash window: only inserts into partitions that the merge does
+        not rewrite land in a second step, an append after the
+        rewrite's commit. A crash between the two leaves the merge
+        half-applied (updates and the inserts the commit carried, none
+        of the appended ones), and no staging marker records it, so
+        ``vacuum`` cannot detect it. Every other merge commits once."""
         meta = self._meta(name)
         if meta.get("dedup_key"):
             raise ValueError(
@@ -1841,11 +1883,7 @@ class TableStore:
         on = list(on)
         parts = meta["partition_by"]
         target_cols = [f[0] for f in meta["fields"]]
-        frozen = set(on)
-        for p in parts:
-            frozen.add(p)
-            if p in _DERIVED_PARTITIONS:
-                frozen.add(p.split("_")[0])
+        frozen = set(on) | self._frozen(meta)
         if update_cols is None:
             update_cols = [
                 c
@@ -1919,7 +1957,7 @@ class TableStore:
             )
             return F.broadcast(d) if est <= thr else d
 
-        df = self.read(name)
+        df = self._read(name, meta, self._listing(name))
         src_keys = _maybe_broadcast(src.select(*on).distinct(), on)
         data = join(self.path(name), "data")
 
@@ -1957,7 +1995,7 @@ class TableStore:
             if not self.fs.exists(data):
                 return 0, [], None
             hits = df.select(*on, _file_dir()).join(src_keys, on)
-            return self._affected(name, df, hits)
+            return self._affected(name, meta, df, hits)
 
         from concurrent.futures import ThreadPoolExecutor
 
@@ -1981,8 +2019,10 @@ class TableStore:
                 # frame makes the recount cheap.
                 n_ins = new_rows.count()
 
-        n_upd = n_del = n_folded = 0
-        ins = new_rows.select(*target_cols) if n_ins else None
+        n_upd = n_del = 0
+        ins = None
+        if n_ins:
+            meta, ins = self._prepare(name, meta, new_rows.select(*target_cols))
         if n_hit:
             upd_src = _maybe_broadcast(
                 src.select(
@@ -2010,32 +2050,25 @@ class TableStore:
                     ]
                 )
                 n_upd = n_hit
-            self._mark_projections_stale(name)
-            if ins is not None and parts:
-                # r16: inserts whose partitions are being rewritten
-                # ANYWAY ride the rewrite write instead of a second
-                # append pass — one write, one commit, one index
-                # recompute (the post-swap recompute reads them).
-                # Inserts landing in untouched partitions, and every
-                # insert into an unpartitioned table (whose append lays
-                # them out by shard and sort key), still go through the
-                # normal append below. The split count is a cheap
-                # aggregate on the CHECKPOINTED frame — an Observation
-                # inside the write would never fire when the fold
-                # branch is empty (zero tasks).
-                self._validate_checks(name, ins)
-                seq = self._next_ingest_seq(name)
-                for p in parts:
-                    if p not in ins.columns:
-                        ins = ins.withColumn(p, _DERIVED_PARTITIONS[p]())
-                ins = ins.withColumn(INGEST_SEQ_COL, F.lit(seq).cast("bigint"))
-                in_rewrite = self._rel_filter(parts, rels)
-                n_folded = ins.filter(in_rewrite).count()
+            self._mark_projections_stale(name, meta)
+            if ins is not None:
+                # Inserts into the units being rewritten ANYWAY ride the
+                # rewrite's commit — one write, one commit, one index
+                # recompute (it reads them): every insert of an
+                # unpartitioned table, else those whose partition is in
+                # ``rels``. The rest go through the append below: a
+                # staged partition replaces its namesake, so folding an
+                # insert into a partition the merge does not rewrite
+                # would drop that partition's rows. The split count is a
+                # cheap aggregate on the CHECKPOINTED frame — an
+                # Observation inside the write would never fire when the
+                # fold branch is empty (zero tasks).
+                whole = rels == ["."]
+                fold = F.lit(True) if whole else self._rel_filter(parts, rels)
+                n_folded = n_ins if whole else ins.filter(fold).count()
                 if n_folded:
-                    merged = merged.unionByName(
-                        ins.filter(in_rewrite).select(*merged.columns)
-                    )
-                ins = ins.filter(~in_rewrite)
+                    merged = merged.unionByName(ins.filter(fold))
+                ins = ins.filter(~fold) if n_ins > n_folded else None
             # Cluster the rewrite by partition column (guide §6): when
             # the update join shuffles `affected` by the merge key,
             # every reduce task otherwise fans out into every rewritten
@@ -2048,10 +2081,10 @@ class TableStore:
                 sz for r in rels for _f, sz in self.fs.file_sizes(join(data, r))
             ) > _ADVISORY_PARTITION_BYTES:
                 merged = merged.hint("rebalance", *parts)
-            self._commit(name, merged, rels)
-            self._recompute_indexes(name, rels)
-        if n_ins > n_folded:
-            self.append(name, ins)
+            self._commit(name, meta, merged, rels)
+            self._recompute_indexes(name, meta, rels)
+        if ins is not None:
+            self._append(name, meta, ins)
         return {"updated": n_upd, "deleted": n_del, "inserted": n_ins}
 
     # Name prefixes of the staging/trash dirs ``_commit`` leaves NEXT TO

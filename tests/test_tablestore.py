@@ -1469,6 +1469,12 @@ _CRASH_OPS = {
     ),
     "compact": lambda s, n: s.compact(n),
     "optimize": lambda s, n: s.optimize(n),
+    "overwrite_partitions": lambda s, n: s.overwrite_partitions(
+        n,
+        s.spark.createDataFrame(
+            [(1, ts(1, 5), "o"), (7, ts(1, 8), "o")], _CRASH_ROWS
+        ),
+    ),
 }
 
 
@@ -1511,6 +1517,13 @@ def test_vacuum_rolls_back_crashed_commit(spark, tmp_path, op, partitioned):
     def copy(name):
         shutil.copytree(store.path("base"), store.path(name))
         return name
+
+    if op == "overwrite_partitions" and not partitioned:
+        # No partition to swap: refused before any byte lands.
+        with pytest.raises(ValueError, match="unpartitioned"):
+            _CRASH_OPS[op](store, copy("clean"))
+        assert units("clean") == units("base")
+        return
 
     real_rename = store.fs.rename
     calls = []
@@ -1620,6 +1633,218 @@ def test_public_reads_read_table_meta_once(spark, tmp_path, monkeypatch):
     assert store.ngram_prune_partitions("logs", "v", "mar-20") is None
     for label in _PUBLIC_READS:
         check(label)
+
+
+def _merge_target(spark, store, name="m", partitioned=True):
+    """A non-Replacing table (MERGE refuses dedup keys): monthly
+    partitions, zone map on ``id`` and a bloom on ``v`` when
+    partitioned; ids 1-2 in Jan, 10-11 in Feb."""
+    store.create(
+        Schema(
+            name,
+            (
+                Field("id", "int", nullable=False),
+                Field("dttm", "timestamp", nullable=False),
+                Field("v", "string"),
+            ),
+            partition_by=("dttm_month",) if partitioned else (),
+            sort_by=("id",),
+        )
+    )
+    if partitioned:
+        store.add_bloom_index(name, "v")
+    store.append(
+        name,
+        _mkdf(spark, [(1, ts(1, 5), "a"), (2, ts(1, 6), "a"),
+                      (10, ts(2, 5), "a"), (11, ts(2, 6), "a")]),
+    )
+
+
+def test_merge_inserts_take_one_sequence_and_one_check_pass(
+    spark, tmp_path, monkeypatch
+):
+    """A merge's inserts — into a partition it rewrites, an untouched
+    one and a new one — are validated once and stamped with ONE ingest
+    sequence, however they are split between the rewrite's commit and
+    the append after it."""
+    store = TableStore(spark, str(tmp_path))
+    _merge_target(spark, store)
+    store.add_check("m", "pos", "id > 0")
+    assert store.current_seq("m") == 1
+    validations = []
+    real = TableStore._validate_checks
+
+    def spy(self, *a):
+        validations.append(a)
+        return real(self, *a)
+
+    monkeypatch.setattr(TableStore, "_validate_checks", spy)
+    src = _mkdf(spark, [(1, ts(1, 5), "u"),         # update, Jan rewritten
+                        (3, ts(1, 9), "jan"),       # insert, rewritten
+                        (12, ts(2, 9), "feb"),      # insert, untouched
+                        (20, ts(3, 9), "mar")])     # insert, new partition
+    res = store.merge_into("m", src, on=["id"])
+    assert res == {"updated": 1, "deleted": 0, "inserted": 3}
+    assert len(validations) == 1
+    assert store.current_seq("m") == 2
+    rows = {r["id"]: (r["v"], r["_ingest_seq"]) for r in store.read("m").collect()}
+    assert rows == {1: ("u", 1), 2: ("a", 1), 10: ("a", 1), 11: ("a", 1),
+                    3: ("jan", 2), 12: ("feb", 2), 20: ("mar", 2)}
+    # The new partition's index entries were built: pruned reads equal
+    # the full filter.
+    assert store.read_eq("m", "v", "mar").count() == 1
+    assert sorted(r["id"] for r in store.read_where("m", "id", 3, 20).collect()) == [
+        3, 10, 11, 12, 20]
+
+
+def test_unpartitioned_merge_with_inserts_writes_once(spark, tmp_path, monkeypatch):
+    """An unpartitioned merge that updates AND inserts folds every
+    insert into its whole-table rewrite: one Parquet write, one commit,
+    no append after it."""
+    from pyspark.sql import DataFrameWriter
+
+    store = TableStore(spark, str(tmp_path))
+    _merge_target(spark, store, partitioned=False)
+    writes = []
+    real = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **kw):
+        writes.append(path)
+        return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    res = store.merge_into(
+        "m", _mkdf(spark, [(1, ts(1, 5), "u"), (5, ts(3, 1), "new")]), on=["id"]
+    )
+    assert res == {"updated": 1, "deleted": 0, "inserted": 1}
+    assert len(writes) == 1, writes
+    assert "data_staging_" in writes[0]
+    assert {r["id"]: r["v"] for r in store.read("m").collect()} == {
+        1: "u", 2: "a", 10: "a", 11: "a", 5: "new"}
+
+
+@pytest.mark.parametrize("hit", [1, 2], ids=["null-untouched", "null-rewritten"])
+def test_merge_insert_of_empty_string_keeps_null_partition(spark, store, hit):
+    """Spark writes a '' partition value into the Hive NULL directory,
+    as it does NULL. A merge that inserts a '' row keeps every row of
+    the NULL partition, whether it rewrites that partition (the insert
+    rides the commit) or not (the insert is appended beside it)."""
+    store.create(
+        Schema(
+            "pn",
+            (
+                Field("id", "int", nullable=False),
+                Field("p", "string"),
+                Field("v", "string"),
+            ),
+            partition_by=("p",),
+        )
+    )
+    cols = "id int, p string, v string"
+    store.append("pn", spark.createDataFrame(
+        [(1, "x", "a"), (2, None, "a"), (3, None, "a")], cols))
+    src = spark.createDataFrame(
+        [(hit, "x" if hit == 1 else None, "u"), (4, "", "new")], cols)
+    res = store.merge_into("pn", src, on=["id"])
+    assert res == {"updated": 1, "deleted": 0, "inserted": 1}
+    want = {1: ("x", "a"), 2: (None, "a"), 3: (None, "a"), 4: (None, "new")}
+    want[hit] = (want[hit][0], "u")
+    assert {r["id"]: (r["p"], r["v"]) for r in store.read("pn").collect()} == want
+
+
+_WRITE_META_READS = {
+    "append": (2, lambda s: s.append("m", _mkdf(s.spark, [(3, ts(1, 7), "b")]))),
+    "overwrite_partitions": (2, lambda s: s.overwrite_partitions(
+        "m", _mkdf(s.spark, [(3, ts(1, 7), "o")]))),
+    "merge_into": (2, lambda s: s.merge_into(
+        "m", _mkdf(s.spark, [(3, ts(1, 7), "u"), (4, ts(2, 8), "n")]), on=["id"])),
+    "merge_into/insert=False": (1, lambda s: s.merge_into(
+        "m", _mkdf(s.spark, [(3, ts(1, 7), "w")]), on=["id"], insert=False)),
+    "update_where": (1, lambda s: s.update_where(
+        "m", F.col("id") == 4, {"v": F.lit("x")})),
+    "delete_where": (1, lambda s: s.delete_where("m", F.col("id") == 4)),
+    "compact/full": (1, lambda s: s.compact("m")),
+    "compact/partitionwise": (1, lambda s: s.compact("logs")),
+    "optimize": (1, lambda s: s.optimize("m")),
+    "describe": (1, lambda s: s.describe("m")),
+}
+
+
+def test_public_writes_read_table_meta_once(spark, tmp_path, monkeypatch):
+    """Each public write reads ``_table_meta.json`` once and passes the
+    dict down; a write that adds rows reads it once more, under the
+    ingest-sequence lease."""
+    from from_superset_to_clickhouse_spark.fsio import Fs
+    from from_superset_to_clickhouse_spark.tablestore import META_FILE
+
+    store = TableStore(spark, str(tmp_path))
+    _merge_target(spark, store)
+    _indexed_logs(spark, store)
+    store.append("logs", _mkdf(spark, [(100, ts(2, 20), "dup")]))
+    reads = []
+    real = Fs.read_text
+
+    def spy(self, path):
+        if path.endswith(META_FILE):
+            reads.append(path)
+        return real(self, path)
+
+    monkeypatch.setattr(Fs, "read_text", spy)
+    got = {}
+    for label, (_want, call) in _WRITE_META_READS.items():
+        reads.clear()
+        call(store)
+        got[label] = len(reads)
+    assert got == {label: want for label, (want, _c) in _WRITE_META_READS.items()}
+    monkeypatch.undo()
+    assert {r["id"]: r["v"] for r in store.read("m").collect()} == {
+        3: "w", 10: "a", 11: "a"}
+    assert store.read("logs").count() == 30
+
+
+def test_compact_two_level_partitions_with_null_level(spark, store):
+    """Partition-wise compact on a two-level layout whose second level
+    is NULL in one unit: exactly the two units holding duplicate keys
+    are rewritten, and the result reads as latest_view."""
+    store.create(
+        Schema(
+            "t2l",
+            (
+                Field("id", "int", nullable=False),
+                Field("a", "string"),
+                Field("b", "int"),
+                Field("v", "string"),
+            ),
+            dedup_key=("id",),
+            partition_by=("a", "b"),
+        )
+    )
+    cols = "id int, a string, b int, v string"
+    store.append("t2l", spark.createDataFrame(
+        [(1, "x", None, "old"), (2, "x", 1, "keep"), (3, "y", 1, "old"),
+         (4, "y", 2, "keep"), (5, "x", None, "keep")], cols))
+    store.append("t2l", spark.createDataFrame(
+        [(1, "x", None, "new"), (3, "y", 1, "new")], cols))
+    data = os.path.join(store.path("t2l"), "data")
+
+    def units():
+        return {
+            os.path.relpath(root, data): sorted(f for f in fs if f.endswith(".parquet"))
+            for root, _d, fs in os.walk(data)
+            if "b=" in os.path.basename(root)
+        }
+
+    before = units()
+    assert len(before) == 4
+    store.compact("t2l")
+    after = units()
+    changed = sorted(u for u in before if after.get(u) != before[u])
+    assert changed == ["a=x/b=__HIVE_DEFAULT_PARTITION__", "a=y/b=1"]
+    assert set(after) == set(before)
+    got = sorted(map(tuple, store.read("t2l").drop("_ingest_seq").collect()))
+    assert got == sorted(map(tuple, store.latest_view("t2l").collect()))
+    assert {r["id"]: r["v"] for r in store.read("t2l").collect()} == {
+        1: "new", 2: "keep", 3: "new", 4: "keep", 5: "keep"}
 
 
 def test_vanished_partitions_leave_no_index_entries(spark, tmp_path):
