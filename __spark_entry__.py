@@ -13,9 +13,9 @@ oracle is the entry's DuckDB twin over the same fixture tables: the
 driver hash-compares the two results (CORRECTNESS_r<N>.json) and
 ``scripts/check_oracle.py`` replays that comparison locally. The
 decorator evaluates the oracle at import, so the SQL helpers and
-constants it uses are defined above the entry. q_approx_distinct,
-q_ivf_topk, q_lsh_topk and q_sketch_merge are approximate by design and
-not registered; tests call them directly.
+constants it uses are defined above the entry. q_approx_distinct and
+q_sketch_merge are approximate by design and not registered;
+tests/test_temporal.py calls them directly.
 
 ``queries()`` orders the entries for the driver, which checks only the
 first 50: by the latest round whose CORRECTNESS_r<N>.json lists the
@@ -1039,7 +1039,7 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sha256(text) AS content_hash FROM documents"
 ))
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal feature extraction (Arrow mapInPandas): byte counts +
+    """Multimodal feature extraction (Arrow mapInArrow): byte counts +
     content hash per synthesized media payload. The stub feature vector
     is dropped for the oracle (sha256 of the payload is engine-neutral;
     the fake embedding is not SQL)."""
@@ -2466,22 +2466,6 @@ def q_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 20)
     return simi.brute_force_topk(emb, queries_df, k=5)
-
-
-def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SRP-LSH approximate top-5 (rows-only: bucketing is engine-hashed;
-    recall vs brute force is measured in bench.py)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 20)
-    return simi.lsh_topk(emb, queries_df, k=5)
-
-
-def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-5 (rows-only: Lloyd centroid training is
-    iterative, not SQL-expressible; recall measured in bench.py)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 20)
-    return simi.ivf_topk(emb, queries_df, k=5)
 
 
 _EMB_DEDUP_SQL = f"""
@@ -6212,8 +6196,8 @@ def q_bm25_stemmed(spark: SparkSession, sf_dir: str) -> DataFrame:
     query ["merged","queries","customers","tables"] — none of which
     appears in the corpus as a surface form, so unstemmed BM25 returns
     NOTHING — retrieves via stem classes {merg,queri,custom,tabl}.
-    Corpus tokens are stemmed in one Arrow-batched pandas_udf pass with
-    a per-batch memo (Zipfian vocabulary -> extreme hit rate); the
+    Corpus tokens are stemmed in one Arrow-batched UDF pass with
+    a per-task memo (Zipfian vocabulary -> extreme hit rate); the
     oracle is surface BM25 over the base forms, valid because each stem
     class contains exactly one fixture surface form (hand-derived from
     the published 1980 algorithm, pinned in tests — not by the engine's

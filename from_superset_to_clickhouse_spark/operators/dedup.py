@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from from_superset_to_clickhouse_spark.functions.scalar import _spread, let_bind
+from from_superset_to_clickhouse_spark.operators._arrow import map_batches, row_udf
 from from_superset_to_clickhouse_spark.operators.text import (
     TOKEN_SPLIT_RE,
     canonical_url,
@@ -119,7 +120,7 @@ def _arrow_band_rows(
     kernel,
     columns: "tuple[str, ...]",
 ) -> DataFrame:
-    """(doc, band, *columns) rows from one ``mapInPandas`` pass over
+    """(doc, band, *columns) rows from one ``mapInArrow`` pass over
     (id, text) batches — the doc loop both Arrow LSH kernels share.
 
     ``kernel()`` runs once per Python worker and returns the per-doc
@@ -139,13 +140,11 @@ def _arrow_band_rows(
     def gen(batches):
         import re
 
-        import pandas as pd
-
         split = re.compile(TOKEN_SPLIT_RE).split
         doc_fn = kernel()
-        for pdf in batches:
+        for batch in batches:
             keep, outs = [], []
-            for i, text in enumerate(pdf["_t"]):
+            for i, text in enumerate(batch.column(1).to_pylist()):
                 toks = None if text is None else [
                     t for t in split(text.lower()) if t
                 ]
@@ -156,17 +155,15 @@ def _arrow_band_rows(
             if not keep:
                 continue
             frame = {
-                "doc": np.repeat(pdf["_id"].to_numpy()[keep], n_bands),
+                "doc": batch.column(0).take(np.repeat(keep, n_bands)),
                 "band": np.tile(np.arange(n_bands, dtype=np.int32), len(keep)),
             }
             for j, c in enumerate(columns):
                 frame[c] = np.concatenate([o[j] for o in outs]).view(np.int64)
-            yield pd.DataFrame(frame)
+            yield frame
 
-    src = _spread(
-        df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-    )
-    return src.mapInPandas(gen, schema=schema)
+    src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
+    return map_batches(src, gen, schema, spread=True)
 
 
 def normalize_text(text: Column) -> Column:
@@ -1161,23 +1158,7 @@ def jaro_winkler_col(s1: Column, s2: Column) -> Column:
     with data-dependent control flow — the sanctioned Python boundary
     (same rationale as the codecs); batches cross once per task, no
     row-at-a-time pickling."""
-    import pandas as pd
-
-    # no type hints: string annotations (future-import) defeat the
-    # hint-based eval-type inference; the "double" returnType + default
-    # SCALAR eval type are what we want anyway
-    @F.pandas_udf("double")
-    def _jw(a, b):
-        return pd.Series(
-            [
-                _jaro_winkler_py(x, y)
-                if x is not None and y is not None
-                else None
-                for x, y in zip(a, b)
-            ]
-        )
-
-    return _jw(s1, s2)
+    return row_udf(_jaro_winkler_py, "double")(s1, s2)
 
 
 def jaro_winkler_link(

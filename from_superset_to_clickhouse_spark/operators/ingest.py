@@ -80,7 +80,7 @@ def ingest(
     Without a count, the empty-increment check uses ``isEmpty()``
     (stops at the first found row) to skip the write entirely; with the
     observation the write itself is the emptiness probe (an empty
-    append/dynamic-overwrite is a no-op on the table data).
+    append or partition overwrite is a no-op on the table data).
 
     ``_after`` (private, for ``v2_daily_load``'s retention anchor; needs
     ``count_rows=True`` and an append): a dict that receives the

@@ -45,16 +45,17 @@ UDF signature) is real and tested. Decoding comes in two tiers:
   quarantine.
 
 One Arrow seam: every operator that runs Python per row goes through
-``_map_rows`` — one ``mapInArrow`` whose first input column is the key
-(passed through unchanged) and whose per-row function returns the
-remaining output fields. The quarantine contract lives there too: an
-operator names the exception types that mark a payload undecodable —
-``ValueError`` for the decoders, ``(ValueError, IndexError)`` for the
-audio-sample decoders, plus ``TypeError`` in ``equalize_images`` and
-``adpcm_decode`` — and such a row comes back as the key plus NULLs,
-so one corrupt byte stream never kills the stage. The ``synthesize_*``
-fixture generators catch nothing: a fixture bug fails the job loudly.
-``adpcm_decode`` drops its quarantine rows.
+``_arrow.map_rows`` — one ``mapInArrow`` whose first input column is the
+key (passed through unchanged) and whose per-row function returns the
+remaining output fields. ``operators/_arrow.py`` states the seam's
+contract, quarantine included; here an operator names the exception
+types that mark a payload undecodable — ``ValueError`` for the
+decoders, ``(ValueError, IndexError)`` for the audio-sample decoders,
+plus ``TypeError`` in ``equalize_images`` and ``adpcm_decode`` — and
+such a row comes back as the key plus NULLs, so one corrupt byte stream
+never kills the stage. The ``synthesize_*`` fixture generators catch
+nothing: a fixture bug fails the job loudly. ``adpcm_decode`` drops its
+quarantine rows.
 
 At scale: binary payloads ride in Parquet binary columns; ``mapInArrow``
 streams Arrow batches so one task never materializes its whole
@@ -66,14 +67,14 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_type
+
+from ._arrow import map_rows
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -97,42 +98,6 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def _map_rows(
-    df: DataFrame,
-    fn: Callable[..., tuple],
-    schema: T.StructType,
-    catch: tuple[type[Exception], ...] = (),
-) -> DataFrame:
-    """The module's one Python seam: a single ``mapInArrow`` over ``df``.
-
-    The first column of ``df`` is the key; it passes through as
-    ``schema``'s first field (cast to that field's type). For every row, ``fn`` receives the
-    remaining column values as Python objects and returns the remaining
-    ``schema`` fields as a tuple. When ``fn`` raises one of ``catch``,
-    the row becomes a quarantine row: the key plus NULLs. Each output
-    column is built by ``pa.array`` with the field's Arrow type, so an
-    all-quarantined or empty batch needs no special case."""
-    types = [to_arrow_type(f.dataType) for f in schema.fields]
-    quarantine = (None,) * (len(types) - 1)
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            rows = []
-            for values in zip(*(c.to_pylist() for c in batch.columns[1:])):
-                try:
-                    rows.append(fn(*values))
-                except catch:
-                    rows.append(quarantine)
-            cols = zip(*rows) if rows else [()] * len(quarantine)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0).cast(types[0])]
-                + [pa.array(c, type=t) for c, t in zip(cols, types[1:])],
-                names=schema.names,
-            )
-
-    return df.mapInArrow(run, schema)
-
-
 def _synthesize(
     df: DataFrame, id_col: str, encode: Callable[[int], bytes]
 ) -> DataFrame:
@@ -140,7 +105,7 @@ def _synthesize(
     ``payload = encode(media_id)``. Nothing is caught: a fixture bug
     fails the job instead of quarantining."""
     key = F.col(id_col).cast("long")
-    return _map_rows(
+    return map_rows(
         df.select(key.alias("media_id"), key),
         lambda i: (encode(i),),
         IMAGE_SCHEMA,
@@ -2330,7 +2295,7 @@ def image_pixel_stats(images: DataFrame) -> DataFrame:
             int(a.min()), int(a.max()), pos_sum,
         )
 
-    return _map_rows(
+    return map_rows(
         images.select("media_id", "payload"),
         stats,
         PIXEL_STATS_SCHEMA,
@@ -2797,7 +2762,7 @@ def synthesize_images(
     (``id % max_w + 1`` × ``id % max_h + 1``) so an oracle can predict
     them arithmetically while the engine has to earn them by parsing
     actual container bytes. Encoding is Python (byte assembly), so it
-    runs in the same Arrow seam (``_map_rows``) a real ingest decoder
+    runs in the same Arrow seam (``map_rows``) a real ingest decoder
     uses."""
     encoders = [encode_png, encode_jpeg, encode_gif]
     return _synthesize(
@@ -2943,7 +2908,7 @@ def image_dims(images: DataFrame) -> DataFrame:
     format=NULL quarantine rows instead of failing the job — at 100 TB
     some fraction of a crawl is always corrupt, and one bad byte stream
     must not kill a 1000-executor stage."""
-    return _map_rows(
+    return map_rows(
         images.select("media_id", "payload"),
         decode_image_header,
         DIMS_SCHEMA,
@@ -2985,7 +2950,7 @@ def audio_meta(audio: DataFrame) -> DataFrame:
     (media_id, format, sample_rate, channels, duration_ms). Unparseable
     payloads become format=NULL quarantine rows, same contract as
     ``image_dims`` — corrupt bytes must never kill the stage."""
-    return _map_rows(
+    return map_rows(
         audio.select("media_id", "payload"),
         decode_wav_header,
         AUDIO_META_SCHEMA,
@@ -3129,10 +3094,10 @@ def audio_features(audio: DataFrame) -> DataFrame:
     values, so any decode bug (endianness, channel interleave, data
     offset) shifts the statistics and hash-mismatches the oracle.
     Undecodable payloads quarantine as NULL-feature rows rather than
-    killing the stage. Arrow-batched (``_map_rows``); at 100 TB the
+    killing the stage. Arrow-batched (``map_rows``); at 100 TB the
     payload column streams batch-at-a-time and the output is a few
     scalars per row."""
-    return _map_rows(
+    return map_rows(
         audio.select("media_id", "payload"),
         lambda p: _pcm_stats(decode_wav_samples(p)[2]),
         AUDIO_FEATURES_SCHEMA,
@@ -3161,7 +3126,7 @@ def audio_spectrum(audio: DataFrame) -> DataFrame:
     the planted square-wave fixtures every one of these has a CLOSED
     FORM (fundamental at bin K with |X| = 2AK / sin(π/2P), energy
     2PK·A²), so the oracle proves the engine ran a real transform on
-    really-decoded samples. Arrow-batched (``_map_rows``); an O(n log n)
+    really-decoded samples. Arrow-batched (``map_rows``); an O(n log n)
     rfft per clip is the sanctioned per-item CPU boundary, same as
     image decode."""
 
@@ -3175,7 +3140,7 @@ def audio_spectrum(audio: DataFrame) -> DataFrame:
         s64 = frames[:, 0].astype(np.int64)
         return (len(spec), k, round(float(spec[k]), 2), int((s64 * s64).sum()))
 
-    return _map_rows(
+    return map_rows(
         audio.select("media_id", "payload"),
         spectrum,
         AUDIO_SPECTRUM_SCHEMA,
@@ -3221,7 +3186,7 @@ def video_meta(videos: DataFrame) -> DataFrame:
     payloads become format=NULL quarantine rows, same contract as
     ``image_dims``/``audio_meta`` — corrupt bytes never kill the
     stage."""
-    return _map_rows(
+    return map_rows(
         videos.select("media_id", "payload"),
         decode_mp4_header,
         VIDEO_META_SCHEMA,
@@ -3262,7 +3227,7 @@ def video_frame_index(videos: DataFrame) -> DataFrame:
             samples[-1][1] * 1000 // ts,
         )
 
-    return _map_rows(
+    return map_rows(
         videos.select("media_id", "payload"),
         index,
         VIDEO_FRAMES_SCHEMA,
@@ -3294,7 +3259,7 @@ def synthesize_mp4_tracks(df: DataFrame, id_col: str) -> DataFrame:
 
 
 def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
-    """Feature extraction over Arrow batches (``_map_rows``).
+    """Feature extraction over Arrow batches (``map_rows``).
 
     The per-batch loop is the real shape of a media pipeline: decode each
     payload, emit fixed-width features. Python is unavoidable here
@@ -3319,7 +3284,7 @@ def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
             vec = decode_stub(p, "", dim)
         return (kind, len(p or b""), hashlib.sha256(p or b"").hexdigest(), vec)
 
-    return _map_rows(
+    return map_rows(
         media.select("media_id", "kind", "payload"), features, FEATURE_SCHEMA
     )
 
@@ -3356,7 +3321,7 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     cross into Arrow batches. Output keeps the media shape (payload +
     updated dims) so downstream feature extraction composes."""
     imgs = media.filter(F.col("kind") == "image")
-    return _map_rows(
+    return map_rows(
         imgs.select("media_id", "kind", "payload"),
         lambda kind, p: (kind, resize_stub(p, width, height), width, height),
         RESIZED_SCHEMA,
@@ -3404,7 +3369,7 @@ def extract_frames(
         seek = (p or b"") + int(ts).to_bytes(8, "big")
         return (frame_idx, ts, decode_stub(seek, "video", dim))
 
-    return _map_rows(
+    return map_rows(
         rows.select("media_id", "frame_idx", "ts_ms", "payload"),
         feature,
         schema,
@@ -3478,7 +3443,7 @@ def downsample_images(media: DataFrame, factor: int) -> DataFrame:
     → (media_id, payload) with each payload a real downsampled PNG.
     Undecodable/misaligned payloads quarantine as NULL payloads (the
     per-row error never kills the stage)."""
-    return _map_rows(
+    return map_rows(
         media.select("media_id", "payload"),
         lambda p: (downsample_png(p, factor),),
         _RECODED_SCHEMA,
@@ -3651,7 +3616,7 @@ def synthesize_g711_tones(
 def audio_features_g711(audio: DataFrame) -> DataFrame:
     """``audio_features`` over the any-format decoder (PCM + G.711):
     same statistics, same quarantine contract."""
-    return _map_rows(
+    return map_rows(
         audio.select("media_id", "payload"),
         lambda p: _pcm_stats(decode_wav_samples_any(p)[2]),
         AUDIO_FEATURES_SCHEMA,
@@ -3917,10 +3882,10 @@ def synthesize_exif_images(df: DataFrame, id_col: str) -> DataFrame:
 def exif_metadata(images: DataFrame) -> DataFrame:
     """EXIF extraction over payload rows → EXIF_SCHEMA; undecodable
     payloads quarantine as NULL-field rows. Arrow-batched
-    (``_map_rows``) — metadata parse touches only the first KBs of
+    (``map_rows``) — metadata parse touches only the first KBs of
     each payload, so at 100 TB the cost is bounded by row count, not
     media bytes."""
-    return _map_rows(
+    return map_rows(
         images.select("media_id", "payload"),
         decode_exif,
         EXIF_SCHEMA,
@@ -4103,10 +4068,10 @@ def synthesize_webp_images(df: DataFrame, id_col: str) -> DataFrame:
 def webp_metadata(images: DataFrame) -> DataFrame:
     """WebP header extraction over payload rows → WEBP_SCHEMA;
     undecodable payloads quarantine as NULL-field rows. Arrow-batched
-    (``_map_rows``), parse touches only leading bytes — at 100 TB the
+    (``map_rows``), parse touches only leading bytes — at 100 TB the
     cost is bounded by row count, not media bytes, and the stage is
     embarrassingly parallel (no shuffle)."""
-    return _map_rows(
+    return map_rows(
         images.select("media_id", "payload"),
         decode_webp_header,
         WEBP_SCHEMA,
@@ -4171,7 +4136,7 @@ def audio_vad(
     first pass of any speech-data curation pipeline (strip silence,
     count utterances, measure speech density).
 
-    Arrow-batched (``_map_rows``) like the rest of the codec tier: the
+    Arrow-batched (``map_rows``) like the rest of the codec tier: the
     per-item DSP is the sanctioned Python boundary; output is a few
     scalars per clip. Undecodable payloads quarantine as NULL rows."""
 
@@ -4195,7 +4160,7 @@ def audio_vad(
             round(nv / len(e), 6),
         )
 
-    return _map_rows(
+    return map_rows(
         audio.select("media_id", "payload"),
         vad,
         AUDIO_VAD_SCHEMA,
@@ -4294,7 +4259,7 @@ def equalize_images(images: DataFrame) -> DataFrame:
     same (media_id, payload) contract as the synthesizers, so the
     result feeds straight into ``image_pixel_stats``. Undecodable
     payloads pass through as NULL payloads (downstream quarantines)."""
-    return _map_rows(
+    return map_rows(
         images.select("media_id", "payload"),
         lambda p: (equalize_png(p),),
         _RECODED_SCHEMA,
@@ -4340,7 +4305,7 @@ def decimate_audio(audio: DataFrame, factor: int = 4) -> DataFrame:
         dec = np.floor(ch0[:n].reshape(-1, m).mean(axis=1) + 0.5).astype("<i2")
         return (encode_wav_pcm(dec, sample_rate=max(1, rate // m)),)
 
-    return _map_rows(
+    return map_rows(
         audio.select("media_id", "payload"),
         decimate,
         _RECODED_SCHEMA,
@@ -4765,7 +4730,7 @@ def synthesize_adpcm_streams(df: DataFrame, id_col: str) -> DataFrame:
         )
         return (payload, i % 20)
 
-    return _map_rows(df.select(key.alias("media_id"), key), encode, schema)
+    return map_rows(df.select(key.alias("media_id"), key), encode, schema)
 
 
 def adpcm_decode(
@@ -4813,5 +4778,5 @@ def adpcm_decode(
 
     # corrupt rows come back as quarantine rows (n_samples NULL); this
     # operator's contract drops them instead of passing them on
-    decoded = _map_rows(src, decode, schema, catch=(ValueError, TypeError))
+    decoded = map_rows(src, decode, schema, catch=(ValueError, TypeError))
     return decoded.filter(F.col("n_samples").isNotNull())

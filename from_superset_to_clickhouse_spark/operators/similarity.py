@@ -24,12 +24,13 @@ Search tiers (north-star extension surface, BASELINE.json):
 Kernel seam: the operators are thin plans over one layer of private
 helpers.
 
-- ``_split_valid`` splits every Arrow batch into its valid vectors
-  (non-NULL, expected length) and the rest; every Python kernel runs on
-  the valid rows only. NULL in → NULL or no row out: a per-row kernel
-  (``_vector_udf``: cell, probe list, PQ codes, residual) returns NULL
-  for an invalid vector, and a top-k kernel never uses it as a
-  neighbor or a query. No invalid vector fails a task.
+- Every Python kernel crosses through ``operators/_arrow.py``, which
+  states the seam's contract: ``vectors`` splits each Arrow batch into
+  its valid vectors (non-NULL, expected length) and the rest, and every
+  kernel runs on the valid rows only. NULL in → NULL or no row out: a
+  per-row kernel (``vector_udf``: cell, probe list, PQ codes, residual)
+  returns NULL for an invalid vector, and a top-k kernel never uses it
+  as a neighbor or a query. No invalid vector fails a task.
 - ``_unit`` normalises rows (zero rows stay zero); ``_topk_pairs`` is
   the tie-safe per-block cut and ``_rank_cut`` the final per-query
   window (ties to ascending ``n_id``), so the blocked plans are exact.
@@ -40,16 +41,14 @@ helpers.
 
 from __future__ import annotations
 
-from collections import Counter
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from from_superset_to_clickhouse_spark.functions.scalar import _spread, let_bind
+from from_superset_to_clickhouse_spark.functions.scalar import let_bind
 from from_superset_to_clickhouse_spark.operators.dedup import _finalize
 
+from ._arrow import apply_groups, map_batches, vector_udf, vectors
 from ._exact import GRID
 
 
@@ -79,42 +78,6 @@ def cosine(a: Column, b: Column) -> Column:
 # -- vector kernel ---------------------------------------------------------
 
 
-def _split_valid(v, dim=None):
-    """Split a batch of vectors into (vals, good, mat): ``mat`` is the
-    float64 matrix of the rows whose vector is non-NULL and exactly
-    ``dim`` long, ``good`` their positions (``None`` when every row is
-    valid — the overwhelmingly common case, zero extra copies).
-    ``dim=None`` takes the batch's most common length, for kernels
-    with no declared dimension (SRP banding, the query side). Kernels
-    compute on ``mat`` only, so an invalid vector degrades to NULL or
-    no row instead of failing the whole batch with a ``np.asarray``
-    shape error: with ``arrow=None`` auto-switching on k×dim, a corpus
-    that is fine under the expression path must not start failing
-    merely because the centroid count crossed
-    ``_ARROW_ASSIGN_MIN_OPS``."""
-    vals = list(v)
-    if dim is None:
-        lens = Counter(len(x) for x in vals if x is not None)
-        dim = lens.most_common(1)[0][0] if lens else 0
-    good = [
-        i for i, x in enumerate(vals) if x is not None and len(x) == dim
-    ]
-    if len(good) == len(vals):
-        return vals, None, np.asarray(vals, dtype=np.float64).reshape(
-            len(vals), dim
-        )
-    mat = np.asarray([vals[i] for i in good], dtype=np.float64).reshape(
-        len(good), dim
-    )
-    return vals, good, mat
-
-
-def _valid_frame(pdf, vec_col: str, dim=None):
-    """(rows of ``pdf`` with a valid ``vec_col`` vector, their matrix)."""
-    _, good, mat = _split_valid(pdf[vec_col], dim)
-    return (pdf if good is None else pdf.iloc[good]), mat
-
-
 def _unit(m):
     """Rows scaled to unit L2 norm; all-zero rows stay zero."""
     n = np.linalg.norm(m, axis=1)
@@ -122,40 +85,13 @@ def _unit(m):
     return m / n[:, None]
 
 
-def _vector_udf(ret: str, dim: int, fn, ragged=None):
-    """The one scalar Arrow kernel behind every per-vector operator
-    (cell assignment, probe lists, PQ codes, residuals): split each
-    batch with ``_split_valid``, call ``fn`` once on the valid-row
-    matrix, scatter its rows back with NULL for NULL or wrong-length
-    vectors. ``fn`` returns one array (a row per matrix row) or, for a
-    struct ``ret``, a dict of such arrays by field name. ``ragged(x)``,
-    when given, computes the value of a non-NULL wrong-length vector
-    instead of NULL (``pq_encode``'s per-subspace rule). A scalar
-    Arrow UDF keeps the plan an ``ArrowEvalPython`` projection."""
+# the (query, neighbor, cosine) rows every top-k kernel emits
+_SCORED = "q_id {t}, n_id {t}, sim double"
 
-    def scatter(col, vals, good):
-        if good is None:
-            return col if col.ndim == 1 else list(col)
-        out = [None] * len(vals)
-        for j, i in enumerate(good):
-            out[i] = col[j]
-        if ragged is not None:
-            for i, x in enumerate(vals):
-                if x is not None and len(x) != dim:
-                    out[i] = ragged(np.asarray(x, dtype=np.float64))
-        return pd.array(out, dtype="Int32") if col.ndim == 1 else out
 
-    @F.pandas_udf(ret)
-    def udf(v):
-        vals, good, mat = _split_valid(v, dim)
-        out = fn(mat)
-        if isinstance(out, dict):
-            return pd.DataFrame(
-                {f: scatter(c, vals, good) for f, c in out.items()}
-            )
-        return pd.Series(scatter(out, vals, good))
-
-    return udf
+def _ids(col, ok):
+    """The ids of an Arrow id column at the valid-vector rows ``ok``."""
+    return col.to_numpy(zero_copy_only=False)[ok]
 
 
 def _topk_pairs(s, n_ids, q_ids, k: int):
@@ -165,15 +101,15 @@ def _topk_pairs(s, n_ids, q_ids, k: int):
     every row that could reach the global top-k under (sim desc, n_id
     asc) survives — exact ties with the k-th best included — and the
     final ``_rank_cut`` window is exact. ~k rows per query leave each
-    block instead of n."""
-    s[n_ids[:, None] == q_ids[None, :]] = -np.inf
-    t = min(k, s.shape[0])
-    part = np.argpartition(-s, t - 1, axis=0)[:t]
-    thresh = np.take_along_axis(s, part, 0).min(axis=0)
-    rows, cols = np.nonzero((s >= thresh[None, :]) & np.isfinite(s))
-    return pd.DataFrame(
-        {"q_id": q_ids[cols], "n_id": n_ids[rows], "sim": s[rows, cols]}
-    )
+    block instead of n; an empty block leaves none."""
+    rows = cols = np.zeros(0, dtype=np.int64)
+    if s.size:
+        s[n_ids[:, None] == q_ids[None, :]] = -np.inf
+        t = min(k, s.shape[0])
+        part = np.argpartition(-s, t - 1, axis=0)[:t]
+        thresh = np.take_along_axis(s, part, 0).min(axis=0)
+        rows, cols = np.nonzero((s >= thresh[None, :]) & np.isfinite(s))
+    return {"q_id": q_ids[cols], "n_id": n_ids[rows], "sim": s[rows, cols]}
 
 
 def _query_side(queries: DataFrame, id_col: str, vec_col: str):
@@ -182,12 +118,10 @@ def _query_side(queries: DataFrame, id_col: str, vec_col: str):
     them → (broadcast of (ids, unit matrix), dim), or ``None`` when no
     query vector is valid."""
     rows = queries.select(id_col, vec_col).collect()
-    _, good, qm = _split_valid([r[1] for r in rows], None)
-    if good is not None:
-        rows = [rows[i] for i in good]
-    if not rows:
+    ok, qm = vectors([r[1] for r in rows])
+    if not len(qm):
         return None
-    ids = np.array([r[0] for r in rows])
+    ids = np.array([r[0] for r in rows])[ok]
     sc = queries.sparkSession.sparkContext
     return sc.broadcast((ids, _unit(qm))), qm.shape[1]
 
@@ -283,7 +217,7 @@ def brute_force_topk(
     Two physically different, semantically identical plans:
 
     - ``vectorized=True`` (default): blocked matrix multiply via Arrow
-      ``mapInPandas``. Queries (the small side, same contract as the
+      ``mapInArrow``. Queries (the small side, same contract as the
       broadcast below) are L2-normalized into one numpy matrix and
       broadcast; each corpus Arrow batch computes a (batch × nq) cosine
       matrix with one BLAS call and emits only the ``_topk_pairs``
@@ -324,25 +258,23 @@ def _brute_force_topk_vectorized(
     id_type = dict(corpus.dtypes)[id_col]
     qs = _query_side(queries, id_col, vec_col)
     if qs is None:
-        return corpus.sparkSession.createDataFrame(
-            [], f"q_id {id_type}, n_id {id_type}, sim double, rank int"
-        )
+        empty = _SCORED.format(t=id_type) + ", rank int"
+        return corpus.sparkSession.createDataFrame([], empty)
     bq, dim = qs
     kk = int(k)
 
     def score(batches):
         qid, qu = bq.value
-        for pdf in batches:
-            for lo in range(0, len(pdf), 2048):
-                chunk, m = _valid_frame(pdf.iloc[lo : lo + 2048], "vec", dim)
-                if len(chunk):
-                    yield _topk_pairs(
-                        _unit(m) @ qu.T, chunk["n_id"].to_numpy(), qid, kk
-                    )
+        for batch in batches:
+            for lo in range(0, batch.num_rows, 2048):
+                chunk = batch.slice(lo, 2048)
+                ok, m = vectors(chunk.column(1), dim)
+                yield _topk_pairs(
+                    _unit(m) @ qu.T, _ids(chunk.column(0), ok), qid, kk
+                )
 
-    cand = corpus.select(
-        F.col(id_col).alias("n_id"), F.col(vec_col).alias("vec")
-    ).mapInPandas(score, schema=f"q_id {id_type}, n_id {id_type}, sim double")
+    src = corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("vec"))
+    cand = map_batches(src, score, _SCORED.format(t=id_type))
     return _rank_cut(cand, k, "sim", desc=True)
 
 
@@ -368,44 +300,35 @@ def _srp_banded(
     the dominant cost of ``lsh_topk``, ~an order of magnitude slower.
 
     SRP has no declared dimension: each batch bands the vectors of its
-    most common length (``_split_valid`` with ``dim=None``), so a NULL
-    or odd-length vector gets no band rows and is never a candidate."""
+    most common length (``vectors`` with ``dim=None``), so a NULL or
+    odd-length vector gets no band rows and is never a candidate."""
     id_type = dict(df.dtypes)[id_col]
     n_bands = planes // band_bits
 
     def gen(batches):
         planes_by_dim = {}
         pow2 = (1 << np.arange(band_bits)).astype(np.int64)
-        for pdf in batches:
-            pdf, m = _valid_frame(pdf, "vec")
-            if len(pdf) == 0:
-                continue
-            dim = m.shape[1]
+        for batch in batches:
+            ok, m = vectors(batch.column(1))
+            n, dim = m.shape
             if dim not in planes_by_dim:
                 planes_by_dim[dim] = np.random.RandomState(
                     seed
                 ).standard_normal((dim, planes))
             bits = (m @ planes_by_dim[dim]) >= 0.0  # n × planes
             buckets = (
-                bits[:, : n_bands * band_bits].reshape(
-                    len(pdf), n_bands, band_bits
-                )
+                bits[:, : n_bands * band_bits].reshape(n, n_bands, band_bits)
                 * pow2
             ).sum(axis=2)
-            yield pd.DataFrame(
-                {
-                    out_id: np.repeat(pdf["_sid"].to_numpy(), n_bands),
-                    "band": np.tile(np.arange(n_bands, dtype=np.int32), len(pdf)),
-                    "bucket": buckets.reshape(-1),
-                }
-            )
+            yield {
+                out_id: np.repeat(_ids(batch.column(0), ok), n_bands),
+                "band": np.tile(np.arange(n_bands, dtype=np.int32), n),
+                "bucket": buckets.reshape(-1),
+            }
 
-    src = _spread(
-        df.select(F.col(id_col).alias("_sid"), F.col(vec_col).alias("vec"))
-    )
-    return src.mapInPandas(
-        gen, schema=f"{out_id} {id_type}, band int, bucket bigint"
-    )
+    src = df.select(F.col(id_col).alias("_sid"), F.col(vec_col).alias("vec"))
+    schema = f"{out_id} {id_type}, band int, bucket bigint"
+    return map_batches(src, gen, schema, spread=True)
 
 
 def lsh_index(
@@ -510,15 +433,15 @@ def lsh_topk(
 def _rerank_candidates_vectorized(
     cand_v: DataFrame, queries: DataFrame, k: int, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Exact top-k over a candidate set: flat Arrow ``mapInPandas``
+    """Exact top-k over a candidate set: flat Arrow ``mapInArrow``
     scoring + Catalyst window cut.
 
     Query vectors (the broadcastable side) ride along as
     ``_query_side``'s driver broadcast; each Arrow batch computes all
     its pair similarities with ONE einsum — no per-group Python call,
-    no per-pair codegen lambda. (A groupBy(q_id).applyInPandas variant
-    was measured 6× slower at sf0.1: per-group overhead × |queries|
-    beats the arithmetic.) The (sim desc, n_id asc) top-k cut happens
+    no per-pair codegen lambda. (A grouped-map variant, one Python
+    call per q_id, was measured 6× slower at sf0.1: per-group overhead
+    × |queries| beats the arithmetic.) The (sim desc, n_id asc) top-k cut happens
     in the window. Pairs with an invalid corpus or query vector are
     dropped.
 
@@ -529,31 +452,27 @@ def _rerank_candidates_vectorized(
     id_type = dict(cand_v.dtypes)["q_id"]
     qs = _query_side(queries, id_col, vec_col)
     if qs is None:
-        return cand_v.sparkSession.createDataFrame(
-            [], f"q_id {id_type}, n_id {id_type}, sim double, rank int"
-        )
+        empty = _SCORED.format(t=id_type) + ", rank int"
+        return cand_v.sparkSession.createDataFrame([], empty)
     bq, dim = qs
 
     def score(batches):
         qid, qu = bq.value
         qpos = {q: i for i, q in enumerate(qid.tolist())}
-        for pdf in batches:
-            pdf, m = _valid_frame(
-                pdf[pdf["q_id"].map(qpos).notna()], "n_vec", dim
-            )
-            if len(pdf) == 0:
-                continue
-            qi = pdf["q_id"].map(qpos).to_numpy(dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    "q_id": pdf["q_id"],
-                    "n_id": pdf["n_id"],
-                    "sim": np.einsum("ij,ij->i", _unit(m), qu[qi]),
-                }
-            )
+        for batch in batches:
+            ok, m = vectors(batch.column(2), dim)
+            q = [qpos.get(q, -1) for q in batch.column(0).to_pylist()]
+            qi = np.array(q, dtype=np.int64)[ok]
+            hit = qi >= 0
+            rows = np.flatnonzero(ok)[hit]
+            yield {
+                "q_id": batch.column(0).take(rows),
+                "n_id": batch.column(1).take(rows),
+                "sim": np.einsum("ij,ij->i", _unit(m[hit]), qu[qi[hit]]),
+            }
 
-    scored = cand_v.select("q_id", "n_id", "n_vec").mapInPandas(
-        score, schema=f"q_id {id_type}, n_id {id_type}, sim double"
+    scored = map_batches(
+        cand_v.select("q_id", "n_id", "n_vec"), score, _SCORED.format(t=id_type)
     )
     return _rank_cut(scored, k, "sim", desc=True)
 
@@ -654,7 +573,7 @@ def train_centroids(
         .limit(int(sample_rows))
         .collect()
     )
-    _, _, v = _split_valid([r["v"] for r in rows])
+    _, v = vectors([r["v"] for r in rows])
     if not len(v):
         raise ValueError(
             "train_centroids needs at least one vector; corpus has 0 valid"
@@ -750,7 +669,7 @@ def kmeans_assign(
     if arrow is None:
         arrow = len(cents) * len(cents[0]) >= _ARROW_ASSIGN_MIN_OPS
     if arrow:
-        cell = _vector_udf(
+        cell = vector_udf(
             "int", len(cents[0]), lambda m: _grid_argmin_codes(m, [cents])[:, 0]
         )(F.col(vec_col))
     else:
@@ -823,7 +742,7 @@ def _probe(vec: Column, cents: list[list[float]], nprobe: int) -> Column:
     every probed cell's candidates are exactly re-ranked."""
     c = np.asarray(cents, dtype=np.float64)
     npb = int(nprobe)
-    return _vector_udf(
+    return vector_udf(
         "array<int>",
         c.shape[1],
         lambda m: np.argsort(-(m @ c.T), axis=1, kind="stable")[:, :npb]
@@ -857,7 +776,7 @@ def ivf_topk(
     ``centroids`` to skip training (the production pattern — train once
     on a sample).
 
-    Scoring is a cogrouped-by-cell Arrow ``applyInPandas`` (one BLAS
+    Scoring is a cogrouped-by-cell Arrow ``applyInArrow`` (one BLAS
     matmul per cell between the cell's corpus block and the queries
     probing it — per-cell work, C hot loop, shuffled output is only the
     per-(query, cell) top-k).
@@ -902,7 +821,7 @@ def ivf_index(
     ncells×dim literals into per-element aggregate lambdas was measured
     ~10× slower from codegen bloat alone."""
     c = np.asarray(centroids, dtype=np.float64)
-    assign = _vector_udf(
+    assign = vector_udf(
         "int", c.shape[1], lambda m: np.argmax(m @ c.T, axis=1).astype(np.int32)
     )
     return corpus.select(
@@ -986,7 +905,7 @@ def ivf_topk_indexed(
     n_vec): probe each query's ``nprobe`` nearest cells, exact cosine
     re-rank of those cells' vectors only.
 
-    Scoring is a cogrouped-by-cell Arrow ``applyInPandas`` (one BLAS
+    Scoring is a cogrouped-by-cell Arrow ``applyInArrow`` (one BLAS
     matmul per cell between the cell's corpus block and the queries
     probing it; shuffled output is only the per-(query, cell) top-k).
     An invalid query vector probes no cell; an invalid corpus vector is
@@ -1012,22 +931,17 @@ def _score_cells_cogrouped(
     kk = int(k)
 
     def score(left, right):
-        left, m = _valid_frame(left, "n_vec", dim)
-        right, q = _valid_frame(right, "q_vec", dim)
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({"q_id": [], "n_id": [], "sim": []})
+        ok, m = vectors(left.column("n_vec"), dim)
+        qok, q = vectors(right.column("q_vec"), dim)
         return _topk_pairs(
             _unit(m) @ _unit(q).T,
-            left["n_id"].to_numpy(),
-            right["q_id"].to_numpy(),
+            _ids(left.column("n_id"), ok),
+            _ids(right.column("q_id"), qok),
             kk,
         )
 
-    return (
-        cb.groupBy("cell")
-        .cogroup(qb.groupBy("cell"))
-        .applyInPandas(score, schema=f"q_id {id_type}, n_id {id_type}, sim double")
-    )
+    cells = cb.groupBy("cell").cogroup(qb.groupBy("cell"))
+    return apply_groups(cells, score, _SCORED.format(t=id_type))
 
 
 def semantic_dedup(
@@ -1355,7 +1269,7 @@ def pq_encode(
                 for s, b in enumerate(books)
             ]
 
-        codes = _vector_udf(
+        codes = vector_udf(
             "array<int>", m * d, lambda mat: _grid_argmin_codes(mat, books), ragged
         )(F.col(vec_col))
         tmp = corpus.select(*cols, codes.alias("_pq_codes"))
@@ -1443,7 +1357,7 @@ def exact_rerank(
 
 
 def _cell_residual(cents: "list[list[float]]", books=None):
-    """Per-matrix function for ``_vector_udf``: coarse cell (grid
+    """Per-matrix function for ``vector_udf``: coarse cell (grid
     argmin), residual v − centroid[cell] (IEEE float64 subtract —
     bit-identical to the expression path's per-element DOUBLE minus)
     and, with ``books``, the m residual codes instead of the residual.
@@ -1473,7 +1387,7 @@ def _residuals(
     by the assigned cell); at ≥ ``_ARROW_ASSIGN_MIN_OPS`` both come from
     one Arrow pass (``_cell_residual``), bit-identical."""
     if len(cents) * len(cents[0]) >= _ARROW_ASSIGN_MIN_OPS:
-        cell_res = _vector_udf(
+        cell_res = vector_udf(
             "struct<cell:int, residual:array<double>>",
             len(cents[0]),
             _cell_residual(cents),
@@ -1578,7 +1492,7 @@ def ivfpq_index(
         # one Python round-trip per batch for cell, residual and codes
         # instead of assign-UDF → interpreted zip_with → encode-UDF
         # (measured 18.1 s → ~4 s for the 400k×64/256-cell bench encode)
-        enc = _vector_udf(
+        enc = vector_udf(
             "struct<cell:int, codes:array<int>>",
             len(cents[0]),
             _cell_residual(cents, books),

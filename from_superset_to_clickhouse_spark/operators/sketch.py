@@ -22,8 +22,11 @@ merging sketches with different configs is refused.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ._arrow import map_batches
 
 
 def bucket_index(value: Column, lo: float, hi: float, buckets: int) -> Column:
@@ -109,14 +112,37 @@ def hist_quantiles(
     )
 
 
+def _mg_items(src: DataFrame, k: int, agg: tuple[str, str]) -> DataFrame:
+    """Distinct items kept by a Misra–Gries(k) summary of each partition
+    of ``src``: each Arrow batch is pre-aggregated per item (``agg``:
+    ``("item", "count")`` or ``("w", "sum")``), added to the running
+    counters, and whenever more than k counters remain the (k+1)-th
+    largest is subtracted from all and the non-positive ones dropped —
+    the standard mergeable-MG reduction."""
+    col = "_".join(agg)
+
+    def mg_partial(batches):
+        counters: dict = {}
+        for batch in batches:
+            per = pa.Table.from_batches([batch]).group_by("item").aggregate([agg])
+            for it, c in zip(per["item"].to_pylist(), per[col].to_pylist()):
+                counters[it] = counters.get(it, 0) + c
+            if len(counters) > k:
+                kth = sorted(counters.values(), reverse=True)[k]
+                counters = {
+                    i: v - kth for i, v in counters.items() if v - kth > 0
+                }
+        yield {"item": list(counters)}
+
+    return map_batches(src, mg_partial, "item string").distinct()
+
+
 def heavy_hitters(df: DataFrame, item_col: str, k: int = 100) -> DataFrame:
     """EXACT heavy hitters without a full-cardinality shuffle: all items
     with frequency > n/k, with exact counts — (item, cnt).
 
     Two passes. Pass 1 runs a Misra–Gries summary per partition
-    (mapInPandas; batches pre-counted with value_counts, summaries
-    merged by add-then-subtract-(k+1)th — the standard mergeable-MG
-    reduction), emitting ≤ k candidate rows per partition. The union of
+    (``_mg_items``), emitting ≤ k candidate rows per partition. The union of
     per-partition summaries PROVABLY contains every global >n/k item:
     such an item is >local_n/k in at least one partition (pigeonhole),
     and MG(k) retains everything above local_n/(k+1). Pass 2 exactly
@@ -125,33 +151,12 @@ def heavy_hitters(df: DataFrame, item_col: str, k: int = 100) -> DataFrame:
     shuffles one row per DISTINCT item — at web-corpus vocabularies
     that is the cost this operator deletes; results are identical,
     which is what the oracle checks."""
-    import pandas as pd
-
     # items ride as strings (the Arrow summary schema is fixed); the
     # cast is injective for scalar types, so counts are unchanged
     src = df.select(F.col(item_col).cast("string").alias("item")).filter(
         F.col("item").isNotNull()
     )
-
-    def mg_partial(batches):
-        counters: dict = {}
-        for pdf in batches:
-            for it, c in pdf["item"].value_counts().items():
-                counters[it] = counters.get(it, 0) + int(c)
-            if len(counters) > k:
-                kth = sorted(counters.values(), reverse=True)[k]
-                counters = {
-                    i: v - kth for i, v in counters.items() if v - kth > 0
-                }
-        yield pd.DataFrame(
-            {"item": list(counters.keys()), "cnt": list(counters.values())}
-        )
-
-    cand = (
-        src.mapInPandas(mg_partial, "item string, cnt long")
-        .select("item")
-        .distinct()
-    )
+    cand = _mg_items(src, k, ("item", "count"))
     total = src.count()
     return (
         src.join(F.broadcast(cand), "item")
@@ -313,32 +318,11 @@ def weighted_heavy_hitters(
     so the candidate union provably contains every answer; NULL items
     and NULL/negative weights are excluded (weights must be
     non-negative for the MG guarantee)."""
-    import pandas as pd
-
     src = df.select(
         F.col(item_col).cast("string").alias("item"),
         F.col(weight_col).cast("double").alias("w"),
     ).filter(F.col("item").isNotNull() & (F.col("w") > 0))
-
-    def mg_partial(batches):
-        counters: dict = {}
-        for pdf in batches:
-            for it, wsum in pdf.groupby("item")["w"].sum().items():
-                counters[it] = counters.get(it, 0.0) + float(wsum)
-            if len(counters) > k:
-                kth = sorted(counters.values(), reverse=True)[k]
-                counters = {
-                    i: v - kth for i, v in counters.items() if v - kth > 0
-                }
-        yield pd.DataFrame(
-            {"item": list(counters.keys()), "w": list(counters.values())}
-        )
-
-    cand = (
-        src.mapInPandas(mg_partial, "item string, w double")
-        .select("item")
-        .distinct()
-    )
+    cand = _mg_items(src, k, ("w", "sum"))
     total = src.agg(F.sum("w")).first()[0] or 0.0
     # Both sides of the threshold are rounded to 4 decimals so an
     # engine that sums in a different order (the DuckDB oracle)

@@ -40,10 +40,12 @@ from __future__ import annotations
 import math
 from typing import Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import let_bind
+from ._arrow import apply_groups
 from ._exact import GRID, grid, grid_sum, grid_sum128, row_ranks
 
 
@@ -1074,21 +1076,19 @@ def lttb_downsample(
     Scale: the greedy is sequential per key but each key's series is
     already a BOUNDED downsampling input (you run LTTB on a bucketed
     series, not raw events), so per-key work is tiny; keys distribute
-    via ``applyInPandas`` over the key hash — one shuffle, Arrow
-    batches, no driver loop."""
-    import pandas as pd
+    via ``applyInArrow`` over the key hash — one shuffle, Arrow
+    batches, no driver loop. Points sort by x, NULL x last."""
+    out_schema = f"{key_col} string, {x_col} double, {y_col} double"
 
-    out_schema = (
-        f"{key_col} string, {x_col} double, {y_col} double"
-    )
-
-    def _one(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(x_col).reset_index(drop=True)
-        xs = pdf[x_col].astype(float).tolist()
-        ys = pdf[y_col].astype(float).tolist()
+    def _one(tbl):
+        x = tbl.column(x_col).to_numpy()
+        num, nan = np.flatnonzero(~np.isnan(x)), np.flatnonzero(np.isnan(x))
+        order = np.concatenate([num[np.argsort(x[num], kind="quicksort")], nan])
+        xs = x[order].tolist()
+        ys = tbl.column(y_col).to_numpy()[order].tolist()
         n = len(xs)
         if n <= n_out:
-            return pdf[[key_col, x_col, y_col]]
+            return tbl.take(order)
         nbuckets = n_out - 2
         m = n - 2
         sel = [0]
@@ -1124,14 +1124,14 @@ def lttb_downsample(
             sel.append(best)
             prev = best
         sel.append(n - 1)
-        return pdf.iloc[sel][[key_col, x_col, y_col]]
+        return tbl.take(order[sel])
 
     src = df.select(
         F.col(key_col).cast("string").alias(key_col),
         F.col(x_col).cast("double").alias(x_col),
         F.col(y_col).cast("double").alias(y_col),
     )
-    return src.groupBy(key_col).applyInPandas(_one, out_schema)
+    return apply_groups(src.groupBy(key_col), _one, out_schema)
 
 
 def sequence_next_node(

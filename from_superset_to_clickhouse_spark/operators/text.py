@@ -13,11 +13,11 @@ needs on top of that (BASELINE.json north star).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from from_superset_to_clickhouse_spark.functions.scalar import _spread, let_bind
+from from_superset_to_clickhouse_spark.operators._arrow import row_udf
 
 # Marker words per language for the deterministic stopword heuristic.
 # Scoring = occurrence count of each whitespace-delimited marker word;
@@ -1140,21 +1140,17 @@ def unigram_lm_scores(
 
 def stemmed_tokens(text: Column) -> Column:
     """``word_tokens`` + Porter stemming, as one Arrow-batched pass
-    over the token arrays (pandas_udf on array<string> — one Python
-    crossing per batch, with a per-batch memo; natural vocabularies
+    over the token arrays (``row_udf`` on array<string> — one Python
+    crossing per batch, with a per-task memo; natural vocabularies
     are Zipfian so the memo hit rate is extreme). This is the
     tokenizer of the stemmed retrieval tier — NOT a row-at-a-time
     Python UDF in a hot path."""
     from ..functions.stemmer import stem_tokens
 
-    @F.pandas_udf("array<string>")
-    def _stem(arrs: pd.Series) -> pd.Series:
-        memo: dict = {}
-        return arrs.map(
-            lambda a: a if a is None else stem_tokens(list(a), memo)
-        )
-
-    return _stem(word_tokens(text))
+    memo: dict = {}
+    return row_udf(lambda a: stem_tokens(a, memo), "array<string>")(
+        word_tokens(text)
+    )
 
 
 def bm25_topk(
@@ -3491,7 +3487,7 @@ def multi_needle_match(
     The automaton (goto/fail/output of the trie) is built once
     driver-side — bounded by total needle length — and rides the UDF
     closure to every executor like a broadcast dim; the scan is an
-    Arrow-batched pandas_udf (a per-character state machine has no
+    Arrow-batched ``row_udf`` (a per-character state machine has no
     Catalyst expression form; this is the documented UDF-boundary
     case). Each doc is touched exactly once."""
     if not needles:
@@ -3502,35 +3498,27 @@ def multi_needle_match(
     lens = [len(n) for n in needles]
     k = len(needles)
 
-    @F.pandas_udf("array<struct<ni:int, n_matches:int, first_pos:int>>")
-    def scan(texts):
-        import pandas as pd
+    def scan_one(t):
+        counts = [0] * k
+        first = [0] * k
+        s = 0
+        for pos, ch in enumerate(t):
+            while s and ch not in goto[s]:
+                s = fail[s]
+            s = goto[s].get(ch, 0)
+            for ni in out[s]:
+                counts[ni] += 1
+                if first[ni] == 0:
+                    first[ni] = pos - lens[ni] + 2  # 1-based start
+        return [
+            {"ni": i, "n_matches": counts[i], "first_pos": first[i]}
+            for i in range(k)
+            if counts[i] > 0
+        ]
 
-        res = []
-        for t in texts:
-            if t is None:
-                res.append(None)
-                continue
-            counts = [0] * k
-            first = [0] * k
-            s = 0
-            for pos, ch in enumerate(t):
-                while s and ch not in goto[s]:
-                    s = fail[s]
-                s = goto[s].get(ch, 0)
-                for ni in out[s]:
-                    counts[ni] += 1
-                    if first[ni] == 0:
-                        first[ni] = pos - lens[ni] + 2  # 1-based start
-            res.append(
-                [
-                    {"ni": i, "n_matches": counts[i], "first_pos": first[i]}
-                    for i in range(k)
-                    if counts[i] > 0
-                ]
-            )
-        return pd.Series(res)
-
+    scan = row_udf(
+        scan_one, "array<struct<ni:int, n_matches:int, first_pos:int>>"
+    )
     ndl = F.array(*[F.lit(n) for n in needles])
     t = df.select(
         F.col(id_col), F.explode(scan(F.col(text_col))).alias("_m")

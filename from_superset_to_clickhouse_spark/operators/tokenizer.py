@@ -19,7 +19,7 @@ Scale design:
   most frequent word forms — word-frequency mass is Zipfian, so the tail
   it drops is vanishing), collects only that bounded (word, count) table,
   and runs the merge loop driver-side on counts, not raw text.
-- **Application is one Arrow-batched ``mapInPandas`` pass.** The merge
+- **Application is one Arrow-batched ``mapInArrow`` pass.** The merge
   table is a plain broadcast dict (rank lookup); each executor tokenizes
   its batches independently — embarrassingly parallel, no shuffle. This
   is the sanctioned Python crossing: per-token merge loops are exactly
@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ._arrow import map_batches
 from .text import word_tokens
 
 # End-of-word sentinel: keeps merges word-internal and makes detokenize
@@ -134,7 +135,7 @@ def bpe_tokenize(
 ) -> DataFrame:
     """Apply a learned merge list distributed → (id, n_tokens, tokens).
 
-    One Arrow-batched ``mapInPandas`` pass; the merge table rides the
+    One Arrow-batched ``mapInArrow`` pass; the merge table rides the
     closure as a broadcast-sized dict (~16 B/merge). Tokens join back
     losslessly: ``''.join(tokens).replace(EOW, ' ')`` reconstructs the
     normalized word stream (tested property).
@@ -153,24 +154,22 @@ def bpe_tokenize(
     )
 
     def run(batches):
-        import pandas as pd
-
         cache: dict[str, list[str]] = {}
-        for pdf in batches:
-            ids, counts, toks = [], [], []
-            for i, words in zip(pdf["id"], pdf["words"]):
+        for batch in batches:
+            toks = []
+            for words in batch.column(1).to_pylist():
                 out: list[str] = []
-                for w in words:
+                for w in words or ():  # NULL text: no words
                     t = cache.get(w)
                     if t is None:
                         t = encode_word(w, ranks)
                         cache[w] = t
                     out.extend(t)
-                ids.append(i)
-                counts.append(len(out))
                 toks.append(out)
-            yield pd.DataFrame(
-                {"id": ids, "n_tokens": counts, "tokens": toks}
-            )
+            yield {
+                "id": batch.column(0),
+                "n_tokens": [len(t) for t in toks],
+                "tokens": toks,
+            }
 
-    return src.mapInPandas(run, schema=schema)
+    return map_batches(src, run, schema)

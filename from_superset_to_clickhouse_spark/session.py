@@ -4,10 +4,11 @@ The reference outsources all execution to ClickHouse; here Catalyst +
 Tungsten take that role, so the session config is where the "physical
 design" lives: AQE on (runtime re-plan, skew-join handling, partition
 coalescing), Arrow for any pandas interop, broadcast threshold sized for
-dimension tables, dynamic partition overwrite for partitioned
-``mode("overwrite")`` writes. (TableStore's partition swap, the
-``ALTER TABLE … REPLACE PARTITION`` analog, commits through its own
-staging protocol and does not rely on it.)
+dimension tables. Partition overwrite stays Spark's static default: a
+``mode("overwrite")`` write replaces its whole output path, which is
+what the package's whole-output rewrites (``build_inverted_index``,
+``export_shards``) mean. TableStore's partition swap, the ``ALTER TABLE
+… REPLACE PARTITION`` analog, commits through its own staging protocol.
 """
 
 from __future__ import annotations
@@ -79,9 +80,6 @@ def get_spark(
         )
         # Arrow-accelerated toPandas/createDataFrame and pandas UDFs.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # A partitioned overwrite replaces exactly the partitions present
-        # in the written DataFrame, not the whole directory.
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.session.timeZone", "UTC")
     )
     if master:

@@ -584,6 +584,7 @@ _DEGENERATE_DOCS = {
     "empty": [],
     "one_row": [(1, _T)],
     "null_text": [(1, None), (2, None), (3, "a b c d")],
+    "all_null": [(1, None), (2, None)],
     "empty_text": [(1, ""), (2, ""), (3, "a b c d")],
     "identical": [(1, _T), (2, _T), (3, _T)],
 }
@@ -603,12 +604,14 @@ def _sets(d):
 _DEGENERATE_PAIRS = {
     "minhash_arrow": (
         lambda d: ddp.minhash_candidates(d),
-        {"null_text": [(1, 2, 16)], "empty_text": [(1, 2, 16)],
+        {"null_text": [(1, 2, 16)], "all_null": [(1, 2, 16)],
+         "empty_text": [(1, 2, 16)],
          "identical": [p + (16,) for p in _SAME3]},
     ),
     "minhash_md5": (
         lambda d: ddp.minhash_candidates(d, hash_family="md5"),
-        {"null_text": [(1, 2, 16)], "empty_text": [(1, 2, 16)],
+        {"null_text": [(1, 2, 16)], "all_null": [(1, 2, 16)],
+         "empty_text": [(1, 2, 16)],
          "identical": [p + (16,) for p in _SAME3]},
     ),
     "simhash_arrow": (
@@ -621,8 +624,16 @@ _DEGENERATE_PAIRS = {
     ),
     "ngram_jaccard_pairs": (
         lambda d: ddp.ngram_jaccard_pairs(d),
-        {"null_text": [(1, 2, 1.0)], "empty_text": [(1, 2, 1.0)],
+        {"null_text": [(1, 2, 1.0)], "all_null": [(1, 2, 1.0)],
+         "empty_text": [(1, 2, 1.0)],
          "identical": [p + (1.0,) for p in _SAME3]},
+    ),
+    "jaro_winkler_link": (
+        lambda d: ddp.jaro_winkler_link(
+            d.withColumn("b", F.lit(1)), "doc_id", "text", ["b"], 0.5
+        ),
+        {"empty_text": [(1, 2, "", "", 1.0)],
+         "identical": [p + (_T, _T, 1.0) for p in _SAME3]},
     ),
     "simhash_dedup_candidates": (
         lambda d: ddp.simhash_dedup_candidates(d),
@@ -651,10 +662,11 @@ _DEGENERATE_PAIRS = {
 
 @pytest.mark.parametrize("op", list(_DEGENERATE_PAIRS))
 def test_dedup_pair_operators_on_degenerate_inputs(spark, op):
-    """Every pair operator on empty, one-row, NULL-text, empty-text and
-    three-identical-doc input: no pairs from fewer than two docs, every
-    pair from identical docs (all 16 bands, Hamming 0, Jaccard 1.0,
-    both orders for containment)."""
+    """Every pair operator on empty, one-row, NULL-text (beside valid
+    text, and all NULL), empty-text and three-identical-doc input: no
+    pairs from fewer than two docs, every pair from identical docs (all
+    16 bands, Hamming 0, Jaccard and Jaro–Winkler 1.0, both orders for
+    containment)."""
     run, want = _DEGENERATE_PAIRS[op]
     for case, rows in _DEGENERATE_DOCS.items():
         df = spark.createDataFrame(rows, "doc_id int, text string")

@@ -12,6 +12,9 @@ from from_superset_to_clickhouse_spark.functions.scalar import (
     with_defaults,
 )
 from from_superset_to_clickhouse_spark.operators import multimodal as mm
+from from_superset_to_clickhouse_spark.operators import sketch as sk
+from from_superset_to_clickhouse_spark.operators import text as txt
+from from_superset_to_clickhouse_spark.operators.tokenizer import bpe_tokenize
 from from_superset_to_clickhouse_spark.plans.pipeline import Pipeline, SkipStep, Step
 from from_superset_to_clickhouse_spark.plans.script import (
     render_params,
@@ -728,6 +731,25 @@ def test_export_shards_manifest_detects_tamper(spark, tmp_path):
     }
     assert flags[2] == 0
     assert flags[0] == 1 and flags[1] == 1 and flags[3] == 1
+
+
+def test_export_shards_reexport_replaces_every_shard(spark, tmp_path):
+    """A second export to the same path with fewer shards replaces the
+    whole export: no stale shard directory survives, and the path reads
+    back exactly the rows its manifest counts."""
+    import os
+
+    from from_superset_to_clickhouse_spark.sources.readers import export_shards
+
+    df = spark.range(8).selectExpr("id AS doc_id")
+    path = str(tmp_path / "shards")
+    export_shards(df, path, n_shards=4, id_col="doc_id")
+    manifest = export_shards(df, path, n_shards=2, id_col="doc_id")
+    assert sorted(d for d in os.listdir(path) if d.startswith("shard=")) == [
+        "shard=0", "shard=1",
+    ]
+    assert sum(m["n_rows"] for m in manifest) == 8
+    assert spark.read.parquet(path).count() == 8
 
 
 def test_png_pixel_decode_all_filters_and_color_types():
@@ -4034,3 +4056,84 @@ def test_ipw_ate_recovers_randomized_effect(spark):
     assert r["n"] == 400
     assert abs(r["ate"] - 5.0) < 0.3
     assert r["ess_t"] > 100 and r["ess_c"] > 100
+
+
+_TEXTS = "doc_id long, text string"
+_MIXED = [(1, None), (2, "Running runners ran abab"), (3, ""), (4, "b ab")]
+# op -> (call, {input name: sorted output rows}). Every op maps an empty
+# input to no rows and never fails on NULL text; "null" is all-NULL text
+# and "mixed" puts NULL text beside valid and empty text in one batch.
+_ROW_KERNELS = {
+    "heavy_hitters": (
+        lambda d: sk.heavy_hitters(d, "text", k=2),
+        {"null": [], "mixed": []},
+    ),
+    "weighted_heavy_hitters": (
+        lambda d: sk.weighted_heavy_hitters(
+            d.withColumn("w", F.col("doc_id") * 1.5), "text", "w", k=2
+        ),
+        {"null": [], "mixed": []},
+    ),
+    "stemmed_tokens": (
+        lambda d: d.select("doc_id", txt.stemmed_tokens(F.col("text"))),
+        {
+            "null": [(1, None), (2, None)],
+            "mixed": [(1, None), (2, ["run", "runner", "ran", "abab"]),
+                      (3, []), (4, ["b", "ab"])],
+        },
+    ),
+    "multi_needle_match": (
+        lambda d: txt.multi_needle_match(d, ["ab", "b", "run"]),
+        {
+            "null": [],
+            "mixed": [(2, "ab", 2, 21), (2, "b", 2, 22), (2, "run", 1, 9),
+                      (4, "ab", 1, 3), (4, "b", 2, 1)],
+        },
+    ),
+    "bpe_tokenize": (
+        lambda d: bpe_tokenize(d, [("a", "b"), ("r", "u"), ("ru", "n")]),
+        {
+            "null": [(1, 0, []), (2, 0, [])],
+            "mixed": [
+                (1, 0, []),
+                (2, 19, ["run", "n", "i", "n", "g", "</w>", "run", "n", "e",
+                         "r", "s", "</w>", "r", "a", "n", "</w>", "ab", "ab",
+                         "</w>"]),
+                (3, 0, []),
+                (4, 4, ["b", "</w>", "ab", "</w>"]),
+            ],
+        },
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(_ROW_KERNELS))
+def test_row_kernels_on_empty_and_null_text(spark, op):
+    run, want = _ROW_KERNELS[op]
+    inputs = {"empty": [], "null": [(1, None), (2, None)], "mixed": _MIXED}
+    for case, rows in inputs.items():
+        df = spark.createDataFrame(rows, _TEXTS).coalesce(1)
+        got = sorted(map(tuple, run(df).collect()))
+        assert got == want.get(case, []), case
+
+
+def test_lttb_on_empty_and_null_points(spark):
+    """LTTB keeps NULL-x points last in x order and passes short series
+    through; an empty input gives no rows."""
+    from from_superset_to_clickhouse_spark.operators.temporal import (
+        lttb_downsample,
+    )
+
+    schema = "k string, x double, y double"
+    mixed = [("a", 1.0, 1.0), ("a", None, 2.0), ("a", 3.0, None),
+             ("a", 2.0, 5.0), ("a", 4.0, 0.0), ("a", 5.0, 3.0),
+             ("b", None, 1.0)]
+    for rows, want in (
+        ([], []),
+        ([("a", None, None)] * 2, [("a", None, None)] * 2),
+        (mixed, [("a", 1.0, 1.0), ("a", 2.0, 5.0), ("a", None, 2.0),
+                 ("b", None, 1.0)]),
+    ):
+        df = spark.createDataFrame(rows, schema)
+        got = lttb_downsample(df, "k", "x", "y", n_out=3).collect()
+        assert sorted(map(tuple, got), key=repr) == want

@@ -65,6 +65,7 @@ def test_degenerate_payloads_quarantine(spark, op, synth):
         assert all(v is None for v in rows[k][1:]), rows[k]
     bad = op(df.filter("media_id > 1").coalesce(1)).collect()
     assert sorted(r[0] for r in bad) == [2, 3, 4]
+    assert op(df.limit(0)).collect() == []
 
 
 def test_adpcm_decode_drops_corrupt_rows(spark):

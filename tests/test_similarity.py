@@ -987,6 +987,32 @@ def test_arrow_paths_null_and_ragged_vectors_match_expression(spark):
     assert idx[2] == (None, None, None) and idx[5] == (None, None, None)
     assert idx[1][0] is not None and idx[4][0] is not None
 
+    # an empty input, and a partition whose every vector is NULL or of
+    # the wrong length: every per-vector kernel (int cell, list codes,
+    # struct cell+codes, struct cell+residual) returns NULL, never fails
+    cents3 = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
+    books3 = [[[0.0], [1.0]]] * 3
+    cents86 = [[(i % 7) / 7, (i % 5) / 5, (i % 3) / 3] for i in range(86)]
+    bad = spark.createDataFrame(
+        [(1, None), (2, [1.0, 0.0]), (3, None), (4, [1.0, 0.0, 0.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    ).coalesce(1)
+    codes = {1: (None,) * 3, 2: (1, 0, None), 3: (None,) * 3, 4: (1, 0, 0)}
+    for frame, want in ((bad.limit(0), {}), (bad, codes)):
+        def by_id(out, lo):
+            return {r[0]: tuple(r[lo:]) for r in out.collect()}
+
+        assert by_id(simi.kmeans_assign(frame, cents3, arrow=True), 2) == {
+            i: (None,) for i in want
+        }
+        assert by_id(simi.pq_encode(frame, books3, arrow=True), 2) == want
+        assert by_id(
+            simi.ivfpq_index(frame, cents3, books3, arrow=True), 1
+        ) == {i: (None,) * 4 for i in want}
+        assert by_id(simi._residuals(frame, cents86), 1) == {
+            i: (None, None) for i in want
+        }
+
 
 def test_invalid_vectors_are_never_neighbors_and_never_fail(spark):
     """A NULL or wrong-length vector is dropped by every vectorized
@@ -1029,6 +1055,31 @@ def test_invalid_vectors_are_never_neighbors_and_never_fail(spark):
     for empty in (df.limit(0), df.filter(F.col("vec_id") == 4)):
         with pytest.raises(ValueError, match="corpus has 0"):
             simi.train_centroids(empty)
+
+    # an empty input and an input whose every vector is NULL or of the
+    # wrong length: no rows from any kernel, no failed task
+    for frame in (df.limit(0), df.filter(F.col("vec_id").isin(4, 5))):
+        for got in (
+            simi.brute_force_topk(frame, frame, k=2),
+            simi.lsh_topk(frame, frame, k=2),
+            simi.embedding_dedup_pairs(frame, threshold=0.9),
+            simi.ivf_topk(frame, frame, k=2, nprobe=2, centroids=cents),
+        ):
+            assert got.collect() == []
+
+    # two vector lengths equally common among the queries: the length
+    # seen first (3) wins, so queries 0 and 2 run and 1 and 3 do not
+    tie = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0, 0.0]),
+         (3, [0.0, 1.0]), (4, [0.99, 0.1, 0.0]), (5, [0.0, 0.2, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    tq = tie.filter(F.col("vec_id") < 4)
+    assert pairs(simi.brute_force_topk(tie, tq, k=2)) == [
+        (0, 2, 0.0, 2), (0, 4, 0.994937, 1),
+        (2, 4, 0.100499, 2), (2, 5, 0.196116, 1),
+    ]
+    assert pairs(simi.lsh_topk(tie, tq, k=2)) == [(0, 4, 0.994937, 1)]
 
 
 def test_topk_cut_keeps_exact_ties_across_batches_and_cells(spark):

@@ -339,6 +339,29 @@ def test_bm25_indexed_equals_on_the_fly(spark, tmp_path):
     assert "PartitionFilters" in buf.getvalue()
 
 
+def test_inverted_index_rebuild_replaces_the_whole_index(spark, tmp_path):
+    """Rebuilding an index at the same path replaces every posting
+    bucket: a term only the old corpus had matches nothing, exactly like
+    BM25 over the new corpus."""
+    from from_superset_to_clickhouse_spark.operators.text import (
+        bm25_topk,
+        bm25_topk_indexed,
+        build_inverted_index,
+    )
+
+    schema = "doc_id long, text string"
+    path = str(tmp_path / "idx")
+    build_inverted_index(
+        spark.createDataFrame([(1, "apple pie"), (2, "banana")], schema), path
+    )
+    new = spark.createDataFrame([(1, "zebra")], schema)
+    build_inverted_index(new, path)
+    assert bm25_topk(new, ["apple"]).collect() == []
+    assert bm25_topk_indexed(spark, path, ["apple"]).collect() == []
+    assert [r["doc_id"] for r in bm25_topk_indexed(spark, path, ["zebra"])
+            .collect()] == [1]
+
+
 def test_canonical_url_contract(spark):
     """Scheme/host lowercasing, scheme-aware default-port strip,
     fragment drop, tracking-param removal, param sorting, empty-path
